@@ -4,51 +4,104 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared hygiene for session-scoped memo caches (analyzed scans,
-  * materialized pair graphs): entries die with their SparkContext,
-  * and the map is hard-bounded so a long-lived driver churning
-  * through `newSession()` instances cannot grow it forever.
+/** The one memo type for data derived from files (analyzed scans,
+  * index models, materialized pair graphs, temp stores). Each cache
+  * names the directory its key was derived from (`dirOf`) and
+  * registers itself with the companion's registry, so one
+  * [[Tables.invalidate]] call drops everything derived from a
+  * rewritten directory — the REFRESH/REINDEX catalog rule.
   *
-  * Two removal paths with DIFFERENT cleanup semantics:
+  * Entries are either session-scoped (`getOrElseUpdate(spark, key)`:
+  * they die with their SparkContext, since checkpointed frames are
+  * bound to it) or JVM-wide (`getOrElseUpdate(key)`: plain driver
+  * values such as models and store markers, which a fresh
+  * `newSession()` must still hit). The map is access-ordered and
+  * hard-bounded, so a long-lived driver churning through sessions or
+  * stores cannot grow it forever, and a hit keeps an entry young.
   *
-  *  - `invalidate` (data the value points at was rewritten): evicted
+  * Three removal paths, with DIFFERENT cleanup semantics:
+  *
+  *  - invalidation (the data the value points at was rewritten):
   *    values go to `onEvict` — for checkpoint-backed DataFrames that
-  *    unpersists the pinned blocks immediately. Outstanding handles
-  *    were already meaningless (they referenced the old data).
-  *  - overflow eviction (cache grew past `maxEntries`): the OLDEST
-  *    entries are dropped by reference only, WITHOUT `onEvict` — a
-  *    caller may still hold the returned DataFrame, and a
+  *    unpersists the pinned blocks immediately, for temp stores it
+  *    deletes the files. Outstanding handles were already meaningless
+  *    (they referenced the old data).
+  *  - overflow (the cache reached `maxEntries`): the entries used
+  *    longest ago are dropped by reference only, WITHOUT `onEvict` —
+  *    a caller may still hold the returned value, and a
   *    localCheckpoint-backed frame cannot be recomputed once its
   *    blocks are unpersisted. Dropping the reference lets Spark's
-  *    ContextCleaner reclaim the blocks when the last handle goes
-  *    out of scope; eager unpersist here would break live handles.
+  *    ContextCleaner reclaim the blocks (and TempStores' shutdown hook
+  *    the files) when the last handle goes.
+  *  - a stopped session: its entries are dropped without `onEvict`;
+  *    the SparkContext, and every block it held, is already gone.
   */
-final class SessionCache[K, V](maxEntries: Int, onEvict: V => Unit = (_: V) => ()) {
-  private val m = scala.collection.concurrent.TrieMap.empty[(SparkSession, K), (V, Long)]
-  private val seq = new AtomicLong()
+final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
+                               onEvict: V => Unit = (_: V) => ()) {
+  import SessionCache.Entry
 
-  def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V = {
-    // dead-session entries: their SparkContext (and with it every
-    // cached block) is already gone — drop without onEvict
-    m.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (m.size > maxEntries)
-      // oldest-first, down to half capacity; reference-drop only (see
-      // class doc — live handles must keep working)
-      m.toSeq.sortBy(_._2._2).dropRight(maxEntries / 2).foreach {
-        case (k, _) => m.remove(k): Unit
-      }
-    m.getOrElseUpdate((spark, key), (build, seq.incrementAndGet()))._1
-  }
+  // owning session, None for a JVM-wide entry
+  private val m = scala.collection.concurrent.TrieMap.empty[(Option[SparkSession], K), Entry[V]]
+  SessionCache.registry.add(this)
 
-  /** drop entries whose key matches `pred` — the invalidation hook for
-    * flows that rewrite data a cached value points at. Values are
-    * handed to `onEvict` (their backing storage is released: any
-    * outstanding handle already referenced stale data). */
+  def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V =
+    lookup((Some(spark), key), build)
+
+  /** JVM-wide entry: shared by every session of the driver */
+  def getOrElseUpdate(key: K)(build: => V): V = lookup((None, key), build)
+
+  private def lookup(k: (Option[SparkSession], K), build: => V): V =
+    m.get(k) match {
+      case Some(e) =>
+        e.age = SessionCache.clock.incrementAndGet()
+        e.value
+      case None =>
+        m.filterInPlace((k, _) => k._1.forall(!_.sparkContext.isStopped))
+        if (m.size >= maxEntries)
+          m.toSeq.sortBy(_._2.age).dropRight(maxEntries / 2).foreach {
+            case (k, _) => m.remove(k): Unit
+          }
+        m.getOrElseUpdate(k, new Entry(build, SessionCache.clock.incrementAndGet())).value
+    }
+
+  /** drop the entries whose key matches `pred`, handing their values
+    * to `onEvict` — for a writer that knows exactly which entries its
+    * rewrite made stale (the registry-wide rule is [[Tables.invalidate]]) */
   def invalidate(pred: K => Boolean): Unit =
-    m.toSeq.foreach { case (k, (v, _)) =>
+    m.toSeq.foreach { case (k, e) =>
       if (pred(k._2) && m.remove(k).isDefined) {
         // best-effort: invalidation must not fail the caller
-        try onEvict(v) catch { case _: Throwable => () }
+        try onEvict(e.value) catch { case _: Throwable => () }
       }
     }
+
+  private def invalidateUnder(prefix: String): Unit =
+    invalidate(k => SessionCache.overlaps(dirOf(k), prefix))
+
+  private def dirs: Iterable[String] = m.keys.map(k => dirOf(k._2))
+}
+
+object SessionCache {
+  private final class Entry[V](val value: V, @volatile var age: Long)
+
+  private val clock = new AtomicLong()
+  private val registry = new java.util.concurrent.CopyOnWriteArrayList[SessionCache[_, _]]
+
+  /** The invalidation rule: an entry derived from `dir` is stale when
+    * the rewritten path is `dir` itself, lies under it, or contains
+    * it. A plain string prefix, so `/a/bc` also drops on a rewrite of
+    * `/a/b` — over-invalidation, the safe direction. An empty `dir`
+    * overlaps every rewrite. */
+  private[graft] def overlaps(dir: String, prefix: String): Boolean =
+    dir.startsWith(prefix) || prefix.startsWith(dir)
+
+  private[graft] def invalidateAll(prefix: String): Unit =
+    registry.forEach(_.invalidateUnder(prefix))
+
+  /** the source directory of every entry held by any cache */
+  private[graft] def registeredDirs: Seq[String] = {
+    val out = Seq.newBuilder[String]
+    registry.forEach(c => out ++= c.dirs)
+    out.result()
+  }
 }

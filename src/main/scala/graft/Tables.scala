@@ -13,37 +13,23 @@ object Tables {
   // Memoize the analyzed scan per (session, dir, table): a fresh
   // `spark.read.parquet` re-lists files and re-reads the footer schema
   // on EVERY call, a fixed ~50-100 ms tax on each of the ~70 inventory
-  // queries. The DataFrame handle is lazy (no data pinned); session
-  // hygiene and growth bounds live in SessionCache. The cache pins the
-  // file listing captured at first read — writers that rewrite a table
-  // directory must call [[invalidate]] (Ingest does). On a real
-  // deployment this role is played by the catalog/metastore, with the
-  // same REFRESH TABLE contract.
-  private val scanCache = new SessionCache[(String, String), DataFrame](512)
+  // queries. The DataFrame handle is lazy (no data pinned). The cache
+  // pins the file listing captured at first read — writers that
+  // rewrite a table directory must call [[invalidate]] (Ingest does).
+  // On a real deployment this role is played by the catalog/metastore,
+  // with the same REFRESH TABLE contract.
+  private val scanCache = new SessionCache[(String, String), DataFrame](512, _._1)
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     scanCache.getOrElseUpdate(spark, (sfDir, name)) {
       spark.read.parquet(s"$sfDir/$name.parquet")
     }
 
-  // Other dir-keyed caches (IVF/PQ/SQ models) register here so one
-  // invalidate() call refreshes everything derived from the rewritten
-  // files. Hooks register lazily at first use of each index object —
-  // before that, no stale entries can exist.
-  private val invalidationHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]
-  def onInvalidate(hook: String => Unit): Unit = invalidationHooks.add(hook)
-
-  /** Drop cached scans (and registered derived caches — index models)
-    * whose backing files live under `pathPrefix` — call after
-    * overwriting a table directory (REFRESH TABLE). */
-  def invalidate(pathPrefix: String): Unit = {
-    scanCache.invalidate { case (dir, name) =>
-      val p = s"$dir/$name.parquet"
-      p.startsWith(pathPrefix) || pathPrefix.startsWith(p) || pathPrefix.startsWith(dir)
-    }
-    invalidationHooks.forEach(h => h(pathPrefix))
-  }
+  /** REFRESH TABLE: drop every memo derived from files under (or
+    * containing) `pathPrefix` — cached scans, index models, stores,
+    * checkpointed graphs — through [[SessionCache]]'s one registry.
+    * Call after overwriting a table or store directory. */
+  def invalidate(pathPrefix: String): Unit = SessionCache.invalidateAll(pathPrefix)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

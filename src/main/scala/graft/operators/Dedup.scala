@@ -27,14 +27,7 @@ object Dedup {
   // hygiene + growth bound live in SessionCache (checkpointed pair
   // graphs pin executor storage until GC'd — keep the bound small).
   private val pairsCache = new graft.SessionCache[(String, Double), DataFrame](
-    16, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  // a rewrite of the source dir releases the stale checkpointed pair
-  // graph / component map (overflow eviction, by contrast, only drops
-  // references — see SessionCache's class doc)
-  graft.Tables.onInvalidate { p =>
-    pairsCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-    compCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+    16, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   /** d1: exact dedup by content hash. Emits every doc with its
     * canonical keeper (min doc_id of the identical-text group). */
@@ -407,7 +400,7 @@ object Dedup {
   // the resolved component map is d6's output AND d8's input — one
   // pipeline materializes it once (result is already checkpointed)
   private val compCache = new graft.SessionCache[(String, Double, Int), DataFrame](
-    16, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
+    16, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   def dupComponents(spark: SparkSession, d: String, threshold: Double = 0.3,
                     maxIters: Int = 20): DataFrame =

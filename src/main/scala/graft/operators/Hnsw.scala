@@ -85,10 +85,7 @@ object Hnsw {
 
   // layer graphs are the expensive part — one build per (dir, layer)
   private val layerCache = new graft.SessionCache[(String, Int, Int), DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  graft.Tables.onInvalidate { p =>
-    layerCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+    8, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   /** The level-l (l ≥ 1) navigation graph: v18's banded build over
     * the members of that layer. Edges carry (src, dst, dst_emb) — the
@@ -106,10 +103,7 @@ object Hnsw {
   // the entry point is a pure function of the corpus — one agg per
   // corpus dir, memoized (not per query); the persisted analogue is
   // HnswStore's entry/ artifact, written at store-build time
-  private val entryCache = new graft.SessionCache[String, (Long, Array[Float])](8)
-  graft.Tables.onInvalidate { p =>
-    entryCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val entryCache = new graft.SessionCache[String, (Long, Array[Float])](8, identity)
 
   /** Entry point of the hierarchy: the min vec_id on the highest
     * occupied layer, with its embedding (so scoring it against a

@@ -86,14 +86,10 @@ object IvfIndex {
     * ivfflat index once, then serves queries); memoize per
     * (dataset, k, iters) so build + search queries in one session
     * share the model. */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Model]
-  // a rewrite of the source dir must drop models fit on the old data
-  graft.Tables.onInvalidate(p =>
-    modelCache.filterInPlace((k, _) => !k._1.startsWith(p) && !p.startsWith(k._1)))
+  private val modelCache = new graft.SessionCache[(String, Int, Int), Model](64, _._1)
 
   def fitCached(spark: SparkSession, d: String, k: Int, iters: Int): Model =
-    modelCache.getOrElseUpdate((d, k, iters),
+    modelCache.getOrElseUpdate((d, k, iters))(
       fit(Tables.embeddings(spark, d), "embedding", "vec_id", k, iters))
 
   /** Deterministic Lloyd k-means over an `array<float>` column

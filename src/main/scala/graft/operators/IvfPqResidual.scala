@@ -74,23 +74,19 @@ object IvfPqResidual {
     Model(ivf, rc, PqIndex.fitQuantized(resid, dim, m, k, pqIters))
   }
 
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int, Int, Int), Model]
-  graft.Tables.onInvalidate(p =>
-    modelCache.filterInPlace((k, _) => !k._1.startsWith(p) && !p.startsWith(k._1)))
+  private val modelCache =
+    new graft.SessionCache[(String, Int, Int, Int, Int, Int), Model](64, _._1)
 
   def fitCached(spark: SparkSession, d: String, nlists: Int = 16, ivfIters: Int = 5,
                 m: Int = 8, k: Int = 16, pqIters: Int = 4): Model =
-    modelCache.getOrElseUpdate((d, nlists, ivfIters, m, k, pqIters),
+    modelCache.getOrElseUpdate((d, nlists, ivfIters, m, k, pqIters))(
       fit(spark, d, nlists, ivfIters, m, k, pqIters))
 
   // encode ONCE per (corpus, model shape), serve many queries — same
   // lifecycle as PqIndex.codesCache; the persisted analogue is an
   // IvfPqStore layout whose codes are residual-encoded
   private val codesCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  graft.Tables.onInvalidate(p =>
-    codesCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1)))
+    8, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   /** per-list ADC tables for a query: tables(list)(j)(code) =
     * ‖(qq − rc(list))_j − codebook(j)(code)‖², the residual-domain

@@ -60,17 +60,11 @@ object OpqIndex {
     bySub.flatMap(_.sorted).toArray
   }
 
-  private val permCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Array[Int]]
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), PqIndex.Model]
-  graft.Tables.onInvalidate { p =>
-    permCache.filterInPlace((k, _) => !k._1.startsWith(p) && !p.startsWith(k._1))
-    modelCache.filterInPlace((k, _) => !k._1.startsWith(p) && !p.startsWith(k._1))
-  }
+  private val permCache = new graft.SessionCache[(String, Int), Array[Int]](64, _._1)
+  private val modelCache = new graft.SessionCache[(String, Int, Int), PqIndex.Model](64, _._1)
 
   def permCached(spark: SparkSession, d: String, m: Int = 8): Array[Int] =
-    permCache.getOrElseUpdate((d, m), permutation(spark, d, m))
+    permCache.getOrElseUpdate((d, m))(permutation(spark, d, m))
 
   private def permuteCol(q: org.apache.spark.sql.Column, perm: Array[Int]) =
     GraftBridge.column(PermuteVec(GraftBridge.expression(q), perm))
@@ -79,7 +73,7 @@ object OpqIndex {
     * loop, same (m, k) budget as the raw-PQ baseline */
   def fitCached(spark: SparkSession, d: String, m: Int = 8, k: Int = 16,
                 iters: Int = 4): PqIndex.Model =
-    modelCache.getOrElseUpdate((d, m, k), {
+    modelCache.getOrElseUpdate((d, m, k)) {
       val perm = permCached(spark, d, m)
       PqIndex.fitQuantized(
         Tables.embeddings(spark, d)
@@ -87,13 +81,11 @@ object OpqIndex {
           .select(col("vec_id").as("id"),
             permuteCol(IvfIndex.quantize(col("embedding")), perm).as("q")),
         perm.length, m, k, iters)
-    })
+    }
 
   // encode once, serve many — the same lifecycle as PqIndex.codesCache
   private val codesCache = new graft.SessionCache[(String, Int, Int), DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  graft.Tables.onInvalidate(p =>
-    codesCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1)))
+    8, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   /** ADC table over an already-permuted quantized query (the same
     * arithmetic as [[PqIndex.distanceTable]], which takes the raw

@@ -83,10 +83,7 @@ object Pipeline {
   // frame is one slim row per document — the d6-established
   // checkpoint-and-memo shape. Invalidation follows source rewrites.
   private val dispCache = new graft.SessionCache[String, DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  graft.Tables.onInvalidate { p =>
-    dispCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+    8, identity, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   /** p1: per-document disposition (doc_id, lang, source, stage, keeper_id). */
   def curationPipeline(spark: SparkSession, d: String): DataFrame =

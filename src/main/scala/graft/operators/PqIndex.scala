@@ -136,24 +136,17 @@ object PqIndex {
       .limit(topK)
   }
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Model]
-  // a rewrite of the source dir must drop codebooks fit on the old data
-  graft.Tables.onInvalidate(p =>
-    pqCache.filterInPlace((k, _) => !k._1.startsWith(p) && !p.startsWith(k._1)))
+  private val pqCache = new graft.SessionCache[(String, Int, Int), Model](64, _._1)
 
   def fitCached(spark: SparkSession, d: String, m: Int = 8, k: Int = 16): Model =
-    pqCache.getOrElseUpdate((d, m, k),
+    pqCache.getOrElseUpdate((d, m, k))(
       fit(Tables.embeddings(spark, d), "embedding", "vec_id", m, k))
 
   // Encode ONCE, query many: without this every search re-quantizes
   // the whole corpus (m·k·dsub float ops per row per query), defeating
   // the compressed-scan point. The persisted equivalent is IvfPqStore.
   private val codesCache = new graft.SessionCache[(String, Int, Int), DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  // a rewrite of the source dir releases stale checkpointed codes
-  graft.Tables.onInvalidate(p =>
-    codesCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1)))
+    8, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   def searchSummary(spark: SparkSession, d: String, queryText: String,
                     topK: Int = 10): DataFrame = {

@@ -114,10 +114,7 @@ object ReferenceParity {
   // stats schema, so every FilteredServe read path serves them with
   // zero configuration (the storeMetaCols inference)
   private val metaCache = new graft.SessionCache[String, String](
-    4, graft.sources.TempStores.delete)
-  graft.Tables.onInvalidate { p =>
-    metaCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+    4, identity, graft.sources.TempStores.delete)
 
   /** build-once (vec_id, withdrawn, type)-declared meta store for the
     * corpus at `d` — same derivation arithmetic as

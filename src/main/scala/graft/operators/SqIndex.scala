@@ -37,11 +37,7 @@ object SqIndex {
     def dim: Int = mins.length
   }
 
-  private val sqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Model]
-  // a rewrite of the source dir must drop ranges fit on the old data
-  graft.Tables.onInvalidate(p =>
-    sqCache.filterInPlace((k, _) => !k.startsWith(p) && !p.startsWith(k)))
+  private val sqCache = new graft.SessionCache[String, Model](64, identity)
 
   /** One aggregate pass: posexplode to (dim, x), partial min/max
     * map-side, 32·dim rows to the driver. */
@@ -59,7 +55,7 @@ object SqIndex {
   }
 
   def fitCached(spark: SparkSession, d: String): Model =
-    sqCache.getOrElseUpdate(d, fit(Tables.embeddings(spark, d), "embedding"))
+    sqCache.getOrElseUpdate(d)(fit(Tables.embeddings(spark, d), "embedding"))
 
   /** exact integer division of non-negatives: (n − n mod d) / d is an
     * integer ≤ 2⁵³, so the IEEE division is exact */

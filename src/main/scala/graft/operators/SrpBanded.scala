@@ -608,18 +608,12 @@ object SrpBanded {
   // v21's refined edge lists, cached with the same lifecycle as the
   // v18 graph below
   private val refinedCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  graft.Tables.onInvalidate { p =>
-    refinedCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+    8, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
 
   // the search graph is the expensive part — build it once per
   // (dir, k) and serve every query from the checkpointed edges
   private val graphCache = new graft.SessionCache[(String, Int), DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  graft.Tables.onInvalidate { p =>
-    graphCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+    8, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
   /** The checkpointed serve-time edge table: (src, dst, dst_emb) —
     * destination embeddings ride IN the edge rows (the HNSW-paper
     * layout: vectors live with the graph), so serve-path hop scoring
@@ -1038,83 +1032,53 @@ object SrpBanded {
     * broadcast hint or the frame unchanged. Counts are memoized by
     * FRAME IDENTITY — every caller hands the session-cached layer /
     * graph instance, so one count job per (corpus, layer), not one per
-    * serve. A stale entry is impossible: cache keys are the immutable
-    * cached frames themselves (a rewritten store produces a new frame
-    * object through its own invalidated cache). */
-  // access-ordered LRU (r17, ADVICE): overflow drops the ELDEST entry
-  // only, never the hot ones; DataFrame keeps Object equality, so keys
-  // stay identity-keyed like the former IdentityHashMap. Corpus
-  // invalidation clears the map so identity-keyed entries for dead
-  // frames never linger as strong DataFrame references.
-  private val edgeCountCache =
-    new java.util.LinkedHashMap[DataFrame, java.lang.Long](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, java.lang.Long]): Boolean = size() > 64
-    }
-  graft.Tables.onInvalidate { _ =>
-    edgeCountCache.synchronized(edgeCountCache.clear())
-  }
+    * serve. Keys carry no directory, so every [[graft.Tables.invalidate]]
+    * drops both frame memos: no entry outlives a rewrite as a strong
+    * reference to a dead frame. */
+  private val edgeCountCache = new graft.SessionCache[DataFrame, Long](64, _ => "")
   /** bytes past which a FILE-BACKED edge frame is treated as corpus-
-    * sized WITHOUT a count job (r17, ADVICE): the store-backed layer-0
-    * graph is the whole corpus's edges — an eager count there is a full
-    * edge-store scan on the first serve of a session, counter to the
-    * serve-cost-independent-of-N design. 64 MB of compressed parquet
-    * cannot hold ≤ [[EdgeBroadcastMaxRows]] = 65536 rows of the edge
-    * shape (two 8 B ids + the in-row dst_emb ≈ 18 MB RAW at the bound),
-    * so past it the frame is decided "large" from the file index alone
-    * — driver metadata the scan already listed, no job. Wrong only in
-    * the safe direction (a pathological small-but-fat frame keeps its
-    * shuffle plan; rows identical). */
-  private val EdgeCountSkipBytes = 64L << 20
+    * sized WITHOUT a count job: the store-backed layer-0 graph is the
+    * whole corpus's edges — an eager count there is a full edge-store
+    * scan on the first serve of a session, counter to the
+    * serve-cost-independent-of-N design. The bound is the raw size of
+    * [[EdgeBroadcastMaxRows]] edge rows (two 8 B ids + the in-row
+    * `Dim`-float dst_emb); the files behind more rows are larger
+    * unless parquet compresses them, which float embeddings barely
+    * allow. Wrong only in the safe direction (a small-but-fat frame
+    * keeps its shuffle plan; rows identical). */
+  private val EdgeCountSkipBytes = EdgeBroadcastMaxRows * (16L + 4L * Dim)
+  /** bytes of the files a file-backed frame reads (None for an
+    * in-memory frame), after partition pruning: the physical scan's
+    * selected partitions, pruned from the file index the read already
+    * listed (no job, no IO), so a `layer = l` slice of one shared
+    * layers file weighs its own partitions, not the whole file. A
+    * filter on a data column does not shrink the figure — the safe
+    * direction again. */
   private def fileBackedBytes(g: DataFrame): Option[BigInt] = {
-    val sizes = g.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        BigInt(l.relation.sizeInBytes)
+    val sizes = g.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanLike =>
+        BigInt(s.selectedPartitions.totalFileSize)
     }
     if (sizes.isEmpty) None else Some(sizes.sum)
   }
-  private def edgeRowCount(g: DataFrame): Long =
-    edgeCountCache.synchronized(Option(edgeCountCache.get(g)))
-      .map(_.longValue()).getOrElse {
-        val c =
-          if (fileBackedBytes(g).exists(_ > EdgeCountSkipBytes)) Long.MaxValue
-          else g.count()
-        edgeCountCache.synchronized(edgeCountCache.put(g, c)): Unit
-        c
-      }
   private[graft] def edgesSmall(g: DataFrame): Boolean =
-    edgeRowCount(g) <= EdgeBroadcastMaxRows
+    edgeCountCache.getOrElseUpdate(g) {
+      if (fileBackedBytes(g).exists(_ > EdgeCountSkipBytes)) Long.MaxValue else g.count()
+    } <= EdgeBroadcastMaxRows
   /** broadcast-eligible FILE-BACKED edge frames, materialized once
     * (r17): the stored batch serve (v34) rebuilds the layer broadcast
     * per walk step, and each rebuild re-reads the store's parquet —
     * 12+ scans per serve. A frame the size gate already licensed to
     * broadcast (≤ [[EdgeBroadcastMaxRows]] rows) is bounded, so it is
-    * checkpointed once per (session, frame) and every step's broadcast
-    * builds from in-memory blocks. In-memory frames (layer checkpoints,
+    * checkpointed once per frame and every step's broadcast builds
+    * from in-memory blocks. In-memory frames (layer checkpoints,
     * materializedGraph) pass through — they are already block-backed. */
-  private val edgeCkptCache =
-    new java.util.LinkedHashMap[DataFrame, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, DataFrame]): Boolean = size() > 16
-    }
-  graft.Tables.onInvalidate { _ =>
-    edgeCkptCache.synchronized {
-      // invalidation semantics (SessionCache.invalidate): the data the
-      // checkpoints point at was rewritten — release their blocks
-      edgeCkptCache.values().forEach(v =>
-        org.apache.spark.sql.GraftBridge.unpersistPlanRdds(v))
-      edgeCkptCache.clear()
-    }
-  }
+  private val edgeCkptCache = new graft.SessionCache[DataFrame, DataFrame](
+    16, _ => "", org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
   private[graft] def maybeBroadcastEdges(g: DataFrame): DataFrame =
     if (!edgesSmall(g)) g
     else if (fileBackedBytes(g).isEmpty) broadcast(g)
-    else broadcast(
-      edgeCkptCache.synchronized(Option(edgeCkptCache.get(g))).getOrElse {
-        val built = g.localCheckpoint(true)
-        edgeCkptCache.synchronized(edgeCkptCache.put(g, built)): Unit
-        built
-      })
+    else broadcast(edgeCkptCache.getOrElseUpdate(g)(g.localCheckpoint(true)))
 
   def graphSearchBatch(spark: SparkSession, d: String, queryMod: Int,
                        k: Int = 5, beam: Int = 8, iters: Int = 2,
@@ -1312,10 +1276,7 @@ object SrpBanded {
   // v21's final top-k edge set, checkpointed once per (d, params) —
   // the serve-time edge table for the refined search path
   private val refinedTopCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
-    8, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
-  graft.Tables.onInvalidate { p =>
-    refinedTopCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+    8, _._1, org.apache.spark.sql.GraftBridge.unpersistPlanRdds)
   /** v21's refined edges in the serve layout — (src, dst, dst_emb),
     * destination embeddings in-row like [[materializedGraph]]. */
   def materializedRefinedGraph(spark: SparkSession, d: String, k: Int = 5,

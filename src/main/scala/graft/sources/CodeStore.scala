@@ -75,10 +75,7 @@ object CodeStore {
     graft.Tables.invalidate(dir)
   }
 
-  private val frameCache = new graft.SessionCache[String, DataFrame](8)
-  graft.Tables.onInvalidate { p =>
-    frameCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
 
   /** Merge-on-read view: committed versions only (uncommitted delta
     * partitions pruned in the file index), latest version per vec_id
@@ -388,13 +385,7 @@ object CodeStore {
 
   // one code store per corpus dir, built lazily for the queries()
   // entry — a real deployment writes it at ingest time
-  private val storeCache = new graft.SessionCache[String, String](
-    4, TempStores.delete)  // INVALIDATED temp stores are deleted immediately;
-    // size-overflow evictions drop the reference only (SessionCache's
-    // live-handle contract) and are swept by TempStores' shutdown hook
-  graft.Tables.onInvalidate { p =>
-    storeCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val storeCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def storeFor(spark: SparkSession, d: String): String =
     storeCache.getOrElseUpdate(spark, d) {
       val dir = TempStores.track(

@@ -80,10 +80,7 @@ object EdgeStore {
 
   // a serving process opens the edge table once; the handle caches
   // the file listing, reads stay lazy per query
-  private val frameCache = new graft.SessionCache[String, DataFrame](8)
-  graft.Tables.onInvalidate { p =>
-    frameCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
 
   /** Merge-on-read view with the `pb` column retained (for pruned
     * consumers): committed versions only, latest version per src wins,
@@ -121,10 +118,7 @@ object EdgeStore {
     readCache.getOrElseUpdate(spark, dir) {
       resolvedFrame(spark, dir).select(col("src"), col("dst"), col("dst_emb"))
     }
-  private val readCache = new graft.SessionCache[String, DataFrame](8)
-  graft.Tables.onInvalidate { p =>
-    readCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val readCache = new graft.SessionCache[String, DataFrame](8, identity)
 
   /** executed plan of the last pruned hop read — spec hook for the
     * partition-pruning assertion */
@@ -292,13 +286,7 @@ object EdgeStore {
   // one refined-edge store per corpus dir, built lazily for the
   // queries() entry — a real deployment writes it after each offline
   // graph build/refinement
-  private val storeCache = new graft.SessionCache[String, String](
-    4, TempStores.delete)  // INVALIDATED temp stores are deleted immediately;
-    // size-overflow evictions drop the reference only (SessionCache's
-    // live-handle contract) and are swept by TempStores' shutdown hook
-  graft.Tables.onInvalidate { p =>
-    storeCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val storeCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def refinedStoreFor(spark: SparkSession, d: String): String =
     storeCache.getOrElseUpdate(spark, d) {
       val dir = TempStores.track(

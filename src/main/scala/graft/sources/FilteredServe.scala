@@ -371,9 +371,9 @@ object FilteredServe {
       .coalesce(1)
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$srpDir/meta/stats")
-    statsCache.remove(srpDir): Unit
-    rstatsCache.remove(srpDir): Unit
-    metaVerified.remove(srpDir): Unit
+    statsCache.invalidate(_ == srpDir)
+    rstatsCache.invalidate(_ == srpDir)
+    metaVerified.invalidate(_ == srpDir)
     byValDfCache.invalidate(_._1 == srpDir)
   }
 
@@ -491,11 +491,11 @@ object FilteredServe {
       // never served-as-consistent
       Hfs.fs(spark, srpDir).delete(
         new org.apache.hadoop.fs.Path(s"$srpDir/meta/stats/_SUCCESS"), false): Unit
-      statsCache.remove(srpDir): Unit
+      statsCache.invalidate(_ == srpDir)
       // drop the ensureMeta memo too: if this upsert dies mid-flight
       // (exception, not JVM death), the next serve must re-check the
       // commit marker and rebuild, not trust a stale "verified"
-      metaVerified.remove(srpDir): Unit
+      metaVerified.invalidate(_ == srpDir)
       // the cached analyzed scan's file index is about to go stale
       byValDfCache.invalidate(_._1 == srpDir)
       val touchedPred = touched.map(vs =>
@@ -559,7 +559,7 @@ object FilteredServe {
           readByValAs(spark, srpDir, cols, rcols)
             .select((col("vec_id") +: rcols.map(col)): _*),
           rcols)
-        rstatsCache.remove(srpDir): Unit
+        rstatsCache.invalidate(_ == srpDir)
       }
       // stats last (the ensureMeta gate): partition-column-only scan
       readByValAs(spark, srpDir, cols, rcols)
@@ -567,7 +567,7 @@ object FilteredServe {
         .agg(count(lit(1)).as("cnt"))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$srpDir/meta/stats")
-      statsCache.remove(srpDir): Unit
+      statsCache.invalidate(_ == srpDir)
       byValDfCache.invalidate(_._1 == srpDir)
     }
     org.apache.spark.sql.GraftBridge.unpersistPlanRdds(upd)
@@ -615,7 +615,7 @@ object FilteredServe {
   /** analyzed-scan memo for [[readByVal]] — plan reuse only, nothing
     * persisted (no onEvict needed); keyed (store dir, stats marker
     * mtime) so out-of-band rewrites miss */
-  private val byValDfCache = new graft.SessionCache[(String, Long), DataFrame](16)
+  private val byValDfCache = new graft.SessionCache[(String, Long), DataFrame](16, _._1)
 
   /** [[readByVal]] with the declared columns already in hand (the
     * upsert path, where the stats artifact is mid-rewrite) */
@@ -641,11 +641,10 @@ object FilteredServe {
     * (no `keys` column) is rebuilt, never served mixed-schema. The
     * footer read behind the check is memoized per store dir. */
   def ensureMeta(spark: SparkSession, d: String, srpDir: String): Unit =
-    if (!metaVerified.contains(srpDir)) {
+    metaVerified.getOrElseUpdate(srpDir) {
       val ok = metaCommitted(spark, srpDir) &&
         spark.read.parquet(s"$srpDir/meta/byval").columns.contains("keys")
       if (!ok) writeMeta(spark, d, srpDir)
-      metaVerified.put(srpDir, true): Unit
     }
 
   // stats are a handful of rows per store — memoized like centroids.
@@ -654,20 +653,13 @@ object FilteredServe {
   // the artifact itself, so stores declared over different columns
   // (the reference's withdrawn/type vs the corpus default
   // lang/source) serve through the same code with no configuration.
-  private val statsCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[String], Seq[(Map[String, String], Long)])]
-  private val metaVerified =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  graft.Tables.onInvalidate { p =>
-    statsCache.filterInPlace((k, _) => !k.startsWith(p) && !p.startsWith(k))
-    metaVerified.filterInPlace((k, _) => !k.startsWith(p) && !p.startsWith(k))
-    rstatsCache.filterInPlace((k, _) => !k.startsWith(p) && !p.startsWith(k))
-    byValDfCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+  private val statsCache =
+    new graft.SessionCache[String, (Seq[String], Seq[(Map[String, String], Long)])](64, identity)
+  private val metaVerified = new graft.SessionCache[String, Unit](64, identity)
 
   private def statsEntry(spark: SparkSession,
                          srpDir: String): (Seq[String], Seq[(Map[String, String], Long)]) =
-    statsCache.getOrElseUpdate(srpDir, {
+    statsCache.getOrElseUpdate(srpDir) {
       // the crash contract's read-side gate, enforced at the ONE entry
       // every serve path (matchCount/byValPruned/range/meta serves)
       // funnels through: a torn store (upsertMeta uncommitted before
@@ -682,7 +674,7 @@ object FilteredServe {
         (cols.map(c => c -> String.valueOf(r.getAs[Any](c))).toMap,
           r.getAs[Long]("cnt"))
       })
-    })
+    }
 
   /** the store's declared filter columns, read from its own stats
     * artifact */
@@ -694,11 +686,11 @@ object FilteredServe {
 
   // range-column histograms, memoized like stats; a store without the
   // rstats artifact has no declared range columns
-  private val rstatsCache = scala.collection.concurrent.TrieMap
-    .empty[String, Map[String, Seq[(Int, Double, Double, Long)]]]
+  private val rstatsCache =
+    new graft.SessionCache[String, Map[String, Seq[(Int, Double, Double, Long)]]](64, identity)
   private def rstats(spark: SparkSession,
                      srpDir: String): Map[String, Seq[(Int, Double, Double, Long)]] =
-    rstatsCache.getOrElseUpdate(srpDir, {
+    rstatsCache.getOrElseUpdate(srpDir) {
       val p = new org.apache.hadoop.fs.Path(s"$srpDir/meta/rstats")
       if (!Hfs.fs(spark, srpDir).exists(p)) Map.empty
       else spark.read.parquet(s"$srpDir/meta/rstats").collect().toSeq
@@ -706,7 +698,7 @@ object FilteredServe {
           r.getAs[Double]("lo"), r.getAs[Double]("hi"), r.getAs[Long]("cnt")))
         .groupBy(_._1)
         .map { case (c, rows) => c -> rows.map(t => (t._2, t._3, t._4, t._5)) }
-    })
+    }
 
   /** the store's declared RANGE columns (in-row numeric class) */
   def storeRangeCols(spark: SparkSession, srpDir: String): Seq[String] =
@@ -1791,11 +1783,7 @@ object FilteredServe {
   // ReferenceParity maps them onto the synthetic corpus) — built once
   // per corpus dir for v43's serve; a real deployment writes it at
   // ingest like every other store
-  private val refMetaCache = new graft.SessionCache[String, String](
-    4, TempStores.delete)
-  graft.Tables.onInvalidate { p =>
-    refMetaCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val refMetaCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def refMetaStoreFor(spark: SparkSession, d: String): String =
     refMetaCache.getOrElseUpdate(spark, d) {
       val dir = TempStores.track(

@@ -84,13 +84,8 @@ object HnswStore {
     graft.Tables.invalidate(dir)
   }
 
-  private val frameCache = new graft.SessionCache[String, DataFrame](8)
-  private val entryCache = new graft.SessionCache[String, (Long, Array[Float])](8)
-  graft.Tables.onInvalidate { p =>
-    frameCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-    entryCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-    layerSliceCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
+  private val entryCache = new graft.SessionCache[String, (Long, Array[Float])](8, identity)
 
   /** Merge-on-read view of the hierarchy: committed versions only,
     * latest version per (layer, src) wins, tombstones dropped. The
@@ -153,10 +148,8 @@ object HnswStore {
   private def edgeBytes: Long = 96L + 4L * SrpBanded.Dim
 
   private val localLayerCache =
-    new graft.SessionCache[(String, Long), Map[Int, Map[Long, Array[(Long, Array[Float])]]]](LayerCacheEntries)
-  graft.Tables.onInvalidate { p =>
-    localLayerCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+    new graft.SessionCache[(String, Long), Map[Int, Map[Long, Array[(Long, Array[Float])]]]](
+      LayerCacheEntries, _._1)
 
   /** The upper layers that fit [[LayerCacheBudgetBytes]], collected
     * ONCE per opened store (top layer first — the exponential thinning
@@ -288,7 +281,7 @@ object HnswStore {
 
   /** stable per-(store, layer) slice instances of [[layersFrame]] —
     * plan reuse only, nothing persisted */
-  private val layerSliceCache = new graft.SessionCache[(String, Int), DataFrame](16)
+  private val layerSliceCache = new graft.SessionCache[(String, Int), DataFrame](16, _._1)
 
   /** Incremental hierarchy maintenance — the upsert analogue
     * [[EdgeStore.upsert]] provides for the flat graph, applied to
@@ -420,13 +413,7 @@ object HnswStore {
 
   // one store per corpus dir, built lazily for the queries() entry —
   // a real deployment writes it after each offline build
-  private val storeCache = new graft.SessionCache[String, String](
-    4, TempStores.delete)  // INVALIDATED temp stores are deleted immediately;
-    // size-overflow evictions drop the reference only (SessionCache's
-    // live-handle contract) and are swept by TempStores' shutdown hook
-  graft.Tables.onInvalidate { p =>
-    storeCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val storeCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def storeFor(spark: SparkSession, d: String): String =
     storeCache.getOrElseUpdate(spark, d) {
       val dir = TempStores.track(

@@ -49,13 +49,11 @@ object IvfPqStore {
   // models are tiny driver-side arrays, but re-reading + collecting
   // two parquet dirs per query is pure fixed overhead — memoize per
   // dir, dropped by Tables.invalidate when the store is rewritten
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (IvfIndex.Model, PqIndex.Model)]
-  graft.Tables.onInvalidate(p =>
-    modelCache.filterInPlace((k, _) => !k.startsWith(p) && !p.startsWith(k)))
+  private val modelCache =
+    new graft.SessionCache[String, (IvfIndex.Model, PqIndex.Model)](64, identity)
 
   def readModels(spark: SparkSession, dir: String): (IvfIndex.Model, PqIndex.Model) =
-    modelCache.getOrElseUpdate(dir, readModelsUncached(spark, dir))
+    modelCache.getOrElseUpdate(dir)(readModelsUncached(spark, dir))
 
   private def readModelsUncached(spark: SparkSession, dir: String): (IvfIndex.Model, PqIndex.Model) = {
     val ivf = IvfStore.readCentroids(spark, s"$dir")
@@ -191,13 +189,7 @@ object IvfPqStore {
 
   // one residual store per corpus dir, built lazily for the queries()
   // entry — a real deployment writes it at ingest time
-  private val residualStoreCache = new graft.SessionCache[String, String](
-    4, TempStores.delete)  // INVALIDATED temp stores are deleted immediately;
-    // size-overflow evictions drop the reference only (SessionCache's
-    // live-handle contract) and are swept by TempStores' shutdown hook
-  graft.Tables.onInvalidate { p =>
-    residualStoreCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-  }
+  private val residualStoreCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def residualStoreFor(spark: SparkSession, d: String): String =
     residualStoreCache.getOrElseUpdate(spark, d) {
       val dir = TempStores.track(

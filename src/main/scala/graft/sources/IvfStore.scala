@@ -93,14 +93,11 @@ object IvfStore {
   // the centroid matrix is tiny and immutable per store — memoize per
   // dir instead of a parquet read+collect per probe; dropped via
   // Tables.invalidate when the store is rewritten
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, IvfIndex.Model]
-  graft.Tables.onInvalidate(p =>
-    centroidCache.filterInPlace((k, _) => !k.startsWith(p) && !p.startsWith(k)))
+  private val centroidCache = new graft.SessionCache[String, IvfIndex.Model](64, identity)
 
   def readCentroids(spark: SparkSession, dir: String): IvfIndex.Model = {
     val root = currentRoot(spark, dir)
-    centroidCache.getOrElseUpdate(root, {
+    centroidCache.getOrElseUpdate(root) {
       val rows = spark.read.parquet(s"$root/centroids")
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       val k = rows.map(_._1).max + 1
@@ -108,7 +105,7 @@ object IvfStore {
       val cs = Array.fill(k)(new Array[Double](dim))
       rows.foreach { case (i, j, w) => cs(i)(j) = w }
       IvfIndex.Model(cs)
-    })
+    }
   }
 
   /** Incremental maintenance: fold freshly-embedded rows into the

@@ -116,16 +116,16 @@ object SigStore {
     }
   }
 
-  private val groupsCache = scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val groupsCache = new graft.SessionCache[String, Int](64, identity)
   private[graft] def storeGroups(spark: SparkSession, dir: String): Int =
-    groupsCache.getOrElseUpdate(dir, {
+    groupsCache.getOrElseUpdate(dir) {
       val md = new org.apache.hadoop.fs.Path(s"$dir/_meta")
       val f = Hfs.fs(spark, dir)
       require(f.exists(md), s"SigStore at $dir has no _meta marker")
       f.listStatus(md).toSeq.map(_.getPath.getName)
         .collectFirst { case s if s.startsWith("groups=") => s.drop(7).toInt }
         .getOrElse(1)
-    })
+    }
 
   /** bucket-group count: power of two, sized so a (band, bg) dir
     * holds ~[[DirRowTarget]] rows — [[MaxGroups]]-capped so the dir
@@ -186,7 +186,7 @@ object SigStore {
     val groups = groupsFor(n)
     val f = Hfs.fs(spark, dir)
     f.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_meta/groups=$groups"))
-    groupsCache.put(dir, groups): Unit
+    groupsCache.invalidate(_ == dir)
     writeVer(spark, dir, 0, docs, groups)
   }
 
@@ -456,19 +456,14 @@ object SigStore {
     // copies across bench/test JVMs (shared lifecycle: TempStores,
     // which every storeFor memo now routes through)
     TempStores.delete(dir)
-    groupsCache.remove(dir): Unit
+    groupsCache.invalidate(_ == dir)
   }
 
   // memoized store of the non-batch corpus slice, keyed by corpus
   // dir; invalidation deletes the temp store on disk (its data was
   // derived from the rewritten corpus, so no live handle is valid),
   // and a shutdown hook sweeps whatever the JVM still holds
-  private val storeCache = new graft.SessionCache[String, String](
-    4, deleteTempStore)
-  graft.Tables.onInvalidate { p =>
-    storeCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-    groupsCache.filterInPlace((k, _) => !(k.startsWith(p) || p.startsWith(k)))
-  }
+  private val storeCache = new graft.SessionCache[String, String](4, identity, deleteTempStore)
   def storeFor(spark: SparkSession, d: String): String =
     storeCache.getOrElseUpdate(spark, d) {
       val dir = TempStores.track(

@@ -86,16 +86,16 @@ object SrpStore {
     * probes with the same hyperplane set. Absent marker = the pinned
     * oracle default (stores written before the keyspace was
     * parameterized). */
-  private val rpbCache = scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val rpbCache = new graft.SessionCache[String, Int](64, identity)
   private[graft] def storeRpb(spark: SparkSession, dir: String): Int =
-    rpbCache.getOrElseUpdate(dir, {
+    rpbCache.getOrElseUpdate(dir) {
       val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
       val f = Hfs.fs(spark, dir)
       if (!f.exists(kd)) SrpBanded.RowsPerBand
       else f.listStatus(kd).toSeq.map(_.getPath.getName)
         .collectFirst { case s if s.startsWith("rpb=") => s.drop(4).toInt }
         .getOrElse(SrpBanded.RowsPerBand)
-    })
+    }
 
   /** Target rows per partition dir of the `banded/` layout. The write
     * cost of a partitioned store is PER DIR, not per row (measured
@@ -131,9 +131,9 @@ object SrpStore {
 
   /** recorded dir-group shift of a store; legacy stores without the
     * marker fall back to the r10 rule (wide ⇒ rpb−8, pinned ⇒ 0) */
-  private val shiftCache = scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val shiftCache = new graft.SessionCache[String, Int](64, identity)
   private[graft] def storeShift(spark: SparkSession, dir: String): Int =
-    shiftCache.getOrElseUpdate(dir, {
+    shiftCache.getOrElseUpdate(dir) {
       val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
       val f = Hfs.fs(spark, dir)
       val marker =
@@ -141,12 +141,12 @@ object SrpStore {
         else f.listStatus(kd).toSeq.map(_.getPath.getName)
           .collectFirst { case s if s.startsWith("shift=") => s.drop(6).toInt }
       marker.getOrElse(math.max(0, storeRpb(spark, dir) - SrpBanded.RowsPerBand))
-    })
+    }
 
   /** recorded `embed/` partition count (eg = vec_id mod this) */
-  private val egCache = scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val egCache = new graft.SessionCache[String, Long](64, identity)
   private[graft] def storeEg(spark: SparkSession, dir: String): Long =
-    egCache.getOrElseUpdate(dir, {
+    egCache.getOrElseUpdate(dir) {
       val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
       val f = Hfs.fs(spark, dir)
       (if (!f.exists(kd)) None
@@ -155,7 +155,7 @@ object SrpStore {
         .getOrElse(throw new IllegalStateException(
           s"SRP store at $dir predates the v2 (single-embedding-copy) " +
             "layout — rebuild it with SrpStore.write"))
-    })
+    }
 
   /** v2-layout presence check — build-reuse gates (probes, benches)
     * call this to decide rebuild-vs-reuse for persisted store dirs */
@@ -237,9 +237,9 @@ object SrpStore {
     fsK.create(new org.apache.hadoop.fs.Path(kd, s"rpb=$rowsPerBand"), false).close()
     fsK.create(new org.apache.hadoop.fs.Path(kd, s"shift=$shift"), false).close()
     fsK.create(new org.apache.hadoop.fs.Path(kd, s"eg=$nEg"), false).close()
-    rpbCache.remove(dir): Unit
-    shiftCache.remove(dir): Unit
-    egCache.remove(dir): Unit
+    rpbCache.invalidate(_ == dir)
+    shiftCache.invalidate(_ == dir)
+    egCache.invalidate(_ == dir)
     // compact copy of the key assignment for BULK consumers (graph
     // builds, analytics): (vec_id, band, bk) is 12 B/row, and a
     // full-graph rebuild reading 2048 bucket dirs of point-probe-
@@ -264,16 +264,7 @@ object SrpStore {
   // to Bands·2^RowsPerBand partition dirs) is built once, not per
   // probe. Partition pruning still happens per query — the filter is
   // applied to the retained index, not the data.
-  private val frameCache = new graft.SessionCache[String, DataFrame](8)
-  graft.Tables.onInvalidate { p =>
-    frameCache.invalidate(k => k.startsWith(p) || p.startsWith(k))
-    rpbCache.keys.filter(k => k.startsWith(p) || p.startsWith(k))
-      .foreach(rpbCache.remove)
-    shiftCache.keys.filter(k => k.startsWith(p) || p.startsWith(k))
-      .foreach(shiftCache.remove)
-    egCache.keys.filter(k => k.startsWith(p) || p.startsWith(k))
-      .foreach(egCache.remove)
-  }
+  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
   private def bandedFrame(spark: SparkSession, dir: String): DataFrame =
     frameCache.getOrElseUpdate(spark, dir)(spark.read.parquet(s"$dir/banded"))
 
@@ -439,10 +430,7 @@ object SrpStore {
       emb: Map[Long, Array[Float]])
 
   private val localStoreCache = new graft.SessionCache[(String, Long),
-    Option[LocalStore]](BucketCacheEntries)
-  graft.Tables.onInvalidate { p =>
-    localStoreCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+    Option[LocalStore]](BucketCacheEntries, _._1)
 
   /** The store as a driver image — bucket membership ids plus the
     * embedding map — collected once per opened store IF it fits the
@@ -758,13 +746,8 @@ object SrpStore {
   // queries() entry — a real deployment writes it once at ingest time
   // (like IvfStore), picking the width from the corpus row count
   // ([[SrpBanded.rowsPerBandFor]])
-  private val storeCache = new graft.SessionCache[(String, Int), String](
-    4, TempStores.delete)  // INVALIDATED temp stores are deleted immediately;
-    // size-overflow evictions drop the reference only (SessionCache's
-    // live-handle contract) and are swept by TempStores' shutdown hook
-  graft.Tables.onInvalidate { p =>
-    storeCache.invalidate(k => k._1.startsWith(p) || p.startsWith(k._1))
-  }
+  private val storeCache =
+    new graft.SessionCache[(String, Int), String](4, _._1, TempStores.delete)
   def storeFor(spark: SparkSession, d: String): String =
     storeFor(spark, d, SrpBanded.RowsPerBand)
   def storeFor(spark: SparkSession, d: String, rowsPerBand: Int): String =

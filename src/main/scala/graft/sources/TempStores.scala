@@ -5,9 +5,11 @@ package graft.sources
   * writes stores at ingest time to durable paths and never routes
   * through here). Each store cache registers its temp dirs so that
   *
-  *  - an EVICTED or invalidated entry deletes its directory instead
-  *    of orphaning a corpus-sized copy in /tmp (the r11 SigStore
-  *    finding — the same pattern existed in every other store), and
+  *  - an invalidated entry deletes its directory instead of
+  *    orphaning a corpus-sized copy in /tmp (the r11 SigStore finding
+  *    — the same pattern existed in every other store); an entry
+  *    dropped on overflow keeps it, since a caller may still serve
+  *    from it (graft.SessionCache's class doc), and
   *  - a JVM shutdown sweeps whatever is still tracked, bounding what
   *    repeated bench/test JVMs can accumulate.
   *
@@ -23,7 +25,7 @@ private[graft] object TempStores {
   /** register a freshly created temp store dir; returns it */
   def track(dir: String): String = { dirs.add(dir): Unit; dir }
 
-  /** best-effort recursive delete + untrack — the eviction callback */
+  /** best-effort recursive delete + untrack — the invalidation callback */
   def delete(dir: String): Unit = {
     try {
       import java.nio.file.{Files, Paths}

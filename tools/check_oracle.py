@@ -3,7 +3,8 @@
 
 Usage: python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/verify_out
 Compares each <outDir>/<name> parquet against the oracle SQL run in
-DuckDB over views named after the test tables. Columns sorted by name,
+DuckDB over views named after the test tables. An oracle query with no
+output directory (it threw in Verify) fails. Columns sorted by name,
 rows sorted by all columns, exact value compare (floats: exact, since
 the engine is designed for bit-parity; reports max delta if not).
 """
@@ -25,6 +26,10 @@ def main(sf_dir, out_dir):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     names = sorted(d for d in os.listdir(out_dir) if os.path.isdir(f"{out_dir}/{d}"))
     n_pass = n_fail = n_rowsonly = 0
+    # a query that threw in Verify leaves no output directory: it fails
+    for name in sorted(set(oracle) - set(names)):
+        print(f"FAIL {name}: no output directory")
+        n_fail += 1
     for name in names:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()

@@ -28,8 +28,8 @@ import graft.functions.vectors
   * band 7's key shifted 56 bits would overflow the signed range that
   * DuckDB refuses to wrap, and the sliced form lets the oracle replay
   * the EXACT keys through the shared `srpBandsCtes` text source.
-  * Hamming distance = Σ_b bit_count(keys[b] XOR qkeys[b]) — all
-  * codegen'd integer ops (functions.bit_count), no UDF.
+  * Hamming distance = Σ_b bit_count(keys[b] XOR qkeys[b]) — one
+  * codegen'd integer kernel ([[HammingDistance]]), no UDF.
   *
   * Determinism: shortlist cut by (hamming ASC, vec_id ASC) — a total
   * order — then exact-cosine rerank by (sim DESC, vec_id ASC); both
@@ -38,7 +38,7 @@ import graft.functions.vectors
   */
 object HammingIndex {
 
-  import SrpBanded.{Bands, Dim}
+  import SrpBanded.Dim
 
   /** default shortlist width: recall is tunable here (the only
     * knob). 256 is sized for the hard regime the test corpus sits in
@@ -56,11 +56,12 @@ object HammingIndex {
       .select(col("vec_id"), col("embedding"),
         SrpBanded.bandKeysCol(col("embedding")).as("keys"))
 
-  /** Σ_b bit_count(keys[b] XOR qk[b]) as a codegen'd int column */
+  /** Σ_b bit_count(keys[b] XOR qk[b]) over the `keys` column as one
+    * codegen'd int expression holding the query keys by reference
+    * ([[HammingDistance]]) — the same class serves every query */
   private[graft] def hammingCol(qk: Seq[Long]): Column =
-    (0 until Bands).map { b =>
-      bit_count(element_at(col("keys"), b + 1).bitwiseXOR(lit(qk(b))))
-    }.reduce(_ + _).cast("int")
+    org.apache.spark.sql.GraftBridge.column(
+      HammingDistance(org.apache.spark.sql.GraftBridge.expression(col("keys")), qk.toArray))
 
   /** The shared rerank tail: exact cosine over the shortlist rows
     * (embeddings already in-row — no corpus join), (sim DESC, id)

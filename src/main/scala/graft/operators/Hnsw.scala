@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.vectors
+import graft.functions.{bound, vectors}
 
 /** Hierarchical navigable graph search (HNSW, Malkov & Yashunin
   * TPAMI'18 — public), batch-built and deterministic so the whole
@@ -227,7 +227,7 @@ object Hnsw {
       maxSteps: Int = MaxSteps): Seq[(Long, Double)] =
     descentPoolBy(spark, entryFor(spark, d), queryVec,
       (l, frontier) => fetchScoredDf(layerGraph(spark, d, l)
-        .filter(col("src").isin(frontier: _*)), queryVec),
+        .filter(bound.isin(col("src"), frontier)), queryVec),
       descentBeam, maxSteps)
 
   /** v31: hierarchical search — descent seeds, then the shared

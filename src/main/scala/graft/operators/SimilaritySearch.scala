@@ -133,9 +133,11 @@ object SimilaritySearch {
       .limit(k)
   }
 
-  /** Point lookup — get_record_by_id. Filter pushes to the scan. */
+  /** Point lookup — get_record_by_id. Filter pushes to the scan; the
+    * id is bound by reference (a one-element set), so every lookup
+    * reuses one compiled plan, like the reference's `WHERE id = $1`. */
   def recordById(documents: DataFrame, idCol: String, id: Long): DataFrame =
-    documents.filter(col(idCol) === id)
+    documents.filter(graft.functions.bound.isin(col(idCol), Seq(id)))
 
   /** End-to-end semantic search over documents (find_similar_customer_records):
     * embed the query text, score embeddings, top-k, attach metadata. */

@@ -2,10 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 import graft.Tables
 import graft.functions.vectors
 
@@ -49,6 +51,55 @@ case class SrpBandKeysExpr(child: Expression, dim: Int = SrpBanded.Dim,
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, q => s"graft.operators.SrpBanded.bandKeysJ($q, $dim, $rowsPerBand)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `hamming_distance(keys, q)` → int: Σ_b bit_count(keys[b] XOR q[b])
+  * over the query's band keys. The query keys are held BY REFERENCE
+  * (one `long[]` reference object), so the generated class is the same
+  * for every query; a per-band `lit(q(b))` sum would inline each key
+  * and compile new code per request. Null keys, a null element among
+  * the first `q.length`, or fewer elements give null. */
+case class HammingDistance(child: Expression, q: Array[Long]) extends UnaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+  override val nullIntolerant: Boolean = true
+  override def prettyName: String = "hamming_distance"
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) null
+    else {
+      val d = HammingDistance.distanceJ(v.asInstanceOf[ArrayData], q)
+      if (d < 0) null else d
+    }
+  }
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val qRef = ctx.addReferenceObj("qkeys", q, "long[]")
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = ${c.isNull};
+      int ${ev.value} = -1;
+      if (!${ev.isNull}) {
+        ${ev.value} = graft.operators.HammingDistance.distanceJ(${c.value}, $qRef);
+        ${ev.isNull} = ${ev.value} < 0;
+      }""")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object HammingDistance {
+  /** codegen-callable kernel; -1 stands for a null result */
+  def distanceJ(keys: ArrayData, q: Array[Long]): Int = {
+    if (keys.numElements() < q.length) return -1
+    var s = 0
+    var b = 0
+    while (b < q.length) {
+      if (keys.isNullAt(b)) return -1
+      s += java.lang.Long.bitCount(keys.getLong(b) ^ q(b))
+      b += 1
+    }
+    s
+  }
 }
 
 object SrpBanded {
@@ -1390,13 +1441,13 @@ object SrpBanded {
     // frontier's out-edges WITH destination embeddings in-row: either
     // a pruned point read against a persisted edge store (`edgesFor` —
     // the v28/v32 path, PartitionFilters decided in the file index) or
-    // an isin-filter over the checkpointed in-memory serve graph. In
+    // a membership filter over the checkpointed in-memory serve graph. In
     // BOTH cases the hop never touches the corpus table: candidate
     // embeddings arrive in the edge rows themselves, so a beam step at
     // 100 TB reads O(frontier·graphK) rows, not a corpus scan.
     val edgesOf: Seq[Long] => DataFrame = edgesFor.getOrElse { frontier =>
       graphOverride.getOrElse(materializedGraph(spark, d, graphK))
-        .filter(col("src").isin(frontier: _*))
+        .filter(graft.functions.bound.isin(col("src"), frontier))
         .select(col("src"), col("dst"), col("dst_emb"))
     }
     val q = typedLit(queryVec)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{HammingIndex, SrpBanded}
-import graft.functions.vectors
+import graft.functions.{bound, vectors}
 
 /** Persisted binary-code store — the on-disk artifact for the
   * compact-code scan family ([[graft.operators.HammingIndex]], v36):
@@ -141,7 +141,7 @@ object CodeStore {
       .limit(shortlist).collect().map(_.getLong(0)).toSeq
     val pbs = ids.map(Math.floorMod(_, Partitions.toLong)).distinct
     val fetch = fullFrame(spark, dir)
-      .filter(col("pb").isin(pbs: _*) && col("vec_id").isin(ids: _*))
+      .filter(bound.isin(col("pb"), pbs) && bound.isin(col("vec_id"), ids))
       .select(col("vec_id"), col("embedding"))
     lastFetchPlanThunk = () => fetch.queryExecution.executedPlan.toString
     HammingIndex.rerank(fetch, queryVec, k)
@@ -214,7 +214,7 @@ object CodeStore {
           FilteredServe.recordCoverage(s"scan:$f", matching, scanned.toLong)
           val pbs = okIds.map(Math.floorMod(_, Partitions.toLong)).distinct
           val fetch = fullFrame(spark, dir)
-            .filter(col("pb").isin(pbs: _*) && col("vec_id").isin(okIds: _*))
+            .filter(bound.isin(col("pb"), pbs) && bound.isin(col("vec_id"), okIds))
             .select(col("vec_id"), col("embedding"))
           HammingIndex.rerank(fetch, queryVec, k)
         case None =>

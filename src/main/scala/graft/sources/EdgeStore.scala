@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.SrpBanded
-import graft.functions.vectors
+import graft.functions.{bound, vectors}
 
 /** Persisted k-NN graph edges — the third and last index artifact a
   * graph-ANN serving process needs on disk (reference role: sql/05's
@@ -132,7 +132,7 @@ object EdgeStore {
   def edgesFor(spark: SparkSession, dir: String, frontier: Seq[Long]): DataFrame = {
     val pbs = frontier.map(Math.floorMod(_, EdgePartitions.toLong)).distinct
     val step = resolvedFrame(spark, dir)
-      .filter(col("pb").isin(pbs: _*) && col("src").isin(frontier: _*))
+      .filter(bound.isin(col("pb"), pbs) && bound.isin(col("src"), frontier))
       .select(col("src"), col("dst"), col("dst_emb"))
     lastEdgePlanThunk = () => step.queryExecution.executedPlan.toString
     step

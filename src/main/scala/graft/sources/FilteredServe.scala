@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.SrpBanded
-import graft.functions.vectors
+import graft.functions.{bound, vectors}
 
 /** A term of a filtered-search predicate (conjunction semantics).
   * The reference engine is Postgres — `WHERE num_claims >= 5 AND
@@ -595,27 +595,31 @@ object FilteredServe {
     // serve (the grouped mixed batch paid it 2× per group). Entries
     // are invalidated wherever the byval files are rewritten
     // (writeMetaFrom, upsertMeta) and on corpus invalidation (r16),
-    // AND keyed on the stats commit marker's mtime (r17, ADVICE): an
-    // out-of-band rewrite that bypasses this JVM's invalidation hooks
-    // still bumps the marker, so its stale file listing MISSES — one
-    // cheap getFileStatus per call, never a re-listing.
-    byValDfCache.getOrElseUpdate(spark, (srpDir, statsMarkerMtime(spark, srpDir))) {
+    // AND keyed on the stats commit marker's (mtime, length): an
+    // out-of-band rewrite that bypasses this JVM's invalidation still
+    // rewrites the marker, so its stale file listing MISSES even when
+    // the rewrite lands within the file system's mtime granularity —
+    // one cheap getFileStatus per call, never a re-listing.
+    byValDfCache.getOrElseUpdate(spark, (srpDir, statsMarkerStamp(spark, srpDir))) {
       readByValAs(spark, srpDir,
         storeMetaCols(spark, srpDir), storeRangeCols(spark, srpDir))
     }
 
-  /** mtime of the store's stats commit marker (0 when missing) — the
-    * out-of-band-rewrite cache key for [[readByVal]] */
-  private def statsMarkerMtime(spark: SparkSession, srpDir: String): Long =
-    try Hfs.fs(spark, srpDir)
-      .getFileStatus(new org.apache.hadoop.fs.Path(s"$srpDir/meta/stats/_SUCCESS"))
-      .getModificationTime
-    catch { case _: java.io.IOException => 0L }
+  /** (mtime, length) of the store's stats commit marker ((0, -1) when
+    * it cannot be read) — the out-of-band-rewrite cache key for
+    * [[readByVal]] */
+  private[graft] def statsMarkerStamp(spark: SparkSession, srpDir: String): (Long, Long) =
+    try {
+      val st = Hfs.fs(spark, srpDir)
+        .getFileStatus(new org.apache.hadoop.fs.Path(s"$srpDir/meta/stats/_SUCCESS"))
+      (st.getModificationTime, st.getLen)
+    } catch { case scala.util.control.NonFatal(_) => (0L, -1L) }
 
   /** analyzed-scan memo for [[readByVal]] — plan reuse only, nothing
     * persisted (no onEvict needed); keyed (store dir, stats marker
-    * mtime) so out-of-band rewrites miss */
-  private val byValDfCache = new graft.SessionCache[(String, Long), DataFrame](16, _._1)
+    * stamp) so out-of-band rewrites miss */
+  private val byValDfCache =
+    new graft.SessionCache[(String, (Long, Long)), DataFrame](16, _._1)
 
   /** [[readByVal]] with the declared columns already in hand (the
     * upsert path, where the stats artifact is mid-rewrite) */
@@ -936,7 +940,7 @@ object FilteredServe {
     if (ids.isEmpty) return Set.empty
     val mbs = ids.map(Math.floorMod(_, IdPartitions.toLong)).distinct
     val read = spark.read.parquet(s"$srpDir/meta/byid")
-      .filter(col("mb").isin(mbs: _*) && col("vec_id").isin(ids: _*) &&
+      .filter(bound.isin(col("mb"), mbs) && bound.isin(col("vec_id"), ids) &&
         termsCol(terms))
       .select(col("vec_id"))
     lastByIdPlanThunk = () => read.queryExecution.executedPlan.toString
@@ -1016,7 +1020,7 @@ object FilteredServe {
     // candidate state never exceeds k.
     val cands: Seq[(Long, Double)] =
       if (ids.length <= MaxShortlist)
-        fetch.filter(col("vec_id").isin(ids: _*))
+        fetch.filter(bound.isin(col("vec_id"), ids))
           .select(col("vec_id"),
             vectors.cosine_sim(col("embedding"), typedLit(queryVec)).as("sim"))
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

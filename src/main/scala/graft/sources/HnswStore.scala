@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Hnsw, SrpBanded}
+import graft.functions.bound
 
 /** Persisted HNSW hierarchy — the on-disk artifact set the
   * hierarchical serve path ([[graft.operators.Hnsw]], v31) needs so a
@@ -196,8 +197,8 @@ object HnswStore {
         case None =>
           val pbs = frontier.map(Math.floorMod(_, LayerPartitions.toLong)).distinct
           val step = layers
-            .filter(col("layer") === l && col("pb").isin(pbs: _*) &&
-              col("src").isin(frontier: _*))
+            .filter(col("layer") === l && bound.isin(col("pb"), pbs) &&
+              bound.isin(col("src"), frontier))
           lastLayerPlanThunk = () => step.queryExecution.executedPlan.toString
           Hnsw.fetchScoredDf(step, queryVec)
       }

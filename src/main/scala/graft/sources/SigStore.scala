@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.text
+import graft.functions.{bound, text}
 
 /** On-disk MinHash band-signature store — incremental near-dup
   * ("dedup-as-a-service"). The batch operator d2 re-bands the whole
@@ -234,7 +234,7 @@ object SigStore {
     val dbs = ids.map(_ & (groups - 1).toLong).distinct
     val pruned = spark.read.schema(DocsSchema).parquet(s"$dir/docs")
       .filter(col("__ver").isin(vers: _*) &&
-        col("db").isin(dbs: _*) && col("doc_id").isin(ids: _*))
+        bound.isin(col("db"), dbs) && bound.isin(col("doc_id"), ids))
       .select(col("doc_id"), col("text"))
     lastDocsPlanThunk = () => pruned.queryExecution.executedPlan.toString
     pruned
@@ -243,15 +243,24 @@ object SigStore {
   /** probed-bucket predicate: ONE `IN` membership node per band over
     * the batch's band_key set (never a per-key OR tree — a predicate
     * whose size grows with the probe set must be a collection node;
-    * see the r11 codegen entry in docs/PERF.md), with the derived
-    * (band, bg) conjunct pruning partitions statically. */
-  private def probePred(keysByBand: Map[Int, Seq[Long]], groups: Int): Column =
-    keysByBand.toSeq.sortBy(_._1).map { case (b, ks) =>
-      val gs = ks.map(_ & (groups - 1).toLong).distinct
-      col("band") === b &&
-        col("bg").isin(gs: _*) &&
-        col("band_key").isin(ks: _*)
+    * see the r11 codegen entry in docs/PERF.md), each set bound by
+    * reference ([[graft.functions.bound]]). The derived (band, bg)
+    * disjunction is a SEPARATE conjunct: partition-only, it prunes in
+    * the file index and never reaches the generated row filter. Folded
+    * into the per-band key terms, two bands with equal bg sets let the
+    * optimizer factor the shared set out — a plan shape, and compiled
+    * classes, that changed with the request's values. The split is
+    * exact: a row has one band, and bg = band_key & (G−1). */
+  private def probePred(keysByBand: Map[Int, Seq[Long]], groups: Int): Column = {
+    val bands = keysByBand.toSeq.sortBy(_._1)
+    val parts = bands.map { case (b, ks) =>
+      col("band") === b && bound.isin(col("bg"), ks.map(_ & (groups - 1).toLong))
     }.reduce(_ || _)
+    val keys = bands.map { case (b, ks) =>
+      col("band") === b && bound.isin(col("band_key"), ks)
+    }.reduce(_ || _)
+    parts && keys
+  }
 
   /** Near-dup pairs of `batch` against the stored corpus AND within
     * the batch itself — d2's pipeline with the corpus side read from

@@ -141,6 +141,22 @@ class SessionCacheSpec extends AnyFunSuite {
     graft.sources.TempStores.delete(root)
   }
 
+  test("byval scan memo: a same-mtime marker rewrite with a new length misses") {
+    val srp = Files.createTempDirectory("sc-marker").toString
+    try {
+      FilteredServe.writeMeta(spark, sf, srp)
+      val scan = FilteredServe.readByVal(spark, srp)
+      assert(FilteredServe.readByVal(spark, srp) eq scan, "unchanged store missed")
+      // an out-of-band rewrite landing within the mtime granularity
+      val marker = java.nio.file.Paths.get(s"$srp/meta/stats/_SUCCESS")
+      val (mtime, len) = FilteredServe.statsMarkerStamp(spark, srp)
+      Files.write(marker, Array.fill(len.toInt + 7)('x'.toByte))
+      Files.setLastModifiedTime(marker, java.nio.file.attribute.FileTime.fromMillis(mtime))
+      assert(FilteredServe.statsMarkerStamp(spark, srp) == ((mtime, len + 7)))
+      assert(!(FilteredServe.readByVal(spark, srp) eq scan), "rewritten marker hit the stale scan")
+    } finally graft.sources.TempStores.delete(srp)
+  }
+
   test("Tables.invalidate drops every registered memo under the rewritten store") {
     val root = Files.createTempDirectory("sc-registry").toString
     val (hnsw, code, srp) = (s"$root/hnsw", s"$root/code", s"$root/srp")

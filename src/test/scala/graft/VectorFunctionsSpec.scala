@@ -40,6 +40,42 @@ class VectorFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("hamming_distance: codegen, interpreted and the per-band literal sum agree") {
+    import graft.operators.{HammingDistance, SrpBanded}
+    val rng = new scala.util.Random(7)
+    val q = Array.fill(SrpBanded.Bands)(rng.nextLong())
+    def keys(): Seq[Option[Long]] = Seq.fill(SrpBanded.Bands)(Some(rng.nextLong()))
+    val cases: Seq[Option[Seq[Option[Long]]]] =
+      Seq.fill(6)(Some(keys())) ++ Seq(
+        Some(q.toSeq.map(Some(_))), // distance 0
+        Some(q.toSeq.map(k => Some(~k))), // every bit differs
+        None, // null keys
+        Some(keys().updated(0, None)), // a null first band
+        Some(keys().updated(SrpBanded.Bands - 1, None))) // a null last band
+    // repartition: keeps the projection out of local-relation folding,
+    // so the default run really goes through whole-stage codegen
+    val df = cases.zipWithIndex.map { case (k, i) => (i, k) }.toDF("i", "keys").repartition(2)
+    val kernel = org.apache.spark.sql.GraftBridge.column(
+      HammingDistance(org.apache.spark.sql.GraftBridge.expression($"keys"), q))
+    val literalSum = (0 until SrpBanded.Bands).map { b =>
+      bit_count(element_at($"keys", b + 1).bitwiseXOR(lit(q(b))))
+    }.reduce(_ + _).cast("int")
+    def run(c: org.apache.spark.sql.Column): Map[Int, Option[Int]] =
+      df.select($"i", c).collect().map(r =>
+        r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+    val gen = run(kernel)
+    val viaLiterals = run(literalSum)
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val interp = try run(kernel) finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+    assert(gen == viaLiterals && interp == viaLiterals, s"$gen / $interp / $viaLiterals")
+    assert(gen(6).contains(0) && gen(7).contains(64 * SrpBanded.Bands))
+    assert(Seq(8, 9, 10).forall(gen(_).isEmpty), "null keys or a null band must give null")
+  }
+
   test("SQL registration works") {
     vectors.register(spark)
     val r = spark.sql(

@@ -120,7 +120,7 @@ object DedupScaleBench {
       val corpus = spark.read.parquet(docPath)
         .filter(col("doc_id") % graft.sources.SigStore.BatchMod =!= 0)
         .select(col("doc_id"), col("text"))
-      if (!new java.io.File(s"$sigDir/_commits").exists()) {
+      if (graft.sources.Versioned.live(spark, graft.sources.SigStore.chain(sigDir)).isEmpty) {
         val (_, s) = time(graft.sources.SigStore.write(spark, corpus, sigDir))
         builds += "sig_store" -> s
       }

@@ -11,21 +11,18 @@ import graft.functions.{bound, vectors}
   * work and ZERO corpus access at query time (the v28/v32 contract,
   * extended to the code-scan family).
   *
-  * Layout — merge-on-read version chain, the same crash contract as
-  * [[EdgeStore]] / [[SrpStore]]'s banding:
+  * Layout — a merge-on-read [[Versioned]] chain rooted at `codes/`
+  * (markers and crash contract there):
   * {{{
   *   <dir>/codes/data/__ver=N/pb=<p>/   (vec_id, keys, embedding)
-  *   <dir>/codes/_commits/vN            marker: version N is readable
   * }}}
-  * `pb = pmod(vec_id, Partitions)`. A version is visible iff its
-  * marker exists; the latest committed version of a vec_id wins, and
-  * a null-keys tombstone masks a removed id. [[upsert]] APPENDS an
-  * O(update) delta (codes are a pure map of the pinned hyperplanes
-  * over the updated embeddings — no neighborhood to rebuild, the
-  * simplest upsert in the store family) and never rewrites committed
-  * data; a crash before the marker leaves readers on the prior
-  * committed code set. [[compact]] folds the chain back to one full
-  * copy after [[SrpStore.CompactAfter]] commits.
+  * `pb = pmod(vec_id, Partitions)`. The latest live version of a
+  * vec_id wins, and a null-keys tombstone masks a removed id.
+  * [[upsert]] APPENDS an O(update) delta (codes are a pure map of the
+  * pinned hyperplanes over the updated embeddings — no neighborhood
+  * to rebuild, the simplest upsert in the store family) and never
+  * rewrites committed data. [[compact]] folds the chain back to one
+  * full copy after [[Versioned.CompactAfter]] commits.
   *
   * One artifact serves BOTH stages of the serve path, each reading
   * only what it needs:
@@ -44,64 +41,41 @@ object CodeStore {
     * `shortlist` ids prunes to at most that many partitions */
   val Partitions = 64
 
-  private[graft] def committedVers(spark: SparkSession, dir: String): Seq[Int] = {
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/codes/_commits")
-    val f = Hfs.fs(spark, dir)
-    if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") => s.drop(1).toInt }.sorted
-  }
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, s"$dir/codes", v => Seq(s"$dir/codes/data/__ver=$v"))
 
-  private def commitVer(spark: SparkSession, dir: String, v: Int): Unit = {
-    val f = Hfs.fs(spark, dir)
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/codes/_commits")
-    f.mkdirs(cd)
-    f.create(new org.apache.hadoop.fs.Path(cd, s"v$v"), false).close()
-  }
+  /** write one version's rows (vec_id, keys, embedding, pb) */
+  private def writeVer(rows: DataFrame, dir: String, v: Int): Unit =
+    rows.withColumn("__ver", lit(v))
+      .repartition(col("pb"))
+      .write.mode(SaveMode.Append)
+      .partitionBy("__ver", "pb")
+      .parquet(s"$dir/codes/data")
 
   /** Full build: code the corpus (one map-only scan), written as
     * version 0 of the chain. */
-  def write(spark: SparkSession, d: String, dir: String): Unit = {
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/codes"), true): Unit
-    HammingIndex.coded(spark, d)
-      .withColumn("pb", pmod(col("vec_id"), lit(Partitions.toLong)))
-      .withColumn("__ver", lit(0))
-      .repartition(col("pb"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__ver", "pb")
-      .parquet(s"$dir/codes/data")
-    commitVer(spark, dir, 0)
-    graft.Tables.invalidate(dir)
-  }
+  def write(spark: SparkSession, d: String, dir: String): Unit =
+    Versioned.create(spark, chain(dir), s"$dir/codes") {
+      writeVer(HammingIndex.coded(spark, d)
+        .withColumn("pb", pmod(col("vec_id"), lit(Partitions.toLong))), dir, 0)
+    }
 
   private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
 
-  /** Merge-on-read view: committed versions only (uncommitted delta
-    * partitions pruned in the file index), latest version per vec_id
-    * wins, null-keys tombstones dropped. The single-version state
-    * (fresh or just-compacted store) skips the resolve window; the
-    * multi-version window partitions by (pb, vec_id) so pb predicates
-    * push below it and the rerank point-fetch stays pruned while
-    * deltas exist. The resolve reads ONLY (vec_id, pb, __ver) beyond
-    * the consumer's projection, so the shortlist scan stays narrow. */
-  private def resolvedFrame(spark: SparkSession, dir: String): DataFrame =
+  /** Merge-on-read view ([[Versioned.latest]] per (pb, vec_id), so
+    * the rerank point-fetch stays pb-pruned while deltas exist),
+    * null-keys tombstones dropped. The resolve reads ONLY (vec_id, pb,
+    * __ver) beyond the consumer's projection, so the shortlist scan
+    * stays narrow. */
+  private[graft] def resolvedFrame(spark: SparkSession, dir: String): DataFrame =
     frameCache.getOrElseUpdate(spark, dir) {
-      import org.apache.spark.sql.expressions.Window
-      val vers = committedVers(spark, dir)
+      val vers = Versioned.live(spark, chain(dir))
       require(vers.nonEmpty, s"no committed code versions under $dir/codes")
-      val raw = spark.read.parquet(s"$dir/codes/data")
-        .filter(col("__ver").isin(vers: _*)) // partition-pruned
+      Versioned.latest(spark.read.parquet(s"$dir/codes/data")
         .select(col("vec_id"), col("keys"), col("embedding"),
-          col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver"))
-      val resolved =
-        if (vers.size == 1) raw.drop("__ver")
-        else raw
-          .withColumn("__maxv", max(col("__ver"))
-            .over(Window.partitionBy(col("pb"), col("vec_id"))))
-          .filter(col("__ver") === col("__maxv"))
-          .drop("__ver", "__maxv")
-      resolved.filter(col("keys").isNotNull)
+          col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver")),
+        vers, "pb", "vec_id")
+        .filter(col("keys").isNotNull)
     }
 
   /** The code columns only — the embedding column is projected away
@@ -318,11 +292,9 @@ object CodeStore {
     * hyperplanes over the updated embeddings (no neighborhood, no
     * retraining), so the delta is exactly the updated rows: recoded
     * valid rows plus null-keys tombstones for ids whose embedding
-    * went null/invalid. Appended as one committed O(update) version —
-    * committed data is never rewritten, a crash before the marker
-    * leaves readers on the prior code set, and the retry path clears
-    * the torn partition first (the [[EdgeStore]] contract verbatim).
-    * Returns the delta's pb partitions for minimality assertions. */
+    * went null/invalid. Appended as one [[Versioned.append]] O(update)
+    * version — committed data is never rewritten. Returns the delta's
+    * pb partitions for minimality assertions. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame): Seq[Long] = {
     val upd = updates.select(col("vec_id"), col("embedding"))
       .dropDuplicates("vec_id")
@@ -339,49 +311,14 @@ object CodeStore {
       .withColumn("pb", pmod(col("vec_id"), lit(Partitions.toLong)))
       .localCheckpoint(true)
     try {
-      val vers = committedVers(spark, dir)
-      val nextVer = vers.lastOption.getOrElse(-1) + 1
-      val f = Hfs.fs(spark, dir)
-      f.delete(new org.apache.hadoop.fs.Path(
-        s"$dir/codes/data/__ver=$nextVer"), true): Unit
-      delta
-        .withColumn("__ver", lit(nextVer))
-        .repartition(col("pb"))
-        .write.mode(SaveMode.Append)
-        .partitionBy("__ver", "pb")
-        .parquet(s"$dir/codes/data")
-      commitVer(spark, dir, nextVer)
-      graft.Tables.invalidate(dir)
-      if (vers.length + 1 >= SrpStore.CompactAfter) compact(spark, dir)
+      Versioned.append(spark, chain(dir), compact(spark, dir))(writeVer(delta, dir, _))
       delta.select(col("pb")).distinct().collect().map(_.getLong(0)).sorted.toSeq
     } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(delta)
   }
 
-  /** Fold the committed version chain back into ONE full copy —
-    * written as a NEW version (never in place), then the superseded
-    * markers and partitions are garbage-collected. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val vers = committedVers(spark, dir)
-    if (vers.size <= 1) return
-    val next = vers.max + 1
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/codes/data/__ver=$next"), true): Unit
-    resolvedFrame(spark, dir)
-      .withColumn("__ver", lit(next))
-      .repartition(col("pb"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("__ver", "pb")
-      .parquet(s"$dir/codes/data")
-    commitVer(spark, dir, next)
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/codes/_commits/v$v"), false): Unit
-    }
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/codes/data/__ver=$v"), true): Unit
-    }
-    graft.Tables.invalidate(dir)
-  }
+  /** [[Versioned.fold]] the chain back into ONE full copy */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Versioned.fold(spark, chain(dir))(writeVer(resolvedFrame(spark, dir), dir, _))
 
   // one code store per corpus dir, built lazily for the queries()
   // entry — a real deployment writes it at ingest time

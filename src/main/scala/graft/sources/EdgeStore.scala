@@ -21,21 +21,17 @@ import graft.functions.{bound, vectors}
   * out-degree per vector) is the standard graph-index trade, identical
   * to what any HNSW deployment pays.
   *
-  * Layout — merge-on-read version chain, the same crash-contract as
-  * [[SrpStore]]'s banding:
+  * Layout — a merge-on-read [[Versioned]] chain rooted at `edges/`
+  * (markers and crash contract there):
   * {{{
   *   <dir>/edges/data/__ver=N/pb=<p>/   (src, dst, dst_emb)
-  *   <dir>/edges/_commits/vN            marker: version N is readable
   * }}}
-  * `pb = pmod(src, EdgePartitions)`. A version is visible iff its
-  * marker exists; a version REPLACES the full edge set of every src it
-  * contains (latest version per src wins), with a null-dst tombstone
-  * for a src whose edges disappear. [[upsert]] therefore APPENDS an
-  * O(update) delta and never rewrites committed data — a crash at any
-  * point before the marker leaves readers on the old committed state,
-  * and the retry path clears the torn partition first. [[compact]]
-  * folds the chain back to one full copy (itself committed as a new
-  * version — never in place) after [[SrpStore.CompactAfter]] commits.
+  * `pb = pmod(src, EdgePartitions)`. A version REPLACES the full edge
+  * set of every src it contains (latest version per src wins), with a
+  * null-dst tombstone for a src whose edges disappear. [[upsert]]
+  * therefore APPENDS an O(update) delta and never rewrites committed
+  * data. [[compact]] folds the chain back to one full copy after
+  * [[Versioned.CompactAfter]] commits.
   */
 object EdgeStore {
 
@@ -44,69 +40,44 @@ object EdgeStore {
     * neighborhood touches a strict subset */
   val EdgePartitions = 64
 
-  /** committed edge versions, ascending (marker files in `_commits/`) */
-  private[graft] def committedVers(spark: SparkSession, dir: String): Seq[Int] = {
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/edges/_commits")
-    val f = Hfs.fs(spark, dir)
-    if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") => s.drop(1).toInt }.sorted
-  }
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, s"$dir/edges", v => Seq(s"$dir/edges/data/__ver=$v"))
 
-  private def commitVer(spark: SparkSession, dir: String, v: Int): Unit = {
-    val f = Hfs.fs(spark, dir)
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/edges/_commits")
-    f.mkdirs(cd)
-    f.create(new org.apache.hadoop.fs.Path(cd, s"v$v"), false).close()
-  }
+  /** write one version's rows (src, dst, dst_emb, pb) */
+  private def writeVer(rows: DataFrame, dir: String, v: Int): Unit =
+    rows.withColumn("__ver", lit(v))
+      .repartition(col("pb"))
+      .write.mode(SaveMode.Append)
+      .partitionBy("__ver", "pb")
+      .parquet(s"$dir/edges/data")
 
   /** Full build: `edges` must carry (src, dst, dst_emb) — the
     * checkpointed serve graphs ([[SrpBanded.materializedGraph]] /
     * [[SrpBanded.materializedRefinedGraph]]) already do. Written as
     * version 0 of the chain. */
-  def write(spark: SparkSession, edges: DataFrame, dir: String): Unit = {
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/edges"), true): Unit
-    edges.select(col("src"), col("dst"), col("dst_emb"))
-      .withColumn("pb", pmod(col("src"), lit(EdgePartitions.toLong)))
-      .withColumn("__ver", lit(0))
-      .repartition(col("pb"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__ver", "pb")
-      .parquet(s"$dir/edges/data")
-    commitVer(spark, dir, 0)
-    graft.Tables.invalidate(dir)
-  }
+  def write(spark: SparkSession, edges: DataFrame, dir: String): Unit =
+    Versioned.create(spark, chain(dir), s"$dir/edges") {
+      writeVer(edges.select(col("src"), col("dst"), col("dst_emb"))
+        .withColumn("pb", pmod(col("src"), lit(EdgePartitions.toLong))), dir, 0)
+    }
 
   // a serving process opens the edge table once; the handle caches
   // the file listing, reads stay lazy per query
   private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
 
   /** Merge-on-read view with the `pb` column retained (for pruned
-    * consumers): committed versions only, latest version per src wins,
-    * tombstones dropped. The overwhelmingly common single-version
-    * state (fresh store, or just compacted) skips the resolve window
-    * entirely. The multi-version window partitions by (pb, src) — pb
-    * is a pure function of src, so the groups are identical, and
-    * Catalyst pushes pb/src predicates below a window keyed on them,
-    * keeping point reads partition-pruned while deltas exist. */
+    * consumers): [[Versioned.latest]] per (pb, src) — pb is a pure
+    * function of src, so the groups are those of src, and pb/src
+    * predicates push below the window — with tombstones dropped. */
   private def resolvedFrame(spark: SparkSession, dir: String): DataFrame =
     frameCache.getOrElseUpdate(spark, dir) {
-      import org.apache.spark.sql.expressions.Window
-      val vers = committedVers(spark, dir)
+      val vers = Versioned.live(spark, chain(dir))
       require(vers.nonEmpty, s"no committed edge versions under $dir/edges")
-      val raw = spark.read.parquet(s"$dir/edges/data")
-        .filter(col("__ver").isin(vers: _*)) // partition-pruned
+      Versioned.latest(spark.read.parquet(s"$dir/edges/data")
         .select(col("src"), col("dst"), col("dst_emb"),
-          col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver"))
-      val resolved =
-        if (vers.size == 1) raw.drop("__ver")
-        else raw
-          .withColumn("__maxv", max(col("__ver"))
-            .over(Window.partitionBy(col("pb"), col("src"))))
-          .filter(col("__ver") === col("__maxv"))
-          .drop("__ver", "__maxv")
-      resolved.filter(col("dst").isNotNull)
+          col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver")),
+        vers, "pb", "src")
+        .filter(col("dst").isNotNull)
     }
 
   /** Bulk handle: the resolved (src, dst, dst_emb) edge set. STABLE
@@ -160,15 +131,12 @@ object EdgeStore {
     *    neighbors);
     *  - exact cosine, top-`graphK` per source, same (sim DESC, dst)
     *    tie-break as every graph build here — deterministic;
-    *  - the delta's marker is created only after the data write
-    *    succeeded: a crash mid-upsert leaves readers on the prior
-    *    committed edge set (the banding crash contract, verbatim);
-    *    a touched source with no surviving edges gets a tombstone.
+    *  - a touched source with no surviving edges gets a tombstone.
     *
     * `d` must be the post-ingest corpus dir (the scoring join reads
     * its embeddings, updates included). Cost is O(neighborhood), not
-    * O(corpus): committed partitions are never rewritten. The chain
-    * folds via [[compact]] after [[SrpStore.CompactAfter]] commits.
+    * O(corpus): the delta is a [[Versioned.append]], committed
+    * partitions are never rewritten.
     * Returns the delta's `pb` partitions (what a spec asserts
     * minimality against). */
   def upsert(spark: SparkSession, edgeDir: String, d: String, srpDir: String,
@@ -230,58 +198,18 @@ object EdgeStore {
         .withColumn("pb", pmod(col("src"), lit(EdgePartitions.toLong)))
         .localCheckpoint(true)
       try {
-        val vers = committedVers(spark, edgeDir)
-        val nextVer = vers.lastOption.getOrElse(-1) + 1
-        val f = Hfs.fs(spark, edgeDir)
-        // a leftover partition from a crashed earlier attempt at this
-        // version is cleared first, so retries never double rows
-        f.delete(new org.apache.hadoop.fs.Path(
-          s"$edgeDir/edges/data/__ver=$nextVer"), true): Unit
-        delta
-          .withColumn("__ver", lit(nextVer))
-          .repartition(col("pb"))
-          .write.mode(SaveMode.Append)
-          .partitionBy("__ver", "pb")
-          .parquet(s"$edgeDir/edges/data")
-        // commit: the delta becomes visible only now
-        commitVer(spark, edgeDir, nextVer)
-        graft.Tables.invalidate(edgeDir)
-        if (vers.length + 1 >= SrpStore.CompactAfter) compact(spark, edgeDir)
+        Versioned.append(spark, chain(edgeDir), compact(spark, edgeDir))(
+          writeVer(delta, edgeDir, _))
         delta.select(col("pb")).distinct().collect().map(_.getLong(0)).sorted.toSeq
       } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(delta)
     } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(touchedSrc)
   }
 
-  /** Fold the committed version chain back into ONE full copy —
-    * written as a NEW version (never in place), then the superseded
-    * markers and partitions are garbage-collected. One O(store)
-    * scan+write amortized over [[SrpStore.CompactAfter]] O(update)
-    * deltas. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val vers = committedVers(spark, dir)
-    if (vers.size <= 1) return
-    val next = vers.max + 1
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/edges/data/__ver=$next"), true): Unit
-    resolvedFrame(spark, dir)
-      .withColumn("__ver", lit(next))
-      .repartition(col("pb"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("__ver", "pb")
-      .parquet(s"$dir/edges/data")
-    commitVer(spark, dir, next)
-    // GC: markers first (a crash here leaves unreferenced partitions
-    // — harmless garbage the next compaction's view never reads),
-    // then the superseded partitions
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/edges/_commits/v$v"), false): Unit
-    }
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/edges/data/__ver=$v"), true): Unit
-    }
-    graft.Tables.invalidate(dir)
-  }
+  /** [[Versioned.fold]] the chain back into ONE full copy: one
+    * O(store) scan+write amortized over [[Versioned.CompactAfter]]
+    * O(update) deltas. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Versioned.fold(spark, chain(dir))(writeVer(resolvedFrame(spark, dir), dir, _))
 
   // one refined-edge store per corpus dir, built lazily for the
   // queries() entry — a real deployment writes it after each offline

@@ -18,14 +18,12 @@ import graft.functions.bound
   *    layout), so a descent step scores what it reads — ≤ DescentBeam
   *    sources' edges, pruned to one layer × the frontier's pb buckets
   *    in the file index. Point reads, never corpus scans.
-  *  - `<dir>/layers/_commits/v<n>` — merge-on-read commit markers,
-  *    the [[SrpStore]] banding crash contract: a version is readable
-  *    iff its marker exists, latest version per (layer, src) wins,
-  *    null-dst tombstones mask removed sources. [[upsert]] APPENDS an
-  *    O(update) delta; a crash before the marker leaves readers on
-  *    the prior committed hierarchy.
+  *    The layers are a merge-on-read [[Versioned]] chain rooted at
+  *    `layers/` (markers and crash contract there): latest version
+  *    per (layer, src) wins, null-dst tombstones mask removed
+  *    sources. [[upsert]] APPENDS an O(update) delta.
   *  - `<dir>/entry/v<n>/` — the hierarchy's entry point (one row:
-  *    vec_id + embedding), versioned with the layer chain. The entry
+  *    vec_id + embedding), a data dir of layer version n. The entry
   *    is a pure function of the corpus, persisted at write time so
   *    serving never runs the corpus-wide level aggregation.
   *  - `<dir>/l0/` — the layer-0 beam graph in the [[EdgeStore]]
@@ -42,82 +40,60 @@ object HnswStore {
     * level, so coarser than EdgeStore's 64 keeps files non-tiny */
   val LayerPartitions = 16
 
-  private[graft] def committedVers(spark: SparkSession, dir: String): Seq[Int] = {
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/layers/_commits")
-    val f = Hfs.fs(spark, dir)
-    if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") => s.drop(1).toInt }.sorted
-  }
+  /** a layer version's data: its `__ver` partition and its entry */
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, s"$dir/layers",
+      v => Seq(s"$dir/layers/data/__ver=$v", s"$dir/entry/v$v"))
 
-  private def commitVer(spark: SparkSession, dir: String, v: Int): Unit = {
-    val f = Hfs.fs(spark, dir)
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/layers/_commits")
-    f.mkdirs(cd)
-    f.create(new org.apache.hadoop.fs.Path(cd, s"v$v"), false).close()
-  }
-
-  private def writeEntry(spark: SparkSession, dir: String, ver: Int,
-                         entry: (Long, Array[Float])): Unit = {
+  /** write one version: layer rows (src, dst, dst_emb, layer, pb)
+    * plus the entry point */
+  private def writeVer(spark: SparkSession, dir: String, v: Int, layers: DataFrame,
+                       entry: (Long, Array[Float])): Unit = {
     import spark.implicits._
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/entry/v$ver"), true): Unit
+    layers.withColumn("__ver", lit(v))
+      .repartition(col("layer"), col("pb"))
+      .write.mode(SaveMode.Append)
+      .partitionBy("__ver", "layer", "pb")
+      .parquet(s"$dir/layers/data")
     Seq(entry).toDF("vec_id", "embedding")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/entry/v$ver")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/entry/v$v")
   }
 
   def write(spark: SparkSession, d: String, dir: String): Unit = {
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/layers"), true): Unit
-    val layers = (1 to Hnsw.MaxLevel).map { l =>
-      Hnsw.layerGraph(spark, d, l).withColumn("layer", lit(l))
-    }.reduce(_ unionByName _)
-    layers
-      .withColumn("pb", pmod(col("src"), lit(LayerPartitions.toLong)))
-      .withColumn("__ver", lit(0))
-      .repartition(col("layer"), col("pb"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__ver", "layer", "pb")
-      .parquet(s"$dir/layers/data")
-    writeEntry(spark, dir, 0, Hnsw.entryFor(spark, d))
-    commitVer(spark, dir, 0)
+    Versioned.create(spark, chain(dir), s"$dir/layers", s"$dir/entry") {
+      val layers = (1 to Hnsw.MaxLevel).map { l =>
+        Hnsw.layerGraph(spark, d, l).withColumn("layer", lit(l))
+      }.reduce(_ unionByName _)
+      writeVer(spark, dir, 0,
+        layers.withColumn("pb", pmod(col("src"), lit(LayerPartitions.toLong))),
+        Hnsw.entryFor(spark, d))
+    }
     EdgeStore.write(spark, SrpBanded.materializedGraph(spark, d, 5), s"$dir/l0")
-    graft.Tables.invalidate(dir)
   }
 
   private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
   private val entryCache = new graft.SessionCache[String, (Long, Array[Float])](8, identity)
 
-  /** Merge-on-read view of the hierarchy: committed versions only,
-    * latest version per (layer, src) wins, tombstones dropped. The
-    * single-version state skips the resolve window; the multi-version
-    * window partitions by (layer, pb, src) so layer/pb/src predicates
-    * push below it and point reads stay partition-pruned. */
+  /** Merge-on-read view of the hierarchy: [[Versioned.latest]] per
+    * (layer, pb, src), so layer/pb/src predicates push below the
+    * window, with tombstones dropped. */
   def layersFrame(spark: SparkSession, dir: String): DataFrame =
     frameCache.getOrElseUpdate(spark, dir) {
-      import org.apache.spark.sql.expressions.Window
-      val vers = committedVers(spark, dir)
+      val vers = Versioned.live(spark, chain(dir))
       require(vers.nonEmpty, s"no committed layer versions under $dir/layers")
-      val raw = spark.read.parquet(s"$dir/layers/data")
-        .filter(col("__ver").isin(vers: _*)) // partition-pruned
+      Versioned.latest(spark.read.parquet(s"$dir/layers/data")
         .select(col("src"), col("dst"), col("dst_emb"),
           col("layer").cast("int").as("layer"), col("pb").cast("long").as("pb"),
-          col("__ver").cast("int").as("__ver"))
-      val resolved =
-        if (vers.size == 1) raw.drop("__ver")
-        else raw
-          .withColumn("__maxv", max(col("__ver"))
-            .over(Window.partitionBy(col("layer"), col("pb"), col("src"))))
-          .filter(col("__ver") === col("__maxv"))
-          .drop("__ver", "__maxv")
-      resolved.filter(col("dst").isNotNull)
+          col("__ver").cast("int").as("__ver")),
+        vers, "layer", "pb", "src")
+        .filter(col("dst").isNotNull)
     }
 
   /** The persisted entry point: read once per store handle — serving
     * never touches the corpus to find (or score) its entry. */
   def storedEntry(spark: SparkSession, dir: String): (Long, Array[Float]) =
     entryCache.getOrElseUpdate(spark, dir) {
-      val v = committedVers(spark, dir).max
+      val v = Versioned.live(spark, chain(dir)).max
       val r = spark.read.parquet(s"$dir/entry/v$v").collect()(0)
       (r.getAs[Long]("vec_id"), r.getSeq[Float](1).toArray)
     }
@@ -296,12 +272,11 @@ object HnswStore {
     * Call AFTER the corpus ingest upsert and [[SrpStore.upsert]]
     * (`d` = post-ingest corpus, `srpDir`'s banding supplies the
     * collision candidates — the same generator the full build uses).
-    * The refreshed edge sets are APPENDED as one committed O(update)
-    * delta version (with tombstones for sources losing all edges) —
-    * committed data is never rewritten, and a crash before the marker
-    * leaves readers on the prior hierarchy, the same crash contract
-    * as the banding chain. The entry artifact is re-derived from the
-    * post-ingest corpus and written with the same version. The
+    * The refreshed edge sets are APPENDED as one [[Versioned.append]]
+    * O(update) delta version (with tombstones for sources losing all
+    * edges) — committed data is never rewritten. The entry artifact
+    * is re-derived from the post-ingest corpus and written with the
+    * same version. The
     * layer-0 edge table is [[EdgeStore]]'s — run its upsert on
     * `<dir>/l0` alongside. Returns the delta's (layer, pb)
     * partitions for minimality assertions. */
@@ -362,55 +337,20 @@ object HnswStore {
       .withColumn("pb", pmod(col("src"), lit(LayerPartitions.toLong)))
       .localCheckpoint(true)
     try {
-      val vers = committedVers(spark, dir)
-      val nextVer = vers.lastOption.getOrElse(-1) + 1
-      val f = Hfs.fs(spark, dir)
-      f.delete(new org.apache.hadoop.fs.Path(
-        s"$dir/layers/data/__ver=$nextVer"), true): Unit
-      delta
-        .withColumn("__ver", lit(nextVer))
-        .repartition(col("layer"), col("pb"))
-        .write.mode(SaveMode.Append)
-        .partitionBy("__ver", "layer", "pb")
-        .parquet(s"$dir/layers/data")
       // the entry is a pure function of the corpus — re-derive from
       // the post-ingest table, versioned with this delta
-      writeEntry(spark, dir, nextVer, Hnsw.entryFor(spark, d))
-      commitVer(spark, dir, nextVer)
-      graft.Tables.invalidate(dir)
-      if (vers.length + 1 >= SrpStore.CompactAfter) compact(spark, dir)
+      Versioned.append(spark, chain(dir), compact(spark, dir))(
+        writeVer(spark, dir, _, delta, Hnsw.entryFor(spark, d)))
       delta.select(col("layer"), col("pb")).distinct().collect()
         .map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
     } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(delta)
   }
 
-  /** Fold the layer version chain to one full copy (committed as a
-    * new version, never in place), then GC the superseded versions —
-    * [[EdgeStore.compact]] for the hierarchy. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val vers = committedVers(spark, dir)
-    if (vers.size <= 1) return
-    val next = vers.max + 1
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/layers/data/__ver=$next"), true): Unit
-    layersFrame(spark, dir)
-      .withColumn("__ver", lit(next))
-      .repartition(col("layer"), col("pb"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("__ver", "layer", "pb")
-      .parquet(s"$dir/layers/data")
-    writeEntry(spark, dir, next, storedEntry(spark, dir))
-    commitVer(spark, dir, next)
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/layers/_commits/v$v"), false): Unit
-    }
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/layers/data/__ver=$v"), true): Unit
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/entry/v$v"), true): Unit
-    }
-    graft.Tables.invalidate(dir)
-  }
+  /** [[Versioned.fold]] the layer chain (and its entry) to one full
+    * copy — [[EdgeStore.compact]] for the hierarchy. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Versioned.fold(spark, chain(dir))(
+      writeVer(spark, dir, _, layersFrame(spark, dir), storedEntry(spark, dir)))
 
   // one store per corpus dir, built lazily for the queries() entry —
   // a real deployment writes it after each offline build

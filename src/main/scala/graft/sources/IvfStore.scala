@@ -21,32 +21,19 @@ import graft.functions.vectors
   */
 object IvfStore {
 
-  /** Retrained-version markers (`_commits/vN`): [[retrain]] publishes
-    * a re-clustered copy as `<dir>/v=N/{lists,centroids,stats}` and
-    * readers follow the HIGHEST committed version — the SigStore/
-    * EdgeStore commit contract applied to whole index generations. A
-    * dir with no markers is the initial [[write]] layout (lists/
-    * centroids at the root), so every pre-existing store keeps
-    * working unchanged. */
-  private[graft] def committedVers(spark: SparkSession, dir: String): Seq[Int] = {
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/_commits")
-    val f = Hfs.fs(spark, dir)
-    if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") => s.drop(1).toInt }.sorted
-  }
-
-  private def commitVer(spark: SparkSession, dir: String, v: Int): Unit = {
-    val f = Hfs.fs(spark, dir)
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/_commits")
-    f.mkdirs(cd)
-    f.create(new org.apache.hadoop.fs.Path(cd, s"v$v"), false).close()
-  }
+  /** Retrained generations: [[retrain]] folds the store into a
+    * re-clustered copy at `<dir>/v=N/{lists,centroids,stats}`, a
+    * [[Versioned]] chain rooted at `<dir>`, and readers follow the
+    * HIGHEST live generation. A dir with no markers is the initial
+    * [[write]] layout (lists/centroids at the root), so every
+    * pre-existing store keeps working unchanged. */
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, dir, v => Seq(s"$dir/v=$v"))
 
   /** the artifact root every read/upsert path follows: the highest
-    * committed retrain generation, or the dir itself before any */
+    * live retrain generation, or the dir itself before any */
   private[graft] def currentRoot(spark: SparkSession, dir: String): String =
-    committedVers(spark, dir).lastOption
+    Versioned.live(spark, chain(dir)).lastOption
       .map(v => s"$dir/v=$v").getOrElse(dir)
 
   private def writeArtifacts(spark: SparkSession, emb: DataFrame, vecCol: String,
@@ -77,14 +64,14 @@ object IvfStore {
 
   def write(spark: SparkSession, emb: DataFrame, vecCol: String,
             model: IvfIndex.Model, dir: String): Unit = {
-    // a full write is generation zero: clear any retrain chain so the
-    // root layout is authoritative again
+    // a full write is generation zero: clear any retrain chain (torn
+    // generations included) so the root layout is authoritative again
     val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/_commits"), true): Unit
     val dp = new org.apache.hadoop.fs.Path(dir)
-    if (f.exists(dp)) f.listStatus(dp).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("v="))
-      .foreach(p => { f.delete(p, true): Unit })
+    Versioned.reset(spark, chain(dir),
+      if (!f.exists(dp)) Nil
+      else f.listStatus(dp).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith("v=")).map(_.toString))
     writeArtifacts(spark, emb, vecCol, model, dir)
     // rewriting the store must drop memoized centroids + cached scans
     graft.Tables.invalidate(dir)
@@ -249,16 +236,11 @@ object IvfStore {
   }
 
   /** Re-cluster the CURRENT store rows into a fresh model and publish
-    * it as a new committed generation — the SigStore/EdgeStore
-    * compaction contract applied to the whole index: the new
-    * `v=N/{lists,centroids,stats}` is written first (a leftover from
-    * a crashed earlier attempt cleared before rewriting), the marker
-    * file is the atomic publish, superseded generations are GC'd
-    * after it (a crash between marker and GC leaves readers on the
-    * new generation with unreferenced garbage behind — harmless and
-    * reclaimed by the next retrain). O(corpus) by contract: this is
-    * the amortized repair for [[driftMetric]]'s trip, not a per-batch
-    * path. Returns the new model. */
+    * it as a new generation — a [[Versioned.fold]] of the whole index
+    * (it folds even the unmarked generation zero), followed by the
+    * GC of generation zero's root artifacts. O(corpus) by contract:
+    * this is the amortized repair for [[driftMetric]]'s trip, not a
+    * per-batch path. Returns the new model. */
   /** [[retrain]] at the STORE'S OWN recorded width — the maintenance
     * default: a drift-tripped repair re-clusters the corpus, it does
     * not silently re-size the index. The width a deployment chose at
@@ -274,33 +256,19 @@ object IvfStore {
 
   def retrain(spark: SparkSession, dir: String, vecCol: String, idCol: String,
               k: Int, iters: Int = 5): IvfIndex.Model = {
-    val vers = committedVers(spark, dir)
     val root = currentRoot(spark, dir)
     val rows = spark.read.parquet(s"$root/lists").drop("list_id")
-      .localCheckpoint(true) // break lineage: v0 GC below deletes its files
+      .localCheckpoint(true) // break lineage: the GC below deletes its files
     try {
       val model = IvfIndex.fit(rows, vecCol, idCol, k, iters)
-      val next = vers.lastOption.getOrElse(0) + 1
+      Versioned.fold(spark, chain(dir), min = 0)(v =>
+        writeArtifacts(spark, rows, vecCol, model, s"$dir/v=$v"))
+      // generation zero has no marker for the fold's GC to find; once
+      // any generation is published its root artifacts are superseded
+      // (idempotent — also reclaims them after a crash mid-GC)
       val f = Hfs.fs(spark, dir)
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$next"), true): Unit
-      writeArtifacts(spark, rows, vecCol, model, s"$dir/v=$next")
-      commitVer(spark, dir, next)
-      // GC superseded generations: data dirs FIRST, markers last — a
-      // crash between the two leaves the marker pointing at a gone
-      // dir, which is harmless (currentRoot already resolves to the
-      // new max) and ensures the NEXT retrain's vers still lists it
-      // and retries the delete; the reverse order would orphan a
-      // corpus-sized dir no later GC ever revisits
-      vers.foreach { v =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true): Unit
-      }
-      vers.foreach { v =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$dir/_commits/v$v"), false): Unit
-      }
-      if (vers.isEmpty) Seq("lists", "centroids", "stats").foreach { a =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$dir/$a"), true): Unit
-      }
-      graft.Tables.invalidate(dir)
+      Seq("lists", "centroids", "stats").foreach(a =>
+        f.delete(new org.apache.hadoop.fs.Path(s"$dir/$a"), true): Unit)
       model
     } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(rows)
   }

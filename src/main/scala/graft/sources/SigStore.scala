@@ -15,12 +15,12 @@ import graft.functions.{bound, text}
   * (`sql/05_vector_index.sql:3-6` holds an ivfflat index resident so
   * queries never scan the corpus; this is that role for d2's LSH).
   *
-  * Layout (all artifacts merge-on-read, one commit-marker chain):
+  * Layout (both artifacts merge-on-read, one [[Versioned]] chain
+  * rooted at `<dir>` — markers and crash contract there):
   * {{{
   *   <dir>/sigs/__ver=N/band=<b>/bg=<g>/  (doc_id, band_key) rows,
   *                                        clustered by band_key
   *   <dir>/docs/__ver=N/                  (doc_id, text) verify texts
-  *   <dir>/_commits/vN                    version N readable iff present
   *   <dir>/_meta/groups=<G>               bucket-group count (layout)
   * }}}
   * `bg = band_key & (G−1)` groups buckets into partition dirs under a
@@ -32,10 +32,8 @@ import graft.functions.{bound, text}
   * membership node per band (`band_key IN <set>`), never a per-key OR
   * tree (the r11 64 KB-codegen lesson, [[SrpStore.layoutPred]]).
   *
-  * [[upsert]] appends an O(batch) delta version (sigs + texts) and
-  * publishes it with a marker AFTER all writes succeed — a crash
-  * mid-upsert leaves the committed store intact and the re-run safe
-  * (the uncommitted `__ver` partitions are deleted before rewriting).
+  * [[upsert]] appends an O(batch) delta version (sigs + texts); the
+  * chain folds only on an explicit [[compact]].
   */
 object SigStore {
 
@@ -60,61 +58,9 @@ object SigStore {
     * crossover shape). */
   val ProbeCollectMax = 8192L
 
-  /** all commit markers as (version, isFold). Delta upserts commit as
-    * `v<N>`; [[compact]] commits its fold as `c<N>` — a fold marker
-    * SUPERSEDES every version below it at read time, which is what
-    * makes the version-set switch atomic (one marker-file create),
-    * instead of depending on the old markers' deletes landing. */
-  private def markerVers(spark: SparkSession, dir: String): Seq[(Int, Boolean)] = {
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/_commits")
-    val f = Hfs.fs(spark, dir)
-    if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.map(_.getPath.getName).collect {
-      case s if s.startsWith("v") => (s.drop(1).toInt, false)
-      case s if s.startsWith("c") => (s.drop(1).toInt, true)
-    }
-  }
-
-  /** LIVE versions: everything at or above the highest fold marker.
-    * A fold contains every doc of the versions it folded, so reading
-    * a folded version alongside its inputs would serve each row twice
-    * — the read-side resolution guarantees that never happens, even
-    * in the crash window before [[compact]]'s GC deletes land. */
-  private[graft] def committedVers(spark: SparkSession, dir: String): Seq[Int] = {
-    val marks = markerVers(spark, dir)
-    val fold = marks.collect { case (v, true) => v }.maxOption
-    fold.fold(marks.map(_._1))(fv => marks.map(_._1).filter(_ >= fv))
-      .distinct.sorted
-  }
-
-  private def commitVer(spark: SparkSession, dir: String, v: Int,
-                        fold: Boolean = false): Unit = {
-    val f = Hfs.fs(spark, dir)
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/_commits")
-    f.mkdirs(cd)
-    f.create(new org.apache.hadoop.fs.Path(cd, s"${if (fold) "c" else "v"}$v"),
-      false).close()
-  }
-
-  /** delete data + markers of versions a fold superseded — idempotent
-    * and safe to re-run after a crash anywhere inside it (superseded
-    * versions are already invisible to readers via [[committedVers]]'s
-    * resolution, so the deletes only reclaim space). Data dirs go
-    * first, the marker last, so a partially-GC'd version is still
-    * found by the next pass. */
-  private def gcSuperseded(spark: SparkSession, dir: String): Unit = {
-    val marks = markerVers(spark, dir)
-    val fold = marks.collect { case (v, true) => v }.maxOption
-    fold.foreach { fv =>
-      val f = Hfs.fs(spark, dir)
-      marks.filter(_._1 < fv).foreach { case (v, isFold) =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$dir/sigs/__ver=$v"), true): Unit
-        f.delete(new org.apache.hadoop.fs.Path(s"$dir/docs/__ver=$v"), true): Unit
-        f.delete(new org.apache.hadoop.fs.Path(
-          s"$dir/_commits/${if (isFold) "c" else "v"}$v"), false): Unit
-      }
-    }
-  }
+  /** a version's data: its sigs and its verify texts */
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, dir, v => Seq(s"$dir/sigs/__ver=$v", s"$dir/docs/__ver=$v"))
 
   private val groupsCache = new graft.SessionCache[String, Int](64, identity)
   private[graft] def storeGroups(spark: SparkSession, dir: String): Int =
@@ -147,20 +93,14 @@ object SigStore {
           s"transform(sequence(0, ${Bands - 1}), b -> xxhash64(b, slice(sig, b * $RowsPerBand + 1, $RowsPerBand)))"))
           .as(Seq("band", "band_key")))
 
-  private def writeVer(spark: SparkSession, dir: String, v: Int,
-                       docs: DataFrame, groups: Int): Unit = {
-    val f = Hfs.fs(spark, dir)
-    // a re-run after a crash may find uncommitted leftovers — remove
-    // them before writing so the version is never torn
-    Seq(s"$dir/sigs/__ver=$v", s"$dir/docs/__ver=$v").foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (f.exists(hp)) f.delete(hp, true): Unit
-    }
-    val sigs = bandedSigs(docs)
-      .withColumn("bg", col("band_key").bitwiseAND(lit((groups - 1).toLong)))
+  /** write version `v`: banded `sigs` (doc_id, band, band_key) and
+    * verify `docs` (doc_id, text) */
+  private def writeVer(dir: String, v: Int, sigs: DataFrame, docs: DataFrame,
+                       groups: Int): Unit = {
     // cluster rows by band_key inside each (band, bg) dir so probe
     // reads prune at row-group granularity below the dir level
-    sigs.repartition(col("band"), col("bg"))
+    sigs.withColumn("bg", col("band_key").bitwiseAND(lit((groups - 1).toLong)))
+      .repartition(col("band"), col("bg"))
       .sortWithinPartitions(col("band"), col("bg"), col("band_key"))
       .write.partitionBy("band", "bg")
       .mode("overwrite").parquet(s"$dir/sigs/__ver=$v")
@@ -177,28 +117,31 @@ object SigStore {
       .sortWithinPartitions(col("db"), col("doc_id"))
       .write.partitionBy("db")
       .mode("overwrite").parquet(s"$dir/docs/__ver=$v")
-    commitVer(spark, dir, v)
   }
 
-  /** build the store from `docs` (doc_id, text) as version 0 */
+  /** build the store from `docs` (doc_id, text) as version 0 — onto
+    * an existing store dir too: the old chain and its layout marker
+    * go first, so neither an old delta nor a stale group count
+    * survives the rewrite */
   def write(spark: SparkSession, docs: DataFrame, dir: String): Unit = {
-    val n = docs.count()
-    val groups = groupsFor(n)
-    val f = Hfs.fs(spark, dir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_meta/groups=$groups"))
-    groupsCache.invalidate(_ == dir)
-    writeVer(spark, dir, 0, docs, groups)
+    val groups = groupsFor(docs.count())
+    Versioned.create(spark, chain(dir), s"$dir/sigs", s"$dir/docs", s"$dir/_meta") {
+      Hfs.fs(spark, dir).mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_meta/groups=$groups"))
+      writeVer(dir, 0, bandedSigs(docs), docs, groups)
+    }
   }
 
   /** append a new batch as an O(batch) delta version — the layout
     * (groups) is pinned by the base store so probe pruning stays
-    * uniform across versions. Publishes the commit marker only after
-    * both artifacts are fully written. */
-  def upsert(spark: SparkSession, dir: String, docs: DataFrame): Unit = {
-    val vers = committedVers(spark, dir)
-    require(vers.nonEmpty, s"SigStore.upsert: no committed store at $dir")
-    writeVer(spark, dir, vers.max + 1, docs, storeGroups(spark, dir))
-  }
+    * uniform across versions. No fold trigger: the versions hold
+    * disjoint doc sets, so readers need no resolve window and a long
+    * chain costs them partition listings only; the fold (an O(corpus)
+    * rewrite of the texts) runs on an explicit [[compact]]. */
+  def upsert(spark: SparkSession, dir: String, docs: DataFrame): Unit =
+    Versioned.append(spark, chain(dir), compact = ()) { v =>
+      require(v > 0, s"SigStore.upsert: no committed store at $dir")
+      writeVer(dir, v, bandedSigs(docs), docs, storeGroups(spark, dir))
+    }
 
   /** committed signature rows (doc_id, band, band_key, bg) */
   // explicit read schemas: a dedup SERVICE legitimately starts from an
@@ -209,7 +152,7 @@ object SigStore {
   private val DocsSchema = "doc_id LONG, text STRING, __ver INT, db LONG"
 
   private[graft] def sigFrame(spark: SparkSession, dir: String): DataFrame = {
-    val vers = committedVers(spark, dir)
+    val vers = Versioned.live(spark, chain(dir))
     require(vers.nonEmpty, s"SigStore at $dir has no committed version")
     spark.read.schema(SigsSchema).parquet(s"$dir/sigs")
       .filter(col("__ver").isin(vers: _*))
@@ -218,7 +161,7 @@ object SigStore {
 
   /** committed verify texts (doc_id, text) */
   private[graft] def docsFrame(spark: SparkSession, dir: String): DataFrame = {
-    val vers = committedVers(spark, dir)
+    val vers = Versioned.live(spark, chain(dir))
     spark.read.schema(DocsSchema).parquet(s"$dir/docs")
       .filter(col("__ver").isin(vers: _*))
       .select(col("doc_id"), col("text"))
@@ -229,7 +172,7 @@ object SigStore {
     * against the doc_id-clustered row groups + the row filter */
   private[graft] def docsForIds(spark: SparkSession, dir: String,
                                 ids: Seq[Long]): DataFrame = {
-    val vers = committedVers(spark, dir)
+    val vers = Versioned.live(spark, chain(dir))
     val groups = storeGroups(spark, dir)
     val dbs = ids.map(_ & (groups - 1).toLong).distinct
     val pruned = spark.read.schema(DocsSchema).parquet(s"$dir/docs")
@@ -416,48 +359,12 @@ object SigStore {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** fold the committed version chain back into one full copy. The
-    * fold is written as a NEW version (never in place) and published
-    * with a FOLD marker (`c<N>`) — unlike the delta chain's disjoint
-    * doc sets, the fold duplicates every doc it folded, so the switch
-    * must be atomic: [[committedVers]] resolves a fold marker as
-    * superseding every version below it, making the one marker-file
-    * create the whole publish. A crash before the marker leaves the
-    * old chain intact; a crash between the marker and the GC deletes
-    * leaves stale-but-invisible data that the next [[compact]] (or
-    * any re-run) reclaims via [[gcSuperseded]]. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    // reclaim any superseded leftovers a prior crashed compact left
-    gcSuperseded(spark, dir)
-    val vers = committedVers(spark, dir)
-    if (vers.size <= 1) return
-    val next = vers.max + 1
-    val groups = storeGroups(spark, dir)
-    val f = Hfs.fs(spark, dir)
-    Seq(s"$dir/sigs/__ver=$next", s"$dir/docs/__ver=$next").foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (f.exists(hp)) f.delete(hp, true): Unit
+  /** [[Versioned.fold]] the chain back into one full copy */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Versioned.fold(spark, chain(dir)) { next =>
+      writeVer(dir, next, sigFrame(spark, dir), docsFrame(spark, dir),
+        storeGroups(spark, dir))
     }
-    sigFrame(spark, dir)
-      .withColumn("bg", col("band_key").bitwiseAND(lit((groups - 1).toLong)))
-      .repartition(col("band"), col("bg"))
-      .sortWithinPartitions(col("band"), col("bg"), col("band_key"))
-      .write.partitionBy("band", "bg")
-      .mode("overwrite").parquet(s"$dir/sigs/__ver=$next")
-    docsFrame(spark, dir)
-      .withColumn("db", col("doc_id").bitwiseAND(lit((groups - 1).toLong)))
-      .repartition(col("db"))
-      .sortWithinPartitions(col("db"), col("doc_id"))
-      .write.partitionBy("db")
-      .mode("overwrite").parquet(s"$dir/docs/__ver=$next")
-    commitVer(spark, dir, next, fold = true)
-    if (gcAfterPublish) gcSuperseded(spark, dir)
-    graft.Tables.invalidate(dir)
-  }
-
-  /** test hook: suppress the post-publish GC to freeze the crash
-    * window between the fold marker and the superseded deletes */
-  private[graft] var gcAfterPublish = true
 
   private def deleteTempStore(dir: String): Unit = {
     // the store carries a full corpus-sized docs/text artifact —

@@ -41,45 +41,25 @@ import graft.functions.vectors
   * consumers (graph builds): same assignment, packed into few large
   * files instead of 2048 probe-sized buckets.
   *
-  * `banding/` is merge-on-read (the same write/read split
-  * [[Ingest.streamingMergeIngest]] uses): `data/__ver=N/` version
-  * partitions plus `_commits/vN` marker files. A version is readable
-  * iff its marker exists; [[bandingFrame]] resolves latest-version-
-  * per-vec_id across committed versions. [[upsert]] therefore APPENDS
-  * an O(update) delta instead of rewriting the O(corpus) artifact,
-  * and — because the marker is created only after every data write
-  * succeeded — a crash mid-upsert can never destroy or tear the
-  * durable pre-upsert banding: readers simply keep resolving the old
-  * committed state, and re-running the upsert is safe (its leftover
-  * uncommitted `__ver` partition is deleted before re-writing).
-  * [[compactBanding]] folds the version chain back to one full copy
-  * (itself committed as a new version — never in place) once it grows
-  * past [[CompactAfter]].
+  * `banding/` is a merge-on-read [[Versioned]] chain (markers and
+  * crash contract there) of `data/__ver=N/` version partitions;
+  * [[bandingFrame]] resolves latest-version-per-vec_id across live
+  * versions. [[upsert]] therefore APPENDS an O(update) delta instead
+  * of rewriting the O(corpus) artifact, and [[compactBanding]] folds
+  * the chain back to one full copy once it grows past
+  * [[Versioned.CompactAfter]].
   */
 object SrpStore {
 
-  /** compaction threshold: one full-copy rewrite amortized over this
-    * many O(update) delta commits */
-  val CompactAfter = 8
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, s"$dir/banding", v => Seq(s"$dir/banding/data/__ver=$v"))
 
-  /** committed banding versions, ascending (marker files in
-    * `banding/_commits/`) */
-  private[graft] def committedVers(spark: SparkSession, dir: String): Seq[Int] = {
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/banding/_commits")
-    val f = Hfs.fs(spark, dir)
-    if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") => s.drop(1).toInt }.sorted
-  }
-
-  /** atomically publish version `v`: an empty marker file created
-    * AFTER all of the upsert's data writes succeeded */
-  private def commitVer(spark: SparkSession, dir: String, v: Int): Unit = {
-    val f = Hfs.fs(spark, dir)
-    val cd = new org.apache.hadoop.fs.Path(s"$dir/banding/_commits")
-    f.mkdirs(cd)
-    f.create(new org.apache.hadoop.fs.Path(cd, s"v$v"), false).close()
-  }
+  /** write one banding version's (vec_id, band, bk) rows */
+  private def writeBanding(rows: DataFrame, dir: String, v: Int): Unit =
+    rows.withColumn("__ver", lit(v))
+      .write.mode(SaveMode.Append)
+      .partitionBy("__ver")
+      .parquet(s"$dir/banding/data")
 
   /** Key width (bits per band) the store at `dir` was written with —
     * recorded as a marker file at [[write]] time so every read path
@@ -247,16 +227,10 @@ object SrpStore {
     // 10.8 s → 1.0 s at sf0.1). Point probes keep using the
     // partitioned layout; bulk scans use this one. Written as
     // version 0 of the merge-on-read chain (see the object doc).
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/banding"), true): Unit
-    banded.select(col("vec_id"), col("band"), col("bk"))
-      .withColumn("__ver", lit(0))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__ver")
-      .parquet(s"$dir/banding/data")
-    commitVer(spark, dir, 0)
+    Versioned.create(spark, chain(dir), s"$dir/banding") {
+      writeBanding(banded.select(col("vec_id"), col("band"), col("bk")), dir, 0)
+    }
     banded.unpersist()
-    graft.Tables.invalidate(dir)
   }
 
   // a serving process opens the store ONCE and probes it per query:
@@ -278,25 +252,14 @@ object SrpStore {
     * call; caching the DataFrame keeps the file listing + footer
     * reads a one-time cost per session, like [[bandedFrame]].
     *
-    * Merge-on-read view: committed versions only (uncommitted delta
-    * partitions are pruned in the file index, never scanned), latest
-    * version per vec_id wins. The overwhelmingly common single-
-    * version state (fresh store, or just compacted) skips the
-    * resolve window entirely — bulk consumers pay the merge shuffle
-    * only while un-compacted deltas exist. */
+    * Merge-on-read view: [[Versioned.latest]] per vec_id — bulk
+    * consumers pay the merge shuffle only while un-compacted deltas
+    * exist. */
   def bandingFrame(spark: SparkSession, dir: String): DataFrame =
     frameCache.getOrElseUpdate(spark, s"$dir/banding") {
-      import org.apache.spark.sql.expressions.Window
-      val vers = committedVers(spark, dir)
+      val vers = Versioned.live(spark, chain(dir))
       require(vers.nonEmpty, s"no committed banding versions under $dir/banding")
-      val raw = spark.read.parquet(s"$dir/banding/data")
-        .filter(col("__ver").isin(vers: _*)) // partition-pruned
-      if (vers.size == 1) raw.drop("__ver")
-      else raw
-        .withColumn("__maxv",
-          max(col("__ver")).over(Window.partitionBy(col("vec_id"))))
-        .filter(col("__ver") === col("__maxv"))
-        .drop("__ver", "__maxv")
+      Versioned.latest(spark.read.parquet(s"$dir/banding/data"), vers, "vec_id")
     }
 
   /** Pruned multi-probe read: distinct (vec_id, embedding) across the
@@ -587,13 +550,11 @@ object SrpStore {
     * dynamic partition overwrite: buckets gaining rows plus buckets
     * holding a stale copy of an updated id (an updated embedding can
     * move buckets). The compact `banding/` artifact gets an APPENDED
-    * O(update) delta version, committed (marker file) only after the
-    * bucket writes succeed — the durable pre-upsert banding is never
-    * rewritten or torn, and a crash at any step leaves readers on the
-    * old committed state with the upsert safely re-runnable. The
-    * version chain folds back to one full copy via [[compactBanding]]
-    * after [[CompactAfter]] commits. Returns the touched (band, dir
-    * key) pairs — exact bk for an ungrouped layout, bg otherwise. */
+    * O(update) delta version ([[Versioned.append]]), published only
+    * after the bucket writes succeed — the durable pre-upsert banding
+    * is never rewritten or torn, and the upsert is safely re-runnable.
+    * Returns the touched (band, dir key) pairs — exact bk for an
+    * ungrouped layout, bg otherwise. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame): Seq[(Int, Long)] = {
     val rpb = storeRpb(spark, dir)
     val shift = storeShift(spark, dir)
@@ -624,22 +585,12 @@ object SrpStore {
     val newKeys = newBanded.select(col("band"), col(pk)).distinct()
       .collect().map(r => (r.getInt(0), r.getLong(1)))
     val touched = (oldKeys ++ newKeys).distinct.sorted.toSeq
-    if (touched.nonEmpty) {
+    // the version's write is steps 1-2b; Versioned.append clears a
+    // torn leftover before it, and publishes + folds after it
+    if (touched.nonEmpty) Versioned.append(spark, chain(dir), compactBanding(spark, dir)) { nextVer =>
       // 1. append the banding delta UNCOMMITTED: O(update) bytes into
-      //    a fresh __ver partition (a leftover partition from a
-      //    crashed earlier attempt at this version is cleared first,
-      //    so retries never double rows). Readers ignore it until the
-      //    marker in step 3 exists.
-      val vers = committedVers(spark, dir)
-      val nextVer = vers.lastOption.getOrElse(-1) + 1
-      val f = Hfs.fs(spark, dir)
-      f.delete(new org.apache.hadoop.fs.Path(
-        s"$dir/banding/data/__ver=$nextVer"), true): Unit
-      newBanded.select(col("vec_id"), col("band"), col("bk"))
-        .withColumn("__ver", lit(nextVer))
-        .write.mode(SaveMode.Append)
-        .partitionBy("__ver")
-        .parquet(s"$dir/banding/data")
+      //    a fresh __ver partition, invisible until published
+      writeBanding(newBanded.select(col("vec_id"), col("band"), col("bk")), dir, nextVer)
       // 2. bucket rewrites — survivors: touched-bucket rows minus
       //    stale copies of updated ids; lineage broken before
       //    overwriting the files it reads
@@ -661,6 +612,7 @@ object SrpStore {
           .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
         val emptied = touched.filterNot(present)
         if (emptied.nonEmpty) {
+          val f = Hfs.fs(spark, dir)
           emptied.foreach { case (b, v) =>
             f.delete(new org.apache.hadoop.fs.Path(
               s"$dir/banded/band=$b/$pk=$v"), true): Unit
@@ -689,46 +641,15 @@ object SrpStore {
         .partitionBy("eg")
         .parquet(s"$dir/embed")
       finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(embMerged)
-      // 3. commit: the delta becomes visible only now that every data
-      //    write above succeeded
-      commitVer(spark, dir, nextVer)
-      graft.Tables.invalidate(dir)
-      // 4. fold the version chain once it grows past the threshold
-      if (vers.length + 1 >= CompactAfter) compactBanding(spark, dir)
     }
     touched
   }
 
-  /** Fold the committed banding version chain back into ONE full
-    * copy — written as a NEW version (never in place: the old chain
-    * stays durable until the fold is committed), then the superseded
-    * markers and partitions are garbage-collected. One column-pruned
-    * O(corpus) scan+write, amortized over [[CompactAfter]] O(update)
-    * upserts. */
-  def compactBanding(spark: SparkSession, dir: String): Unit = {
-    val vers = committedVers(spark, dir)
-    if (vers.size <= 1) return
-    val next = vers.max + 1
-    val f = Hfs.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/banding/data/__ver=$next"), true): Unit
-    bandingFrame(spark, dir)
-      .withColumn("__ver", lit(next))
-      .write.mode(SaveMode.Append)
-      .partitionBy("__ver")
-      .parquet(s"$dir/banding/data")
-    commitVer(spark, dir, next)
-    // GC: markers first (a crash here leaves unreferenced partitions
-    // — harmless garbage the next compaction's view never reads),
-    // then the superseded partitions
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/banding/_commits/v$v"), false): Unit
-    }
-    vers.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/banding/data/__ver=$v"), true): Unit
-    }
-    graft.Tables.invalidate(dir)
-  }
+  /** [[Versioned.fold]] the banding chain back into ONE full copy:
+    * one column-pruned O(corpus) scan+write, amortized over
+    * [[Versioned.CompactAfter]] O(update) upserts. */
+  def compactBanding(spark: SparkSession, dir: String): Unit =
+    Versioned.fold(spark, chain(dir))(writeBanding(bandingFrame(spark, dir), dir, _))
 
   /** v23: the v18 graph BUILD served from the persisted banding. The
     * expensive per-row hashing (quantize + Bits hyperplane dots) was

@@ -63,8 +63,7 @@ object CurationStream {
   /** ensure the state dirs exist (empty SigStore on first run) */
   private def initState(spark: SparkSession, stateDir: String): Unit = {
     import spark.implicits._
-    val f = graft.sources.Hfs.fs(spark, stateDir)
-    if (!f.exists(new org.apache.hadoop.fs.Path(s"$stateDir/sig/_commits")))
+    if (graft.sources.Versioned.live(spark, SigStore.chain(s"$stateDir/sig")).isEmpty)
       SigStore.write(spark,
         Seq.empty[(Long, String)].toDF("doc_id", "text"), s"$stateDir/sig")
   }

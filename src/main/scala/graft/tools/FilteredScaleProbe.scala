@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SrpBanded
-import graft.sources.{EdgeStore, FilteredServe, SrpStore}
+import graft.sources.{EdgeStore, FilteredServe, SrpStore, Versioned}
 
 /** Decade evidence for the v39/v40 filtered serve — all three planner
   * tiers measured against corpus size.
@@ -126,7 +126,7 @@ object FilteredScaleProbe {
       builds += "srp_store" -> s
     }
     val edgeDir = s"$dir/edgestore"
-    if (!codeOnly && !new java.io.File(s"$edgeDir/edges/_commits").exists()) {
+    if (!codeOnly && Versioned.live(spark, EdgeStore.chain(edgeDir)).isEmpty) {
       val (_, s) = time(EdgeStore.write(spark,
         SrpBanded.materializedGraph(spark, dir, 5), edgeDir))
       builds += "edge_store" -> s

@@ -2139,7 +2139,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("SigStore compaction: version chain folds to one committed copy, readers unchanged") {
     import spark.implicits._
-    import graft.sources.SigStore
+    import graft.sources.{SigStore, Versioned}
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     val dir = java.nio.file.Files.createTempDirectory("sigstore_cp").toString
     SigStore.write(spark, docs.filter($"doc_id" % 3 === 1), dir)
@@ -2149,7 +2149,7 @@ class OperatorsSpec extends AnyFunSuite {
       .select($"doc_id", $"band", $"band_key").collect().map(_.toSeq).toSet
     val docsBefore = SigStore.docsFrame(spark, dir).count()
     SigStore.compact(spark, dir)
-    assert(SigStore.committedVers(spark, dir).size == 1, "chain not folded")
+    assert(Versioned.live(spark, SigStore.chain(dir)).size == 1, "chain not folded")
     assert(SigStore.sigFrame(spark, dir)
       .select($"doc_id", $"band", $"band_key").collect().map(_.toSeq).toSet
       == sigsBefore, "compaction changed the signature set")
@@ -2162,41 +2162,180 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
-  test("SigStore compact crash window: fold marker atomically supersedes old versions, re-run completes GC") {
-    import spark.implicits._
-    import graft.sources.SigStore
+  test("SigStore.write onto an existing store replaces its chain and layout: only the new docs serve") {
+    import graft.sources.{SigStore, Versioned}
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("sigstore_cw").toString
-    SigStore.write(spark, docs.filter($"doc_id" % 3 === 1), dir)
-    SigStore.upsert(spark, dir, docs.filter($"doc_id" % 3 === 2))
-    val sigsBefore = SigStore.sigFrame(spark, dir).count()
-    val docsBefore = SigStore.docsFrame(spark, dir).count()
-    // freeze the crash window: fold published, superseded deletes not
-    // yet landed — the state the r11 contract got wrong (old ∪ fold
-    // would double every folded row)
-    SigStore.gcAfterPublish = false
-    try SigStore.compact(spark, dir)
-    finally SigStore.gcAfterPublish = true
-    def markers() = new java.io.File(s"$dir/_commits").listFiles()
+    val old = docs.filter(col("doc_id") % 3 =!= 0)
+    val fresh = docs.filter(col("doc_id") % 3 === 0)
+    assert(SigStore.groupsFor(old.count()) != SigStore.groupsFor(fresh.count()),
+      "the rewrite must change the group count")
+    val dir = java.nio.file.Files.createTempDirectory("sigstore_rw").toString
+    SigStore.write(spark, old, dir)
+    SigStore.upsert(spark, dir, old.filter(col("doc_id") < 100).select(
+      (col("doc_id") + 100000).as("doc_id"), col("text")))
+    SigStore.write(spark, fresh, dir)
+    // one chain, one layout marker: the old delta and group count are gone
+    assert(Versioned.live(spark, SigStore.chain(dir)) == Seq(0))
+    val metas = new java.io.File(s"$dir/_meta").listFiles().map(_.getName).toSeq
+    assert(metas == Seq(s"groups=${SigStore.groupsFor(fresh.count())}"), s"layout markers: $metas")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
+    val want = ids(fresh)
+    assert(ids(SigStore.sigFrame(spark, dir)) == want, "old signatures still served")
+    assert(ids(SigStore.docsFrame(spark, dir)) == want, "old texts still served")
+    // the serve equals one against a store written fresh from the new docs
+    val clean = java.nio.file.Files.createTempDirectory("sigstore_rw_ref").toString
+    SigStore.write(spark, fresh, clean)
+    val batch = docs.filter(col("doc_id") % 3 === 1)
+    def pairs(d: String) = SigStore.incrementalNearDup(spark, d, batch)
+      .collect().map(_.toSeq).toSeq
+    assert(pairs(dir) == pairs(clean), "rewritten store serves differently from a fresh one")
+  }
+
+  /** One versioned store as the chain specs drive it: `build` writes
+    * version 0 plus two deltas into a fresh dir, `view` is every row a
+    * reader resolves (sorted strings, so a doubled row shows), `fold`
+    * is the store's compaction, and `verDirs` are the (artifact dir,
+    * name prefix) pairs its versions' data dirs live under. */
+  private case class ChainCase(name: String, build: String => Unit,
+      view: String => Seq[String], fold: String => Unit,
+      chain: String => graft.sources.Versioned.Chain,
+      verDirs: Seq[(String, String)])
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Graph-store delta inputs: two [[StoreFixtures.layerTwins]], the
+    * post-ingest corpus holding them, and an SRP store that has
+    * absorbed them. */
+  private lazy val vecUpdates: (Seq[(Long, Array[Float])], String, String) = {
+    import spark.implicits._
+    val (news, d2) = StoreFixtures.layerTwins(spark, sf, 2, "chain")
+    val srp = java.nio.file.Files.createTempDirectory("chain_srp").toString
+    graft.sources.SrpStore.write(spark, sf, srp)
+    graft.sources.SrpStore.upsert(spark, srp, news.toDF("vec_id", "embedding"))
+    (news, d2, srp)
+  }
+
+  private def vecDelta(i: Int): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Seq(vecUpdates._1(i)).toDF("vec_id", "embedding")
+  }
+
+  private lazy val chainCases: Seq[ChainCase] = {
+    import graft.sources._
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    Seq(
+      ChainCase("SigStore",
+        dir => {
+          SigStore.write(spark, docs.filter(col("doc_id") % 3 === 1), dir)
+          SigStore.upsert(spark, dir, docs.filter(col("doc_id") % 3 === 2))
+          SigStore.upsert(spark, dir, docs.filter(col("doc_id") % 3 === 0))
+        },
+        dir => rowsOf(SigStore.sigFrame(spark, dir)) ++ rowsOf(SigStore.docsFrame(spark, dir)),
+        SigStore.compact(spark, _), SigStore.chain,
+        Seq("sigs" -> "__ver=", "docs" -> "__ver=")),
+      ChainCase("CodeStore",
+        dir => {
+          CodeStore.write(spark, sf, dir)
+          CodeStore.upsert(spark, dir, vecDelta(0))
+          CodeStore.upsert(spark, dir, vecDelta(1))
+        },
+        dir => rowsOf(CodeStore.resolvedFrame(spark, dir)),
+        CodeStore.compact(spark, _), CodeStore.chain,
+        Seq("codes/data" -> "__ver=")),
+      ChainCase("EdgeStore",
+        dir => {
+          EdgeStore.write(spark, SrpBanded.materializedRefinedGraph(spark, sf), dir)
+          EdgeStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(0))
+          EdgeStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(1))
+        },
+        dir => rowsOf(EdgeStore.read(spark, dir)),
+        EdgeStore.compact(spark, _), EdgeStore.chain,
+        Seq("edges/data" -> "__ver=")),
+      ChainCase("HnswStore",
+        dir => {
+          HnswStore.write(spark, sf, dir)
+          HnswStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(0))
+          HnswStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(1))
+        },
+        dir => rowsOf(HnswStore.layersFrame(spark, dir)) :+
+          HnswStore.storedEntry(spark, dir)._1.toString,
+        HnswStore.compact(spark, _), HnswStore.chain,
+        Seq("layers/data" -> "__ver=", "entry" -> "v")),
+      ChainCase("SrpStore banding",
+        dir => {
+          SrpStore.write(spark, sf, dir)
+          SrpStore.upsert(spark, dir, vecDelta(0))
+          SrpStore.upsert(spark, dir, vecDelta(1))
+        },
+        dir => rowsOf(SrpStore.bandingFrame(spark, dir)),
+        SrpStore.compactBanding(spark, _), SrpStore.chain,
+        Seq("banding/data" -> "__ver=")))
+  }
+
+  private def markerNames(c: graft.sources.Versioned.Chain): Set[String] =
+    Option(new java.io.File(s"${c.root}/_commits").listFiles()).toSeq.flatten
       .map(_.getName).filterNot(_.startsWith(".")).toSet
-    val marks = markers()
-    assert(marks == Set("v0", "v1", "c2"), s"crash window not frozen: $marks")
-    assert(new java.io.File(s"$dir/sigs/__ver=0").exists(), "old data gone early")
-    // the fold marker alone must flip readers to the fold — versions
-    // below it are invisible even though their markers/data remain
-    assert(SigStore.committedVers(spark, dir) == Seq(2))
-    assert(SigStore.sigFrame(spark, dir).count() == sigsBefore,
-      "crash window doubled (or lost) signature rows")
-    assert(SigStore.docsFrame(spark, dir).count() == docsBefore,
-      "crash window doubled (or lost) text rows")
-    // any later compact (the crash re-run) reclaims the stale versions
-    SigStore.compact(spark, dir)
-    val marksAfter = markers()
-    assert(marksAfter == Set("c2"), s"GC re-run left $marksAfter")
-    Seq("sigs", "docs").foreach { sub =>
-      val vers = new java.io.File(s"$dir/$sub").listFiles()
-        .filter(_.getName.startsWith("__ver=")).map(_.getName).toSeq
-      assert(vers == Seq("__ver=2"), s"$sub left ${vers.mkString(",")}")
+
+  private def verDirNames(dir: String, sub: String, prefix: String): Seq[String] =
+    new java.io.File(s"$dir/$sub").listFiles().map(_.getName)
+      .filter(_.startsWith(prefix)).sorted.toSeq
+
+  Seq("SigStore", "CodeStore", "EdgeStore", "HnswStore", "SrpStore banding").foreach { name =>
+    test(s"$name compact crash window: fold marker atomically supersedes old versions, re-run completes GC") {
+      import graft.sources.Versioned
+      val c = chainCases.find(_.name == name).get
+      val dir = java.nio.file.Files.createTempDirectory("chain_cw").toString
+      c.build(dir)
+      val before = c.view(dir)
+      // freeze the crash window: fold published, superseded deletes not
+      // yet landed — the state where old ∪ fold would double every
+      // folded row, and where deleting markers before data (the order
+      // four stores once used) orphans dirs no later GC finds
+      Versioned.gcAfterPublish = false
+      try c.fold(dir)
+      finally Versioned.gcAfterPublish = true
+      val marks = markerNames(c.chain(dir))
+      assert(marks == Set("v0", "v1", "v2", "c3"), s"crash window not frozen: $marks")
+      c.verDirs.foreach { case (sub, prefix) =>
+        assert(verDirNames(dir, sub, prefix).contains(s"${prefix}0"), s"$sub: old data gone early")
+      }
+      // the fold marker alone must flip readers to the fold — versions
+      // below it are invisible even though their markers/data remain
+      assert(Versioned.live(spark, c.chain(dir)) == Seq(3))
+      assert(c.view(dir) == before, "crash window doubled, lost or changed rows")
+      // any later compact (the crash re-run) reclaims the stale versions
+      c.fold(dir)
+      val marksAfter = markerNames(c.chain(dir))
+      assert(marksAfter == Set("c3"), s"GC re-run left $marksAfter")
+      c.verDirs.foreach { case (sub, prefix) =>
+        val vers = verDirNames(dir, sub, prefix)
+        assert(vers == Seq(s"${prefix}3"), s"$sub left ${vers.mkString(",")}")
+      }
+      assert(c.view(dir) == before, "GC re-run changed rows")
+    }
+  }
+
+  Seq("SigStore", "CodeStore", "EdgeStore", "HnswStore", "SrpStore banding").foreach { name =>
+    test(s"$name reads a store with v<N> markers only (no fold marker) as before") {
+      import graft.sources.Versioned
+      val c = chainCases.find(_.name == name).get
+      val dir = java.nio.file.Files.createTempDirectory("chain_legacy").toString
+      c.build(dir)
+      // deltas publish v<N> exactly as before folds had their own marker
+      assert(markerNames(c.chain(dir)) == Set("v0", "v1", "v2"))
+      assert(Versioned.live(spark, c.chain(dir)) == Seq(0, 1, 2))
+      val deltas = c.view(dir)
+      c.fold(dir)
+      assert(c.view(dir) == deltas, "fold changed the resolved rows")
+      // a compaction used to publish its fold as a plain v<N> after
+      // deleting the old markers: write that marker state by hand
+      val md = new java.io.File(s"${c.chain(dir).root}/_commits")
+      assert(new java.io.File(md, "c3").renameTo(new java.io.File(md, "v3")))
+      Tables.invalidate(dir)
+      assert(Versioned.live(spark, c.chain(dir)) == Seq(3))
+      assert(c.view(dir) == deltas, "a v<N>-only store reads differently")
     }
   }
 

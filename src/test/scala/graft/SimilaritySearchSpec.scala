@@ -10,6 +10,8 @@ class SimilaritySearchSpec extends AnyFunSuite {
   val sf = SparkTestSession.Sf
   val queryText = "fast vector search over spark tables"
 
+  def live(c: graft.sources.Versioned.Chain): Seq[Int] = graft.sources.Versioned.live(spark, c)
+
   test("knn returns k sorted rows") {
     val emb = Tables.embeddings(spark, sf)
     val top = SimilaritySearch.knn(emb, "embedding", "vec_id",
@@ -497,7 +499,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // the delta is O(update): exactly Bands rows per upserted id, and
     // the durable version-0 copy is byte-identical
     assert(verFiles(0) == base, "upsert rewrote the committed banding base")
-    assert(graft.sources.SrpStore.committedVers(spark, dir) == Seq(0, 1))
+    assert(live(graft.sources.SrpStore.chain(dir)) == Seq(0, 1))
     assert(spark.read.parquet(s"$dir/banding/data/__ver=1").count() ==
       2 * graft.operators.SrpBanded.Bands)
     // an updated id resolves to its LATEST version in the view
@@ -511,7 +513,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // compaction folds the chain to one full committed copy with an
     // identical resolved view
     graft.sources.SrpStore.compactBanding(spark, dir)
-    val versAfter = graft.sources.SrpStore.committedVers(spark, dir)
+    val versAfter = live(graft.sources.SrpStore.chain(dir))
     assert(versAfter.size == 1, s"compaction left $versAfter")
     assert(!new java.io.File(s"$dir/banding/data/__ver=0").exists(),
       "superseded version partition not garbage-collected")
@@ -540,14 +542,14 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .write.mode("append").partitionBy("__ver").parquet(s"$dir/banding/data")
     graft.Tables.invalidate(dir)
     // readers stay on the committed state — the torn write is invisible
-    assert(graft.sources.SrpStore.committedVers(spark, dir) == Seq(0))
+    assert(live(graft.sources.SrpStore.chain(dir)) == Seq(0))
     val view = graft.sources.SrpStore.bandingFrame(spark, dir)
     assert(view.count() == baseRows, "uncommitted delta leaked into the view")
     assert(view.filter(col("vec_id") === (maxId + 1)).count() == 0)
     // re-running the SAME upsert succeeds: the leftover uncommitted
     // partition is cleared before the rewrite, so no doubled rows
     graft.sources.SrpStore.upsert(spark, dir, updates)
-    assert(graft.sources.SrpStore.committedVers(spark, dir) == Seq(0, 1))
+    assert(live(graft.sources.SrpStore.chain(dir)) == Seq(0, 1))
     val after = graft.sources.SrpStore.bandingFrame(spark, dir)
     assert(after.filter(col("vec_id") === (maxId + 1)).count() ==
       graft.operators.SrpBanded.Bands,
@@ -610,7 +612,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(touchedPbs.nonEmpty &&
       touchedPbs.size < graft.sources.EdgeStore.EdgePartitions,
       s"upsert delta should cover a strict subset of partitions: $touchedPbs")
-    assert(graft.sources.EdgeStore.committedVers(spark, edgeDir) == Seq(0, 1),
+    assert(live(graft.sources.EdgeStore.chain(edgeDir)) == Seq(0, 1),
       "upsert should commit exactly one delta version")
 
     // structurally a destination: near neighbors adopted it
@@ -663,14 +665,14 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .parquet(s"$edgeDir/edges/data")
     graft.Tables.invalidate(edgeDir)
     // readers stay on the committed state — the torn write is invisible
-    assert(graft.sources.EdgeStore.committedVers(spark, edgeDir) == Seq(0))
+    assert(live(graft.sources.EdgeStore.chain(edgeDir)) == Seq(0))
     val view = graft.sources.EdgeStore.read(spark, edgeDir)
     assert(view.count() == baseRows, "uncommitted delta leaked into the view")
     assert(view.filter(col("src") === newId).count() == 0)
     // the retry clears the torn partition before re-writing: no
     // doubled rows, the bogus hand-written edge is gone
     graft.sources.EdgeStore.upsert(spark, edgeDir, d2, srpDir, updates)
-    assert(graft.sources.EdgeStore.committedVers(spark, edgeDir) == Seq(0, 1))
+    assert(live(graft.sources.EdgeStore.chain(edgeDir)) == Seq(0, 1))
     val after = graft.sources.EdgeStore.read(spark, edgeDir)
     val newOut = after.filter(col("src") === newId).count()
     assert(newOut > 0 && newOut <= 5,
@@ -867,7 +869,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(touched.nonEmpty, "upsert touched no layer partitions")
     assert(touched.size < before.size,
       s"upsert delta should cover a strict subset: $touched of ${before.size}")
-    assert(graft.sources.HnswStore.committedVers(spark, dir) == Seq(0, 1),
+    assert(live(graft.sources.HnswStore.chain(dir)) == Seq(0, 1),
       "upsert should commit exactly one delta version")
 
     // structurally on its layers: the twin pair adopted each other
@@ -895,6 +897,90 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val deltaDirs = verFiles(1).keySet
     assert(deltaDirs == touched.map { case (l, pb) => s"layer=$l/pb=$pb" }.toSet,
       s"delta partitions $deltaDirs != reported $touched")
+  }
+
+  /** An SRP store and an HNSW store over the spec corpus, plus `n`
+    * [[StoreFixtures.layerTwins]] and the post-ingest corpus holding
+    * them (the SRP store has absorbed them too; the HNSW store has
+    * not). */
+  private def hnswFixture(tag: String, n: Int)
+      : (String, String, String, Seq[(Long, Array[Float])]) = {
+    import spark.implicits._
+    val srpDir = java.nio.file.Files.createTempDirectory(s"${tag}_srp").toString
+    graft.sources.SrpStore.write(spark, sf, srpDir)
+    val dir = java.nio.file.Files.createTempDirectory(s"${tag}_store").toString
+    graft.sources.HnswStore.write(spark, sf, dir)
+    val (news, d2) = StoreFixtures.layerTwins(spark, sf, n, tag)
+    graft.sources.SrpStore.upsert(spark, srpDir, news.toDF("vec_id", "embedding"))
+    (srpDir, dir, d2, news)
+  }
+
+  test("HnswStore crash contract: uncommitted layer delta and entry invisible, retry absorbs the leftover") {
+    import spark.implicits._
+    import graft.sources.HnswStore
+    val (srpDir, dir, d2, news) = hnswFixture("hnswcrash", 1)
+    val (newId, twin) = news.head
+    val baseRows = HnswStore.layersFrame(spark, dir).count()
+    val baseEntry = HnswStore.storedEntry(spark, dir)._1
+    val baseServe = HnswStore.search(spark, dir, twin, k = 5).collect().map(_.toSeq).toSeq
+    // simulate an upsert that crashed AFTER the layer delta and entry
+    // writes but BEFORE the commit marker: hand-write both for ver 1,
+    // the edge to a sentinel dst no real build produces
+    Seq((newId, -1L, twin, 1)).toDF("src", "dst", "dst_emb", "layer")
+      .withColumn("pb", pmod(col("src"), lit(HnswStore.LayerPartitions.toLong)))
+      .withColumn("__ver", lit(1))
+      .write.mode("append").partitionBy("__ver", "layer", "pb")
+      .parquet(s"$dir/layers/data")
+    Seq((newId, twin)).toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/entry/v1")
+    Tables.invalidate(dir)
+    // readers stay on the committed hierarchy — the torn write is invisible
+    assert(live(HnswStore.chain(dir)) == Seq(0))
+    val view = HnswStore.layersFrame(spark, dir)
+    assert(view.count() == baseRows, "uncommitted delta leaked into the view")
+    assert(view.filter(col("src") === newId).count() == 0)
+    assert(HnswStore.storedEntry(spark, dir)._1 == baseEntry, "uncommitted entry served")
+    assert(HnswStore.search(spark, dir, twin, k = 5).collect().map(_.toSeq).toSeq == baseServe,
+      "uncommitted delta changed the serve")
+    // the retry clears the torn partition and entry before re-writing
+    HnswStore.upsert(spark, dir, d2, srpDir, news.toDF("vec_id", "embedding"))
+    assert(live(HnswStore.chain(dir)) == Seq(0, 1))
+    val after = HnswStore.layersFrame(spark, dir)
+    assert(after.filter(col("dst") === -1L).count() == 0, "torn edge survived the retry")
+    val out = after.filter(col("layer") === 1 && col("src") === newId)
+      .select(col("dst")).collect().map(_.getLong(0)).toSeq
+    assert(out.nonEmpty && out.size <= graft.operators.Hnsw.LevelK && out.distinct == out,
+      s"retry should give the upserted id one top-k layer-1 edge set, got $out")
+    assert(HnswStore.storedEntry(spark, dir)._1 == graft.operators.Hnsw.entryFor(spark, d2)._1,
+      "retry did not publish its own entry")
+  }
+
+  test("HnswStore compact: folds the layer chain and its entries to one copy, identical serves, superseded dirs GC'd") {
+    import spark.implicits._
+    import graft.sources.HnswStore
+    val (srpDir, dir, d2, news) = hnswFixture("hnswcompact", 3)
+    news.take(2).foreach { u =>
+      HnswStore.upsert(spark, dir, d2, srpDir, Seq(u).toDF("vec_id", "embedding"))
+    }
+    assert(live(HnswStore.chain(dir)) == Seq(0, 1, 2))
+    val q = news(1)._2
+    def serve() = HnswStore.search(spark, dir, q, k = 5).collect().map(_.toSeq).toSeq
+    val before = serve()
+    val entry = HnswStore.storedEntry(spark, dir)._1
+    HnswStore.compact(spark, dir)
+    assert(live(HnswStore.chain(dir)) == Seq(3), "compact did not collapse the version chain")
+    Seq(0, 1, 2).foreach { v =>
+      assert(!new java.io.File(s"$dir/layers/data/__ver=$v").exists(),
+        s"superseded layers __ver=$v not garbage-collected")
+      assert(!new java.io.File(s"$dir/entry/v$v").exists(),
+        s"superseded entry/v$v not garbage-collected")
+    }
+    assert(new java.io.File(s"$dir/entry/v3").exists(), "fold published no entry")
+    assert(serve() == before, "compact changed serve results")
+    assert(HnswStore.storedEntry(spark, dir)._1 == entry)
+    // the next upsert keeps counting from the fold
+    HnswStore.upsert(spark, dir, d2, srpDir, Seq(news(2)).toDF("vec_id", "embedding"))
+    assert(live(HnswStore.chain(dir)) == Seq(3, 4))
   }
 
   test("streaming HNSW probe: equals batch stored hierarchical search, layer read pruned") {
@@ -1054,7 +1140,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
       Seq((newId, twin)).toDF("vec_id", "embedding"))
     assert(touched == Seq(Math.floorMod(newId, 64L)),
       s"delta should cover exactly the upserted id's pb: $touched")
-    assert(graft.sources.CodeStore.committedVers(spark, dir) == Seq(0, 1))
+    assert(live(graft.sources.CodeStore.chain(dir)) == Seq(0, 1))
     assert(verFiles(0) == before, "committed v0 data rewritten by upsert")
     val afterTop = graft.sources.CodeStore.search(spark, dir, twin, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
@@ -1089,14 +1175,14 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .write.mode("append").partitionBy("__ver", "pb")
       .parquet(s"$dir/codes/data")
     graft.Tables.invalidate(dir)
-    assert(graft.sources.CodeStore.committedVers(spark, dir) == Seq(0))
+    assert(live(graft.sources.CodeStore.chain(dir)) == Seq(0))
     val top = graft.sources.CodeStore.search(spark, dir, twin, k = 5)
       .collect().map(_.getLong(0)).toSet
     assert(!top.contains(newId), "uncommitted delta leaked into the serve path")
     // the retry clears the torn partition before re-writing
     graft.sources.CodeStore.upsert(spark, dir,
       Seq((newId, twin)).toDF("vec_id", "embedding"))
-    assert(graft.sources.CodeStore.committedVers(spark, dir) == Seq(0, 1))
+    assert(live(graft.sources.CodeStore.chain(dir)) == Seq(0, 1))
     val after = graft.sources.CodeStore.search(spark, dir, twin, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(after.get(newId).contains(1), s"retry did not serve the upsert: $after")
@@ -1121,7 +1207,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     graft.sources.CodeStore.upsert(spark, dir,
       Seq((maxId + 2, twin2),
         (maxId + 1, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))
-    assert(graft.sources.CodeStore.committedVers(spark, dir) == Seq(0, 1, 2))
+    assert(live(graft.sources.CodeStore.chain(dir)) == Seq(0, 1, 2))
     val before = graft.sources.CodeStore.search(spark, dir, twin2, k = 5)
       .collect().map(_.toSeq).toSeq
     assert(before.exists(_.head == maxId + 2), "pre-compact serve missing upserted id")
@@ -1129,7 +1215,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     graft.sources.CodeStore.compact(spark, dir)
     // chain folded: exactly one committed version (max + 1), old
     // markers and data partitions gone
-    assert(graft.sources.CodeStore.committedVers(spark, dir) == Seq(3),
+    assert(live(graft.sources.CodeStore.chain(dir)) == Seq(3),
       "compact did not collapse the version chain")
     Seq(0, 1, 2).foreach { v =>
       assert(!new java.io.File(s"$dir/codes/data/__ver=$v").exists(),
@@ -1146,7 +1232,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
       "tombstoned id resurrected by compact")
     graft.sources.CodeStore.upsert(spark, dir,
       Seq((maxId + 1, twin)).toDF("vec_id", "embedding"))
-    assert(graft.sources.CodeStore.committedVers(spark, dir) == Seq(3, 4),
+    assert(live(graft.sources.CodeStore.chain(dir)) == Seq(3, 4),
       "nextVer after compact should continue past the folded version")
     val re = graft.sources.CodeStore.search(spark, dir, twin, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap

@@ -2,10 +2,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `graft.Verify <sfDir> <outDir> [name,name,...]` — the optional
+  * third argument dumps only the named queries (a quick row check for
+  * one operator, paired with `tools/check_oracle.py --only`). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length == 2 || args.length == 3,
+      "usage: graft.Verify <sfDir> <outDir> [comma-separated query names]")
+    val Array(sfDir, outDir) = args.take(2)
     // default to every core when the driver doesn't set SPARK_GRAFT_CPUS
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
@@ -26,13 +32,13 @@ object Verify {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit
     }
-    // dev-only subset (comma list of query names): the driver never
-    // sets this, so its all-queries contract is untouched
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+    // optional subset (comma list of query names); without it every
+    // query is dumped, the gate's contract
+    val only = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { s =>
       val bad = s.filterNot(SparkEntry.queries.contains)
-      require(bad.isEmpty, s"SPARK_GRAFT_VERIFY_ONLY unknown: ${bad.mkString(",")}")
+      require(bad.isEmpty, s"unknown query names: ${bad.mkString(",")}")
     }
     val selected = only.map(s => SparkEntry.queries.filter(kv => s(kv._1)))
       .getOrElse(SparkEntry.queries)

@@ -1,10 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, Round, Slice, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
-import graft.functions.{bound, text}
+import graft.functions.{TextHash, bound, text}
 
 /** On-disk MinHash band-signature store — incremental near-dup
   * ("dedup-as-a-service"). The batch operator d2 re-bands the whole
@@ -209,12 +213,9 @@ object SigStore {
     * the batch itself — d2's pipeline with the corpus side read from
     * the store. Stages:
     *
-    *  1. band the batch (O(batch) rows shuffle — texts never ride);
-    *  2. read the store's probed buckets: a partition-pruned point
-    *     read while the batch's distinct key set is collectable
-    *     (≤ [[ProbeCollectMax]]), a full shuffle join once the batch
-    *     saturates the bucket space — physical-plan-only switch, the
-    *     matched rows are identical;
+    *  1. band the batch;
+    *  2. read the store's probed buckets — only rows whose
+    *     (band, band_key) the batch holds;
     *  3. cap each bucket at [[MaxBucket]] over stored+batch occupancy
     *     (the store holds every non-batch doc, so combined occupancy
     *     equals d2's whole-corpus bucket count — cap semantics are
@@ -222,16 +223,23 @@ object SigStore {
     *  4. pair within capped buckets, keeping pairs with ≥1 batch side
     *     (old×old pairs were the store build's job);
     *  5. exact-Jaccard verify on the paired texts only — batch texts
-    *     from the batch frame, stored texts PARTITION-PRUNED
-    *     point-reads from the db-bucketed docs artifact (falling back
-    *     to one semi-joined artifact pass for saturated batches); the
-    *     serve reads neither the corpus table nor an O(corpus) slice
-    *     of the text column.
+    *     from the batch, stored texts from the db-bucketed docs
+    *     artifact; the serve reads neither the corpus table nor an
+    *     O(corpus) slice of the text column.
+    *
+    * Two plans run these stages, and the switch is physical only (same
+    * rows, same schema). A batch of ≤ `probeCollectMax / Bands` docs —
+    * so ≤ `probeCollectMax` distinct probe keys — runs them on the
+    * driver ([[localNearDup]]: two partition-pruned point reads, no
+    * shuffle, no checkpoint). A larger batch, or one whose probed
+    * buckets overflow the local bound, runs them as one shuffle plan
+    * ([[joinedNearDup]]); `probeCollectMax = 0` forces it.
     */
-  /** last serve's probe-read shape ("pruned" | "joined"), the pruned
-    * scans' physical plans, and the text-fetch shape — observability
-    * for the crossover and PartitionFilters specs (the
-    * [[SrpStore.lastBatchBandingSource]] pattern) */
+  /** last serve's probe-read shape ("pruned" for the driver-local
+    * plan's point read | "joined" | "empty"), its probe scan's physical
+    * plan, and the text-fetch shape — observability for the crossover
+    * and PartitionFilters specs (the [[SrpStore.lastBatchBandingSource]]
+    * pattern) */
   private[graft] var lastProbeSource: String = ""
   // plan hooks are LAZY (r16): eagerly planning + stringifying the
   // pruned scan — whose probe predicate carries the batch's whole
@@ -246,40 +254,127 @@ object SigStore {
   def incrementalNearDup(spark: SparkSession, storeDir: String,
                          batch: DataFrame,
                          probeCollectMax: Long = ProbeCollectMax): DataFrame = {
-    val groups = storeGroups(spark, storeDir)
-    val batchDocs = batch.select(col("doc_id"), col("text"))
-    val batchSigs = bandedSigs(batchDocs).localCheckpoint(true)
-
-    val distinctKeys = batchSigs.select(col("band"), col("band_key")).distinct()
+    val batchDocs = batch.select(col("doc_id").cast(LongType).as("doc_id"), col("text"))
     // limit() takes an Int: a Long cap at/above Int.MaxValue must
-    // SATURATE (take the joined path), not overflow to a negative
-    // limit that fails the serve at runtime (r17, ADVICE)
+    // SATURATE, not overflow to a negative limit that fails the serve
+    // at runtime (r17, ADVICE)
     val cap = math.min(probeCollectMax, (Int.MaxValue - 1).toLong).toInt
-    // ONE bounded collect decides the crossover AND supplies the probe
-    // keys (r16; was a count job followed by a second collect job):
-    // ≤ cap+1 rows ever reach the driver either way
-    val keyProbe = distinctKeys.limit(cap + 1).collect()
-    val storedRows =
-      if (keyProbe.isEmpty) {
-        // empty (or all-too-short) batch: no probes, no pairs — an
-        // empty reduce in probePred would otherwise throw
-        lastProbeSource = "empty"
-        sigFrame(spark, storeDir).filter(lit(false))
-      } else if (keyProbe.length <= cap) {
-        val keysByBand = keyProbe
-          .map(r => (r.getInt(0), r.getLong(1)))
-          .groupBy(_._1).map { case (b, ks) => b -> ks.map(_._2).toSeq }
-        val pruned = sigFrame(spark, storeDir).filter(probePred(keysByBand, groups))
+    // a doc bands into ≤ Bands keys, so ≤ cap/Bands docs carry ≤ cap
+    // distinct keys. ONE bounded collect decides the branch and hands
+    // the local plan its batch (a request's LocalRelation folds the
+    // limit: no job)
+    val docCap = cap / Bands
+    val docs = batchDocs.limit(docCap + 1).collect()
+    (if (docs.length <= docCap) localNearDup(spark, storeDir, docs) else None)
+      .getOrElse(joinedNearDup(spark, storeDir, batchDocs, cap))
+  }
+
+  /** [[bandedSigs]]'s band-key expression, bound to one signature:
+    * band b's key is `xxhash64(b, slice(sig, b·R + 1, R))` — evaluated
+    * on the driver, not re-implemented */
+  private val bandKeyExprs: IndexedSeq[Expression] = {
+    val sig = BoundReference(0, ArrayType(LongType, containsNull = false), nullable = false)
+    (0 until Bands).map(b => new XxHash64(Seq(Literal(b),
+      Slice(sig, Literal(b * RowsPerBand + 1), Literal(RowsPerBand)))))
+  }
+
+  /** one text's (band, band_key) rows on the driver, as
+    * [[bandedSigs]] makes them: none for a null text or one shorter
+    * than the shingle in Spark's character count (`length`) */
+  private[graft] def bandKeysLocal(text: String): Seq[(Int, Long)] = {
+    val t = if (text == null) null else UTF8String.fromString(text)
+    if (t == null || t.numChars < Shingle) Nil
+    else {
+      val sig = InternalRow(TextHash.minhashJ(t, Shingle, NumHashes))
+      bandKeyExprs.indices.map(b => (b, bandKeyExprs(b).eval(sig).asInstanceOf[Long]))
+    }
+  }
+
+  /** Spark's `round(x, 4)`, evaluated */
+  private val round4 = Round(BoundReference(0, DoubleType, nullable = false), Literal(4))
+  private[graft] def roundJaccard(x: Double): Double =
+    round4.eval(InternalRow(x)).asInstanceOf[Double]
+
+  /** the serve's output schema, on both plans */
+  private[graft] val PairSchema = StructType(Seq(
+    StructField("id_a", LongType), StructField("id_b", LongType),
+    StructField("jaccard", DoubleType)))
+
+  /** The driver-local plan: stages 1–5 over collected rows. Jobs: the
+    * probe read, then the stored-text read — skipped when no pair has a
+    * stored side. Driver memory is bounded by the batch (≤
+    * ProbeCollectMax/Bands docs and their ≤ ProbeCollectMax keys), the
+    * probe read (≤ keys × (MaxBucket + 1) rows; past that `None`, and
+    * the joined plan serves) and the pairs (≤ MaxBucket² per bucket:
+    * the cap drops a fuller bucket before pairing). */
+  private def localNearDup(spark: SparkSession, storeDir: String,
+                           docs: Array[Row]): Option[DataFrame] = {
+    def idOf(r: Row): Option[Long] = if (r.isNullAt(0)) None else Some(r.getLong(0))
+    // a null doc_id never pairs but still fills its buckets, as in the
+    // joined plan's occupancy window
+    val batchRows = docs.toSeq.flatMap { r =>
+      bandKeysLocal(r.getString(1)).map { case (b, k) => ((b, k), (idOf(r), true)) }
+    }
+    if (batchRows.isEmpty) {
+      // empty (or all-too-short) batch: no probes, no pairs, no read
+      lastProbeSource = "empty"
+      lastTextSource = "empty"
+      Some(spark.createDataFrame(java.util.Collections.emptyList[Row](), PairSchema))
+    } else {
+      val keysByBand = batchRows.map(_._1).distinct.groupMap(_._1)(_._2)
+      val probeMax = keysByBand.valuesIterator.map(_.size.toLong).sum * (MaxBucket + 1)
+      val pruned = sigFrame(spark, storeDir)
+        .filter(probePred(keysByBand, storeGroups(spark, storeDir)))
+        .select(col("doc_id"), col("band"), col("band_key"))
+      // one task, one job, however many files the probed dirs hold
+      val stored = pruned.coalesce(1)
+        .limit(math.min(probeMax + 1, Int.MaxValue.toLong).toInt).collect()
+      if (stored.length > probeMax) None
+      else {
         lastProbeSource = "pruned"
         lastPrunedPlanThunk = () => pruned.queryExecution.executedPlan.toString
-        pruned
-      } else {
-        // saturated batch: one shuffle join, no driver-side key set
-        lastProbeSource = "joined"
-        sigFrame(spark, storeDir)
-          .join(distinctKeys.hint("shuffle_hash"), Seq("band", "band_key"),
-            "left_semi")
+        val buckets = (stored.toSeq.map(r => ((r.getInt(1), r.getLong(2)), (idOf(r), false))) ++
+          batchRows).groupMap(_._1)(_._2)
+        val candidates = buckets.valuesIterator.filter(_.size <= MaxBucket).flatMap { ms =>
+          val members = ms.collect { case (Some(id), isNew) => (id, isNew) }
+          for (x <- members; y <- members if x._1 < y._1 && (x._2 || y._2))
+            yield (x._1, y._1, x._2, y._2)
+        }.toSet
+        val storedIds = candidates.flatMap { case (a, b, newA, newB) =>
+          Option.when(!newA)(a) ++ Option.when(!newB)(b)
+        }
+        lastTextSource = "pruned"
+        val storedTexts =
+          if (storedIds.isEmpty) { lastDocsPlanThunk = () => ""; Array.empty[Row] }
+          else docsForIds(spark, storeDir, storedIds.toSeq).collect()
+        val texts = (storedTexts ++ docs).toSeq
+          .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+          .groupMap(_.getLong(0))(_.getString(1))
+        val pairs = for {
+          (a, b, _, _) <- candidates.toSeq
+          ta <- texts.getOrElse(a, Nil)
+          tb <- texts.getOrElse(b, Nil)
+          j = roundJaccard(TextHash.shingleJaccard(ta, tb, Shingle))
+          if j >= Threshold
+        } yield (a, b, j)
+        val rows = pairs.sortBy(p => (p._1, p._2)).map { case (a, b, j) => Row(a, b, j) }
+        Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), PairSchema))
       }
+    }
+  }
+
+  /** The shuffle plan for batches past the local bound: the batch is
+    * banded once into a checkpoint, the store is semi-joined on the
+    * batch's (band, band_key) set (no driver-side key set), a window
+    * caps the buckets, a self-join pairs them, and joins attach the
+    * verify texts. */
+  private def joinedNearDup(spark: SparkSession, storeDir: String,
+                            batchDocs: DataFrame, cap: Int): DataFrame = {
+    val batchSigs = bandedSigs(batchDocs).localCheckpoint(true)
+    val distinctKeys = batchSigs.select(col("band"), col("band_key")).distinct()
+    lastProbeSource = "joined"
+    val storedRows = sigFrame(spark, storeDir)
+      .join(distinctKeys.hint("shuffle_hash"), Seq("band", "band_key"), "left_semi")
 
     val tagged = storedRows.select(col("doc_id"), col("band"), col("band_key"))
       .withColumn("is_new", lit(false))
@@ -306,8 +401,7 @@ object SigStore {
     // artifact while its distinct id set is collectable — the text
     // column is the heaviest in the store, and a batch-sized serve
     // must not scan O(corpus) of it. A saturated batch (id set past
-    // the crossover) reads the artifact once through a join instead,
-    // the same physical-plan-only switch as the bucket probe.
+    // the crossover) reads the artifact once through a join instead.
     val storedIds = candidates
       .select(explode(array(
         when(!col("new_a"), col("id_a")),

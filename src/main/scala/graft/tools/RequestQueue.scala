@@ -178,8 +178,13 @@ final class RequestQueue(val maxInFlight: Int, val maxQueued: Int) {
           timer.schedule(new Runnable {
             override def run(): Unit = if (!task.isDone) {
               deadlineFired.set(true)
+              // counted BEFORE the cancel: cancel() wakes the waiters,
+              // and a caller woken by it must already see its timeout
+              // counted; a cancel that loses to completion takes the
+              // count back
+              timedOutCount.incrementAndGet()
               val cancelled = task.cancel(true)
-              if (cancelled) timedOutCount.incrementAndGet()
+              if (!cancelled) timedOutCount.decrementAndGet()
               // kill the request's distributed work regardless of which
               // race we won — cancelling an empty/finished group is a
               // no-op, leaving it running is a leaked cluster

@@ -161,6 +161,43 @@ class GatewayQueueSpec extends AnyFunSuite {
     q.shutdown()
   }
 
+  test("deadline: the timeout count is visible to a caller the moment its cancelled get() throws, 50 times over") {
+    val spark = SparkTestSession.spark
+    val q = new graft.tools.RequestQueue(maxInFlight = 1, maxQueued = 1)
+    val gate = new CountDownLatch(1)
+    val head = q.submit { gate.await(); "head" }
+    assert(head.isDefined)
+    for (i <- 1 to 50) {
+      // the previous cancel releases its permit after it counts: retry
+      // admission until that permit is back
+      val admitBy = System.currentTimeMillis() + 10000
+      var queued = q.submit(spark, timeoutMs = 50) { "queued" }
+      while (queued.isEmpty && System.currentTimeMillis() < admitBy) {
+        Thread.sleep(1)
+        queued = q.submit(spark, timeoutMs = 50) { "queued" }
+      }
+      assert(queued.isDefined, s"request $i never admitted: a permit leaked")
+      // parked waiters: the cancel wakes each of them before it returns,
+      // which holds open any gap between the cancellation becoming
+      // visible and the count
+      val parked = (1 to 16).map { _ =>
+        val t = new Thread(() =>
+          try queued.get.get(): Unit
+          catch { case _: java.util.concurrent.CancellationException => () })
+        t.setDaemon(true); t.start(); t
+      }
+      // ...and one spinning caller, which sees the cancellation as early
+      // as any caller can
+      while (!queued.get.isDone) Thread.onSpinWait()
+      intercept[java.util.concurrent.CancellationException] { queued.get.get() }
+      assert(q.timedOut == i, s"request $i: get() threw with timedOut=${q.timedOut}")
+      parked.foreach(_.join(10000))
+    }
+    gate.countDown()
+    assert(head.get.get() == "head")
+    q.shutdown()
+  }
+
   test("work executes with at most maxInFlight concurrently") {
     val q = new graft.tools.RequestQueue(maxInFlight = 2, maxQueued = 6)
     val active = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,0 +1,100 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.FakeEmbedder
+import graft.operators.SimilaritySearch
+import graft.sources.{CodeStore, FilteredServe, HnswStore, SigStore}
+
+/** How many Spark jobs one warm single-request serve runs — the job
+  * count is the serve's scheduling cost, so a plan change that adds a
+  * job shows here before it shows in a benchmark. Jobs are counted per
+  * request through its job group (the status tracker), after a warm-up
+  * request of the same shape with other values. */
+class ServeJobsSpec extends AnyFunSuite {
+  private val spark = SparkTestSession.spark
+  private val sf = SparkTestSession.Sf
+  import spark.implicits._
+
+  private var seq = 0
+  /** Spark jobs `serve` runs to its collected rows */
+  private def jobs(serve: => DataFrame): Int = {
+    seq += 1
+    val group = s"serve-jobs-$seq"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try serve.collect() finally sc.clearJobGroup()
+    GraftBridge.drainListenerBus(spark)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** warm `serve(a)`, then the job count of `serve(b)`, checked */
+  private def warmJobs[A](name: String, serve: A => DataFrame, a: A, b: A, max: Int): Unit = {
+    serve(a).collect()
+    val n = jobs(serve(b))
+    info(s"$name: $n jobs")
+    assert(n <= max, s"$name: a warm request ran $n jobs, bound $max")
+  }
+
+  private val qa = FakeEmbedder.embed("fast vector search over spark tables")
+  private val qb = FakeEmbedder.embed("incremental near duplicate detection for crawls")
+
+  test("near-dup of one document: ≤ 2 jobs, ≤ 1 for a text with no stored candidate") {
+    val dir = Files.createTempDirectory("jobs-sig").toString
+    try {
+      val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      SigStore.write(spark, docs, dir)
+      val texts = docs.orderBy(col("doc_id")).limit(2).collect().map(_.getString(1))
+      def req(id: Long, t: String): DataFrame = Seq((id, t)).toDF("doc_id", "text")
+      // an echo of a stored text: one planted pair, its stored text fetched
+      warmJobs[Int]("near-dup echo", i => SigStore.incrementalNearDup(spark, dir,
+        req(1000000L + i, texts(i))), 0, 1, max = 2)
+      assert(SigStore.lastProbeSource == "pruned" && SigStore.lastDocsPlan.nonEmpty)
+      // a text no stored doc shares a band with: the probe read alone
+      val fresh = "zq7 xv9 kw3 pj8 mb2 ty6 " * 4
+      warmJobs[String]("near-dup fresh", t => SigStore.incrementalNearDup(spark, dir,
+        req(2000000L, t)), fresh + "a", fresh + "b", max = 1)
+      assert(SigStore.lastProbeSource == "pruned" && SigStore.lastDocsPlan.isEmpty,
+        "a request with no stored candidate fetched stored texts")
+    } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("lookup: ≤ 1 job") {
+    val docs = Tables.documents(spark, sf)
+    val ids = docs.select(col("doc_id")).orderBy(col("doc_id")).limit(2)
+      .collect().map(_.getLong(0))
+    warmJobs[Long]("lookup", id => SimilaritySearch.recordById(docs, "doc_id", id),
+      ids(0), ids(1), max = 1)
+  }
+
+  test("code serve: ≤ 2 jobs") {
+    val dir = Files.createTempDirectory("jobs-code").toString
+    try {
+      CodeStore.write(spark, sf, dir)
+      warmJobs[Array[Float]]("code", q => CodeStore.search(spark, dir, q), qa, qb, max = 2)
+    } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("filtered exact tier: ≤ 4 jobs") {
+    val dir = Files.createTempDirectory("jobs-meta").toString
+    try {
+      FilteredServe.writeMeta(spark, sf, dir)
+      warmJobs[Array[Float]]("filtered", q => FilteredServe.searchFiltered(
+        spark, sf, dir, "/nonexistent/edge-store", q, Seq("lang" -> "en"), k = 5,
+        exactScanMax = Long.MaxValue), qa, qb, max = 4)
+      assert(FilteredServe.lastFilteredPath == "exact")
+    } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("HNSW serve: ≤ 6 jobs") {
+    val dir = Files.createTempDirectory("jobs-hnsw").toString
+    try {
+      HnswStore.write(spark, sf, dir)
+      warmJobs[Array[Float]]("hnsw", q => HnswStore.search(spark, dir, q), qa, qb, max = 6)
+    } finally graft.sources.TempStores.delete(dir)
+  }
+}

@@ -1,14 +1,19 @@
 #!/usr/bin/env python3
 """Dev-side replica of the driver's DuckDB correctness gate.
 
-Usage: python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/verify_out
+Usage: python3 tools/check_oracle.py <sf_dir> <verify_out_dir> [--only a,b]
 Compares each <outDir>/<name> parquet against the oracle SQL run in
 DuckDB over views named after the test tables. An oracle query with no
 output directory (it threw in Verify) fails. Columns sorted by name,
 rows sorted by all columns, exact value compare (floats: exact, since
 the engine is designed for bit-parity; reports max delta if not).
+
+--only restricts the compare to the named queries (pair it with the same
+list as `graft.Verify`'s third argument): a quick row check for one
+operator. A named query with no output directory still fails; the full
+run, without --only, is the gate.
 """
-import sys, json, glob, os
+import argparse, sys, json, glob, os
 import duckdb
 import pandas as pd
 
@@ -19,12 +24,19 @@ def norm(df):
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     names = sorted(d for d in os.listdir(out_dir) if os.path.isdir(f"{out_dir}/{d}"))
+    if only is not None:
+        unknown = only - set(oracle) - set(names)
+        if unknown:
+            print(f"unknown --only names (no oracle SQL, no output): {','.join(sorted(unknown))}")
+            return 2
+        oracle = {k: v for k, v in oracle.items() if k in only}
+        names = [n for n in names if n in only]
     n_pass = n_fail = n_rowsonly = 0
     # a query that threw in Verify leaves no output directory: it fails
     for name in sorted(set(oracle) - set(names)):
@@ -92,4 +104,10 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser(description="Compare graft.Verify output with the DuckDB oracle.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--only", help="comma-separated query names to compare (default: all)")
+    a = ap.parse_args()
+    only = None if a.only is None else {n.strip() for n in a.only.split(",") if n.strip()}
+    sys.exit(main(a.sf_dir, a.out_dir, only))

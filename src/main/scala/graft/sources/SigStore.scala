@@ -62,6 +62,17 @@ object SigStore {
     * crossover shape). */
   val ProbeCollectMax = 8192L
 
+  /** The largest batch [[incrementalNearDup]] serves on the driver;
+    * `probeCollectMax / Bands` bounds it as well. Measured
+    * with [[graft.tools.NearDupSweep]] on the sf0.1 d13 store (local[4],
+    * 4 vCPUs): the driver plan's median wall time was 525–550 ms at 256
+    * docs and 712–722 ms at 512, against 1000–1015 and 869–905 ms for
+    * the shuffle plan; at 768 docs it lost (969–983 vs 883–935 ms) and
+    * at 1024 it lost by 28–40%, its single-threaded banding and
+    * one-task probe read growing with the batch while the shuffle plan
+    * runs them in parallel (docs/PERF.md). */
+  private[graft] val LocalBatchMax = 512
+
   /** a version's data: its sigs and its verify texts */
   private[graft] def chain(dir: String): Versioned.Chain =
     Versioned.Chain(dir, dir, v => Seq(s"$dir/sigs/__ver=$v", s"$dir/docs/__ver=$v"))
@@ -228,12 +239,13 @@ object SigStore {
     *     O(corpus) slice of the text column.
     *
     * Two plans run these stages, and the switch is physical only (same
-    * rows, same schema). A batch of ≤ `probeCollectMax / Bands` docs —
-    * so ≤ `probeCollectMax` distinct probe keys — runs them on the
-    * driver ([[localNearDup]]: two partition-pruned point reads, no
-    * shuffle, no checkpoint). A larger batch, or one whose probed
-    * buckets overflow the local bound, runs them as one shuffle plan
-    * ([[joinedNearDup]]); `probeCollectMax = 0` forces it.
+    * rows, same schema). A batch of ≤ min(`probeCollectMax / Bands`,
+    * [[LocalBatchMax]]) docs — so ≤ `probeCollectMax` distinct probe
+    * keys — runs them on the driver ([[localNearDup]]: two
+    * partition-pruned point reads, no shuffle, no checkpoint). A larger
+    * batch, or one whose probe rows or candidate pairs pass the local
+    * bounds, runs them as one shuffle plan ([[joinedNearDup]]);
+    * `probeCollectMax = 0` forces it.
     */
   /** last serve's probe-read shape ("pruned" for the driver-local
     * plan's point read | "joined" | "empty"), its probe scan's physical
@@ -262,10 +274,11 @@ object SigStore {
     // a doc bands into ≤ Bands keys, so ≤ cap/Bands docs carry ≤ cap
     // distinct keys. ONE bounded collect decides the branch and hands
     // the local plan its batch (a request's LocalRelation folds the
-    // limit: no job)
-    val docCap = cap / Bands
+    // limit: no job); a larger batch has read ≤ LocalBatchMax + 1 rows
+    // of itself before the joined plan serves it
+    val docCap = math.min(cap / Bands, LocalBatchMax)
     val docs = batchDocs.limit(docCap + 1).collect()
-    (if (docs.length <= docCap) localNearDup(spark, storeDir, docs) else None)
+    (if (docs.length <= docCap) localNearDup(spark, storeDir, docs, cap) else None)
       .getOrElse(joinedNearDup(spark, storeDir, batchDocs, cap))
   }
 
@@ -302,13 +315,17 @@ object SigStore {
 
   /** The driver-local plan: stages 1–5 over collected rows. Jobs: the
     * probe read, then the stored-text read — skipped when no pair has a
-    * stored side. Driver memory is bounded by the batch (≤
-    * ProbeCollectMax/Bands docs and their ≤ ProbeCollectMax keys), the
-    * probe read (≤ keys × (MaxBucket + 1) rows; past that `None`, and
-    * the joined plan serves) and the pairs (≤ MaxBucket² per bucket:
-    * the cap drops a fuller bucket before pairing). */
+    * stored side. Every collection the driver holds is bounded in rows,
+    * with `cap` = `probeCollectMax` (8192 by default): the batch
+    * (≤ min(`cap / Bands`, [[LocalBatchMax]]) docs and texts, so ≤ `cap`
+    * keys), the probe rows (≤ min(keys × (MaxBucket + 1), `cap`)), the
+    * candidate pairs (≤ `cap`, plus at most one bucket's
+    * MaxBucket·(MaxBucket − 1)/2 = 2016 before the check stops) and the
+    * paired stored ids and texts (≤ the pairs: a pair has at most one
+    * stored side). Past any of them `None`, and the joined plan
+    * serves. */
   private def localNearDup(spark: SparkSession, storeDir: String,
-                           docs: Array[Row]): Option[DataFrame] = {
+                           docs: Array[Row], cap: Int): Option[DataFrame] = {
     def idOf(r: Row): Option[Long] = if (r.isNullAt(0)) None else Some(r.getLong(0))
     // a null doc_id never pairs but still fills its buckets, as in the
     // joined plan's occupancy window
@@ -319,48 +336,50 @@ object SigStore {
       // empty (or all-too-short) batch: no probes, no pairs, no read
       lastProbeSource = "empty"
       lastTextSource = "empty"
-      Some(spark.createDataFrame(java.util.Collections.emptyList[Row](), PairSchema))
-    } else {
-      val keysByBand = batchRows.map(_._1).distinct.groupMap(_._1)(_._2)
-      val probeMax = keysByBand.valuesIterator.map(_.size.toLong).sum * (MaxBucket + 1)
-      val pruned = sigFrame(spark, storeDir)
-        .filter(probePred(keysByBand, storeGroups(spark, storeDir)))
-        .select(col("doc_id"), col("band"), col("band_key"))
-      // one task, one job, however many files the probed dirs hold
-      val stored = pruned.coalesce(1)
-        .limit(math.min(probeMax + 1, Int.MaxValue.toLong).toInt).collect()
-      if (stored.length > probeMax) None
-      else {
-        lastProbeSource = "pruned"
-        lastPrunedPlanThunk = () => pruned.queryExecution.executedPlan.toString
-        val buckets = (stored.toSeq.map(r => ((r.getInt(1), r.getLong(2)), (idOf(r), false))) ++
-          batchRows).groupMap(_._1)(_._2)
-        val candidates = buckets.valuesIterator.filter(_.size <= MaxBucket).flatMap { ms =>
-          val members = ms.collect { case (Some(id), isNew) => (id, isNew) }
-          for (x <- members; y <- members if x._1 < y._1 && (x._2 || y._2))
-            yield (x._1, y._1, x._2, y._2)
-        }.toSet
-        val storedIds = candidates.flatMap { case (a, b, newA, newB) =>
-          Option.when(!newA)(a) ++ Option.when(!newB)(b)
-        }
-        lastTextSource = "pruned"
-        val storedTexts =
-          if (storedIds.isEmpty) { lastDocsPlanThunk = () => ""; Array.empty[Row] }
-          else docsForIds(spark, storeDir, storedIds.toSeq).collect()
-        val texts = (storedTexts ++ docs).toSeq
-          .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-          .groupMap(_.getLong(0))(_.getString(1))
-        val pairs = for {
-          (a, b, _, _) <- candidates.toSeq
-          ta <- texts.getOrElse(a, Nil)
-          tb <- texts.getOrElse(b, Nil)
-          j = roundJaccard(TextHash.shingleJaccard(ta, tb, Shingle))
-          if j >= Threshold
-        } yield (a, b, j)
-        val rows = pairs.sortBy(p => (p._1, p._2)).map { case (a, b, j) => Row(a, b, j) }
-        Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), PairSchema))
-      }
+      return Some(spark.createDataFrame(java.util.Collections.emptyList[Row](), PairSchema))
     }
+    val keysByBand = batchRows.map(_._1).distinct.groupMap(_._1)(_._2)
+    val probeMax = math.min(
+      keysByBand.valuesIterator.map(_.size.toLong).sum * (MaxBucket + 1), cap.toLong).toInt
+    val pruned = sigFrame(spark, storeDir)
+      .filter(probePred(keysByBand, storeGroups(spark, storeDir)))
+      .select(col("doc_id"), col("band"), col("band_key"))
+    // one task, one job, however many files the probed dirs hold
+    val stored = pruned.coalesce(1).limit(probeMax + 1).collect()
+    if (stored.length > probeMax) return None
+
+    val buckets = (stored.toSeq.map(r => ((r.getInt(1), r.getLong(2)), (idOf(r), false))) ++
+      batchRows).groupMap(_._1)(_._2)
+    val candidates = scala.collection.mutable.HashSet.empty[(Long, Long, Boolean, Boolean)]
+    val capped = buckets.valuesIterator.filter(_.size <= MaxBucket)
+    while (capped.hasNext && candidates.size <= cap) {
+      val members = capped.next().collect { case (Some(id), isNew) => (id, isNew) }
+      for (x <- members; y <- members if x._1 < y._1 && (x._2 || y._2))
+        candidates += ((x._1, y._1, x._2, y._2))
+    }
+    if (candidates.size > cap) return None
+    val storedIds = candidates.flatMap { case (a, b, newA, newB) =>
+      Option.when(!newA)(a) ++ Option.when(!newB)(b)
+    }
+
+    lastProbeSource = "pruned"
+    lastPrunedPlanThunk = () => pruned.queryExecution.executedPlan.toString
+    lastTextSource = "pruned"
+    val storedTexts =
+      if (storedIds.isEmpty) { lastDocsPlanThunk = () => ""; Array.empty[Row] }
+      else docsForIds(spark, storeDir, storedIds.toSeq).collect()
+    val texts = (storedTexts ++ docs).toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .groupMap(_.getLong(0))(_.getString(1))
+    val pairs = for {
+      (a, b, _, _) <- candidates.toSeq
+      ta <- texts.getOrElse(a, Nil)
+      tb <- texts.getOrElse(b, Nil)
+      j = roundJaccard(TextHash.shingleJaccard(ta, tb, Shingle))
+      if j >= Threshold
+    } yield (a, b, j)
+    val rows = pairs.sortBy(p => (p._1, p._2)).map { case (a, b, j) => Row(a, b, j) }
+    Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), PairSchema))
   }
 
   /** The shuffle plan for batches past the local bound: the batch is

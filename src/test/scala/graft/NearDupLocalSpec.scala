@@ -120,4 +120,29 @@ class NearDupLocalSpec extends AnyFunSuite {
       assert(none.isEmpty && src == "empty" && df.schema == SigStore.PairSchema)
     } finally graft.sources.TempStores.delete(dir)
   }
+
+  test("past a local bound the joined plan serves: batch docs, candidate pairs") {
+    val dir = Files.createTempDirectory("neardup-bounds").toString
+    try {
+      val rnd = new scala.util.Random(5)
+      def words(n: Int) = (1 to n).map(_ => rnd.alphanumeric.take(6).mkString).mkString(" ")
+      SigStore.write(spark, (0 until 20).map(i => (i.toLong, words(20))).toDF("doc_id", "text"), dir)
+      // ten copies of one text: 45 batch-internal pairs, no stored row
+      val same = words(20)
+      val tens = (0 until 10).map(i => (100L + i, same)).toDF("doc_id", "text")
+      val forced = serve(dir, tens, 0L)._1
+      assert(forced.size == 45)
+      // probeCollectMax 40: 10 docs fit (40 / Bands), 45 pairs do not
+      val (over, overSrc, _) = serve(dir, tens, 40L)
+      assert(overSrc == "joined" && over == forced)
+      val (within, withinSrc, _) = serve(dir, tens, 200L)
+      assert(withinSrc == "pruned" && within == forced)
+      // one doc past LocalBatchMax
+      val big = (0 to SigStore.LocalBatchMax).map(i => (1000L + i, words(8))).toDF("doc_id", "text")
+      serve(dir, big, SigStore.ProbeCollectMax)
+      assert(SigStore.lastProbeSource == "joined")
+      serve(dir, big.limit(SigStore.LocalBatchMax), SigStore.ProbeCollectMax)
+      assert(SigStore.lastProbeSource == "pruned")
+    } finally graft.sources.TempStores.delete(dir)
+  }
 }

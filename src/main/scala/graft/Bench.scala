@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints one JSON line. Each query runs once untimed (JVM +
   * whole-stage-codegen warmup) and once timed — the steady-state
@@ -12,27 +10,21 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to every core on the box — the driver benches at local[32]
     // and may not set SPARK_GRAFT_CPUS.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = LocalSpark.envCpus
+    val spark = LocalSpark.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names = SparkEntry.queries.keys.toSeq.sorted
-    def timedPass(): Seq[(String, Double)] = names.map { name =>
-      val t0 = System.nanoTime()
-      // a failing query must NOT masquerade as a fast one — report -1
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+    // every timed query is also one trace span: the timer runs inside
+    // the span, so the record's wall_ms covers the recorded seconds
+    val trace = graft.obs.Trace(spark)
+    def timedPass(): Seq[(String, (Double, graft.obs.Trace.Record))] = names.map { name =>
+      name -> trace.span {
+        val t0 = System.nanoTime()
+        // a failing query must NOT masquerade as a fast one — report -1
+        val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+                 catch { case _: Throwable => false }
+        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      }
     }
     // OFFLINE ARTIFACT BUILDS, timed separately so cold cost is
     // attributable: these are the session-lazy models/stores/graphs
@@ -63,17 +55,21 @@ object Bench {
     build("sig_store") { graft.sources.SigStore.storeFor(spark, sfDir) }
     // pass 1 doubles as warmup (JIT, codegen cache, file index) — its
     // total is reported separately as the COLD number
-    val cold = timedPass()
+    val cold = timedPass().map { case (n, (t, _)) => n -> t }
     // per-query MIN over two further timed passes: single-run totals
     // drift ±25% with machine noise; the minimum is the steady-state
     // cost. Methodology is self-described in the JSON so rounds stay
     // comparable: value = sum over queries of min(per-query seconds
     // across `passes` warm passes); cold_total = one cold pass.
     val passes = Seq(timedPass(), timedPass())
+    // each query's trace is the one of the pass its min came from
+    val minPass = names.map { n => n -> passes.map(_.toMap.apply(n)).minBy(_._1) }
     val results = names.map { n =>
-      val ts = passes.map(_.toMap.apply(n))
+      val ts = passes.map(_.toMap.apply(n)._1)
       n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
     }
+    val traceQs = minPass.map { case (k, (_, r)) => "\"" + k + "\":" + r.json }
+      .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val coldQs = cold.map { case (k, v) => "\"" + k + "\":" + v }
@@ -87,8 +83,12 @@ object Bench {
     val sfJson = sfDir.flatMap { // keep the line valid JSON for any path
       case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"passes":2,"aggregation":"per-query min over warm passes","build_total":$buildTotal,"builds":$buildQs,"cold_total":$coldTotal,"cold_queries":$coldQs,"queries":$qs,"sf":"$sfJson"}"""
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"passes":2,"aggregation":"per-query min over warm passes","build_total":$buildTotal,"builds":$buildQs,"cold_total":$coldTotal,"cold_queries":$coldQs,"queries":$qs,"sf":"$sfJson","cpus":$cpus,"shuffle_partitions":$shufflePartitions}"""
     println(line)
+    // the files also carry each query's trace (its min pass's layer
+    // split, graft.obs.Trace); stdout leaves them out to stay short
+    val fileLine = line.dropRight(1) + s""","traces":$traceQs}"""
     // the driver's bench artifact keeps only a tail of stdout, which
     // truncates the ~6 KB per-query map mid-JSON — persist the full
     // line in-repo so every timing survives the round.
@@ -98,10 +98,10 @@ object Bench {
     try {
       val out = java.nio.file.Paths.get("docs/bench_latest.json")
       java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8")): Unit
+      java.nio.file.Files.write(out, (fileLine + "\n").getBytes("UTF-8")): Unit
       if (nFailed == 0) {
         java.nio.file.Files.write(java.nio.file.Paths.get("docs/bench_green.json"),
-          (line + "\n").getBytes("UTF-8")): Unit
+          (fileLine + "\n").getBytes("UTF-8")): Unit
       }
     } catch { case _: Throwable => () } // best-effort: never fail the bench
     // LAST line: a compact totals-only record, short enough (~300 B)

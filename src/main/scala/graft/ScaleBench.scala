@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-step benchmark: times the headline serve paths one order of
@@ -35,22 +35,14 @@ object ScaleBench {
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_scale_$copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = LocalSpark.envCpus
     // at the 1000× decade the batched-graph seed pool is ~2.4G rows;
     // cpus-many shuffle partitions puts ~75M aggregate keys in one
     // task's hash state — size the shuffle so per-task state stays
     // executor-memory-shaped (AQE still coalesces the small stages)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
+    val spark = LocalSpark.builder(cpus)
       .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
       // multi-decade serve passes each write tens of GB of shuffle;
       // without a periodic driver GC the ContextCleaner only reclaims
       // those files when the shuffle objects happen to be collected,
@@ -67,7 +59,6 @@ object ScaleBench {
       // 8 MB (sub-humongous at any region size ≥ 16 MB)
       .config("spark.shuffle.spill.numElementsForceSpillThreshold", "4194304")
       .config("spark.buffer.pageSize", "8m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -201,56 +192,29 @@ object ScaleBench {
         graft.sources.CodeStore.searchBatch(spark,
           graft.sources.CodeStore.storeFor(spark, dir), dir,
           SparkEntry.JoinQueryFilter * 10)))
-    // optional per-serve stage attribution (SPARK_GRAFT_STAGE_METRICS=1):
-    // per-stage executor time + shuffle bytes to stderr — the stable
-    // comparison on this contended box is shuffle bytes and stage
-    // structure, not wall clock (PERF.md r15 variance attribution)
-    val stageMetrics = sys.env.get("SPARK_GRAFT_STAGE_METRICS").contains("1")
-    final class StageRows extends org.apache.spark.scheduler.SparkListener {
-      val rows = java.util.Collections.synchronizedList(
-        new java.util.ArrayList[(Int, String, Long, Long, Long, Long)]())
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) rows.add((sc.stageInfo.stageId,
-          sc.stageInfo.name.takeWhile(_ != '\n').take(80),
-          m.executorRunTime,
-          m.shuffleReadMetrics.totalBytesRead,
-          m.shuffleWriteMetrics.bytesWritten,
-          m.diskBytesSpilled + m.memoryBytesSpilled)): Unit
-      }
-    }
-    def pass(): Seq[(String, Double)] = names.map { n =>
+    // every serve is one trace span (graft.obs.Trace): its stage totals
+    // (executor time, input/shuffle/spill bytes) go into the record —
+    // the stable comparison on this contended box is shuffle bytes and
+    // stage structure, not wall clock (PERF.md r15 variance attribution)
+    val trace = graft.obs.Trace(spark)
+    def pass(): Seq[(String, (Double, Option[graft.obs.Trace.Record]))] = names.map { n =>
       System.err.println(s"[scale] serve $n ...")
-      val lst = if (stageMetrics) Some(new StageRows) else None
-      lst.foreach(spark.sparkContext.addSparkListener)
-      val ok = try {
-        Some(time(scaledServes.get(n)
+      val rec = try {
+        Some(trace.span(scaledServes.get(n)
           .map(_.apply())
           .getOrElse(SparkEntry.queries(n)(spark, dir))
-          .count()))
+          .count())._2)
       } catch { case _: Throwable => None }
-      lst.foreach { l =>
-        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-        spark.sparkContext.removeSparkListener(l)
-        import scala.jdk.CollectionConverters._
-        val rs = l.rows.asScala.toSeq
-        val tot = (rs.map(_._3).sum, rs.map(_._4).sum, rs.map(_._5).sum, rs.map(_._6).sum)
-        System.err.println(f"[scale] $n stages=${rs.size} exec=${tot._1 / 1000.0}%.1fs " +
-          f"shufR=${tot._2 / 1e9}%.2fGB shufW=${tot._3 / 1e9}%.2fGB spill=${tot._4 / 1e9}%.2fGB")
-        rs.sortBy(-_._3).take(10).foreach { case (id, nm, rt, sr, sw, sp) =>
-          System.err.println(f"[scale]   stage $id%-5d exec=${rt / 1000.0}%8.1fs " +
-            f"shufR=${sr / 1e9}%7.2fGB shufW=${sw / 1e9}%7.2fGB spill=${sp / 1e9}%7.2fGB  $nm")
-        }
-      }
-      System.err.println(f"[scale] serve $n done ${ok.map(_._2).getOrElse(-1.0)}%.1f s")
+      val secs = rec.fold(-1.0)(_.wallMs / 1e3)
+      System.err.println(f"[scale] serve $n done $secs%.1f s ${rec.map(_.json).getOrElse("")}")
       // release the pass's checkpoint/shuffle references eagerly so
       // the cleaner can drop their disk files before the next pass
       System.gc()
-      n -> ok.map(_._2).getOrElse(-1.0)
+      n -> (secs, rec)
     }
     pass() // warmup
-    val warm = pass()
+    val warmTraced = pass()
+    val warm = warmTraced.map { case (n, (t, _)) => n -> t }
 
     // per-query amortized cost for the batched serves: the query set
     // is the vec_id % JoinQueryFilter slice, so it GROWS with the
@@ -270,8 +234,9 @@ object ScaleBench {
     val aj = warm.collect { case (k, v) if batchQ(k) && v >= 0 =>
       val nq = if (k == "v38_hamming_batch_4k") nQueries4k else nQueries
       s""""$k":${f"${v * 1000.0 / math.max(nq, 1)}%.3f"}""" }.mkString(",")
+    val tj = warmTraced.collect { case (k, (_, Some(r))) => s""""$k":${r.json}""" }.mkString(",")
     val total = warm.map(_._2).filter(_ >= 0).sum
-    println(s"""{"metric":"scale_total","value":${f"$total%.3f"},"unit":"sec","sf_copies":$copies,"rows":$rows,"batch_queries":$nQueries,"scaled_rpb":$scaledRpb,"builds":{$bj},"queries":{$qj},"batch_ms_per_query":{$aj}}""")
+    println(s"""{"metric":"scale_total","value":${f"$total%.3f"},"unit":"sec","sf_copies":$copies,"rows":$rows,"batch_queries":$nQueries,"scaled_rpb":$scaledRpb,"builds":{$bj},"queries":{$qj},"batch_ms_per_query":{$aj},"traces":{$tj}}""")
     spark.stop()
   }
 }

@@ -53,13 +53,19 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
   private def lookup(k: (Option[SparkSession], K), build: => V): V =
     m.get(k) match {
       case Some(e) =>
+        SessionCache.hits.incrementAndGet()
         e.age = SessionCache.clock.incrementAndGet()
         e.value
       case None =>
-        m.filterInPlace((k, _) => k._1.forall(!_.sparkContext.isStopped))
+        SessionCache.misses.incrementAndGet()
+        m.filterInPlace { (k, _) =>
+          val live = k._1.forall(!_.sparkContext.isStopped)
+          if (!live) SessionCache.evictions.incrementAndGet()
+          live
+        }
         if (m.size >= maxEntries)
           m.toSeq.sortBy(_._2.age).dropRight(maxEntries / 2).foreach {
-            case (k, _) => m.remove(k): Unit
+            case (k, _) => if (m.remove(k).isDefined) SessionCache.evictions.incrementAndGet()
           }
         m.getOrElseUpdate(k, new Entry(build, SessionCache.clock.incrementAndGet())).value
     }
@@ -70,6 +76,7 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
   def invalidate(pred: K => Boolean): Unit =
     m.toSeq.foreach { case (k, e) =>
       if (pred(k._2) && m.remove(k).isDefined) {
+        SessionCache.evictions.incrementAndGet()
         // best-effort: invalidation must not fail the caller
         try onEvict(e.value) catch { case _: Throwable => () }
       }
@@ -85,6 +92,15 @@ object SessionCache {
   private final class Entry[V](val value: V, @volatile var age: Long)
 
   private val clock = new AtomicLong()
+  // process-wide, over every cache: lookups that found their entry,
+  // lookups that built it, and entries removed for any reason
+  // (invalidation, overflow, stopped session) — read by graft.obs.Trace
+  private val hits = new AtomicLong()
+  private val misses = new AtomicLong()
+  private val evictions = new AtomicLong()
+
+  /** (hits, misses, evictions) so far, summed over every cache */
+  def memoCounts: (Long, Long, Long) = (hits.get(), misses.get(), evictions.get())
   private val registry = new java.util.concurrent.CopyOnWriteArrayList[SessionCache[_, _]]
 
   /** The invalidation rule: an entry derived from `dir` is stale when

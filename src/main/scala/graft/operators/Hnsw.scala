@@ -193,7 +193,7 @@ object Hnsw {
       // Identical rows reach the same merge (duplicate dsts carry
       // bit-identical sims), so the walk is unchanged; only the
       // redundant reads — each one a full plan+schedule round, the
-      // single-query floor V32Probe measured — disappear.
+      // single-query floor docs/PERF.md measured — disappear.
       val fetched = scala.collection.mutable.Map.empty[Long, Array[(Long, Double)]]
       var converged = false
       var step = 0

@@ -131,7 +131,7 @@ object HnswStore {
   /** The upper layers that fit [[LayerCacheBudgetBytes]], collected
     * ONCE per opened store (top layer first — the exponential thinning
     * means the cheapest layers admit first) as driver-side maps
-    * layer → src → (dst, dst_emb). V32Probe attributed the ~1 s
+    * layer → src → (dst, dst_emb). A per-job listener attributed the ~1 s
     * single-query floor to ~21 dependent point-read JOBS × driver
     * scheduling overhead; the descent over cached layers runs with
     * zero jobs, leaving only the layer-0 beam hops distributed. */

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.FakeEmbedder
@@ -14,17 +14,8 @@ import graft.sources.{Ingest, IvfStore}
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = LocalSpark.builder(8)
       .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val query = "fast vector search over spark tables"

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 
 /** Dev tool: dump formatted plans for the headline queries so shuffle
   * count / broadcast usage / pushdown can be audited (SURVEY.md §4).
@@ -13,17 +13,7 @@ object ExplainAudit {
       else Seq("v1_knn_cosine", "v4_similarity_join", "q1_pricing_summary",
         "q3_cust_order_revenue", "q5_region_nation_rollup", "d2_minhash_lsh",
         "v8_semantic_search")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

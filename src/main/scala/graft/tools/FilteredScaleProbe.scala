@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SrpBanded
 import graft.sources.{EdgeStore, FilteredServe, SrpStore, Versioned}
@@ -36,40 +35,6 @@ object FilteredScaleProbe {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** per-run stage-metric aggregation — the attribution the 10000×
-    * batch-variance question needs (executor time vs IO vs spill in
-    * the JSON, not guessed after the fact) */
-  private final class StageAgg extends org.apache.spark.scheduler.SparkListener {
-    val runTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val inputB = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufReadB = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufWriteB = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillB = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        runTimeMs.addAndGet(m.executorRunTime): Unit
-        inputB.addAndGet(m.inputMetrics.bytesRead): Unit
-        shufReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead): Unit
-        shufWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-        spillB.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled): Unit
-      }
-    }
-  }
-
-  /** run `f` under a fresh [[StageAgg]], draining the async listener
-    * bus before reading the aggregates */
-  private def withStageMetrics[A](spark: SparkSession)(f: => A)
-      : (A, Double, StageAgg) = {
-    val agg = new StageAgg
-    spark.sparkContext.addSparkListener(agg)
-    val (a, s) = time(f)
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    spark.sparkContext.removeSparkListener(agg)
-    (a, s, agg)
-  }
-
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
@@ -80,16 +45,7 @@ object FilteredScaleProbe {
     // 4th decade (20M rows) on the same box
     val codeOnly = sys.env.get("SPARK_GRAFT_FILTERED_CODE_ONLY").contains("1")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_filtered_scale_$copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark.builder(graft.LocalSpark.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def complete(p: String): Boolean = new java.io.File(s"$p/_SUCCESS").exists()
@@ -248,8 +204,12 @@ object FilteredScaleProbe {
     // the BATCHED filtered serve (v41) at the decade: ~500 queries in
     // one set-based plan; recall against the exact filtered per-query
     // top-10, both sides computed batched (one TopKPairs job each)
+    // each timed run is one trace span: executor time vs IO vs spill
+    // in the JSON, the attribution the 10000× batch-variance question
+    // needs, not guessed after the fact
+    val trace = graft.obs.Trace(spark)
     val batchMod = math.max(40L, n / 500L)
-    val (batchGot, batchS, batchM) = withStageMetrics(spark) {
+    val (batchGot, batchM) = trace.span {
       FilteredServe.searchFilteredBatch(spark, dir, srpDir,
         batchMod.toInt, broadPred, k = 10).collect()
     }
@@ -257,7 +217,7 @@ object FilteredScaleProbe {
     // variance, separating box noise from plan cost (the r14 10000×
     // row spread 115–501 ms/q across three runs — attribution needs
     // both the per-stage IO and a same-process repeat)
-    val (_, batchS2, batchM2) = withStageMetrics(spark) {
+    val (_, batchM2) = trace.span {
       FilteredServe.searchFilteredBatch(spark, dir, srpDir,
         batchMod.toInt, broadPred, k = 10).collect()
     }
@@ -346,17 +306,12 @@ object FilteredScaleProbe {
       s""""code_recall_w4":${f"$codeRecallW4%.3f"},""" +
       s""""walk_ms_per_q":${f"$walkMsQ%.1f"},"walk_path":"$walkPath",""" +
       s""""walk_recall_at_10":${f"$walkRecall%.3f"},"unfiltered_recall_at_10":${f"$meanUnfiltered%.3f"},""" +
-      s""""batch_queries":$nBatchQ,"batch_ms_per_q":${f"${batchS / nBatchQ * 1000}%.1f"},""" +
-      s""""batch_ms_per_q_rerun":${f"${batchS2 / nBatchQ * 1000}%.1f"},""" +
+      s""""batch_queries":$nBatchQ,"batch_ms_per_q":${f"${batchM.wallMs.toDouble / nBatchQ}%.1f"},""" +
+      s""""batch_ms_per_q_rerun":${f"${batchM2.wallMs.toDouble / nBatchQ}%.1f"},""" +
       s""""batch_recall_at_10":${f"$batchRecall%.3f"},"batch_w_policy":$batchW,""" +
       s""""batch_capped_ms_per_q":${f"$cappedMsQ%.1f"},""" +
       s""""batch_capped_recall_at_10":${f"$cappedRecall%.3f"},""" +
-      s""""batch_stage_metrics":{"exec_run_s":${f"${batchM.runTimeMs.get / 1000.0}%.1f"},""" +
-      s""""input_mb":${batchM.inputB.get / 1048576L},"shuffle_read_mb":${batchM.shufReadB.get / 1048576L},""" +
-      s""""shuffle_write_mb":${batchM.shufWriteB.get / 1048576L},"spill_mb":${batchM.spillB.get / 1048576L}},""" +
-      s""""batch_stage_metrics_rerun":{"exec_run_s":${f"${batchM2.runTimeMs.get / 1000.0}%.1f"},""" +
-      s""""input_mb":${batchM2.inputB.get / 1048576L},"shuffle_read_mb":${batchM2.shufReadB.get / 1048576L},""" +
-      s""""shuffle_write_mb":${batchM2.shufWriteB.get / 1048576L},"spill_mb":${batchM2.spillB.get / 1048576L}},""" +
+      s""""batch_trace":${batchM.json},"batch_trace_rerun":${batchM2.json},""" +
       s""""mixed_batch_queries":$nMixedQ,"mixed_batch_path":"$mixedPath",""" +
       s""""mixed_batch_ms_per_q":${f"${mixedS / nMixedQ * 1000}%.1f"},""" +
       s""""range_batch_queries":$nRangeQ,"range_batch_path":"$rangePath",""" +

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 
 /** Scale-decade evidence for the batched IVF-PQ serve (v29) with the
   * index parameter a production deployment would actually turn.
@@ -34,19 +34,7 @@ object IvfScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_1000")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val rows = graft.Tables.embeddings(spark, dir).count()

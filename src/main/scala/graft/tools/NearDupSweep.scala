@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Row, SparkSession}
+import graft.LocalSpark
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.sources.SigStore
 
@@ -29,14 +30,8 @@ object NearDupSweep {
     val sizes = sys.env.getOrElse("SPARK_GRAFT_SWEEP_SIZES", "1,16,64,256,512,1024")
       .split(",").map(_.trim.toInt).toSeq
     val passes = sys.env.getOrElse("SPARK_GRAFT_SWEEP_PASSES", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = LocalSpark.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]

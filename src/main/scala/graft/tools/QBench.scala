@@ -1,13 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
+import graft.obs.Trace
 
 /** Ad-hoc per-query timer for perf A/B work: runs the named
   * SparkEntry queries (args, or SPARK_GRAFT_QBENCH comma list) at
   * SPARK_GRAFT_SF_DIR, one untimed warmup pass then `passes` timed
   * passes, printing per-query min — the same steady-state
   * methodology as graft.Bench, scoped to a handful of queries so an
-  * isolated regression check doesn't need the full 114-query run. */
+  * isolated regression check doesn't need the full 114-query run.
+  * Each min is printed with the trace of the pass it came from
+  * (graft.obs.Trace: jobs, job time, driver gap, planning, codegen,
+  * stage IO, memo hits). */
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -18,28 +22,13 @@ object QBench {
     val bad = names.filterNot(graft.SparkEntry.queries.contains)
     require(bad.isEmpty, s"unknown queries: ${bad.mkString(",")}")
     val passes = sys.env.getOrElse("SPARK_GRAFT_QBENCH_PASSES", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def one(n: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val trace = Trace(spark)
+    def one(n: String): Trace.Record = trace.span(graft.SparkEntry.queries(n)(spark, sfDir).count())._2
     names.foreach(one) // warmup: codegen, lazy builds, file index
-    val timed = names.map(n => n -> (1 to passes).map(_ => one(n)).min)
-    timed.foreach { case (n, t) => println(f"$n%-32s ${t}%.3f s") }
+    val timed = names.map(n => n -> (1 to passes).map(_ => one(n)).minBy(_.wallMs))
+    timed.foreach { case (n, r) => println(f"$n%-32s ${r.wallMs / 1e3}%.3f s  ${r.json}") }
     spark.stop()
   }
 }

@@ -95,9 +95,11 @@ final class RequestQueue(val maxInFlight: Int, val maxQueued: Int) {
     *    surfaces as a `SparkException`) — so every callable clears
     *    stale interrupt status on entry and on exit; the next request
     *    on the recycled thread starts clean;
-    *  - a request still QUEUED at its deadline never starts, and its
-    *    permit is released here (its callable will never run the
-    *    releasing `finally`).
+    *  - its permit is released here: a request still QUEUED at its
+    *    deadline never starts, and a running one may still be in
+    *    driver work no interrupt reaches (planning before its first
+    *    job). Such a body keeps only its pool thread until it exits;
+    *    a job it submits after the deadline is cancelled as it exits.
     *
     * The returned future reports cancellation as
     * `CancellationException` from `get()`. Capacity accounting is
@@ -109,12 +111,10 @@ final class RequestQueue(val maxInFlight: Int, val maxQueued: Int) {
     if (!slots.tryAcquire()) { rejectedCount.incrementAndGet(); None }
     else {
       val jobGroup = s"graft-req-${reqSeq.incrementAndGet()}"
-      val started = new AtomicBoolean(false)
       // exactly-once permit release however the cancel/run race lands:
-      // the watchdog can win FutureTask's state CAS in the instant
-      // between run()'s state check and the callable's first statement,
-      // in which case BOTH the watchdog (started still false) and the
-      // callable's finally would release — the CAS collapses them
+      // the watchdog releases at the deadline, and the callable's
+      // finally (or its deadline check on entry) releases too — the CAS
+      // collapses them
       val released = new AtomicBoolean(false)
       def releaseOnce(): Unit = if (released.compareAndSet(false, true)) slots.release()
       // set by the watchdog BEFORE it cancels: lets a callable that
@@ -141,12 +141,18 @@ final class RequestQueue(val maxInFlight: Int, val maxQueued: Int) {
             throw new InterruptedException(
               "cancelled at deadline before the request body started")
           }
-          started.set(true)
           val sc = spark.sparkContext
           sc.setJobGroup(jobGroup, s"graft gateway request (deadline ${timeoutMs}ms)",
             interruptOnCancel = true)
           try f
           finally {
+            // a deadline that fired before f's first job found nothing to
+            // cancel; a job f submitted after it (its wait then threw on
+            // the pending interrupt) runs on unless the group is cancelled
+            // again here, before the group is cleared
+            if (deadlineFired.get())
+              try sc.cancelJobGroup(jobGroup)
+              catch { case _: IllegalStateException => () /* context stopped */ }
             sc.clearJobGroup()
             releaseOnce()
             // our OWN deadline interrupt, when f exited via a
@@ -183,6 +189,13 @@ final class RequestQueue(val maxInFlight: Int, val maxQueued: Int) {
               // counted; a cancel that loses to completion takes the
               // count back
               timedOutCount.incrementAndGet()
+              // the request is dead at its deadline, so its admission
+              // capacity comes back now — also before cancel() wakes the
+              // waiters, so a caller woken by it can submit again —
+              // whether it is still queued (its callable never runs) or
+              // its body has not exited yet. A request that completes in
+              // this instant has released already or finds it done.
+              releaseOnce()
               val cancelled = task.cancel(true)
               if (!cancelled) timedOutCount.decrementAndGet()
               // kill the request's distributed work regardless of which
@@ -190,13 +203,6 @@ final class RequestQueue(val maxInFlight: Int, val maxQueued: Int) {
               // no-op, leaving it running is a leaked cluster
               try spark.sparkContext.cancelJobGroup(jobGroup)
               catch { case _: IllegalStateException => () /* context stopped */ }
-              if (cancelled) {
-                // cancelled BEFORE its callable ever ran (still queued):
-                // the callable's releasing `finally` will never execute.
-                // If it was (or is about to be) running, the callable's
-                // own finally releases — releaseOnce arbitrates the race.
-                if (!started.get()) releaseOnce()
-              }
             }
           }, timeoutMs, TimeUnit.MILLISECONDS): Unit
         } catch {

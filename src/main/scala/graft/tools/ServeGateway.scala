@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import graft.functions.{Embedder, FakeEmbedder}
 
 /** The serving-gateway loop in miniature (docs/SERVING.md) — what the
@@ -15,21 +15,16 @@ import graft.functions.{Embedder, FakeEmbedder}
   *
   * Prints per-request latency per family: request 1 pays plan/codegen
   * warmup, request 2+ is the steady-state an HTTP caller would see.
+  * Each request is one [[graft.obs.Trace]] span, printed as its record
+  * (jobs, job time, driver gap, planning, codegen, stage IO, memo hits)
+  * under the latency line.
   * Usage: runMain graft.tools.ServeGateway [sfDir]
   */
 object ServeGateway {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = LocalSpark.builder(8)
       .appName("graft-serve-gateway")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
       // a real gateway OVERLAPS requests: FAIR scheduling shares the
       // executor slots across concurrently-submitted request jobs
       // (FIFO would head-of-line-block every in-flight request behind
@@ -37,10 +32,10 @@ object ServeGateway {
       // property below — no allocation file needed for equal-weight
       // request classes.
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val embedder: Embedder = FakeEmbedder // the model seam — swap here
+    val trace = graft.obs.Trace(spark)
 
     // ---- process start: build-or-open the persisted stores once ----
     // (a real deployment wrote these at ingest; storeFor memoizes)
@@ -58,9 +53,7 @@ object ServeGateway {
              (f: String => Array[org.apache.spark.sql.Row]): Unit = {
       println(s"== $tag")
       reqs.foreach { text =>
-        val t0 = System.nanoTime()
-        val rows = f(text)
-        val ms = (System.nanoTime() - t0) / 1e6
+        val (rows, rec) = trace.span(f(text))
         val top = rows.headOption.map(_.mkString("(", ", ", ")")).getOrElse("-")
         // PER-REQUEST coverage (r16): the serve just ran on THIS
         // thread, so the thread-local Coverage is this request's own —
@@ -71,7 +64,8 @@ object ServeGateway {
           val c = graft.sources.FilteredServe.lastCoverageHere
           f"  cov=${c.tier}/${c.matching}/${c.w}(${c.ratio}%.3f)"
         } else ""
-        println(f"  $ms%8.1f ms  k=${rows.length}%-3d top=$top$covStr  q=\"${text.take(40)}\"")
+        println(f"  ${rec.wallMs}%6d ms  k=${rows.length}%-3d top=$top$covStr  q=\"${text.take(40)}\"")
+        println(s"    trace ${rec.json}")
       }
     }
 
@@ -248,15 +242,18 @@ object ServeGateway {
       val queue = new RequestQueue(maxInFlight = 16, maxQueued = 32)
       val lat = java.util.Collections.synchronizedList(
         new java.util.ArrayList[(String, Double)]())
+      val records = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
       val t0 = System.nanoTime()
       val futures = (0 until nReq).flatMap { i =>
         val (tag, f) = classes(i % classes.size)
-        queue.submit {
+        // the deadline submit runs each request under its own job group,
+        // which keys the request's trace record
+        queue.submit(spark, timeoutMs = 120000) {
           spark.sparkContext.setLocalProperty("spark.scheduler.pool",
             s"req-${i % 16}")
-          val r0 = System.nanoTime()
-          f(i): Unit
-          lat.add((tag, (System.nanoTime() - r0) / 1e6)): Unit
+          val (_, rec) = trace.span(f(i))
+          lat.add((tag, rec.wallMs.toDouble)): Unit
+          records.put(i, s"$tag ${rec.json}"): Unit
         }
       }
       futures.foreach(_.get())
@@ -271,6 +268,9 @@ object ServeGateway {
         println(f"  $tag%-6s n=${ls.size}%-3d p50=${percentile(ls, 0.5)}%7.1f ms  " +
           f"p99=${percentile(ls, 0.99)}%7.1f ms")
       }
+      // per-request records; codegen and memo counts are process-wide,
+      // so under overlap they are shared by the requests in flight
+      records.forEach((i, r) => println(s"    trace req $i $r"))
       // past-capacity arrivals shed: a burst beyond 16+32 must reject,
       // not queue — the admission contract GatewayQueueSpec pins
       val gate = new java.util.concurrent.CountDownLatch(1)

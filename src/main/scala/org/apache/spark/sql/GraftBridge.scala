@@ -35,9 +35,16 @@ object GraftBridge {
       case _ => ()
     }
 
-  /** Drain the listener bus (`private[spark]`) — a probe reading its
-    * own SparkListener aggregates right after an action must wait for
-    * the async stage-completed events to be delivered, or the metrics
+  /** (start, end) epoch ms of each Catalyst phase (analysis,
+    * optimization, planning) of the query an execution-end event
+    * closes — the event's `qe` is `private[sql]`. Empty when the event
+    * carries no query execution. */
+  def planPhases(e: execution.ui.SparkListenerSQLExecutionEnd): Seq[(Long, Long)] =
+    Option(e.qe).toSeq.flatMap(_.tracker.phases.values.map(p => (p.startTimeMs, p.endTimeMs)))
+
+  /** Drain the listener bus (`private[spark]`) — a trace reading its
+    * SparkListener aggregates right after an action must wait for the
+    * async stage-completed events to be delivered, or the metrics
     * undercount nondeterministically. */
   def drainListenerBus(spark: SparkSession, timeoutMs: Long = 30000L): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)

@@ -74,6 +74,45 @@ class GatewayQueueSpec extends AnyFunSuite {
     q.shutdown()
   }
 
+  test("deadline: a job submitted after the deadline already fired is cancelled, and its permit recycles") {
+    val spark = SparkTestSession.spark
+    val sc = spark.sparkContext
+    val q = new graft.tools.RequestQueue(maxInFlight = 1, maxQueued = 0)
+    val group = new java.util.concurrent.atomic.AtomicReference[String]()
+    // the body ignores its interrupt: it runs past its deadline (whose
+    // group cancel finds no job yet), then submits a job that wedges
+    // every task slot — the pending interrupt makes the job's wait
+    // throw, but the job itself is already submitted
+    val fut = q.submit(spark, timeoutMs = 300) {
+      group.set(sc.getLocalProperty("spark.jobGroup.id"))
+      val until = System.nanoTime() + 1500L * 1000000L
+      while (System.nanoTime() < until) Thread.onSpinWait()
+      spark.range(0, 4, 1, 4).rdd.mapPartitions { it => Thread.sleep(120000); it }.count()
+    }
+    assert(fut.isDefined, "request admitted")
+    intercept[java.util.concurrent.CancellationException] { fut.get.get() }
+    try {
+      // the job shows up in the request's group, and no job of the
+      // group is still active within 20 s
+      val deadlineAt = System.currentTimeMillis() + 20000
+      def jobs = Option(group.get).toSeq.flatMap(g => sc.statusTracker.getJobIdsForGroup(g).toSeq)
+      def live = jobs.filter(sc.statusTracker.getActiveJobIds().contains)
+      while ((jobs.isEmpty || live.nonEmpty) && System.currentTimeMillis() < deadlineAt)
+        Thread.sleep(100)
+      assert(jobs.nonEmpty, "the request never submitted its job")
+      assert(live.isEmpty, s"a job submitted after its request's deadline survived: ${live.mkString(",")}")
+      // permit recycled: the gateway admits again
+      val admitBy = System.currentTimeMillis() + 10000
+      var again = q.submit(spark, timeoutMs = 30000) { 42 }
+      while (again.isEmpty && System.currentTimeMillis() < admitBy) {
+        Thread.sleep(10)
+        again = q.submit(spark, timeoutMs = 30000) { 42 }
+      }
+      assert(again.isDefined && again.get.get() == 42, "the cancelled request's permit leaked")
+    } finally Option(group.get).foreach(sc.cancelJobGroup)
+    q.shutdown()
+  }
+
   test("deadline: a request still queued when its deadline fires never runs and leaks no permit") {
     val spark = SparkTestSession.spark
     val q = new graft.tools.RequestQueue(maxInFlight = 1, maxQueued = 1)

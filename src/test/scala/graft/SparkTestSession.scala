@@ -4,17 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed top-k partial aggregates (TopKPairs) must stay on the hash
-      // path: the 128-key default fallback re-SORTS (and at scale, spills)
-      // the candidate stream the aggregate exists to avoid sorting
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSpark.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

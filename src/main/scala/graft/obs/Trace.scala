@@ -24,6 +24,8 @@ import graft.SessionCache
   *    of the span ran;
   *  - `plan_ms`: Catalyst analysis, optimization and planning of the
   *    span's SQL executions, clipped to the span (part of the gap);
+  *  - `files_read`: files the span's executed file scans opened (their
+  *    `numFiles` metric, read at the same execution end as `plan_ms`);
   *  - `exec_run_ms`, `input_bytes`, `shuffle_read_bytes`,
   *    `shuffle_write_bytes`, `spill_bytes`: task metrics of the span's
   *    completed stages;
@@ -70,7 +72,10 @@ final class Trace private (spark: SparkSession) extends SparkListener {
       s.jobGroupId.flatMap(open.get).foreach(byExec(s.executionId) = _)
     }
     case s: SparkListenerSQLExecutionEnd => synchronized {
-      byExec.remove(s.executionId).foreach(_.phases ++= GraftBridge.planPhases(s))
+      byExec.remove(s.executionId).foreach { a =>
+        a.phases ++= GraftBridge.planPhases(s)
+        a.filesRead += GraftBridge.filesRead(s)
+      }
     }
     case _ => ()
   }
@@ -127,7 +132,8 @@ object Trace {
   final case class Record(wallMs: Long, jobs: Int, jobMs: Long, planMs: Long,
                           codegenCompiles: Long, execRunMs: Long, inputBytes: Long,
                           shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-                          memoHits: Long, memoMisses: Long, memoEvictions: Long) {
+                          memoHits: Long, memoMisses: Long, memoEvictions: Long,
+                          filesRead: Long) {
     def driverGapMs: Long = wallMs - jobMs
     def fields: Seq[(String, Long)] = Seq(
       "wall_ms" -> wallMs, "jobs" -> jobs.toLong, "job_ms" -> jobMs,
@@ -135,14 +141,15 @@ object Trace {
       "codegen_compiles" -> codegenCompiles, "exec_run_ms" -> execRunMs,
       "input_bytes" -> inputBytes, "shuffle_read_bytes" -> shuffleReadBytes,
       "shuffle_write_bytes" -> shuffleWriteBytes, "spill_bytes" -> spillBytes,
-      "memo_hits" -> memoHits, "memo_misses" -> memoMisses, "memo_evictions" -> memoEvictions)
+      "memo_hits" -> memoHits, "memo_misses" -> memoMisses, "memo_evictions" -> memoEvictions,
+      "files_read" -> filesRead)
     def json: String = fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
   }
 
   private final class Acc {
     val jobs = mutable.Map.empty[Int, (Long, Long)]
     val phases = mutable.ArrayBuffer.empty[(Long, Long)]
-    var execRunMs, inputBytes, shuffleReadBytes, shuffleWriteBytes, spillBytes = 0L
+    var execRunMs, inputBytes, shuffleReadBytes, shuffleWriteBytes, spillBytes, filesRead = 0L
 
     /** the span's counters over the epoch-ms window [startMs, startMs + wallMs] */
     def record(startMs: Long, wallMs: Long, delta: Seq[Long]): Record = {
@@ -157,7 +164,7 @@ object Trace {
       covered += curE - curS
       Record(wallMs, jobs.size, covered, clip(phases).map(x => x._2 - x._1).sum, delta(0),
         execRunMs, inputBytes, shuffleReadBytes, shuffleWriteBytes, spillBytes,
-        delta(1), delta(2), delta(3))
+        delta(1), delta(2), delta(3), filesRead)
     }
   }
 }

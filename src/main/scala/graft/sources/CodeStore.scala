@@ -16,8 +16,11 @@ import graft.functions.{bound, vectors}
   * {{{
   *   <dir>/codes/data/__ver=N/pb=<p>/   (vec_id, keys, embedding)
   * }}}
-  * `pb = pmod(vec_id, Partitions)`. The latest live version of a
-  * vec_id wins, and a null-keys tombstone masks a removed id.
+  * `pb = pmod(vec_id, n)`, with `n` sized from the store's bytes
+  * ([[StoreLayout]]; at most [[Partitions]]) and pinned under
+  * `<dir>/codes/layout/v<N>/` by the write or fold that chose it. The
+  * latest live version of a vec_id wins, and a null-keys tombstone
+  * masks a removed id.
   * [[upsert]] APPENDS an O(update) delta (codes are a pure map of the
   * pinned hyperplanes over the updated embeddings — no neighborhood
   * to rebuild, the simplest upsert in the store family) and never
@@ -37,30 +40,44 @@ import graft.functions.{bound, vectors}
   */
 object CodeStore {
 
-  /** pb buckets — matches [[EdgeStore.EdgePartitions]] so a fetch of
-    * `shortlist` ids prunes to at most that many partitions */
+  /** pb bucket cap (the count of a store of ≥ 64 × 4 MB) — matches
+    * [[EdgeStore.EdgePartitions]] so a fetch of `shortlist` ids prunes
+    * to at most that many partitions */
   val Partitions = 64
 
-  private[graft] def chain(dir: String): Versioned.Chain =
-    Versioned.Chain(dir, s"$dir/codes", v => Seq(s"$dir/codes/data/__ver=$v"))
+  /** bytes of one row: vec_id, Bands key longs, Dim embedding floats */
+  private[graft] val RowBytes = 8L + 8L * SrpBanded.Bands + 4L * SrpBanded.Dim
 
-  /** write one version's rows (vec_id, keys, embedding, pb) */
-  private def writeVer(rows: DataFrame, dir: String, v: Int): Unit =
-    rows.withColumn("__ver", lit(v))
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, s"$dir/codes",
+      v => Seq(s"$dir/codes/data/__ver=$v", StoreLayout.dir(s"$dir/codes", v)))
+
+  /** write one version's rows (vec_id, keys, embedding) in `buckets`
+    * pb buckets */
+  private def writeVer(rows: DataFrame, dir: String, v: Int, buckets: Int): Unit =
+    rows.withColumn("pb", pmod(col("vec_id"), lit(buckets.toLong)))
+      .withColumn("__ver", lit(v))
       .repartition(col("pb"))
       .write.mode(SaveMode.Append)
       .partitionBy("__ver", "pb")
       .parquet(s"$dir/codes/data")
 
+  /** write `rows` as version v at the count its size gives (a full
+    * build or a fold), and pin that count as v's layout */
+  private def writeSized(rows: DataFrame, dir: String, v: Int): Unit = {
+    val n = StoreLayout.sized(rows.count(), RowBytes, Partitions)
+    writeVer(rows, dir, v, n)
+    StoreLayout.pin(rows.sparkSession, s"$dir/codes", v, n)
+  }
+
   /** Full build: code the corpus (one map-only scan), written as
     * version 0 of the chain. */
   def write(spark: SparkSession, d: String, dir: String): Unit =
     Versioned.create(spark, chain(dir), s"$dir/codes") {
-      writeVer(HammingIndex.coded(spark, d)
-        .withColumn("pb", pmod(col("vec_id"), lit(Partitions.toLong))), dir, 0)
+      writeSized(HammingIndex.coded(spark, d), dir, 0)
     }
 
-  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
+  private val frameCache = new graft.SessionCache[String, (DataFrame, Int)](8, identity)
 
   /** Merge-on-read view ([[Versioned.latest]] per (pb, vec_id), so
     * the rerank point-fetch stays pb-pruned while deltas exist),
@@ -68,29 +85,42 @@ object CodeStore {
     * __ver) beyond the consumer's projection, so the shortlist scan
     * stays narrow. */
   private[graft] def resolvedFrame(spark: SparkSession, dir: String): DataFrame =
+    resolved(spark, dir)._1
+
+  /** [[resolvedFrame]] with the pb count its versions were written at
+    * — one memo entry, so a serve never pairs a frame with another
+    * version set's count. The full-column handle is what the rerank
+    * point-fetch reads: a fresh `spark.read.parquet` per query
+    * re-lists the store and re-reads footers (~0.7 s/serve measured
+    * at r8); the analyzed handle is lazy and partition pruning still
+    * happens per-query at planning time. */
+  private def resolved(spark: SparkSession, dir: String): (DataFrame, Int) =
     frameCache.getOrElseUpdate(spark, dir) {
       val vers = Versioned.live(spark, chain(dir))
       require(vers.nonEmpty, s"no committed code versions under $dir/codes")
-      Versioned.latest(spark.read.parquet(s"$dir/codes/data")
+      (Versioned.latest(spark.read.parquet(s"$dir/codes/data")
         .select(col("vec_id"), col("keys"), col("embedding"),
           col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver")),
         vers, "pb", "vec_id")
-        .filter(col("keys").isNotNull)
+        .filter(col("keys").isNotNull),
+        StoreLayout.pinned(spark, s"$dir/codes", vers, Partitions))
     }
+
+  /** the pb count the live store was written at */
+  private[graft] def buckets(spark: SparkSession, dir: String): Int = resolved(spark, dir)._2
 
   /** The code columns only — the embedding column is projected away
     * here so the shortlist scan never reads it (ReadSchema is the
     * spec hook). */
-  private def codesFrame(spark: SparkSession, dir: String): DataFrame =
-    resolvedFrame(spark, dir).select(col("vec_id"), col("keys"), col("pb"))
+  private def codesOf(full: DataFrame): DataFrame =
+    full.select(col("vec_id"), col("keys"), col("pb"))
 
-  /** Full-column handle for the rerank point-fetch — memoized via
-    * [[resolvedFrame]]: a fresh `spark.read.parquet` per query
-    * re-lists the store and re-reads footers (~0.7 s/serve measured
-    * at r8); the analyzed handle is lazy and partition pruning still
-    * happens per-query at planning time. */
-  private def fullFrame(spark: SparkSession, dir: String): DataFrame =
-    resolvedFrame(spark, dir)
+  /** the pb-pruned (vec_id, embedding) point read of `ids` */
+  private def fetchOf(full: DataFrame, buckets: Int, ids: Seq[Long]): DataFrame = {
+    val pbs = ids.map(Math.floorMod(_, buckets.toLong)).distinct
+    full.filter(bound.isin(col("pb"), pbs) && bound.isin(col("vec_id"), ids))
+      .select(col("vec_id"), col("embedding"))
+  }
 
   /** executed plans of the last serve — spec hooks */
   @volatile var lastScanPlanThunk: () => String = () => ""
@@ -106,17 +136,15 @@ object CodeStore {
   def search(spark: SparkSession, dir: String, queryVec: Array[Float],
              k: Int = 10, shortlist: Int = HammingIndex.Shortlist): DataFrame = {
     val qk = SrpBanded.queryBandKeys(queryVec).map(_._2)
-    val scan = codesFrame(spark, dir)
+    val (full, n) = resolved(spark, dir)
+    val scan = codesOf(full)
       .select(col("vec_id"), HammingIndex.hammingCol(qk).as("ham"))
     lastScanPlanThunk = () => scan.queryExecution.executedPlan.toString
     // bounded driver state: the shortlist ids (≤ shortlist rows) —
     // the same O(k) license every single-query serve here documents
     val ids = scan.orderBy(col("ham").asc, col("vec_id").asc)
       .limit(shortlist).collect().map(_.getLong(0)).toSeq
-    val pbs = ids.map(Math.floorMod(_, Partitions.toLong)).distinct
-    val fetch = fullFrame(spark, dir)
-      .filter(bound.isin(col("pb"), pbs) && bound.isin(col("vec_id"), ids))
-      .select(col("vec_id"), col("embedding"))
+    val fetch = fetchOf(full, n, ids)
     lastFetchPlanThunk = () => fetch.queryExecution.executedPlan.toString
     HammingIndex.rerank(fetch, queryVec, k)
   }
@@ -173,7 +201,8 @@ object CodeStore {
       val f0 = FilteredServe.walkStartFactor(matching,
         FilteredServe.totalCount(spark, metaDir))
       val qk = SrpBanded.queryBandKeys(queryVec).map(_._2)
-      val scan = codesFrame(spark, dir)
+      val (full, n) = resolved(spark, dir)
+      val scan = codesOf(full)
         .select(col("vec_id"), HammingIndex.hammingCol(qk).as("ham"))
       val hit = FilteredServe.EscalateFactors.iterator.map { e =>
         val f = math.min(e * f0, 64)
@@ -186,11 +215,7 @@ object CodeStore {
         case Some((f, scanned, okIds)) =>
           FilteredServe.lastFilteredPath = s"scan:$f"
           FilteredServe.recordCoverage(s"scan:$f", matching, scanned.toLong)
-          val pbs = okIds.map(Math.floorMod(_, Partitions.toLong)).distinct
-          val fetch = fullFrame(spark, dir)
-            .filter(bound.isin(col("pb"), pbs) && bound.isin(col("vec_id"), okIds))
-            .select(col("vec_id"), col("embedding"))
-          HammingIndex.rerank(fetch, queryVec, k)
+          HammingIndex.rerank(fetchOf(full, n, okIds), queryVec, k)
         case None =>
           FilteredServe.lastFilteredPath = "fallback"
           FilteredServe.recordCoverage("fallback", matching, matching)
@@ -245,9 +270,14 @@ object CodeStore {
     val qFlat = qCodes.select(col("query_id") +:
       (0 until SrpBanded.Bands).map(b =>
         element_at(col("q_keys"), b + 1).as(s"q$b")): _*)
-    val cFlat = codesFrame(spark, dir).select(col("vec_id") +:
-      (0 until SrpBanded.Bands).map(b =>
-        element_at(col("keys"), b + 1).as(s"c$b")): _*)
+    val full = resolvedFrame(spark, dir)
+    // the |Q|·N scoring runs in the code side's tasks: spread the rows
+    // over every core, since a store sized to one or a few buckets
+    // (StoreLayout) is that many files, and a file is one task
+    val cFlat = codesOf(full).repartition(spark.sparkContext.defaultParallelism)
+      .select(col("vec_id") +:
+        (0 until SrpBanded.Bands).map(b =>
+          element_at(col("keys"), b + 1).as(s"c$b")): _*)
     val ham = (0 until SrpBanded.Bands).map { b =>
       bit_count(col(s"c$b").bitwiseXOR(col(s"q$b")))
     }.reduce(_ + _).cast("int")
@@ -268,7 +298,7 @@ object CodeStore {
     val wr = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     short
-      .join(fullFrame(spark, dir).select(col("vec_id"), col("embedding")),
+      .join(full.select(col("vec_id"), col("embedding")),
         Seq("vec_id"))
       .join(queries.hint("shuffle_hash"), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -307,18 +337,22 @@ object CodeStore {
       .select(col("vec_id"),
         lit(null).cast("array<long>").as("keys"),
         lit(null).cast("array<float>").as("embedding"))
+    // a delta keeps its live base's count
+    val n = StoreLayout.pinned(spark, s"$dir/codes", Versioned.live(spark, chain(dir)), Partitions)
     val delta = valid.unionByName(tomb)
-      .withColumn("pb", pmod(col("vec_id"), lit(Partitions.toLong)))
+      .withColumn("pb", pmod(col("vec_id"), lit(n.toLong)))
       .localCheckpoint(true)
     try {
-      Versioned.append(spark, chain(dir), compact(spark, dir))(writeVer(delta, dir, _))
+      Versioned.append(spark, chain(dir), compact(spark, dir))(writeVer(delta, dir, _, n))
       delta.select(col("pb")).distinct().collect().map(_.getLong(0)).sorted.toSeq
     } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(delta)
   }
 
-  /** [[Versioned.fold]] the chain back into ONE full copy */
+  /** [[Versioned.fold]] the chain back into ONE full copy, at the
+    * count its resolved rows give */
   def compact(spark: SparkSession, dir: String): Unit =
-    Versioned.fold(spark, chain(dir))(writeVer(resolvedFrame(spark, dir), dir, _))
+    Versioned.fold(spark, chain(dir))(
+      writeSized(resolvedFrame(spark, dir).drop("pb"), dir, _))
 
   // one code store per corpus dir, built lazily for the queries()
   // entry — a real deployment writes it at ingest time

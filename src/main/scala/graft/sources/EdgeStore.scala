@@ -26,30 +26,48 @@ import graft.functions.{bound, vectors}
   * {{{
   *   <dir>/edges/data/__ver=N/pb=<p>/   (src, dst, dst_emb)
   * }}}
-  * `pb = pmod(src, EdgePartitions)`. A version REPLACES the full edge
-  * set of every src it contains (latest version per src wins), with a
-  * null-dst tombstone for a src whose edges disappear. [[upsert]]
+  * `pb = pmod(src, n)`, with `n` sized from the store's bytes
+  * ([[StoreLayout]]; at most [[EdgePartitions]]) and pinned under
+  * `<dir>/edges/layout/v<N>/` by the write or fold that chose it. A
+  * version REPLACES the full edge set of every src it contains
+  * (latest version per src wins), with a null-dst tombstone for a src
+  * whose edges disappear. [[upsert]]
   * therefore APPENDS an O(update) delta and never rewrites committed
   * data. [[compact]] folds the chain back to one full copy after
   * [[Versioned.CompactAfter]] commits.
   */
 object EdgeStore {
 
-  /** src-hash partition count: coarse enough that a store stays a few
-    * files per partition, fine enough that a small upsert's
-    * neighborhood touches a strict subset */
+  /** src-hash partition cap (the count of a store of ≥ 64 × 4 MB):
+    * coarse enough that a store stays a few files per partition, fine
+    * enough that a small upsert's neighborhood touches a strict
+    * subset */
   val EdgePartitions = 64
 
-  private[graft] def chain(dir: String): Versioned.Chain =
-    Versioned.Chain(dir, s"$dir/edges", v => Seq(s"$dir/edges/data/__ver=$v"))
+  /** bytes of one row: src, dst, Dim embedding floats */
+  private val RowBytes = 16L + 4L * SrpBanded.Dim
 
-  /** write one version's rows (src, dst, dst_emb, pb) */
-  private def writeVer(rows: DataFrame, dir: String, v: Int): Unit =
-    rows.withColumn("__ver", lit(v))
+  private[graft] def chain(dir: String): Versioned.Chain =
+    Versioned.Chain(dir, s"$dir/edges",
+      v => Seq(s"$dir/edges/data/__ver=$v", StoreLayout.dir(s"$dir/edges", v)))
+
+  /** write one version's rows (src, dst, dst_emb) in `buckets` pb
+    * buckets */
+  private def writeVer(rows: DataFrame, dir: String, v: Int, buckets: Int): Unit =
+    rows.withColumn("pb", pmod(col("src"), lit(buckets.toLong)))
+      .withColumn("__ver", lit(v))
       .repartition(col("pb"))
       .write.mode(SaveMode.Append)
       .partitionBy("__ver", "pb")
       .parquet(s"$dir/edges/data")
+
+  /** write `rows` as version v at the count its size gives (a full
+    * build or a fold), and pin that count as v's layout */
+  private def writeSized(rows: DataFrame, dir: String, v: Int): Unit = {
+    val n = StoreLayout.sized(rows.count(), RowBytes, EdgePartitions)
+    writeVer(rows, dir, v, n)
+    StoreLayout.pin(rows.sparkSession, s"$dir/edges", v, n)
+  }
 
   /** Full build: `edges` must carry (src, dst, dst_emb) — the
     * checkpointed serve graphs ([[SrpBanded.materializedGraph]] /
@@ -57,28 +75,35 @@ object EdgeStore {
     * version 0 of the chain. */
   def write(spark: SparkSession, edges: DataFrame, dir: String): Unit =
     Versioned.create(spark, chain(dir), s"$dir/edges") {
-      writeVer(edges.select(col("src"), col("dst"), col("dst_emb"))
-        .withColumn("pb", pmod(col("src"), lit(EdgePartitions.toLong))), dir, 0)
+      writeSized(edges.select(col("src"), col("dst"), col("dst_emb")), dir, 0)
     }
 
   // a serving process opens the edge table once; the handle caches
   // the file listing, reads stay lazy per query
-  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
+  private val frameCache = new graft.SessionCache[String, (DataFrame, Int)](8, identity)
 
   /** Merge-on-read view with the `pb` column retained (for pruned
     * consumers): [[Versioned.latest]] per (pb, src) — pb is a pure
     * function of src, so the groups are those of src, and pb/src
-    * predicates push below the window — with tombstones dropped. */
-  private def resolvedFrame(spark: SparkSession, dir: String): DataFrame =
+    * predicates push below the window — with tombstones dropped;
+    * memoized with the pb count its versions were written at, so a
+    * hop never pairs a frame with another version set's count. */
+  private def resolved(spark: SparkSession, dir: String): (DataFrame, Int) =
     frameCache.getOrElseUpdate(spark, dir) {
       val vers = Versioned.live(spark, chain(dir))
       require(vers.nonEmpty, s"no committed edge versions under $dir/edges")
-      Versioned.latest(spark.read.parquet(s"$dir/edges/data")
+      (Versioned.latest(spark.read.parquet(s"$dir/edges/data")
         .select(col("src"), col("dst"), col("dst_emb"),
           col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver")),
         vers, "pb", "src")
-        .filter(col("dst").isNotNull)
+        .filter(col("dst").isNotNull),
+        StoreLayout.pinned(spark, s"$dir/edges", vers, EdgePartitions))
     }
+
+  private def resolvedFrame(spark: SparkSession, dir: String): DataFrame = resolved(spark, dir)._1
+
+  /** the pb count the live store was written at */
+  private[graft] def buckets(spark: SparkSession, dir: String): Int = resolved(spark, dir)._2
 
   /** Bulk handle: the resolved (src, dst, dst_emb) edge set. STABLE
     * per (session, dir) — consumers key identity-memoized decisions on
@@ -101,8 +126,9 @@ object EdgeStore {
     * any IO; the hop that consumes this scores the rows it gets —
     * the whole serve path is store-files-only. */
   def edgesFor(spark: SparkSession, dir: String, frontier: Seq[Long]): DataFrame = {
-    val pbs = frontier.map(Math.floorMod(_, EdgePartitions.toLong)).distinct
-    val step = resolvedFrame(spark, dir)
+    val (edges, n) = resolved(spark, dir)
+    val pbs = frontier.map(Math.floorMod(_, n.toLong)).distinct
+    val step = edges
       .filter(bound.isin(col("pb"), pbs) && bound.isin(col("src"), frontier))
       .select(col("src"), col("dst"), col("dst_emb"))
     lastEdgePlanThunk = () => step.queryExecution.executedPlan.toString
@@ -194,22 +220,26 @@ object EdgeStore {
         .join(newEdges.select(col("src")).distinct(), Seq("src"), "left_anti")
         .select(col("src"), lit(null).cast("long").as("dst"),
           lit(null).cast("array<float>").as("dst_emb"))
+      // a delta keeps its live base's count
+      val n = StoreLayout.pinned(spark, s"$edgeDir/edges",
+        Versioned.live(spark, chain(edgeDir)), EdgePartitions)
       val delta = newEdges.unionByName(tomb)
-        .withColumn("pb", pmod(col("src"), lit(EdgePartitions.toLong)))
+        .withColumn("pb", pmod(col("src"), lit(n.toLong)))
         .localCheckpoint(true)
       try {
         Versioned.append(spark, chain(edgeDir), compact(spark, edgeDir))(
-          writeVer(delta, edgeDir, _))
+          writeVer(delta, edgeDir, _, n))
         delta.select(col("pb")).distinct().collect().map(_.getLong(0)).sorted.toSeq
       } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(delta)
     } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(touchedSrc)
   }
 
-  /** [[Versioned.fold]] the chain back into ONE full copy: one
-    * O(store) scan+write amortized over [[Versioned.CompactAfter]]
-    * O(update) deltas. */
+  /** [[Versioned.fold]] the chain back into ONE full copy, at the
+    * count its resolved rows give: one O(store) scan+write amortized
+    * over [[Versioned.CompactAfter]] O(update) deltas. */
   def compact(spark: SparkSession, dir: String): Unit =
-    Versioned.fold(spark, chain(dir))(writeVer(resolvedFrame(spark, dir), dir, _))
+    Versioned.fold(spark, chain(dir))(
+      writeSized(resolvedFrame(spark, dir).drop("pb"), dir, _))
 
   // one refined-edge store per corpus dir, built lazily for the
   // queries() entry — a real deployment writes it after each offline

@@ -13,9 +13,11 @@ import graft.functions.bound
   *
   *  - `<dir>/layers/data/__ver=<n>/layer=<l>/pb=<p>/` — the upper-
   *    layer navigation edges `(src, dst, dst_emb)`, partitioned by
-  *    version, layer and `pb = pmod(src, LayerPartitions)`. The
-  *    DESTINATION EMBEDDING rides in the edge row (the HNSW-paper
-  *    layout), so a descent step scores what it reads — ≤ DescentBeam
+  *    version, layer and `pb = pmod(src, n)`, `n` sized from the
+  *    layers' bytes ([[StoreLayout]]; at most [[LayerPartitions]]) and
+  *    pinned under `layers/layout/v<n>/` by the write or fold that
+  *    chose it. The DESTINATION EMBEDDING rides in the edge row (the
+  *    HNSW-paper layout), so a descent step scores what it reads — ≤ DescentBeam
   *    sources' edges, pruned to one layer × the frontier's pb buckets
   *    in the file index. Point reads, never corpus scans.
   *    The layers are a merge-on-read [[Versioned]] chain rooted at
@@ -36,21 +38,28 @@ import graft.functions.bound
   */
 object HnswStore {
 
-  /** src-hash partition count per layer: upper layers thin 4× per
-    * level, so coarser than EdgeStore's 64 keeps files non-tiny */
+  /** src-hash partition cap per layer (the count of layers of
+    * ≥ 16 × 4 MB): upper layers thin 4× per level, so coarser than
+    * EdgeStore's 64 keeps files non-tiny */
   val LayerPartitions = 16
 
-  /** a layer version's data: its `__ver` partition and its entry */
+  /** bytes of one layer row: src, dst, Dim embedding floats */
+  private val RowBytes = 16L + 4L * SrpBanded.Dim
+
+  /** a layer version's data: its `__ver` partition, its entry and (a
+    * full build's or fold's) pb count */
   private[graft] def chain(dir: String): Versioned.Chain =
     Versioned.Chain(dir, s"$dir/layers",
-      v => Seq(s"$dir/layers/data/__ver=$v", s"$dir/entry/v$v"))
+      v => Seq(s"$dir/layers/data/__ver=$v", s"$dir/entry/v$v",
+        StoreLayout.dir(s"$dir/layers", v)))
 
-  /** write one version: layer rows (src, dst, dst_emb, layer, pb)
-    * plus the entry point */
+  /** write one version: layer rows (src, dst, dst_emb, layer) in
+    * `buckets` pb buckets, and the entry point */
   private def writeVer(spark: SparkSession, dir: String, v: Int, layers: DataFrame,
-                       entry: (Long, Array[Float])): Unit = {
+                       entry: (Long, Array[Float]), buckets: Int): Unit = {
     import spark.implicits._
-    layers.withColumn("__ver", lit(v))
+    layers.withColumn("pb", pmod(col("src"), lit(buckets.toLong)))
+      .withColumn("__ver", lit(v))
       .repartition(col("layer"), col("pb"))
       .write.mode(SaveMode.Append)
       .partitionBy("__ver", "layer", "pb")
@@ -59,34 +68,49 @@ object HnswStore {
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/entry/v$v")
   }
 
+  /** write `layers` as version v at the count their size gives (a
+    * full build or a fold), and pin that count as v's layout */
+  private def writeSized(spark: SparkSession, dir: String, v: Int, layers: DataFrame,
+                         entry: (Long, Array[Float])): Unit = {
+    val n = StoreLayout.sized(layers.count(), RowBytes, LayerPartitions)
+    writeVer(spark, dir, v, layers, entry, n)
+    StoreLayout.pin(spark, s"$dir/layers", v, n)
+  }
+
   def write(spark: SparkSession, d: String, dir: String): Unit = {
     Versioned.create(spark, chain(dir), s"$dir/layers", s"$dir/entry") {
       val layers = (1 to Hnsw.MaxLevel).map { l =>
         Hnsw.layerGraph(spark, d, l).withColumn("layer", lit(l))
       }.reduce(_ unionByName _)
-      writeVer(spark, dir, 0,
-        layers.withColumn("pb", pmod(col("src"), lit(LayerPartitions.toLong))),
-        Hnsw.entryFor(spark, d))
+      writeSized(spark, dir, 0, layers, Hnsw.entryFor(spark, d))
     }
     EdgeStore.write(spark, SrpBanded.materializedGraph(spark, d, 5), s"$dir/l0")
   }
 
-  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
+  private val frameCache = new graft.SessionCache[String, (DataFrame, Int)](8, identity)
   private val entryCache = new graft.SessionCache[String, (Long, Array[Float])](8, identity)
 
   /** Merge-on-read view of the hierarchy: [[Versioned.latest]] per
     * (layer, pb, src), so layer/pb/src predicates push below the
     * window, with tombstones dropped. */
-  def layersFrame(spark: SparkSession, dir: String): DataFrame =
+  def layersFrame(spark: SparkSession, dir: String): DataFrame = layers(spark, dir)._1
+
+  /** the pb count the live layers were written at */
+  private[graft] def layerBuckets(spark: SparkSession, dir: String): Int = layers(spark, dir)._2
+
+  /** [[layersFrame]] with its pb count, memoized together so a
+    * descent never pairs a frame with another version set's count */
+  private def layers(spark: SparkSession, dir: String): (DataFrame, Int) =
     frameCache.getOrElseUpdate(spark, dir) {
       val vers = Versioned.live(spark, chain(dir))
       require(vers.nonEmpty, s"no committed layer versions under $dir/layers")
-      Versioned.latest(spark.read.parquet(s"$dir/layers/data")
+      (Versioned.latest(spark.read.parquet(s"$dir/layers/data")
         .select(col("src"), col("dst"), col("dst_emb"),
           col("layer").cast("int").as("layer"), col("pb").cast("long").as("pb"),
           col("__ver").cast("int").as("__ver")),
         vers, "layer", "pb", "src")
-        .filter(col("dst").isNotNull)
+        .filter(col("dst").isNotNull),
+        StoreLayout.pinned(spark, s"$dir/layers", vers, LayerPartitions))
     }
 
   /** The persisted entry point: read once per store handle — serving
@@ -166,13 +190,13 @@ object HnswStore {
       queryVec: Array[Float]): (Int, Seq[Long]) => Map[Long, Array[(Long, Double)]] = {
     val cached = localLayers(spark, dir)
     lastLocalLayers = cached.keySet
-    val layers = layersFrame(spark, dir)
+    val (frame, n) = layers(spark, dir)
     (l, frontier) =>
       cached.get(l) match {
         case Some(m) => Hnsw.fetchScoredLocal(m, frontier, queryVec)
         case None =>
-          val pbs = frontier.map(Math.floorMod(_, LayerPartitions.toLong)).distinct
-          val step = layers
+          val pbs = frontier.map(Math.floorMod(_, n.toLong)).distinct
+          val step = frame
             .filter(col("layer") === l && bound.isin(col("pb"), pbs) &&
               bound.isin(col("src"), frontier))
           lastLayerPlanThunk = () => step.queryExecution.executedPlan.toString
@@ -291,6 +315,8 @@ object HnswStore {
       .withColumn("band", col("band").cast("int"))
       .withColumn("bk", col("bk").cast("long"))
     val layers = layersFrame(spark, dir)
+    val n = StoreLayout.pinned(spark, s"$dir/layers",
+      Versioned.live(spark, chain(dir)), LayerPartitions)
     val emb = graft.Tables.embeddings(spark, d)
       .filter(col("embedding").isNotNull &&
         size(col("embedding")) === SrpBanded.Dim)
@@ -334,23 +360,25 @@ object HnswStore {
           lit(null).cast("array<float>").as("dst_emb"))
       newEdges.unionByName(tomb).withColumn("layer", lit(l))
     }.reduce(_ unionByName _)
-      .withColumn("pb", pmod(col("src"), lit(LayerPartitions.toLong)))
+      // a delta keeps its live base's count
+      .withColumn("pb", pmod(col("src"), lit(n.toLong)))
       .localCheckpoint(true)
     try {
       // the entry is a pure function of the corpus — re-derive from
       // the post-ingest table, versioned with this delta
       Versioned.append(spark, chain(dir), compact(spark, dir))(
-        writeVer(spark, dir, _, delta, Hnsw.entryFor(spark, d)))
+        writeVer(spark, dir, _, delta, Hnsw.entryFor(spark, d), n))
       delta.select(col("layer"), col("pb")).distinct().collect()
         .map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
     } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(delta)
   }
 
   /** [[Versioned.fold]] the layer chain (and its entry) to one full
-    * copy — [[EdgeStore.compact]] for the hierarchy. */
+    * copy at the count its resolved rows give — [[EdgeStore.compact]]
+    * for the hierarchy. */
   def compact(spark: SparkSession, dir: String): Unit =
     Versioned.fold(spark, chain(dir))(
-      writeVer(spark, dir, _, layersFrame(spark, dir), storedEntry(spark, dir)))
+      writeSized(spark, dir, _, layersFrame(spark, dir).drop("pb"), storedEntry(spark, dir)))
 
   // one store per corpus dir, built lazily for the queries() entry —
   // a real deployment writes it after each offline build

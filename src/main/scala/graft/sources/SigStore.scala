@@ -91,10 +91,8 @@ object SigStore {
   /** bucket-group count: power of two, sized so a (band, bg) dir
     * holds ~[[DirRowTarget]] rows — [[MaxGroups]]-capped so the dir
     * count never exceeds Bands·256 = 1024 at any corpus. */
-  private[graft] def groupsFor(nDocs: Long): Int = {
-    val target = math.max(1L, nDocs / DirRowTarget)
-    math.min(MaxGroups, java.lang.Long.highestOneBit(target)).toInt
-  }
+  private[graft] def groupsFor(nDocs: Long): Int =
+    StoreLayout.bucketsFor(nDocs, DirRowTarget, MaxGroups).toInt
 
   /** (doc_id, band, band_key) — the d2 banding, shared verbatim by
     * the store write, the upsert delta and the serve's batch side

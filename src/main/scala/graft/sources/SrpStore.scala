@@ -151,8 +151,7 @@ object SrpStore {
     * same per-dir-write-cost budget [[layoutShift]] enforces on the
     * bucket tree) */
   private[graft] def embedDirsFor(n: Long): Long =
-    math.min(2048L,
-      java.lang.Long.highestOneBit(math.max(1L, n / DirRowTarget)))
+    StoreLayout.bucketsFor(n, DirRowTarget, 2048L)
 
   def write(spark: SparkSession, d: String, dir: String): Unit =
     write(spark, d, dir, SrpBanded.RowsPerBand)

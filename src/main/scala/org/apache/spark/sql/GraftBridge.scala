@@ -42,6 +42,15 @@ object GraftBridge {
   def planPhases(e: execution.ui.SparkListenerSQLExecutionEnd): Seq[(Long, Long)] =
     Option(e.qe).toSeq.flatMap(_.tracker.phases.values.map(p => (p.startTimeMs, p.endTimeMs)))
 
+  /** Files the executed file scans of an execution-end event's query
+    * opened — each scan's `numFiles` driver metric, over AQE stages
+    * and subqueries; 0 when the event carries no query execution. */
+  def filesRead(e: execution.ui.SparkListenerSQLExecutionEnd): Long =
+    Option(e.qe).fold(0L)(qe => PlanWalk.collectWithSubqueries(qe.executedPlan) {
+      case s: execution.FileSourceScanExec => s.metrics.get("numFiles").fold(0L)(_.value)
+    }.sum)
+  private object PlanWalk extends execution.adaptive.AdaptiveSparkPlanHelper
+
   /** Drain the listener bus (`private[spark]`) — a trace reading its
     * SparkListener aggregates right after an action must wait for the
     * async stage-completed events to be delivered, or the metrics

@@ -2195,12 +2195,15 @@ class OperatorsSpec extends AnyFunSuite {
   /** One versioned store as the chain specs drive it: `build` writes
     * version 0 plus two deltas into a fresh dir, `view` is every row a
     * reader resolves (sorted strings, so a doubled row shows), `fold`
-    * is the store's compaction, and `verDirs` are the (artifact dir,
-    * name prefix) pairs its versions' data dirs live under. */
+    * is the store's compaction, `verDirs` are the (artifact dir,
+    * name prefix) pairs its versions' data dirs live under, and
+    * `buckets` is a pb store's live bucket count. `view` leaves out
+    * `pb`, a pure function of the id, so a re-sized fold compares
+    * equal row for row. */
   private case class ChainCase(name: String, build: String => Unit,
       view: String => Seq[String], fold: String => Unit,
       chain: String => graft.sources.Versioned.Chain,
-      verDirs: Seq[(String, String)])
+      verDirs: Seq[(String, String)], buckets: Option[String => Int] = None)
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -2241,9 +2244,10 @@ class OperatorsSpec extends AnyFunSuite {
           CodeStore.upsert(spark, dir, vecDelta(0))
           CodeStore.upsert(spark, dir, vecDelta(1))
         },
-        dir => rowsOf(CodeStore.resolvedFrame(spark, dir)),
+        dir => rowsOf(CodeStore.resolvedFrame(spark, dir).drop("pb")),
         CodeStore.compact(spark, _), CodeStore.chain,
-        Seq("codes/data" -> "__ver=")),
+        Seq("codes/data" -> "__ver=", "codes/layout" -> "v"),
+        Some(CodeStore.buckets(spark, _))),
       ChainCase("EdgeStore",
         dir => {
           EdgeStore.write(spark, SrpBanded.materializedRefinedGraph(spark, sf), dir)
@@ -2252,17 +2256,19 @@ class OperatorsSpec extends AnyFunSuite {
         },
         dir => rowsOf(EdgeStore.read(spark, dir)),
         EdgeStore.compact(spark, _), EdgeStore.chain,
-        Seq("edges/data" -> "__ver=")),
+        Seq("edges/data" -> "__ver=", "edges/layout" -> "v"),
+        Some(EdgeStore.buckets(spark, _))),
       ChainCase("HnswStore",
         dir => {
           HnswStore.write(spark, sf, dir)
           HnswStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(0))
           HnswStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(1))
         },
-        dir => rowsOf(HnswStore.layersFrame(spark, dir)) :+
+        dir => rowsOf(HnswStore.layersFrame(spark, dir).drop("pb")) :+
           HnswStore.storedEntry(spark, dir)._1.toString,
         HnswStore.compact(spark, _), HnswStore.chain,
-        Seq("layers/data" -> "__ver=", "entry" -> "v")),
+        Seq("layers/data" -> "__ver=", "entry" -> "v", "layers/layout" -> "v"),
+        Some(HnswStore.layerBuckets(spark, _))),
       ChainCase("SrpStore banding",
         dir => {
           SrpStore.write(spark, sf, dir)
@@ -2314,6 +2320,37 @@ class OperatorsSpec extends AnyFunSuite {
         assert(vers == Seq(s"${prefix}3"), s"$sub left ${vers.mkString(",")}")
       }
       assert(c.view(dir) == before, "GC re-run changed rows")
+    }
+  }
+
+  Seq("CodeStore", "EdgeStore", "HnswStore").foreach { name =>
+    test(s"$name fold crash before its marker: the old pb count stays served, the re-run re-sizes") {
+      import graft.sources.Versioned
+      val c = chainCases.find(_.name == name).get
+      val buckets = c.buckets.get
+      val dir = java.nio.file.Files.createTempDirectory("chain_layout").toString
+      // a base at the cap; the spec corpus itself sizes to one bucket
+      StoreFixtures.atCap(c.build(dir))
+      val cap = buckets(dir)
+      assert(cap > 1, s"fixture store has $cap buckets")
+      val before = c.view(dir)
+      // the crash: a fold whose data and layout landed but whose c3
+      // marker did not — run it with GC held back, then drop c3
+      Versioned.gcAfterPublish = false
+      try c.fold(dir)
+      finally Versioned.gcAfterPublish = true
+      assert(new java.io.File(s"${c.chain(dir).root}/_commits/c3").delete())
+      Tables.invalidate(dir)
+      assert(new java.io.File(s"${c.chain(dir).root}/layout/v3").isDirectory,
+        "the torn fold pinned no layout")
+      assert(Versioned.live(spark, c.chain(dir)) == Seq(0, 1, 2))
+      assert(buckets(dir) == cap, "a torn fold's count reached readers")
+      assert(c.view(dir) == before, "a torn fold changed the rows")
+      // the re-run clears the torn version and publishes a re-sized fold
+      c.fold(dir)
+      assert(Versioned.live(spark, c.chain(dir)) == Seq(3))
+      assert(buckets(dir) == 1, s"the fold kept ${buckets(dir)} buckets")
+      assert(c.view(dir) == before, "the re-sized fold changed the rows")
     }
   }
 

@@ -563,8 +563,12 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val srpDir = java.nio.file.Files.createTempDirectory("edgeup_srp").toString
     graft.sources.SrpStore.write(spark, sf, srpDir)
     val edgeDir = java.nio.file.Files.createTempDirectory("edgeup_edges").toString
-    graft.sources.EdgeStore.write(spark,
-      graft.operators.SrpBanded.materializedRefinedGraph(spark, sf), edgeDir)
+    // many pb buckets (the spec corpus alone sizes to one), so "strict
+    // subset" below has something to be strict about
+    StoreFixtures.atCap(graft.sources.EdgeStore.write(spark,
+      graft.operators.SrpBanded.materializedRefinedGraph(spark, sf), edgeDir))
+    val buckets = graft.sources.EdgeStore.buckets(spark, edgeDir)
+    assert(buckets == graft.sources.EdgeStore.EdgePartitions, s"fixture store has $buckets buckets")
     val emb = Tables.embeddings(spark, sf)
       .filter(col("embedding").isNotNull && size(col("embedding")) === 64)
     val maxId = emb.agg(max(col("vec_id"))).first().getLong(0)
@@ -609,8 +613,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
       "stale edge table should not reach the upserted id")
 
     val touchedPbs = graft.sources.EdgeStore.upsert(spark, edgeDir, d2, srpDir, updates)
-    assert(touchedPbs.nonEmpty &&
-      touchedPbs.size < graft.sources.EdgeStore.EdgePartitions,
+    assert(touchedPbs.nonEmpty && touchedPbs.size < buckets,
       s"upsert delta should cover a strict subset of partitions: $touchedPbs")
     assert(live(graft.sources.EdgeStore.chain(edgeDir)) == Seq(0, 1),
       "upsert should commit exactly one delta version")
@@ -659,7 +662,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // commit marker: write a bogus ver-1 partition by hand
     Seq((newId, 3L, tVec)).toDF("src", "dst", "dst_emb")
       .withColumn("pb", pmod(col("src"),
-        lit(graft.sources.EdgeStore.EdgePartitions.toLong)))
+        lit(graft.sources.EdgeStore.buckets(spark, edgeDir).toLong)))
       .withColumn("__ver", lit(1))
       .write.mode("append").partitionBy("__ver", "pb")
       .parquet(s"$edgeDir/edges/data")
@@ -827,7 +830,10 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val srpDir = java.nio.file.Files.createTempDirectory("hnswup_srp").toString
     graft.sources.SrpStore.write(spark, sf, srpDir)
     val dir = java.nio.file.Files.createTempDirectory("hnswup_store").toString
-    graft.sources.HnswStore.write(spark, sf, dir)
+    // many pb buckets per layer (the spec corpus alone sizes to one)
+    StoreFixtures.atCap(graft.sources.HnswStore.write(spark, sf, dir))
+    assert(graft.sources.HnswStore.layerBuckets(spark, dir) ==
+      graft.sources.HnswStore.LayerPartitions)
     val emb = Tables.embeddings(spark, sf)
       .filter(col("embedding").isNotNull && size(col("embedding")) === 64)
     // the md5 level rule, replayed driver-side
@@ -927,7 +933,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // writes but BEFORE the commit marker: hand-write both for ver 1,
     // the edge to a sentinel dst no real build produces
     Seq((newId, -1L, twin, 1)).toDF("src", "dst", "dst_emb", "layer")
-      .withColumn("pb", pmod(col("src"), lit(HnswStore.LayerPartitions.toLong)))
+      .withColumn("pb", pmod(col("src"), lit(HnswStore.layerBuckets(spark, dir).toLong)))
       .withColumn("__ver", lit(1))
       .write.mode("append").partitionBy("__ver", "layer", "pb")
       .parquet(s"$dir/layers/data")
@@ -1111,7 +1117,10 @@ class SimilaritySearchSpec extends AnyFunSuite {
   test("CodeStore upsert: recoded rows searchable without rebuild, committed data never rewritten, tombstones mask") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("codeup").toString
-    graft.sources.CodeStore.write(spark, sf, dir)
+    // many pb buckets (the spec corpus alone sizes to one)
+    StoreFixtures.atCap(graft.sources.CodeStore.write(spark, sf, dir))
+    val buckets = graft.sources.CodeStore.buckets(spark, dir)
+    assert(buckets == graft.sources.CodeStore.Partitions, s"fixture store has $buckets buckets")
     val emb = Tables.embeddings(spark, sf)
       .filter(col("embedding").isNotNull && size(col("embedding")) === 64)
     val maxId = emb.agg(max(col("vec_id"))).first().getLong(0)
@@ -1138,7 +1147,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // O(update) delta: one new id → its single pb partition
     val touched = graft.sources.CodeStore.upsert(spark, dir,
       Seq((newId, twin)).toDF("vec_id", "embedding"))
-    assert(touched == Seq(Math.floorMod(newId, 64L)),
+    assert(touched == Seq(Math.floorMod(newId, buckets.toLong)),
       s"delta should cover exactly the upserted id's pb: $touched")
     assert(live(graft.sources.CodeStore.chain(dir)) == Seq(0, 1))
     assert(verFiles(0) == before, "committed v0 data rewritten by upsert")
@@ -1170,7 +1179,8 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // commit marker: hand-write a bogus ver-1 partition
     Seq((newId, graft.operators.SrpBanded.queryBandKeys(twin).map(_._2).toArray, twin))
       .toDF("vec_id", "keys", "embedding")
-      .withColumn("pb", pmod(col("vec_id"), lit(64L)))
+      .withColumn("pb", pmod(col("vec_id"),
+        lit(graft.sources.CodeStore.buckets(spark, dir).toLong)))
       .withColumn("__ver", lit(1))
       .write.mode("append").partitionBy("__ver", "pb")
       .parquet(s"$dir/codes/data")

@@ -6,6 +6,19 @@ import org.apache.spark.sql.functions._
 /** Upsert inputs shared by the versioned-store specs. */
 object StoreFixtures {
 
+  /** Run `f` with sized store writes (full builds and folds) dividing
+    * by `b` bytes per bucket instead of [[graft.sources.StoreLayout.BucketBytes]]. */
+  def withBucketBytes[A](b: Long)(f: => A): A = {
+    val old = graft.sources.StoreLayout.bucketBytes
+    graft.sources.StoreLayout.bucketBytes = b
+    try f finally graft.sources.StoreLayout.bucketBytes = old
+  }
+
+  /** Run `f` with every sized store write at its cap — the fixed pb
+    * layout stores had before they were sized, many buckets even on the
+    * spec corpus, which sizes to one. */
+  def atCap[A](f: => A): A = withBucketBytes(1L)(f)
+
   /** `n` new ids on HNSW layer >= 1, each a near twin of an existing
     * layer >= 1 member (so an upsert of any of them gives every graph
     * store a non-empty delta), and a post-ingest corpus dir (`tag`

@@ -4,6 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.FileScanRDD
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +18,8 @@ import graft.operators.SimilaritySearch
 import graft.sources.{CodeStore, FilteredServe, HnswStore, SigStore, TempStores}
 
 /** [[Trace]] against counts taken without it: the status tracker's jobs
-  * per group, the CodegenMetrics delta, and the caller's own clock. */
+  * per group, the CodegenMetrics delta, the files the executed plans'
+  * scans selected, and the caller's own clock. */
 class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val spark = SparkTestSession.spark
   private val sf = SparkTestSession.Sf
@@ -25,27 +30,50 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var seq = 0
   private var planMs = 0L
+
+  /** distinct files the file scans of each executed plan handed to
+    * their tasks, summed: read off the plans a QueryExecutionListener
+    * is handed, not off the scan metrics the trace reads */
+  private object PlanFiles extends QueryExecutionListener with AdaptiveSparkPlanHelper {
+    val files = new java.util.concurrent.atomic.AtomicLong()
+    def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      files.addAndGet(collectWithSubqueries(qe.executedPlan) {
+        case s: FileSourceScanExec => s.inputRDD match {
+          case r: FileScanRDD => r.filePartitions.flatMap(_.files.map(_.filePath)).distinct.size.toLong
+          case _ => 0L
+        }
+      }.sum): Unit
+    def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+  }
+
   /** a warm `serve(b)` traced under a group the test sets, with that
-    * group's job count and the compile count read independently */
-  private def traced(serve: => DataFrame): (Trace.Record, Int, Long) = {
+    * group's job count, the compile count and the files its plans
+    * selected read independently */
+  private def traced(serve: => DataFrame): (Trace.Record, Int, Long, Long) = {
     seq += 1
     val group = s"trace-spec-$seq"
     val sc = spark.sparkContext
+    GraftBridge.drainListenerBus(spark)
+    PlanFiles.files.set(0L)
+    spark.listenerManager.register(PlanFiles)
     sc.setJobGroup(group, group, interruptOnCancel = false)
     val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (_, rec) = try trace.span(serve.collect()) finally sc.clearJobGroup()
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     GraftBridge.drainListenerBus(spark)
-    (rec, sc.statusTracker.getJobIdsForGroup(group).length, compiles)
+    spark.listenerManager.unregister(PlanFiles)
+    (rec, sc.statusTracker.getJobIdsForGroup(group).length, compiles, PlanFiles.files.get)
   }
 
   private def check[A](name: String, serve: A => DataFrame, a: A, b: A): Unit = {
     serve(a).collect()
-    val (rec, jobs, compiles) = traced(serve(b))
+    val (rec, jobs, compiles, files) = traced(serve(b))
     info(s"$name: ${rec.json}")
     assert(rec.jobs == jobs, s"$name: trace counted ${rec.jobs} jobs, the status tracker $jobs")
     assert(rec.codegenCompiles == compiles,
       s"$name: trace counted ${rec.codegenCompiles} compiles, CodegenMetrics $compiles")
+    assert(rec.filesRead == files, s"$name: trace counted ${rec.filesRead} files, the plans $files")
+    assert(name == "lookup" || files > 0, s"$name: a store serve read no file")
     assert(rec.jobMs + rec.driverGapMs == rec.wallMs)
     assert(rec.jobMs >= 0 && rec.jobMs <= rec.wallMs && rec.planMs >= 0)
     assert(jobs == 0 || rec.jobMs > 0 || rec.wallMs < 5, s"$name: $jobs jobs but no job time")

@@ -62,19 +62,19 @@ object CodeStore {
       .partitionBy("__ver", "pb")
       .parquet(s"$dir/codes/data")
 
-  /** write `rows` as version v at the count its size gives (a full
-    * build or a fold), and pin that count as v's layout */
-  private def writeSized(rows: DataFrame, dir: String, v: Int): Unit = {
-    val n = StoreLayout.sized(rows.count(), RowBytes, Partitions)
-    writeVer(rows, dir, v, n)
-    StoreLayout.pin(rows.sparkSession, s"$dir/codes", v, n)
-  }
+  /** write `rows` (`count` of them) as version v at the count their
+    * size gives (a full build or a fold), and pin that count as v's
+    * layout */
+  private def writeSized(rows: DataFrame, count: Long, dir: String, v: Int): Unit =
+    StoreLayout.writeSized(rows.sparkSession, s"$dir/codes", v, count, RowBytes, Partitions)(
+      writeVer(rows, dir, v, _))
 
   /** Full build: code the corpus (one map-only scan), written as
     * version 0 of the chain. */
   def write(spark: SparkSession, d: String, dir: String): Unit =
     Versioned.create(spark, chain(dir), s"$dir/codes") {
-      writeSized(HammingIndex.coded(spark, d), dir, 0)
+      val coded = HammingIndex.coded(spark, d)
+      writeSized(coded, coded.count(), dir, 0)
     }
 
   private val frameCache = new graft.SessionCache[String, (DataFrame, Int)](8, identity)
@@ -233,7 +233,11 @@ object CodeStore {
     *    v29 model-broadcast license, NOT the query-embedding
     *    broadcast the v26 contract forbids) ride to every scan
     *    partition; each partition scores its code rows against all
-    *    queries — integer XOR/popcount, codegen'd, zero extra IO;
+    *    queries — integer XOR/popcount, codegen'd. A store with fewer
+    *    pb buckets than cores (a small one, [[StoreLayout]]) is
+    *    round-robin spread over every core before the scoring — one
+    *    extra shuffle of the 72-byte code rows; a wider store is
+    *    scored where it is read, with zero extra IO;
     *  - the per-query shortlist is a rank window, which Spark 4
     *    splits into partial (map-side, inside the scan stage) +
     *    final WindowGroupLimit — the shuffle carries at most
@@ -270,11 +274,13 @@ object CodeStore {
     val qFlat = qCodes.select(col("query_id") +:
       (0 until SrpBanded.Bands).map(b =>
         element_at(col("q_keys"), b + 1).as(s"q$b")): _*)
-    val full = resolvedFrame(spark, dir)
-    // the |Q|·N scoring runs in the code side's tasks: spread the rows
-    // over every core, since a store sized to one or a few buckets
-    // (StoreLayout) is that many files, and a file is one task
-    val cFlat = codesOf(full).repartition(spark.sparkContext.defaultParallelism)
+    val (full, n) = resolved(spark, dir)
+    // the |Q|·N scoring runs in the code side's tasks, about one per
+    // file: a store sized to fewer buckets than cores (StoreLayout) is
+    // spread over every core first; a wider one is scored in place
+    val par = spark.sparkContext.defaultParallelism
+    val codes = if (n < par) codesOf(full).repartition(par) else codesOf(full)
+    val cFlat = codes
       .select(col("vec_id") +:
         (0 until SrpBanded.Bands).map(b =>
           element_at(col("keys"), b + 1).as(s"c$b")): _*)
@@ -337,7 +343,9 @@ object CodeStore {
       .select(col("vec_id"),
         lit(null).cast("array<long>").as("keys"),
         lit(null).cast("array<float>").as("embedding"))
-    // a delta keeps its live base's count
+    // a delta keeps its live base's count — read off the pin, not
+    // [[buckets]]: an upsert never reads the store, and [[buckets]]
+    // would open a read handle that this publish then drops
     val n = StoreLayout.pinned(spark, s"$dir/codes", Versioned.live(spark, chain(dir)), Partitions)
     val delta = valid.unionByName(tomb)
       .withColumn("pb", pmod(col("vec_id"), lit(n.toLong)))
@@ -349,10 +357,10 @@ object CodeStore {
   }
 
   /** [[Versioned.fold]] the chain back into ONE full copy, at the
-    * count its resolved rows give */
+    * count its live versions' rows give */
   def compact(spark: SparkSession, dir: String): Unit =
-    Versioned.fold(spark, chain(dir))(
-      writeSized(resolvedFrame(spark, dir).drop("pb"), dir, _))
+    Versioned.fold(spark, chain(dir))(writeSized(resolvedFrame(spark, dir).drop("pb"),
+      StoreLayout.liveRows(spark, chain(dir), s"$dir/codes/data"), dir, _))
 
   // one code store per corpus dir, built lazily for the queries()
   // entry — a real deployment writes it at ingest time

@@ -44,8 +44,9 @@ object EdgeStore {
     * subset */
   val EdgePartitions = 64
 
-  /** bytes of one row: src, dst, Dim embedding floats */
-  private val RowBytes = 16L + 4L * SrpBanded.Dim
+  /** bytes of one edge row: src, dst, Dim embedding floats (an HNSW
+    * layer row too) */
+  private[graft] val RowBytes = 16L + 4L * SrpBanded.Dim
 
   private[graft] def chain(dir: String): Versioned.Chain =
     Versioned.Chain(dir, s"$dir/edges",
@@ -61,13 +62,12 @@ object EdgeStore {
       .partitionBy("__ver", "pb")
       .parquet(s"$dir/edges/data")
 
-  /** write `rows` as version v at the count its size gives (a full
-    * build or a fold), and pin that count as v's layout */
-  private def writeSized(rows: DataFrame, dir: String, v: Int): Unit = {
-    val n = StoreLayout.sized(rows.count(), RowBytes, EdgePartitions)
-    writeVer(rows, dir, v, n)
-    StoreLayout.pin(rows.sparkSession, s"$dir/edges", v, n)
-  }
+  /** write `rows` (`count` of them) as version v at the count their
+    * size gives (a full build or a fold), and pin that count as v's
+    * layout */
+  private def writeSized(rows: DataFrame, count: Long, dir: String, v: Int): Unit =
+    StoreLayout.writeSized(rows.sparkSession, s"$dir/edges", v, count, RowBytes, EdgePartitions)(
+      writeVer(rows, dir, v, _))
 
   /** Full build: `edges` must carry (src, dst, dst_emb) — the
     * checkpointed serve graphs ([[SrpBanded.materializedGraph]] /
@@ -75,7 +75,8 @@ object EdgeStore {
     * version 0 of the chain. */
   def write(spark: SparkSession, edges: DataFrame, dir: String): Unit =
     Versioned.create(spark, chain(dir), s"$dir/edges") {
-      writeSized(edges.select(col("src"), col("dst"), col("dst_emb")), dir, 0)
+      val rows = edges.select(col("src"), col("dst"), col("dst_emb"))
+      writeSized(rows, rows.count(), dir, 0)
     }
 
   // a serving process opens the edge table once; the handle caches
@@ -100,7 +101,7 @@ object EdgeStore {
         StoreLayout.pinned(spark, s"$dir/edges", vers, EdgePartitions))
     }
 
-  private def resolvedFrame(spark: SparkSession, dir: String): DataFrame = resolved(spark, dir)._1
+  private[graft] def resolvedFrame(spark: SparkSession, dir: String): DataFrame = resolved(spark, dir)._1
 
   /** the pb count the live store was written at */
   private[graft] def buckets(spark: SparkSession, dir: String): Int = resolved(spark, dir)._2
@@ -221,8 +222,7 @@ object EdgeStore {
         .select(col("src"), lit(null).cast("long").as("dst"),
           lit(null).cast("array<float>").as("dst_emb"))
       // a delta keeps its live base's count
-      val n = StoreLayout.pinned(spark, s"$edgeDir/edges",
-        Versioned.live(spark, chain(edgeDir)), EdgePartitions)
+      val n = buckets(spark, edgeDir)
       val delta = newEdges.unionByName(tomb)
         .withColumn("pb", pmod(col("src"), lit(n.toLong)))
         .localCheckpoint(true)
@@ -235,11 +235,11 @@ object EdgeStore {
   }
 
   /** [[Versioned.fold]] the chain back into ONE full copy, at the
-    * count its resolved rows give: one O(store) scan+write amortized
+    * count its live versions' rows give: one O(store) scan+write amortized
     * over [[Versioned.CompactAfter]] O(update) deltas. */
   def compact(spark: SparkSession, dir: String): Unit =
-    Versioned.fold(spark, chain(dir))(
-      writeSized(resolvedFrame(spark, dir).drop("pb"), dir, _))
+    Versioned.fold(spark, chain(dir))(writeSized(resolvedFrame(spark, dir).drop("pb"),
+      StoreLayout.liveRows(spark, chain(dir), s"$dir/edges/data"), dir, _))
 
   // one refined-edge store per corpus dir, built lazily for the
   // queries() entry — a real deployment writes it after each offline

@@ -43,9 +43,6 @@ object HnswStore {
     * EdgeStore's 64 keeps files non-tiny */
   val LayerPartitions = 16
 
-  /** bytes of one layer row: src, dst, Dim embedding floats */
-  private val RowBytes = 16L + 4L * SrpBanded.Dim
-
   /** a layer version's data: its `__ver` partition, its entry and (a
     * full build's or fold's) pb count */
   private[graft] def chain(dir: String): Versioned.Chain =
@@ -68,21 +65,20 @@ object HnswStore {
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/entry/v$v")
   }
 
-  /** write `layers` as version v at the count their size gives (a
-    * full build or a fold), and pin that count as v's layout */
+  /** write `layers` (`count` rows) as version v at the count their
+    * size gives (a full build or a fold), and pin that count as v's
+    * layout */
   private def writeSized(spark: SparkSession, dir: String, v: Int, layers: DataFrame,
-                         entry: (Long, Array[Float])): Unit = {
-    val n = StoreLayout.sized(layers.count(), RowBytes, LayerPartitions)
-    writeVer(spark, dir, v, layers, entry, n)
-    StoreLayout.pin(spark, s"$dir/layers", v, n)
-  }
+                         count: Long, entry: (Long, Array[Float])): Unit =
+    StoreLayout.writeSized(spark, s"$dir/layers", v, count, EdgeStore.RowBytes, LayerPartitions)(
+      writeVer(spark, dir, v, layers, entry, _))
 
   def write(spark: SparkSession, d: String, dir: String): Unit = {
     Versioned.create(spark, chain(dir), s"$dir/layers", s"$dir/entry") {
       val layers = (1 to Hnsw.MaxLevel).map { l =>
         Hnsw.layerGraph(spark, d, l).withColumn("layer", lit(l))
       }.reduce(_ unionByName _)
-      writeSized(spark, dir, 0, layers, Hnsw.entryFor(spark, d))
+      writeSized(spark, dir, 0, layers, layers.count(), Hnsw.entryFor(spark, d))
     }
     EdgeStore.write(spark, SrpBanded.materializedGraph(spark, d, 5), s"$dir/l0")
   }
@@ -314,9 +310,8 @@ object HnswStore {
     val banding = SrpStore.bandingFrame(spark, srpDir)
       .withColumn("band", col("band").cast("int"))
       .withColumn("bk", col("bk").cast("long"))
-    val layers = layersFrame(spark, dir)
-    val n = StoreLayout.pinned(spark, s"$dir/layers",
-      Versioned.live(spark, chain(dir)), LayerPartitions)
+    // a delta keeps its live base's count
+    val (layers, n) = this.layers(spark, dir)
     val emb = graft.Tables.embeddings(spark, d)
       .filter(col("embedding").isNotNull &&
         size(col("embedding")) === SrpBanded.Dim)
@@ -360,7 +355,6 @@ object HnswStore {
           lit(null).cast("array<float>").as("dst_emb"))
       newEdges.unionByName(tomb).withColumn("layer", lit(l))
     }.reduce(_ unionByName _)
-      // a delta keeps its live base's count
       .withColumn("pb", pmod(col("src"), lit(n.toLong)))
       .localCheckpoint(true)
     try {
@@ -374,11 +368,12 @@ object HnswStore {
   }
 
   /** [[Versioned.fold]] the layer chain (and its entry) to one full
-    * copy at the count its resolved rows give — [[EdgeStore.compact]]
+    * copy at the count its live versions' rows give — [[EdgeStore.compact]]
     * for the hierarchy. */
   def compact(spark: SparkSession, dir: String): Unit =
     Versioned.fold(spark, chain(dir))(
-      writeSized(spark, dir, _, layersFrame(spark, dir).drop("pb"), storedEntry(spark, dir)))
+      writeSized(spark, dir, _, layersFrame(spark, dir).drop("pb"),
+        StoreLayout.liveRows(spark, chain(dir), s"$dir/layers/data"), storedEntry(spark, dir)))
 
   // one store per corpus dir, built lazily for the queries() entry —
   // a real deployment writes it after each offline build

@@ -22,6 +22,12 @@ object GraftBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `f` over `in` on up to `threads` driver threads — Spark's own
+    * parallel map (`ThreadUtils` is `private[spark]`), the one it reads
+    * parquet footers with */
+  def parmap[I, O](in: Seq[I], prefix: String, threads: Int)(f: I => O): Seq[O] =
+    org.apache.spark.util.ThreadUtils.parmap(in, prefix, threads)(f)
+
   /** Release the block storage behind a `localCheckpoint(true)`-backed
     * DataFrame: its analyzed plan is a `LogicalRDD` over the persisted
     * checkpoint RDD, and `Dataset.unpersist` only clears CacheManager

@@ -2196,17 +2196,30 @@ class OperatorsSpec extends AnyFunSuite {
     * version 0 plus two deltas into a fresh dir, `view` is every row a
     * reader resolves (sorted strings, so a doubled row shows), `fold`
     * is the store's compaction, `verDirs` are the (artifact dir,
-    * name prefix) pairs its versions' data dirs live under, and
-    * `buckets` is a pb store's live bucket count. `view` leaves out
-    * `pb`, a pure function of the id, so a re-sized fold compares
-    * equal row for row. */
+    * name prefix) pairs its versions' data dirs live under, and `pb`
+    * is a pb store's layout. */
   private case class ChainCase(name: String, build: String => Unit,
       view: String => Seq[String], fold: String => Unit,
       chain: String => graft.sources.Versioned.Chain,
-      verDirs: Seq[(String, String)], buckets: Option[String => Int] = None)
+      verDirs: Seq[(String, String)], pb: Option[PbLayout] = None)
+
+  /** A pb store as the chain specs check its layout: the live bucket
+    * count, the resolved rows with their `pb` column, and the id
+    * column `pb` hashes. */
+  private case class PbLayout(buckets: String => Int,
+      rows: String => org.apache.spark.sql.DataFrame, id: String)
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** every resolved row of a pb store sits in bucket pmod(id, n) for
+    * the live count n — a write that hashed under one count and
+    * pinned another fails here */
+  private def assertPbOfId(c: ChainCase, dir: String): Unit = c.pb.foreach { l =>
+    val n = l.buckets(dir)
+    val stray = l.rows(dir).filter(col("pb") =!= pmod(col(l.id), lit(n.toLong))).count()
+    assert(stray == 0, s"${c.name}: $stray rows outside pmod(${l.id}, $n)")
+  }
 
   /** Graph-store delta inputs: two [[StoreFixtures.layerTwins]], the
     * post-ingest corpus holding them, and an SRP store that has
@@ -2244,10 +2257,10 @@ class OperatorsSpec extends AnyFunSuite {
           CodeStore.upsert(spark, dir, vecDelta(0))
           CodeStore.upsert(spark, dir, vecDelta(1))
         },
-        dir => rowsOf(CodeStore.resolvedFrame(spark, dir).drop("pb")),
+        dir => rowsOf(CodeStore.resolvedFrame(spark, dir)),
         CodeStore.compact(spark, _), CodeStore.chain,
         Seq("codes/data" -> "__ver=", "codes/layout" -> "v"),
-        Some(CodeStore.buckets(spark, _))),
+        Some(PbLayout(CodeStore.buckets(spark, _), CodeStore.resolvedFrame(spark, _), "vec_id"))),
       ChainCase("EdgeStore",
         dir => {
           EdgeStore.write(spark, SrpBanded.materializedRefinedGraph(spark, sf), dir)
@@ -2257,18 +2270,18 @@ class OperatorsSpec extends AnyFunSuite {
         dir => rowsOf(EdgeStore.read(spark, dir)),
         EdgeStore.compact(spark, _), EdgeStore.chain,
         Seq("edges/data" -> "__ver=", "edges/layout" -> "v"),
-        Some(EdgeStore.buckets(spark, _))),
+        Some(PbLayout(EdgeStore.buckets(spark, _), EdgeStore.resolvedFrame(spark, _), "src"))),
       ChainCase("HnswStore",
         dir => {
           HnswStore.write(spark, sf, dir)
           HnswStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(0))
           HnswStore.upsert(spark, dir, vecUpdates._2, vecUpdates._3, vecDelta(1))
         },
-        dir => rowsOf(HnswStore.layersFrame(spark, dir).drop("pb")) :+
+        dir => rowsOf(HnswStore.layersFrame(spark, dir)) :+
           HnswStore.storedEntry(spark, dir)._1.toString,
         HnswStore.compact(spark, _), HnswStore.chain,
         Seq("layers/data" -> "__ver=", "entry" -> "v", "layers/layout" -> "v"),
-        Some(HnswStore.layerBuckets(spark, _))),
+        Some(PbLayout(HnswStore.layerBuckets(spark, _), HnswStore.layersFrame(spark, _), "src"))),
       ChainCase("SrpStore banding",
         dir => {
           SrpStore.write(spark, sf, dir)
@@ -2294,6 +2307,7 @@ class OperatorsSpec extends AnyFunSuite {
       val c = chainCases.find(_.name == name).get
       val dir = java.nio.file.Files.createTempDirectory("chain_cw").toString
       c.build(dir)
+      assertPbOfId(c, dir)
       val before = c.view(dir)
       // freeze the crash window: fold published, superseded deletes not
       // yet landed — the state where old ∪ fold would double every
@@ -2311,6 +2325,7 @@ class OperatorsSpec extends AnyFunSuite {
       // below it are invisible even though their markers/data remain
       assert(Versioned.live(spark, c.chain(dir)) == Seq(3))
       assert(c.view(dir) == before, "crash window doubled, lost or changed rows")
+      assertPbOfId(c, dir)
       // any later compact (the crash re-run) reclaims the stale versions
       c.fold(dir)
       val marksAfter = markerNames(c.chain(dir))
@@ -2320,6 +2335,7 @@ class OperatorsSpec extends AnyFunSuite {
         assert(vers == Seq(s"${prefix}3"), s"$sub left ${vers.mkString(",")}")
       }
       assert(c.view(dir) == before, "GC re-run changed rows")
+      assertPbOfId(c, dir)
     }
   }
 
@@ -2327,13 +2343,20 @@ class OperatorsSpec extends AnyFunSuite {
     test(s"$name fold crash before its marker: the old pb count stays served, the re-run re-sizes") {
       import graft.sources.Versioned
       val c = chainCases.find(_.name == name).get
-      val buckets = c.buckets.get
+      val l = c.pb.get
       val dir = java.nio.file.Files.createTempDirectory("chain_layout").toString
       // a base at the cap; the spec corpus itself sizes to one bucket
       StoreFixtures.atCap(c.build(dir))
-      val cap = buckets(dir)
+      val cap = l.buckets(dir)
       assert(cap > 1, s"fixture store has $cap buckets")
+      assertPbOfId(c, dir)
       val before = c.view(dir)
+      // a re-sized fold moves rows to other buckets and changes nothing
+      // else: the pb store's rows without pb, and the rest of the view
+      // (HNSW's entry)
+      def sansPb(): (Seq[String], Seq[String]) =
+        (rowsOf(l.rows(dir).drop("pb")), c.view(dir).diff(rowsOf(l.rows(dir))))
+      val beforeSansPb = sansPb()
       // the crash: a fold whose data and layout landed but whose c3
       // marker did not — run it with GC held back, then drop c3
       Versioned.gcAfterPublish = false
@@ -2344,13 +2367,15 @@ class OperatorsSpec extends AnyFunSuite {
       assert(new java.io.File(s"${c.chain(dir).root}/layout/v3").isDirectory,
         "the torn fold pinned no layout")
       assert(Versioned.live(spark, c.chain(dir)) == Seq(0, 1, 2))
-      assert(buckets(dir) == cap, "a torn fold's count reached readers")
+      assert(l.buckets(dir) == cap, "a torn fold's count reached readers")
       assert(c.view(dir) == before, "a torn fold changed the rows")
+      assertPbOfId(c, dir)
       // the re-run clears the torn version and publishes a re-sized fold
       c.fold(dir)
       assert(Versioned.live(spark, c.chain(dir)) == Seq(3))
-      assert(buckets(dir) == 1, s"the fold kept ${buckets(dir)} buckets")
-      assert(c.view(dir) == before, "the re-sized fold changed the rows")
+      assert(l.buckets(dir) == 1, s"the fold kept ${l.buckets(dir)} buckets")
+      assertPbOfId(c, dir)
+      assert(sansPb() == beforeSansPb, "the re-sized fold changed the rows")
     }
   }
 
@@ -2363,9 +2388,11 @@ class OperatorsSpec extends AnyFunSuite {
       // deltas publish v<N> exactly as before folds had their own marker
       assert(markerNames(c.chain(dir)) == Set("v0", "v1", "v2"))
       assert(Versioned.live(spark, c.chain(dir)) == Seq(0, 1, 2))
+      assertPbOfId(c, dir)
       val deltas = c.view(dir)
       c.fold(dir)
       assert(c.view(dir) == deltas, "fold changed the resolved rows")
+      assertPbOfId(c, dir)
       // a compaction used to publish its fold as a plain v<N> after
       // deleting the old markers: write that marker state by hand
       val md = new java.io.File(s"${c.chain(dir).root}/_commits")
@@ -2373,6 +2400,7 @@ class OperatorsSpec extends AnyFunSuite {
       Tables.invalidate(dir)
       assert(Versioned.live(spark, c.chain(dir)) == Seq(3))
       assert(c.view(dir) == deltas, "a v<N>-only store reads differently")
+      assertPbOfId(c, dir)
     }
   }
 

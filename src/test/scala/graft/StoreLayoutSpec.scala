@@ -117,6 +117,8 @@ class StoreLayoutSpec extends AnyFunSuite {
         assert(new java.io.File(s"$dir/codes/data/__ver=1").list().toSeq == Seq("pb=0"),
           "the delta was not written at its base's count")
         val grown = queries.map(q => rows(CodeStore.search(spark, dir, q)))
+        // the fold sizes from its live versions' footers: base + delta
+        assert(StoreLayout.liveRows(spark, CodeStore.chain(dir), s"$dir/codes/data") == n)
         CodeStore.compact(spark, dir)
         assert(Versioned.live(spark, CodeStore.chain(dir)) == Seq(2))
         assert(CodeStore.buckets(spark, dir) == 8, "the fold did not re-derive the count")

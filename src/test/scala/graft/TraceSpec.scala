@@ -56,13 +56,14 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
     GraftBridge.drainListenerBus(spark)
     PlanFiles.files.set(0L)
     spark.listenerManager.register(PlanFiles)
-    sc.setJobGroup(group, group, interruptOnCancel = false)
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val (_, rec) = try trace.span(serve.collect()) finally sc.clearJobGroup()
-    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-    GraftBridge.drainListenerBus(spark)
-    spark.listenerManager.unregister(PlanFiles)
-    (rec, sc.statusTracker.getJobIdsForGroup(group).length, compiles, PlanFiles.files.get)
+    try {
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (_, rec) = try trace.span(serve.collect()) finally sc.clearJobGroup()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      GraftBridge.drainListenerBus(spark)
+      (rec, sc.statusTracker.getJobIdsForGroup(group).length, compiles, PlanFiles.files.get)
+    } finally spark.listenerManager.unregister(PlanFiles)
   }
 
   private def check[A](name: String, serve: A => DataFrame, a: A, b: A): Unit = {

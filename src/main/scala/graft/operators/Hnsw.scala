@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{bound, vectors}
+import graft.functions.vectors
 
 /** Hierarchical navigable graph search (HNSW, Malkov & Yashunin
   * TPAMI'18 — public), batch-built and deterministic so the whole
@@ -226,8 +226,7 @@ object Hnsw {
       queryVec: Array[Float], descentBeam: Int = DescentBeam,
       maxSteps: Int = MaxSteps): Seq[(Long, Double)] =
     descentPoolBy(spark, entryFor(spark, d), queryVec,
-      (l, frontier) => fetchScoredDf(layerGraph(spark, d, l)
-        .filter(bound.isin(col("src"), frontier)), queryVec),
+      (l, frontier) => SrpBanded.graphFetch(layerGraph(spark, d, l), queryVec)(frontier),
       descentBeam, maxSteps)
 
   /** v31: hierarchical search — descent seeds, then the shared
@@ -239,10 +238,10 @@ object Hnsw {
              refined: Boolean = false,
              descentBeam: Int = DescentBeam, maxSteps: Int = MaxSteps): DataFrame = {
     val pool = descentPool(spark, d, queryVec, descentBeam, maxSteps)
-    val g0 = if (refined)
-      Some(SrpBanded.materializedRefinedGraph(spark, d, graphK)) else None
-    SrpBanded.graphSearchFromLocal(spark, d, pool, queryVec,
-      k, beam, iters, maxEntries, graphK, graphOverride = g0)
+    SrpBanded.graphSearchFromLocal(spark, pool, k, beam, iters, maxEntries,
+      SrpBanded.graphFetch(
+        if (refined) SrpBanded.materializedRefinedGraph(spark, d, graphK)
+        else SrpBanded.materializedGraph(spark, d, graphK), queryVec))
   }
 
   /** (query_id, vec_id, c_vec) pairs → exact cosine, the candidate

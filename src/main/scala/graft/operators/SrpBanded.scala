@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Round, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.Tables
 import graft.functions.vectors
 
@@ -826,8 +826,8 @@ object SrpBanded {
                   k: Int = 10, beam: Int = 8, iters: Int = 2,
                   maxEntries: Int = 64, graphK: Int = 5,
                   probeRadius: Int = 2): DataFrame =
-    graphSearchFrom(spark, d, scoredProbePool(spark, d, queryVec, probeRadius),
-      queryVec, k, beam, iters, maxEntries, graphK)
+    graphSearchFrom(spark, scoredProbePool(spark, d, queryVec, probeRadius),
+      k, beam, iters, maxEntries, graphFetch(materializedGraph(spark, d, graphK), queryVec))
 
   /** v25: the same multi-probe + beam serve path, expanding over the
     * NN-Descent-REFINED graph (v21's output edges) instead of the raw
@@ -841,9 +841,9 @@ object SrpBanded {
                          k: Int = 10, beam: Int = 8, iters: Int = 2,
                          maxEntries: Int = 64, graphK: Int = 5,
                          rounds: Int = 3, probeRadius: Int = 2): DataFrame =
-    graphSearchFrom(spark, d, scoredProbePool(spark, d, queryVec, probeRadius),
-      queryVec, k, beam, iters, maxEntries, graphK,
-      graphOverride = Some(materializedRefinedGraph(spark, d, graphK, graphK, rounds)))
+    graphSearchFrom(spark, scoredProbePool(spark, d, queryVec, probeRadius),
+      k, beam, iters, maxEntries,
+      graphFetch(materializedRefinedGraph(spark, d, graphK, graphK, rounds), queryVec))
 
   /** v26: BATCHED graph-ANN — the whole query table served in one
     * set-based plan, the graph analogue of [[IvfIndex.similarityJoin]]
@@ -1354,46 +1354,55 @@ object SrpBanded {
     * uses), and keeping it lazy instead would re-execute the seed
     * scan once per DAG reference (~6× the probed-bucket IO per
     * query: measured 6.5 s → 0.9 s on the stored path at sf0.1).
-    * Each hop stays distributed: one broadcast equi-join against the
-    * checkpointed edge table, one bounded-candidate scoring join. */
-  private[graft] def graphSearchFrom(spark: SparkSession, d: String,
-      scoredPool: DataFrame, queryVec: Array[Float], k: Int, beam: Int,
-      iters: Int, maxEntries: Int, graphK: Int,
-      graphOverride: Option[DataFrame] = None,
-      edgesFor: Option[Seq[Long] => DataFrame] = None): DataFrame = {
+    * Each hop is one `fetchScored` call ([[walkFromSeed]]). */
+  private[graft] def graphSearchFrom(spark: SparkSession,
+      scoredPool: DataFrame, k: Int, beam: Int, iters: Int, maxEntries: Int,
+      fetchScored: Seq[Long] => Map[Long, Array[(Long, Double)]]): DataFrame =
     topKCut(spark,
-      graphWalkVisited(spark, d, scoredPool, queryVec, beam,
-        iters, maxEntries, graphK, graphOverride, edgesFor), k)
-  }
+      graphWalkVisited(scoredPool, beam, iters, maxEntries, fetchScored), k)
 
   /** [[graphSearchFrom]] over an ALREADY-LOCAL scored pool (an HNSW
     * descent path, model-sized by construction) — the seed cut is the
     * same (sim DESC, id ASC) total order, applied driver-side, so the
     * Spark job the DataFrame seed cut costs disappears from the serve
     * while the rows stay identical. */
-  private[graft] def graphSearchFromLocal(spark: SparkSession, d: String,
-      pool: Seq[(Long, Double)], queryVec: Array[Float], k: Int, beam: Int,
-      iters: Int, maxEntries: Int, graphK: Int,
-      graphOverride: Option[DataFrame] = None,
-      edgesFor: Option[Seq[Long] => DataFrame] = None): DataFrame = {
+  private[graft] def graphSearchFromLocal(spark: SparkSession,
+      pool: Seq[(Long, Double)], k: Int, beam: Int, iters: Int, maxEntries: Int,
+      fetchScored: Seq[Long] => Map[Long, Array[(Long, Double)]]): DataFrame =
     topKCut(spark,
-      walkFromSeed(spark, d, pool.sortWith(simDescIdAsc).take(maxEntries),
-        queryVec, beam, iters, graphK, graphOverride, edgesFor), k)
-  }
+      walkFromSeed(pool.sortWith(simDescIdAsc).take(maxEntries), beam, iters,
+        fetchScored), k)
+
+  /** The in-memory serve graph's scored fetch: a membership filter over
+    * the checkpointed (src, dst, dst_emb) graph ([[materializedGraph]]
+    * or the refined one), scored by [[Hnsw.fetchScoredDf]]. The hop
+    * never touches the corpus table: candidate embeddings arrive in the
+    * edge rows themselves. */
+  private[graft] def graphFetch(graph: => DataFrame,
+      queryVec: Array[Float]): Seq[Long] => Map[Long, Array[(Long, Double)]] =
+    frontier => Hnsw.fetchScoredDf(
+      graph.filter(graft.functions.bound.isin(col("src"), frontier)), queryVec)
+
+  /** (vec_id, rk, sim) of [[topKCut]]: `sim` is nullable because
+    * Spark's `round` is */
+  private[graft] val TopKSchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("rk", IntegerType, nullable = false),
+    StructField("sim", DoubleType)))
 
   /** The ONE (vec_id, rk, sim) emission contract every driver-side
     * serve shares — same (sim DESC, vec_id) total order as the old
-    * window form, the round left as a Spark expression so the emitted
-    * doubles keep the engine's own rounding. FilteredServe's cuts go
+    * window form. Each sim is rounded by Catalyst's own `Round`,
+    * evaluated on the driver, so the emitted doubles keep the engine's
+    * rounding; the rows come back as a local relation, already in `rk`
+    * order, which collects with no Spark job. FilteredServe's cuts go
     * through here too, so the tie/rounding contract cannot fork. */
   private[graft] def topKCut(spark: SparkSession,
       cands: Seq[(Long, Double)], k: Int): DataFrame = {
-    import spark.implicits._
-    cands.sortWith(simDescIdAsc).take(k)
-      .zipWithIndex.map { case ((id, s), i) => (id, i + 1, s) }
-      .toDF("vec_id", "rk", "sim")
-      .select(col("vec_id"), col("rk"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("rk"))
+    val rows = cands.sortWith(simDescIdAsc).take(k).zipWithIndex.map { case ((id, s), i) =>
+      Row(id, i + 1, Round(Literal(s), Literal(6)).eval())
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), TopKSchema)
   }
 
   /** total order matching both engines' DESC sorts: NaN greatest
@@ -1416,41 +1425,27 @@ object SrpBanded {
     * (v39) post-filters and escalates over. Identical walk state and
     * ordering to [[graphSearchFrom]]: that method is now a top-k cut
     * of this one. */
-  private[graft] def graphWalkVisited(spark: SparkSession, d: String,
-      scoredPool: DataFrame, queryVec: Array[Float], beam: Int,
-      iters: Int, maxEntries: Int, graphK: Int,
-      graphOverride: Option[DataFrame] = None,
-      edgesFor: Option[Seq[Long] => DataFrame] = None): Seq[(Long, Double)] = {
+  private[graft] def graphWalkVisited(scoredPool: DataFrame, beam: Int,
+      iters: Int, maxEntries: Int,
+      fetchScored: Seq[Long] => Map[Long, Array[(Long, Double)]]): Seq[(Long, Double)] = {
     // seed cut: keep the best maxEntries of the scored pool — the one
     // collect whose input is corpus-sized is still cut distributed
     val seed = scoredPool
       .orderBy(col("sim").desc, col("vec_id")).limit(maxEntries)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toSeq
-    walkFromSeed(spark, d, seed, queryVec, beam, iters, graphK,
-      graphOverride, edgesFor)
+    walkFromSeed(seed, beam, iters, fetchScored)
   }
 
   /** The beam hops alone, from an already-cut seed — shared by the
     * DataFrame-pool path above and the local-pool serves
-    * ([[graphSearchFromLocal]], the filtered walks). */
-  private[graft] def walkFromSeed(spark: SparkSession, d: String,
-      seed: Seq[(Long, Double)], queryVec: Array[Float], beam: Int,
-      iters: Int, graphK: Int,
-      graphOverride: Option[DataFrame] = None,
-      edgesFor: Option[Seq[Long] => DataFrame] = None): Seq[(Long, Double)] = {
-    // frontier's out-edges WITH destination embeddings in-row: either
-    // a pruned point read against a persisted edge store (`edgesFor` —
-    // the v28/v32 path, PartitionFilters decided in the file index) or
-    // a membership filter over the checkpointed in-memory serve graph. In
-    // BOTH cases the hop never touches the corpus table: candidate
-    // embeddings arrive in the edge rows themselves, so a beam step at
-    // 100 TB reads O(frontier·graphK) rows, not a corpus scan.
-    val edgesOf: Seq[Long] => DataFrame = edgesFor.getOrElse { frontier =>
-      graphOverride.getOrElse(materializedGraph(spark, d, graphK))
-        .filter(graft.functions.bound.isin(col("src"), frontier))
-        .select(col("src"), col("dst"), col("dst_emb"))
-    }
-    val q = typedLit(queryVec)
+    * ([[graphSearchFromLocal]], the filtered walks). `fetchScored`
+    * gives the frontier's out-edges already scored (src → (dst, sim)),
+    * the seam [[Hnsw.descentPoolBy]] uses: a Spark read
+    * ([[Hnsw.fetchScoredDf]] — a pruned [[graft.sources.EdgeStore]]
+    * point read or [[graphFetch]]) or a driver-cache lookup
+    * ([[Hnsw.fetchScoredLocal]]), bit-identical doubles either way. */
+  private[graft] def walkFromSeed(seed: Seq[(Long, Double)], beam: Int, iters: Int,
+      fetchScored: Seq[Long] => Map[Long, Array[(Long, Double)]]): Seq[(Long, Double)] = {
     val visited = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
     seed.foreach { case (id, s) => visited.update(id, s) }
     var frontier: Seq[Long] = seed.map(_._1).toSeq
@@ -1458,8 +1453,8 @@ object SrpBanded {
     // within the serve, so each frontier member is READ at most once
     // across the beam hops — carried-over members (a converging beam
     // keeps most of its frontier) and fully-repeated hops merge from
-    // the cache with no Spark job. Duplicate dsts carry bit-identical
-    // sims (same in-row embedding bytes, same expression), so merging
+    // the cache with no fetch. Duplicate dsts carry bit-identical
+    // sims (same in-row embedding bytes, same kernel), so merging
     // cached rows equals the former per-hop re-read + dropDuplicates.
     val fetched = scala.collection.mutable.Map.empty[Long, Array[(Long, Double)]]
     (1 to iters).foreach { _ =>
@@ -1469,16 +1464,8 @@ object SrpBanded {
       // are bit-identical to the former corpus-join form
       val need = frontier.filterNot(fetched.contains)
       if (need.nonEmpty) {
-        val bySrc = edgesOf(need)
-          .select(col("src"), col("dst").as("vec_id"),
-            vectors.cosine_sim(col("dst_emb"), q).as("sim"))
-          .collect()
-          .map(r => (r.getAs[Long]("src"),
-            (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))))
-          .groupBy(_._1)
-        need.foreach { s =>
-          fetched(s) = bySrc.get(s).map(_.map(_._2)).getOrElse(Array.empty)
-        }
+        val bySrc = fetchScored(need)
+        need.foreach { s => fetched(s) = bySrc.getOrElse(s, Array.empty) }
       }
       val nb = frontier.flatMap(fetched(_))
       val candMap = scala.collection.mutable.LinkedHashMap.empty[Long, Double]

@@ -122,44 +122,51 @@ object HnswStore {
     * for the partition-pruning assertion */
   @volatile var lastLayerPlanThunk: () => String = () => ""
   def lastLayerPlan: String = lastLayerPlanThunk()
-  /** which layers the last serve's descent answered from the driver
-    * cache — spec hook for the local-descent contract */
+  /** which layers the last serve answered from the driver cache (0 is
+    * the `l0` beam walk) — spec hook for the local-serve contract */
   @volatile var lastLocalLayers: Set[Int] = Set.empty
 
-  /** Driver-side upper-layer cache budget. The hierarchy thins 4× per
+  /** Driver-side layer cache budget. The hierarchy thins 4× per
     * level, so the TOP layers are always tiny; whether a given layer
     * fits the driver is a byte question, answered per store from the
     * layer's edge count. Layers over budget keep the distributed
-    * pruned point read — at 100 TB that is layer 1 (and the budget is
-    * the honesty: nothing corpus-sized is ever collected). `var` so
-    * specs can force the distributed path (set 0) and assert identity
-    * against the cached one. The budget is the AGGREGATE across every
-    * cached store: per-entry admission gets budget/[[LayerCacheEntries]],
-    * so a gateway opening many stores cannot pin entries×budget of
-    * driver heap while each entry individually claims honesty. */
+    * pruned point read — at 100 TB that is layer 1 and `l0` (and the
+    * budget is the honesty: nothing corpus-sized is ever collected).
+    * `var` so specs can force the distributed path (set 0) and assert
+    * identity against the cached one. The budget is the AGGREGATE
+    * across every cached store: per-entry admission gets
+    * budget/[[LayerCacheEntries]], so a gateway opening many stores
+    * cannot pin entries×budget of driver heap while each entry
+    * individually claims honesty. */
   @volatile var LayerCacheBudgetBytes: Long = 256L << 20
   /** cache slots; per-store admission ceiling = budget / entries */
   val LayerCacheEntries = 8
   /** conservative JVM bytes per cached edge: ids + boxed tuple/array
     * overhead + Dim floats */
-  private def edgeBytes: Long = 96L + 4L * SrpBanded.Dim
+  private[graft] def edgeBytes: Long = 96L + 4L * SrpBanded.Dim
 
   private val localLayerCache =
     new graft.SessionCache[(String, Long), Map[Int, Map[Long, Array[(Long, Array[Float])]]]](
       LayerCacheEntries, _._1)
 
-  /** The upper layers that fit [[LayerCacheBudgetBytes]], collected
-    * ONCE per opened store (top layer first — the exponential thinning
-    * means the cheapest layers admit first) as driver-side maps
-    * layer → src → (dst, dst_emb). A per-job listener attributed the ~1 s
-    * single-query floor to ~21 dependent point-read JOBS × driver
-    * scheduling overhead; the descent over cached layers runs with
-    * zero jobs, leaving only the layer-0 beam hops distributed. */
+  /** The layers that fit [[LayerCacheBudgetBytes]], collected ONCE per
+    * opened store as driver-side maps layer → src → (dst, dst_emb):
+    * the upper layers top first (the exponential thinning means the
+    * cheapest layers admit first), then the `l0` [[EdgeStore]] as
+    * layer 0, the largest. One job counts every layer's edges and one
+    * collects the admitted ones. With every layer admitted a warm
+    * serve (descent and layer-0 beam walk) runs with zero Spark jobs;
+    * a layer over its share keeps the pruned point read. The entry is
+    * keyed by `dir`, so a commit under `dir` (`layers/` or `l0/`)
+    * drops it through [[graft.Tables.invalidate]]. */
   private[graft] def localLayers(spark: SparkSession,
       dir: String): Map[Int, Map[Long, Array[(Long, Array[Float])]]] =
     localLayerCache.getOrElseUpdate(spark, (dir, LayerCacheBudgetBytes)) {
-      val layers = layersFrame(spark, dir)
-      val counts = layers.groupBy(col("layer")).count().collect()
+      val all = layersFrame(spark, dir)
+        .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
+        .unionByName(EdgeStore.read(spark, s"$dir/l0").select(lit(0).as("layer"),
+          col("src"), col("dst"), col("dst_emb")))
+      val counts = all.groupBy(col("layer")).count().collect()
         .map(r => (r.getInt(0), r.getLong(1))).sortBy(-_._1)
       val perStore = LayerCacheBudgetBytes / LayerCacheEntries
       val admit = counts.foldLeft((perStore, Set.empty[Int])) {
@@ -168,19 +175,26 @@ object HnswStore {
           if (b <= left) (left - b, ok + l) else (left, ok)
       }._2
       if (admit.isEmpty) Map.empty
-      else layers.filter(col("layer").isin(admit.toSeq: _*))
-        .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
+      else all.filter(col("layer").isin(admit.toSeq: _*))
         .collect()
         .groupBy(_.getInt(0))
         .map { case (l, rows) =>
+          // a dst's in-edges carry the same embedding: hold one array
+          // per (dst, bytes), not one per edge
+          val embs = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
+          def shared(dst: Long, e: Array[Float]): Array[Float] = embs.get(dst) match {
+            case Some(h) if java.util.Arrays.equals(h, e) => h
+            case _ => embs(dst) = e; e
+          }
           l -> rows.groupBy(_.getLong(1)).map { case (s, es) =>
-            s -> es.map(r => (r.getLong(2), r.getSeq[Float](3).toArray))
+            s -> es.map(r => (r.getLong(2), shared(r.getLong(2), r.getSeq[Float](3).toArray)))
           }
         }
     }
 
-  /** The store-backed descent fetch: driver-cache hit where the layer
-    * is admitted, pruned (layer, pb) point read otherwise — the SAME
+  /** The store-backed fetch, layer 0 included: driver-cache hit where
+    * the layer is admitted, pruned point read otherwise ((layer, pb)
+    * of the upper layers, [[EdgeStore.edgesFor]] on `l0`) — the SAME
     * edges and bit-identical scores either way. */
   private def storeFetch(spark: SparkSession, dir: String,
       queryVec: Array[Float]): (Int, Seq[Long]) => Map[Long, Array[(Long, Double)]] = {
@@ -190,6 +204,8 @@ object HnswStore {
     (l, frontier) =>
       cached.get(l) match {
         case Some(m) => Hnsw.fetchScoredLocal(m, frontier, queryVec)
+        case None if l == 0 =>
+          Hnsw.fetchScoredDf(EdgeStore.edgesFor(spark, s"$dir/l0", frontier), queryVec)
         case None =>
           val pbs = frontier.map(Math.floorMod(_, n.toLong)).distinct
           val step = frame
@@ -201,21 +217,22 @@ object HnswStore {
   }
 
   /** v32: v31's search served ENTIRELY from the persisted artifacts —
-    * entry from `entry/`, walk steps from the driver layer cache (or
-    * pruned (layer, pb) partitions where over budget), layer-0 hops
-    * from the stored [[EdgeStore]] — all of which carry their
-    * embeddings in-row, so no stage of the serve path reads the corpus
-    * table (note the signature: no corpus dir). Identical rows to the
+    * entry from `entry/`, descent steps and layer-0 hops from the
+    * driver layer cache, or where a layer is over budget from pruned
+    * (layer, pb) partitions and the stored [[EdgeStore]] — all of
+    * which carry their embeddings in-row, so no stage of the serve
+    * path reads the corpus table (note the signature: no corpus dir).
+    * One scored fetch serves both the descent and the beam walk, so
+    * a warm serve with every layer cached runs no Spark job (the
+    * emission is a local relation). Identical rows to the
     * in-memory path (same edges, same IEEE scores), so it shares v31's
     * oracle. */
   def search(spark: SparkSession, dir: String,
              queryVec: Array[Float], k: Int = 10, beam: Int = 16,
              iters: Int = 3, maxEntries: Int = 64): DataFrame = {
-    val pool = Hnsw.descentPoolBy(spark, storedEntry(spark, dir), queryVec,
-      storeFetch(spark, dir, queryVec))
-    SrpBanded.graphSearchFromLocal(spark, dir, pool, queryVec,
-      k, beam, iters, maxEntries, graphK = 5,
-      edgesFor = Some(fr => EdgeStore.edgesFor(spark, s"$dir/l0", fr)))
+    val fetch = storeFetch(spark, dir, queryVec)
+    val pool = Hnsw.descentPoolBy(spark, storedEntry(spark, dir), queryVec, fetch)
+    SrpBanded.graphSearchFromLocal(spark, pool, k, beam, iters, maxEntries, fetch(0, _))
   }
 
   /** Metadata-filtered serve for the hierarchy family — v39's
@@ -247,12 +264,10 @@ object HnswStore {
                      codeScanMax: Long = FilteredServe.CodeScanMax): DataFrame =
     FilteredServe.searchFilteredByTerms(spark, metaDir, queryVec, terms, k,
       exactScanMax, codeScanMax) { f =>
-      val pool = Hnsw.descentPoolBy(spark, storedEntry(spark, dir), queryVec,
-        storeFetch(spark, dir, queryVec))
-      SrpBanded.walkFromSeed(spark, dir,
-        pool.sortWith(SrpBanded.simDescIdAsc).take(maxEntries * f), queryVec,
-        beam * math.min(f, 4), iters, graphK = 5,
-        edgesFor = Some(fr => EdgeStore.edgesFor(spark, s"$dir/l0", fr)))
+      val fetch = storeFetch(spark, dir, queryVec)
+      val pool = Hnsw.descentPoolBy(spark, storedEntry(spark, dir), queryVec, fetch)
+      SrpBanded.walkFromSeed(pool.sortWith(SrpBanded.simDescIdAsc).take(maxEntries * f),
+        beam * math.min(f, 4), iters, fetch(0, _))
     }
 
   /** v34: the BATCHED hierarchical serve ([[Hnsw.searchBatch]], v33)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.SrpBanded
+import graft.operators.{Hnsw, SrpBanded}
 import graft.functions.vectors
 
 /** On-disk SRP-banded LSH table — the persisted serve path for v19's
@@ -483,18 +483,18 @@ object SrpStore {
   def graphSearch(spark: SparkSession, d: String, dir: String,
                   queryVec: Array[Float], k: Int = 10, beam: Int = 8,
                   iters: Int = 2, maxEntries: Int = 64, graphK: Int = 5,
-                  probeRadius: Int = 2): DataFrame =
+                  probeRadius: Int = 2): DataFrame = {
+    val fetch = SrpBanded.graphFetch(SrpBanded.materializedGraph(spark, d, graphK), queryVec)
     scoredPoolLocal(spark, dir, queryVec, probeRadius) match {
       case Some(pool) =>
         lastSeedSource = "local"
-        SrpBanded.graphSearchFromLocal(spark, d, pool,
-          queryVec, k, beam, iters, maxEntries, graphK)
+        SrpBanded.graphSearchFromLocal(spark, pool, k, beam, iters, maxEntries, fetch)
       case None =>
         lastSeedSource = "pruned"
-        SrpBanded.graphSearchFrom(spark, d,
-          scoredPool(spark, dir, queryVec, probeRadius),
-          queryVec, k, beam, iters, maxEntries, graphK)
+        SrpBanded.graphSearchFrom(spark, scoredPool(spark, dir, queryVec, probeRadius),
+          k, beam, iters, maxEntries, fetch)
     }
+  }
 
   /** v28: FULLY store-backed serving — seeds read from this store's
     * pruned bucket partitions AND hops over a persisted
@@ -526,18 +526,17 @@ object SrpStore {
       edgeDir: String, queryVec: Array[Float], beam: Int, iters: Int,
       maxEntries: Int, graphK: Int,
       probeRadius: Int): Seq[(Long, Double)] = {
-    val edges = Some((fr: Seq[Long]) => EdgeStore.edgesFor(spark, edgeDir, fr))
+    val fetch = (fr: Seq[Long]) =>
+      Hnsw.fetchScoredDf(EdgeStore.edgesFor(spark, edgeDir, fr), queryVec)
     scoredPoolLocal(spark, dir, queryVec, probeRadius) match {
       case Some(pool) =>
         lastSeedSource = "local"
-        SrpBanded.walkFromSeed(spark, dir,
-          pool.sortWith(SrpBanded.simDescIdAsc).take(maxEntries),
-          queryVec, beam, iters, graphK, edgesFor = edges)
+        SrpBanded.walkFromSeed(pool.sortWith(SrpBanded.simDescIdAsc).take(maxEntries),
+          beam, iters, fetch)
       case None =>
         lastSeedSource = "pruned"
-        SrpBanded.graphWalkVisited(spark, dir,
-          scoredPool(spark, dir, queryVec, probeRadius),
-          queryVec, beam, iters, maxEntries, graphK, edgesFor = edges)
+        SrpBanded.graphWalkVisited(scoredPool(spark, dir, queryVec, probeRadius),
+          beam, iters, maxEntries, fetch)
     }
   }
 

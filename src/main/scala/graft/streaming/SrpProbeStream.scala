@@ -40,8 +40,8 @@ object SrpProbeStream {
       // plan is the pruning evidence
       lastSeedPlan = SrpStore.lastSeedScanPlan
       SrpBanded
-        .graphSearchFrom(spark, d, pool, qv, k,
-          beam = 8, iters = 2, maxEntries = 64, graphK = 5)
+        .graphSearchFrom(spark, pool, k, beam = 8, iters = 2, maxEntries = 64,
+          SrpBanded.graphFetch(SrpBanded.materializedGraph(spark, d, 5), qv))
         .select(lit(qid).as("query_id"), col("vec_id").as("neighbor_id"),
           col("rk"), col("sim"))
     }

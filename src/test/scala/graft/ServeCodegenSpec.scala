@@ -87,10 +87,10 @@ class ServeCodegenSpec extends AnyFunSuite {
       // the same walk with the layer-0 hop read as the inlined isin filter
       val pool = Hnsw.descentPoolBy(spark, HnswStore.storedEntry(spark, dir), qb,
         (l, fr) => Hnsw.fetchScoredLocal(HnswStore.localLayers(spark, dir)(l), fr, qb))
-      val ref = SrpBanded.graphSearchFromLocal(spark, dir, pool, qb, k = 10,
-        beam = 16, iters = 3, maxEntries = 64, graphK = 5,
-        edgesFor = Some(fr => EdgeStore.read(spark, s"$dir/l0")
-          .filter(col("src").isin(fr: _*))))
+      val ref = SrpBanded.graphSearchFromLocal(spark, pool, k = 10,
+        beam = 16, iters = 3, maxEntries = 64,
+        fetchScored = fr => Hnsw.fetchScoredDf(EdgeStore.read(spark, s"$dir/l0")
+          .filter(col("src").isin(fr: _*)), qb))
       assert(got == rows(ref))
     } finally graft.sources.TempStores.delete(dir)
   }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FakeEmbedder
-import graft.operators.SimilaritySearch
-import graft.sources.{CodeStore, FilteredServe, HnswStore, SigStore}
+import graft.operators.{Hnsw, SimilaritySearch}
+import graft.sources.{CodeStore, EdgeStore, FilteredServe, HnswStore, SigStore, SrpStore}
 
 /** How many Spark jobs one warm single-request serve runs — the job
   * count is the serve's scheduling cost, so a plan change that adds a
@@ -79,22 +79,48 @@ class ServeJobsSpec extends AnyFunSuite {
     } finally graft.sources.TempStores.delete(dir)
   }
 
-  test("filtered exact tier: ≤ 4 jobs") {
+  test("filtered exact tier: ≤ 1 job") {
     val dir = Files.createTempDirectory("jobs-meta").toString
     try {
       FilteredServe.writeMeta(spark, sf, dir)
       warmJobs[Array[Float]]("filtered", q => FilteredServe.searchFiltered(
         spark, sf, dir, "/nonexistent/edge-store", q, Seq("lang" -> "en"), k = 5,
-        exactScanMax = Long.MaxValue), qa, qb, max = 4)
+        exactScanMax = Long.MaxValue), qa, qb, max = 1)
       assert(FilteredServe.lastFilteredPath == "exact")
     } finally graft.sources.TempStores.delete(dir)
   }
 
-  test("HNSW serve: ≤ 6 jobs") {
+  test("HNSW serve: 0 jobs from the layer cache, 15 at budget 0") {
     val dir = Files.createTempDirectory("jobs-hnsw").toString
     try {
       HnswStore.write(spark, sf, dir)
-      warmJobs[Array[Float]]("hnsw", q => HnswStore.search(spark, dir, q), qa, qb, max = 6)
+      warmJobs[Array[Float]]("hnsw", q => HnswStore.search(spark, dir, q), qa, qb, max = 0)
+      assert(HnswStore.lastLocalLayers == (0 to Hnsw.MaxLevel).toSet)
+      // no layer admitted: every descent step and layer-0 hop is a
+      // pruned point read
+      val prev = HnswStore.LayerCacheBudgetBytes
+      try {
+        HnswStore.LayerCacheBudgetBytes = 0L
+        val q = (x: Array[Float]) => HnswStore.search(spark, dir, x)
+        q(qa).collect()
+        val n = jobs(q(qb))
+        info(s"hnsw at budget 0: $n jobs")
+        assert(HnswStore.lastLocalLayers.isEmpty)
+        assert(n == 15, s"hnsw at budget 0: a warm request ran $n jobs, pinned 15")
+      } finally HnswStore.LayerCacheBudgetBytes = prev
     } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("v28 cold graph serve: 2 jobs, the pruned layer-0 hops") {
+    val srpDir = SrpStore.storeFor(spark, sf)
+    val edgeDir = EdgeStore.refinedStoreFor(spark, sf)
+    // seeds from the driver bucket cache and a local emission: the
+    // jobs are the two beam hops' pruned edge reads (iters = 2)
+    val q = (x: Array[Float]) => SrpStore.graphSearchCold(spark, srpDir, edgeDir, x)
+    q(qa).collect()
+    val n = jobs(q(qb))
+    info(s"v28 graphSearchCold: $n jobs")
+    assert(SrpStore.lastSeedSource == "local")
+    assert(n == 2, s"v28: a warm request ran $n jobs, pinned 2")
   }
 }

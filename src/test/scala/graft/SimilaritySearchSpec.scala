@@ -604,9 +604,10 @@ class SimilaritySearchSpec extends AnyFunSuite {
     def seedExcludedSearch(): Set[Long] = {
       val pool = graft.sources.SrpStore.scoredPool(spark, srpDir, twin)
         .filter(col("vec_id") =!= newId)
-      graft.operators.SrpBanded.graphSearchFrom(spark, d2, pool, twin,
-          k = 10, beam = 8, iters = 2, maxEntries = 64, graphK = 5,
-          edgesFor = Some(fr => graft.sources.EdgeStore.edgesFor(spark, edgeDir, fr)))
+      graft.operators.SrpBanded.graphSearchFrom(spark, pool,
+          k = 10, beam = 8, iters = 2, maxEntries = 64,
+          fetchScored = fr => graft.operators.Hnsw.fetchScoredDf(
+            graft.sources.EdgeStore.edgesFor(spark, edgeDir, fr), twin))
         .collect().map(_.getAs[Long]("vec_id")).toSet
     }
     assert(!seedExcludedSearch().contains(newId),
@@ -794,35 +795,54 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rk"), r.getAs[Double]("sim")))
     assert(stored.sameElements(inMem),
       s"stored HNSW diverged: ${stored.toSeq} vs ${inMem.toSeq}")
-    // the default serve walks the upper layers from the driver cache
-    // (the single-query latency floor fix) — every layer fits budget
+    // the default serve walks every layer from the driver cache, the
+    // l0 beam graph included (zero jobs per request) — all fit budget
+    assert(graft.sources.HnswStore.lastLocalLayers ==
+      (0 to graft.operators.Hnsw.MaxLevel).toSet,
+      s"serve not answered from the driver layer cache: ${graft.sources.HnswStore.lastLocalLayers}")
+    def serveAt(budget: Long): Seq[(Long, Int, Double)] = {
+      val prevBudget = graft.sources.HnswStore.LayerCacheBudgetBytes
+      graft.sources.EdgeStore.lastEdgePlanThunk = () => ""
+      try {
+        graft.sources.HnswStore.LayerCacheBudgetBytes = budget
+        graft.sources.HnswStore.search(spark, dir, q).collect()
+          .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rk"), r.getAs[Double]("sim"))).toSeq
+      } finally graft.sources.HnswStore.LayerCacheBudgetBytes = prevBudget
+    }
+    // the layer-0 hop read is the pruned EdgeStore point read, with
+    // the destination embedding in-row — corpus-free
+    def assertPrunedHops(): Unit = {
+      val edgePlan = graft.sources.EdgeStore.lastEdgePlan
+      assert(edgePlan.contains("PartitionFilters") && edgePlan.contains("pb"),
+        s"no partition pruning in stored hop read:\n$edgePlan")
+      assert(edgePlan.contains("dst_emb") && !edgePlan.contains("embeddings.parquet"),
+        s"hop read not self-contained:\n$edgePlan")
+    }
+    // force the DISTRIBUTED serve (budget 0): identical rows — the
+    // local kernel twin and the pruned point read are the same serve —
+    // and the layer and hop reads are partition-pruned with no corpus
+    // access
+    val dist = serveAt(0L)
+    assert(dist == stored.toSeq,
+      s"distributed serve diverged from cached: $dist vs ${stored.toSeq}")
+    assert(graft.sources.HnswStore.lastLocalLayers.isEmpty)
+    val plan = graft.sources.HnswStore.lastLayerPlan
+    assert(plan.contains("PartitionFilters") && plan.contains("layer"),
+      s"no partition pruning in stored layer read:\n$plan")
+    assert(!plan.contains("embeddings.parquet"),
+      s"stored layer read touches the corpus table:\n$plan")
+    assertPrunedHops()
+    // a budget that fits the upper layers but not l0: the descent is
+    // local, the layer-0 hops distributed, the rows identical
+    val upper = graft.sources.HnswStore.layersFrame(spark, dir).count()
+    val l0 = graft.sources.EdgeStore.read(spark, s"$dir/l0").count()
+    val split = serveAt(graft.sources.HnswStore.LayerCacheEntries *
+      graft.sources.HnswStore.edgeBytes * (upper + l0 - 1))
     assert(graft.sources.HnswStore.lastLocalLayers ==
       (1 to graft.operators.Hnsw.MaxLevel).toSet,
-      s"descent not served from the driver layer cache: ${graft.sources.HnswStore.lastLocalLayers}")
-    // force the DISTRIBUTED descent (budget 0): identical rows — the
-    // local kernel twin and the pruned point read are the same serve —
-    // and the layer read is partition-pruned with no corpus access
-    val prevBudget = graft.sources.HnswStore.LayerCacheBudgetBytes
-    try {
-      graft.sources.HnswStore.LayerCacheBudgetBytes = 0L
-      val dist = graft.sources.HnswStore.search(spark, dir, q).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rk"), r.getAs[Double]("sim")))
-      assert(dist.sameElements(stored),
-        s"distributed descent diverged from cached: ${dist.toSeq} vs ${stored.toSeq}")
-      assert(graft.sources.HnswStore.lastLocalLayers.isEmpty)
-      val plan = graft.sources.HnswStore.lastLayerPlan
-      assert(plan.contains("PartitionFilters") && plan.contains("layer"),
-        s"no partition pruning in stored layer read:\n$plan")
-      assert(!plan.contains("embeddings.parquet"),
-        s"stored layer read touches the corpus table:\n$plan")
-    } finally graft.sources.HnswStore.LayerCacheBudgetBytes = prevBudget
-    // the layer-0 hop read is the pruned EdgeStore point read, with
-    // the destination embedding in-row — also corpus-free
-    val edgePlan = graft.sources.EdgeStore.lastEdgePlan
-    assert(edgePlan.contains("PartitionFilters") && edgePlan.contains("pb"),
-      s"no partition pruning in stored hop read:\n$edgePlan")
-    assert(edgePlan.contains("dst_emb") && !edgePlan.contains("embeddings.parquet"),
-      s"hop read not self-contained:\n$edgePlan")
+      s"upper layers cached, l0 not: ${graft.sources.HnswStore.lastLocalLayers}")
+    assert(split == stored.toSeq, s"split serve diverged from cached: $split vs ${stored.toSeq}")
+    assertPrunedHops()
   }
 
   test("HnswStore upsert: upserted vector joins its layers without a rebuild, untouched partitions stable") {
@@ -870,6 +890,10 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     val before = verFiles(0)
     assert(before.nonEmpty, "no v0 layer partitions written")
+    // warm the driver layer cache, l0 included, before the upserts
+    graft.sources.HnswStore.search(spark, dir, twin).collect()
+    val warm0 = graft.sources.HnswStore.localLayers(spark, dir)
+    assert(warm0.keySet == (0 to graft.operators.Hnsw.MaxLevel).toSet)
 
     val touched = graft.sources.HnswStore.upsert(spark, dir, d2, srpDir, updates)
     assert(touched.nonEmpty, "upsert touched no layer partitions")
@@ -891,11 +915,29 @@ class SimilaritySearchSpec extends AnyFunSuite {
 
     // functionally: the full stored hierarchy serves the new vector
     // after the layer-0 edge upsert, with no rebuild anywhere
+    // each commit drops the cached layers: the layer delta under
+    // `layers/`, the edge delta under `l0/` (Tables.invalidate's prefix
+    // overlap with the entry's store dir)
+    val warm1 = graft.sources.HnswStore.localLayers(spark, dir)
+    val layerCommitDropped = !(warm1 eq warm0)
+    assert(layerCommitDropped, "the layer upsert left the cached layers in place")
+    val l1HasNew = warm1(1).contains(newId)
+    assert(l1HasNew, "re-collected layer 1 lacks the upserted id")
     graft.sources.EdgeStore.upsert(spark, s"$dir/l0", d2, srpDir, updates)
-    val served = graft.sources.HnswStore.search(spark, dir, twin)
-      .collect().map(_.getAs[Long]("vec_id")).toSet
+    val warm2 = graft.sources.HnswStore.localLayers(spark, dir)
+    val l0CommitDropped = !(warm2 eq warm1)
+    assert(l0CommitDropped, "the l0 upsert left the cached layers in place")
+    val l0HasNew = warm2(0).contains(newId)
+    assert(l0HasNew, "re-collected l0 lacks the upserted id")
+    val servedRows = graft.sources.HnswStore.search(spark, dir, twin).collect().map(_.toSeq).toSeq
+    assert(graft.sources.HnswStore.lastLocalLayers == (0 to graft.operators.Hnsw.MaxLevel).toSet)
+    val served = servedRows.map(_.head.asInstanceOf[Long]).toSet
     assert(served.contains(newId),
       s"stored hierarchy does not serve the upserted vector: $served")
+    // the warm serve equals a fresh session's, which opens the store anew
+    val fresh = graft.sources.HnswStore.search(spark.newSession(), dir, twin)
+      .collect().map(_.toSeq).toSeq
+    assert(servedRows == fresh, s"warm serve $servedRows != fresh session's $fresh")
 
     // append-only crash contract: EVERY committed v0 file
     // byte-identical, the delta confined to the new version
@@ -1009,10 +1051,10 @@ class SimilaritySearchSpec extends AnyFunSuite {
         .map(r => (r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
       assert(stream == batch, s"query $qid: stream $stream != batch $batch")
     }
-    // streaming serves share the batch serve's descent: the upper
-    // layers come from the driver cache (zero jobs per walk step)
+    // streaming serves share the batch serve's walk: every layer, l0
+    // included, comes from the driver cache (zero jobs per walk step)
     assert(graft.sources.HnswStore.lastLocalLayers ==
-      (1 to graft.operators.Hnsw.MaxLevel).toSet,
+      (0 to graft.operators.Hnsw.MaxLevel).toSet,
       s"descent not served from the driver layer cache: ${graft.sources.HnswStore.lastLocalLayers}")
   }
 

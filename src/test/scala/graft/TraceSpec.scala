@@ -66,7 +66,7 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.listenerManager.unregister(PlanFiles)
   }
 
-  private def check[A](name: String, serve: A => DataFrame, a: A, b: A): Unit = {
+  private def check[A](name: String, serve: A => DataFrame, a: A, b: A): Trace.Record = {
     serve(a).collect()
     val (rec, jobs, compiles, files) = traced(serve(b))
     info(s"$name: ${rec.json}")
@@ -74,12 +74,15 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rec.codegenCompiles == compiles,
       s"$name: trace counted ${rec.codegenCompiles} compiles, CodegenMetrics $compiles")
     assert(rec.filesRead == files, s"$name: trace counted ${rec.filesRead} files, the plans $files")
-    assert(name == "lookup" || files > 0, s"$name: a store serve read no file")
+    // a warm HNSW serve reads no file when its layers are cached: the
+    // test below pins it both ways
+    assert(name == "lookup" || name == "hnsw" || files > 0, s"$name: a store serve read no file")
     assert(rec.jobMs + rec.driverGapMs == rec.wallMs)
     assert(rec.jobMs >= 0 && rec.jobMs <= rec.wallMs && rec.planMs >= 0)
     assert(jobs == 0 || rec.jobMs > 0 || rec.wallMs < 5, s"$name: $jobs jobs but no job time")
     assert(trace.openSpans == 0, s"$name: state left behind after the record was read")
     planMs += rec.planMs
+    rec
   }
 
   private val qa = FakeEmbedder.embed("fast vector search over spark tables")
@@ -105,7 +108,17 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark, sf, metaDir, "/nonexistent/edge-store", q, Seq("lang" -> "en"), k = 5,
         exactScanMax = Long.MaxValue), qa, qb)
       HnswStore.write(spark, sf, hnswDir)
-      check[Array[Float]]("hnsw", q => HnswStore.search(spark, hnswDir, q), qa, qb)
+      val cached = check[Array[Float]]("hnsw", q => HnswStore.search(spark, hnswDir, q), qa, qb)
+      assert(cached.jobs == 0 && cached.filesRead == 0,
+        s"hnsw: a serve from the driver layer cache ran jobs or read files: ${cached.json}")
+      // the same serve with no layer admitted reads its layers' files
+      val prev = HnswStore.LayerCacheBudgetBytes
+      try {
+        HnswStore.LayerCacheBudgetBytes = 0L
+        val dist = check[Array[Float]]("hnsw at budget 0",
+          q => HnswStore.search(spark, hnswDir, q), qa, qb)
+        assert(dist.filesRead > 0, s"hnsw at budget 0: no file read: ${dist.json}")
+      } finally HnswStore.LayerCacheBudgetBytes = prev
       assert(planMs > 0, "no Catalyst phase reached any span")
     } finally dirs.foreach(TempStores.delete)
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.SparkSession
 
 /** The one memo type for data derived from files (analyzed scans,
@@ -19,13 +21,20 @@ import org.apache.spark.sql.SparkSession
   * hard-bounded, so a long-lived driver churning through sessions or
   * stores cannot grow it forever, and a hit keeps an entry young.
   *
-  * Three removal paths, with DIFFERENT cleanup semantics:
+  * A memo over a versioned store ([[graft.sources.Versioned.memo]])
+  * also carries the store's live version stamp, so a publish by any
+  * writer, in this JVM or another, needs no invalidate. Concurrent
+  * misses on one key run one build (the others wait and count as
+  * hits); a build that throws leaves no entry.
+  *
+  * Four removal paths, with DIFFERENT cleanup semantics:
   *
   *  - invalidation (the data the value points at was rewritten):
   *    values go to `onEvict` — for checkpoint-backed DataFrames that
   *    unpersists the pinned blocks immediately, for temp stores it
   *    deletes the files. Outstanding handles were already meaningless
   *    (they referenced the old data).
+  *  - a new stamp: the superseded entry is dropped as on overflow.
   *  - overflow (the cache reached `maxEntries`): the entries used
   *    longest ago are dropped by reference only, WITHOUT `onEvict` —
   *    a caller may still hold the returned value, and a
@@ -44,20 +53,29 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
   private val m = scala.collection.concurrent.TrieMap.empty[(Option[SparkSession], K), Entry[V]]
   SessionCache.registry.add(this)
 
-  def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V =
-    lookup((Some(spark), key), build)
+  /** session entry; valid for one `stamp` of the data under its key
+    * (a lookup with another stamp rebuilds and replaces it) */
+  def getOrElseUpdate(spark: SparkSession, key: K, stamp: Any = ())(build: => V): V =
+    lookup((Some(spark), key), stamp, build)
 
   /** JVM-wide entry: shared by every session of the driver */
-  def getOrElseUpdate(key: K)(build: => V): V = lookup((None, key), build)
+  def getOrElseUpdate(key: K)(build: => V): V = lookup((None, key), (), build)
 
-  private def lookup(k: (Option[SparkSession], K), build: => V): V =
-    m.get(k) match {
-      case Some(e) =>
+  private def lookup(k: (Option[SparkSession], K), stamp: Any, build: => V): V = {
+    lazy val fresh = new Entry(stamp, build, SessionCache.clock.incrementAndGet())
+    @tailrec def claim(): Entry[V] = m.get(k) match {
+      case Some(e) if e.stamp == stamp =>
         SessionCache.hits.incrementAndGet()
         e.age = SessionCache.clock.incrementAndGet()
-        e.value
+        e
+      case Some(e) =>
+        if (!m.replace(k, e, fresh)) claim()
+        else {
+          SessionCache.evictions.incrementAndGet()
+          SessionCache.misses.incrementAndGet()
+          fresh
+        }
       case None =>
-        SessionCache.misses.incrementAndGet()
         m.filterInPlace { (k, _) =>
           val live = k._1.forall(!_.sparkContext.isStopped)
           if (!live) SessionCache.evictions.incrementAndGet()
@@ -67,8 +85,12 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
           m.toSeq.sortBy(_._2.age).dropRight(maxEntries / 2).foreach {
             case (k, _) => if (m.remove(k).isDefined) SessionCache.evictions.incrementAndGet()
           }
-        m.getOrElseUpdate(k, new Entry(build, SessionCache.clock.incrementAndGet())).value
+        if (m.putIfAbsent(k, fresh).isDefined) claim()
+        else { SessionCache.misses.incrementAndGet(); fresh }
     }
+    val e = claim()
+    try e.value catch { case t: Throwable => m.remove(k, e); throw t }
+  }
 
   /** drop the entries whose key matches `pred`, handing their values
     * to `onEvict` — for a writer that knows exactly which entries its
@@ -77,8 +99,10 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
     m.toSeq.foreach { case (k, e) =>
       if (pred(k._2) && m.remove(k).isDefined) {
         SessionCache.evictions.incrementAndGet()
-        // best-effort: invalidation must not fail the caller
-        try onEvict(e.value) catch { case _: Throwable => () }
+        // best-effort: invalidation must not fail the caller. An entry
+        // still building (a build may rewrite its own dir, as
+        // FilteredServe.ensureMeta does) is dropped as on overflow
+        if (e.built) try onEvict(e.value) catch { case _: Throwable => () }
       }
     }
 
@@ -89,12 +113,22 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
 }
 
 object SessionCache {
-  private final class Entry[V](val value: V, @volatile var age: Long)
+  /** the first `value` call builds; concurrent callers wait on it and
+    * share its result, a failure included */
+  private final class Entry[V](val stamp: Any, build: => V, @volatile var age: Long) {
+    @volatile private[this] var result: scala.util.Try[V] = _
+    def built: Boolean = result != null
+    def value: V = {
+      if (result == null) synchronized { if (result == null) result = scala.util.Try(build) }
+      result.get
+    }
+  }
 
   private val clock = new AtomicLong()
-  // process-wide, over every cache: lookups that found their entry,
-  // lookups that built it, and entries removed for any reason
-  // (invalidation, overflow, stopped session) — read by graft.obs.Trace
+  // process-wide, over every cache: lookups that found their entry
+  // (or waited on its build), lookups that built it, and entries
+  // removed for any reason (invalidation, a new stamp, overflow,
+  // stopped session) — read by graft.obs.Trace
   private val hits = new AtomicLong()
   private val misses = new AtomicLong()
   private val evictions = new AtomicLong()

@@ -28,7 +28,10 @@ object Tables {
   /** REFRESH TABLE: drop every memo derived from files under (or
     * containing) `pathPrefix` — cached scans, index models, stores,
     * checkpointed graphs — through [[SessionCache]]'s one registry.
-    * Call after overwriting a table or store directory. */
+    * Call after overwriting a directory outside the version protocol
+    * (the corpus tables, an IVF store's lists, the filtered metadata);
+    * a versioned store's memos follow its live version stamp instead
+    * ([[graft.sources.Versioned.memo]]). */
   def invalidate(pathPrefix: String): Unit = SessionCache.invalidateAll(pathPrefix)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

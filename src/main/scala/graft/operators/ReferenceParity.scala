@@ -120,9 +120,7 @@ object ReferenceParity {
     * corpus at `d` — same derivation arithmetic as
     * [[customerRecords]], values as partition-safe strings */
   def refMetaStoreFor(spark: SparkSession, d: String): String =
-    metaCache.getOrElseUpdate(spark, d) {
-      val dir = graft.sources.TempStores.track(
-        java.nio.file.Files.createTempDirectory("refmeta").toString)
+    metaCache.getOrElseUpdate(spark, d)(graft.sources.TempStores.create("refmeta") { dir =>
       val docs = Tables.documents(spark, d).select(
         col("doc_id").as("vec_id"),
         when(col("doc_id") % 5 === 0, lit("1")).otherwise(lit("0")).as("withdrawn"),
@@ -133,8 +131,7 @@ object ReferenceParity {
         .select(col("vec_id"), col("embedding"))
       graft.sources.FilteredServe.writeMetaFrom(spark, dir, docs,
         Seq("withdrawn", "type"), emb)
-      dir
-    }
+    })
 
   /** r3: `find_similar_customer_records` over LIVE POLICIES served
     * from the STORED filtered path — the reference's exact tool

@@ -1084,8 +1084,9 @@ object SrpBanded {
     * FRAME IDENTITY — every caller hands the session-cached layer /
     * graph instance, so one count job per (corpus, layer), not one per
     * serve. Keys carry no directory, so every [[graft.Tables.invalidate]]
-    * drops both frame memos: no entry outlives a rewrite as a strong
-    * reference to a dead frame. */
+    * drops both frame memos; a frame a store publish superseded (its
+    * memo follows the version stamp, no invalidate) ages out at the
+    * bound. */
   private val edgeCountCache = new graft.SessionCache[DataFrame, Long](64, _ => "")
   /** bytes past which a FILE-BACKED edge frame is treated as corpus-
     * sized WITHOUT a count job: the store-backed layer-0 graph is the

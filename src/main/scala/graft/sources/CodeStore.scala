@@ -95,9 +95,7 @@ object CodeStore {
     * at r8); the analyzed handle is lazy and partition pruning still
     * happens per-query at planning time. */
   private def resolved(spark: SparkSession, dir: String): (DataFrame, Int) =
-    frameCache.getOrElseUpdate(spark, dir) {
-      val vers = Versioned.live(spark, chain(dir))
-      require(vers.nonEmpty, s"no committed code versions under $dir/codes")
+    Versioned.memo(frameCache, spark, dir, chain(dir)) { vers =>
       (Versioned.latest(spark.read.parquet(s"$dir/codes/data")
         .select(col("vec_id"), col("keys"), col("embedding"),
           col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver")),
@@ -343,10 +341,8 @@ object CodeStore {
       .select(col("vec_id"),
         lit(null).cast("array<long>").as("keys"),
         lit(null).cast("array<float>").as("embedding"))
-    // a delta keeps its live base's count — read off the pin, not
-    // [[buckets]]: an upsert never reads the store, and [[buckets]]
-    // would open a read handle that this publish then drops
-    val n = StoreLayout.pinned(spark, s"$dir/codes", Versioned.live(spark, chain(dir)), Partitions)
+    // a delta keeps its live base's count
+    val n = buckets(spark, dir)
     val delta = valid.unionByName(tomb)
       .withColumn("pb", pmod(col("vec_id"), lit(n.toLong)))
       .localCheckpoint(true)
@@ -366,10 +362,5 @@ object CodeStore {
   // entry — a real deployment writes it at ingest time
   private val storeCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def storeFor(spark: SparkSession, d: String): String =
-    storeCache.getOrElseUpdate(spark, d) {
-      val dir = TempStores.track(
-        java.nio.file.Files.createTempDirectory("codestore").toString)
-      write(spark, d, dir)
-      dir
-    }
+    storeCache.getOrElseUpdate(spark, d)(TempStores.create("codestore")(write(spark, d, _)))
 }

@@ -90,9 +90,7 @@ object EdgeStore {
     * memoized with the pb count its versions were written at, so a
     * hop never pairs a frame with another version set's count. */
   private def resolved(spark: SparkSession, dir: String): (DataFrame, Int) =
-    frameCache.getOrElseUpdate(spark, dir) {
-      val vers = Versioned.live(spark, chain(dir))
-      require(vers.nonEmpty, s"no committed edge versions under $dir/edges")
+    Versioned.memo(frameCache, spark, dir, chain(dir)) { vers =>
       (Versioned.latest(spark.read.parquet(s"$dir/edges/data")
         .select(col("src"), col("dst"), col("dst_emb"),
           col("pb").cast("long").as("pb"), col("__ver").cast("int").as("__ver")),
@@ -107,12 +105,12 @@ object EdgeStore {
   private[graft] def buckets(spark: SparkSession, dir: String): Int = resolved(spark, dir)._2
 
   /** Bulk handle: the resolved (src, dst, dst_emb) edge set. STABLE
-    * per (session, dir) — consumers key identity-memoized decisions on
-    * the frame (SrpBanded.maybeBroadcastEdges' count cache), and a
-    * fresh `.select` wrapper per call made every such memo miss (r17:
-    * one count job per v34 serve). */
+    * per (session, dir, version stamp) — consumers key identity-
+    * memoized decisions on the frame (SrpBanded.maybeBroadcastEdges'
+    * count cache), and a fresh `.select` wrapper per call made every
+    * such memo miss (r17: one count job per v34 serve). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    readCache.getOrElseUpdate(spark, dir) {
+    Versioned.memo(readCache, spark, dir, chain(dir)) { _ =>
       resolvedFrame(spark, dir).select(col("src"), col("dst"), col("dst_emb"))
     }
   private val readCache = new graft.SessionCache[String, DataFrame](8, identity)
@@ -246,10 +244,6 @@ object EdgeStore {
   // graph build/refinement
   private val storeCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def refinedStoreFor(spark: SparkSession, d: String): String =
-    storeCache.getOrElseUpdate(spark, d) {
-      val dir = TempStores.track(
-        java.nio.file.Files.createTempDirectory("edgestore").toString)
-      write(spark, SrpBanded.materializedRefinedGraph(spark, d), dir)
-      dir
-    }
+    storeCache.getOrElseUpdate(spark, d)(TempStores.create("edgestore")(
+      write(spark, SrpBanded.materializedRefinedGraph(spark, d), _)))
 }

@@ -1789,9 +1789,7 @@ object FilteredServe {
   // ingest like every other store
   private val refMetaCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def refMetaStoreFor(spark: SparkSession, d: String): String =
-    refMetaCache.getOrElseUpdate(spark, d) {
-      val dir = TempStores.track(
-        java.nio.file.Files.createTempDirectory("refmeta").toString)
+    refMetaCache.getOrElseUpdate(spark, d)(TempStores.create("refmeta") { dir =>
       val docs = Tables.documents(spark, d).select(
         col("doc_id").as("vec_id"),
         upper(substring(col("lang"), 1, 2)).as("country"),
@@ -1809,8 +1807,7 @@ object FilteredServe {
             size(col("embedding")) === SrpBanded.Dim)
           .select(col("vec_id"), col("embedding")),
         rangeCols = Seq("num_claims", "date"))
-      dir
-    }
+    })
 
   /** [[searchFiltered]] for typed-term conjunctions — the very-broad
     * tier walks unfiltered and post-filters through the byid point

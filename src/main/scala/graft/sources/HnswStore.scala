@@ -97,9 +97,7 @@ object HnswStore {
   /** [[layersFrame]] with its pb count, memoized together so a
     * descent never pairs a frame with another version set's count */
   private def layers(spark: SparkSession, dir: String): (DataFrame, Int) =
-    frameCache.getOrElseUpdate(spark, dir) {
-      val vers = Versioned.live(spark, chain(dir))
-      require(vers.nonEmpty, s"no committed layer versions under $dir/layers")
+    Versioned.memo(frameCache, spark, dir, chain(dir)) { vers =>
       (Versioned.latest(spark.read.parquet(s"$dir/layers/data")
         .select(col("src"), col("dst"), col("dst_emb"),
           col("layer").cast("int").as("layer"), col("pb").cast("long").as("pb"),
@@ -112,9 +110,8 @@ object HnswStore {
   /** The persisted entry point: read once per store handle — serving
     * never touches the corpus to find (or score) its entry. */
   def storedEntry(spark: SparkSession, dir: String): (Long, Array[Float]) =
-    entryCache.getOrElseUpdate(spark, dir) {
-      val v = Versioned.live(spark, chain(dir)).max
-      val r = spark.read.parquet(s"$dir/entry/v$v").collect()(0)
+    Versioned.memo(entryCache, spark, dir, chain(dir)) { vers =>
+      val r = spark.read.parquet(s"$dir/entry/v${vers.max}").collect()(0)
       (r.getAs[Long]("vec_id"), r.getSeq[Float](1).toArray)
     }
 
@@ -154,42 +151,41 @@ object HnswStore {
     * the upper layers top first (the exponential thinning means the
     * cheapest layers admit first), then the `l0` [[EdgeStore]] as
     * layer 0, the largest. One job counts every layer's edges and one
-    * collects the admitted ones. With every layer admitted a warm
-    * serve (descent and layer-0 beam walk) runs with zero Spark jobs;
-    * a layer over its share keeps the pruned point read. The entry is
-    * keyed by `dir`, so a commit under `dir` (`layers/` or `l0/`)
-    * drops it through [[graft.Tables.invalidate]]. */
+    * collects the admitted ones. A layer with no edges (a top layer
+    * holding only the entry) is admitted as an empty map. With every
+    * layer admitted a warm serve (descent and layer-0 beam walk) runs
+    * with zero Spark jobs; a layer over its share keeps the pruned
+    * point read. The entry follows the stamps of both chains, `layers/`
+    * and `l0/`, so a commit to either is seen by the next serve. */
   private[graft] def localLayers(spark: SparkSession,
       dir: String): Map[Int, Map[Long, Array[(Long, Array[Float])]]] =
-    localLayerCache.getOrElseUpdate(spark, (dir, LayerCacheBudgetBytes)) {
+    localLayerCache.getOrElseUpdate(spark, (dir, LayerCacheBudgetBytes),
+        (Versioned.stamp(spark, chain(dir)), Versioned.stamp(spark, EdgeStore.chain(s"$dir/l0")))) {
       val all = layersFrame(spark, dir)
         .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
         .unionByName(EdgeStore.read(spark, s"$dir/l0").select(lit(0).as("layer"),
           col("src"), col("dst"), col("dst_emb")))
       val counts = all.groupBy(col("layer")).count().collect()
-        .map(r => (r.getInt(0), r.getLong(1))).sortBy(-_._1)
+        .map(r => (r.getInt(0), r.getLong(1))).toMap
       val perStore = LayerCacheBudgetBytes / LayerCacheEntries
-      val admit = counts.foldLeft((perStore, Set.empty[Int])) {
-        case ((left, ok), (l, n)) =>
-          val b = n * edgeBytes
-          if (b <= left) (left - b, ok + l) else (left, ok)
+      val admit = (Hnsw.MaxLevel to 0 by -1).foldLeft((perStore, Set.empty[Int])) {
+        case ((left, ok), l) =>
+          val b = counts.getOrElse(l, 0L) * edgeBytes
+          if (perStore > 0 && b <= left) (left - b, ok + l) else (left, ok)
       }._2
-      if (admit.isEmpty) Map.empty
-      else all.filter(col("layer").isin(admit.toSeq: _*))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (l, rows) =>
-          // a dst's in-edges carry the same embedding: hold one array
-          // per (dst, bytes), not one per edge
-          val embs = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
-          def shared(dst: Long, e: Array[Float]): Array[Float] = embs.get(dst) match {
-            case Some(h) if java.util.Arrays.equals(h, e) => h
-            case _ => embs(dst) = e; e
-          }
-          l -> rows.groupBy(_.getLong(1)).map { case (s, es) =>
-            s -> es.map(r => (r.getLong(2), shared(r.getLong(2), r.getSeq[Float](3).toArray)))
-          }
+      val rows = all.filter(col("layer").isin(admit.toSeq: _*)).collect().groupBy(_.getInt(0))
+      admit.map { l =>
+        // a dst's in-edges carry the same embedding: hold one array
+        // per (dst, bytes), not one per edge
+        val embs = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
+        def shared(dst: Long, e: Array[Float]): Array[Float] = embs.get(dst) match {
+          case Some(h) if java.util.Arrays.equals(h, e) => h
+          case _ => embs(dst) = e; e
         }
+        l -> rows.getOrElse(l, Array.empty).groupBy(_.getLong(1)).map { case (s, es) =>
+          s -> es.map(r => (r.getLong(2), shared(r.getLong(2), r.getSeq[Float](3).toArray)))
+        }
+      }.toMap
     }
 
   /** The store-backed fetch, layer 0 included: driver-cache hit where
@@ -279,13 +275,13 @@ object HnswStore {
   def searchBatch(spark: SparkSession, d: String, dir: String, queryMod: Int,
                   k: Int = 5, beam: Int = 16, iters: Int = 3,
                   maxEntries: Int = 64): DataFrame = {
-    val layers = layersFrame(spark, dir)
     Hnsw.searchBatch(spark, d, queryMod, k, beam, iters, maxEntries,
       // per-layer slices memoized so the walk's size-keyed broadcast
       // decision (SrpBanded.maybeBroadcastEdges, identity-keyed count
-      // memo) pays its count once per (store, layer), not per serve
-      layerSource = Some(l => layerSliceCache.getOrElseUpdate(spark, (dir, l)) {
-        layers.filter(col("layer") === l)
+      // memo) pays its count once per (store version, layer), not per
+      // serve
+      layerSource = Some(l => Versioned.memo(layerSliceCache, spark, (dir, l), chain(dir)) { _ =>
+        layersFrame(spark, dir).filter(col("layer") === l)
       }),
       graphSource = Some(EdgeStore.read(spark, s"$dir/l0")),
       entryOverride = Some(storedEntry(spark, dir)))
@@ -394,10 +390,5 @@ object HnswStore {
   // a real deployment writes it after each offline build
   private val storeCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def storeFor(spark: SparkSession, d: String): String =
-    storeCache.getOrElseUpdate(spark, d) {
-      val dir = TempStores.track(
-        java.nio.file.Files.createTempDirectory("hnswstore").toString)
-      write(spark, d, dir)
-      dir
-    }
+    storeCache.getOrElseUpdate(spark, d)(TempStores.create("hnswstore")(write(spark, d, _)))
 }

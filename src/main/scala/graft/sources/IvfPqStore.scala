@@ -191,13 +191,9 @@ object IvfPqStore {
   // entry — a real deployment writes it at ingest time
   private val residualStoreCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def residualStoreFor(spark: SparkSession, d: String): String =
-    residualStoreCache.getOrElseUpdate(spark, d) {
-      val dir = TempStores.track(
-        java.nio.file.Files.createTempDirectory("ivfpqres").toString)
+    residualStoreCache.getOrElseUpdate(spark, d)(TempStores.create("ivfpqres")(
       writeResidual(spark, graft.Tables.embeddings(spark, d), "embedding",
-        "vec_id", IvfPqResidual.fitCached(spark, d), dir)
-      dir
-    }
+        "vec_id", IvfPqResidual.fitCached(spark, d), _)))
 
   /** v29: BATCHED serve over the persisted residual codes — the
     * quantization-family analogue of the batched graph serve (and of

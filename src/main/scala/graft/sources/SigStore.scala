@@ -164,33 +164,31 @@ object SigStore {
   private val SigsSchema = "doc_id LONG, band INT, band_key LONG, __ver INT, bg LONG"
   private val DocsSchema = "doc_id LONG, text STRING, __ver INT, db LONG"
 
-  private[graft] def sigFrame(spark: SparkSession, dir: String): DataFrame = {
-    val vers = Versioned.live(spark, chain(dir))
-    require(vers.nonEmpty, s"SigStore at $dir has no committed version")
-    spark.read.schema(SigsSchema).parquet(s"$dir/sigs")
-      .filter(col("__ver").isin(vers: _*))
+  // the live versions' rows of one artifact (`sigs` or `docs`):
+  // memoized per version stamp, so a near-dup request reuses the file
+  // index instead of re-listing every (version, band, bg) dir
+  private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
+  private def liveRows(spark: SparkSession, dir: String, art: String, schema: String): DataFrame =
+    Versioned.memo(frameCache, spark, s"$dir/$art", chain(dir))(vers =>
+      spark.read.schema(schema).parquet(s"$dir/$art").filter(col("__ver").isin(vers: _*)))
+
+  private[graft] def sigFrame(spark: SparkSession, dir: String): DataFrame =
+    liveRows(spark, dir, "sigs", SigsSchema)
       .select(col("doc_id"), col("band"), col("band_key"), col("bg"))
-  }
 
   /** committed verify texts (doc_id, text) */
-  private[graft] def docsFrame(spark: SparkSession, dir: String): DataFrame = {
-    val vers = Versioned.live(spark, chain(dir))
-    spark.read.schema(DocsSchema).parquet(s"$dir/docs")
-      .filter(col("__ver").isin(vers: _*))
-      .select(col("doc_id"), col("text"))
-  }
+  private[graft] def docsFrame(spark: SparkSession, dir: String): DataFrame =
+    liveRows(spark, dir, "docs", DocsSchema).select(col("doc_id"), col("text"))
 
   /** point-read the committed texts of `ids`: (__ver, db) prune in
     * the file index, `doc_id IN <set>` (a membership node, as ever)
     * against the doc_id-clustered row groups + the row filter */
   private[graft] def docsForIds(spark: SparkSession, dir: String,
                                 ids: Seq[Long]): DataFrame = {
-    val vers = Versioned.live(spark, chain(dir))
     val groups = storeGroups(spark, dir)
     val dbs = ids.map(_ & (groups - 1).toLong).distinct
-    val pruned = spark.read.schema(DocsSchema).parquet(s"$dir/docs")
-      .filter(col("__ver").isin(vers: _*) &&
-        bound.isin(col("db"), dbs) && bound.isin(col("doc_id"), ids))
+    val pruned = liveRows(spark, dir, "docs", DocsSchema)
+      .filter(bound.isin(col("db"), dbs) && bound.isin(col("doc_id"), ids))
       .select(col("doc_id"), col("text"))
     lastDocsPlanThunk = () => pruned.queryExecution.executedPlan.toString
     pruned
@@ -492,14 +490,7 @@ object SigStore {
   // and a shutdown hook sweeps whatever the JVM still holds
   private val storeCache = new graft.SessionCache[String, String](4, identity, deleteTempStore)
   def storeFor(spark: SparkSession, d: String): String =
-    storeCache.getOrElseUpdate(spark, d) {
-      val dir = TempStores.track(
-        java.nio.file.Files.createTempDirectory("sigstore").toString)
-      write(spark,
-        Tables.documents(spark, d)
-          .filter(col("doc_id") % BatchMod =!= 0)
-          .select(col("doc_id"), col("text")),
-        dir)
-      dir
-    }
+    storeCache.getOrElseUpdate(spark, d)(TempStores.create("sigstore")(write(spark,
+      Tables.documents(spark, d).filter(col("doc_id") % BatchMod =!= 0)
+        .select(col("doc_id"), col("text")), _)))
 }

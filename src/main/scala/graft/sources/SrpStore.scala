@@ -61,21 +61,26 @@ object SrpStore {
       .partitionBy("__ver")
       .parquet(s"$dir/banding/data")
 
-  /** Key width (bits per band) the store at `dir` was written with —
-    * recorded as a marker file at [[write]] time so every read path
-    * probes with the same hyperplane set. Absent marker = the pinned
-    * oracle default (stores written before the keyspace was
-    * parameterized). */
-  private val rpbCache = new graft.SessionCache[String, Int](64, identity)
-  private[graft] def storeRpb(spark: SparkSession, dir: String): Int =
-    rpbCache.getOrElseUpdate(dir) {
+  /** The layout markers [[write]] records under `_keyspace/` (`rpb=`,
+    * `shift=`, `eg=`) as name → value, so every read path follows the
+    * layout the store was written with; empty before any marker. One
+    * JVM-wide memo per dir, dropped by a rebuild's [[Versioned.create]]. */
+  private val keyspaceCache = new graft.SessionCache[String, Map[String, String]](64, identity)
+  private def keyspace(spark: SparkSession, dir: String): Map[String, String] =
+    keyspaceCache.getOrElseUpdate(dir) {
       val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
       val f = Hfs.fs(spark, dir)
-      if (!f.exists(kd)) SrpBanded.RowsPerBand
-      else f.listStatus(kd).toSeq.map(_.getPath.getName)
-        .collectFirst { case s if s.startsWith("rpb=") => s.drop(4).toInt }
-        .getOrElse(SrpBanded.RowsPerBand)
+      if (!f.exists(kd)) Map.empty
+      else f.listStatus(kd).toSeq.map(_.getPath.getName.split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap
     }
+
+  /** Key width (bits per band) the store at `dir` was written with, so
+    * every read path probes with the same hyperplane set. Absent
+    * marker = the pinned oracle default (stores written before the
+    * keyspace was parameterized). */
+  private[graft] def storeRpb(spark: SparkSession, dir: String): Int =
+    keyspace(spark, dir).get("rpb").fold(SrpBanded.RowsPerBand)(_.toInt)
 
   /** Target rows per partition dir of the `banded/` layout. The write
     * cost of a partitioned store is PER DIR, not per row (measured
@@ -111,40 +116,15 @@ object SrpStore {
 
   /** recorded dir-group shift of a store; legacy stores without the
     * marker fall back to the r10 rule (wide ⇒ rpb−8, pinned ⇒ 0) */
-  private val shiftCache = new graft.SessionCache[String, Int](64, identity)
   private[graft] def storeShift(spark: SparkSession, dir: String): Int =
-    shiftCache.getOrElseUpdate(dir) {
-      val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
-      val f = Hfs.fs(spark, dir)
-      val marker =
-        if (!f.exists(kd)) None
-        else f.listStatus(kd).toSeq.map(_.getPath.getName)
-          .collectFirst { case s if s.startsWith("shift=") => s.drop(6).toInt }
-      marker.getOrElse(math.max(0, storeRpb(spark, dir) - SrpBanded.RowsPerBand))
-    }
+    keyspace(spark, dir).get("shift")
+      .fold(math.max(0, storeRpb(spark, dir) - SrpBanded.RowsPerBand))(_.toInt)
 
   /** recorded `embed/` partition count (eg = vec_id mod this) */
-  private val egCache = new graft.SessionCache[String, Long](64, identity)
   private[graft] def storeEg(spark: SparkSession, dir: String): Long =
-    egCache.getOrElseUpdate(dir) {
-      val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
-      val f = Hfs.fs(spark, dir)
-      (if (!f.exists(kd)) None
-       else f.listStatus(kd).toSeq.map(_.getPath.getName)
-         .collectFirst { case s if s.startsWith("eg=") => s.drop(3).toLong })
-        .getOrElse(throw new IllegalStateException(
-          s"SRP store at $dir predates the v2 (single-embedding-copy) " +
-            "layout — rebuild it with SrpStore.write"))
-    }
-
-  /** v2-layout presence check — build-reuse gates (probes, benches)
-    * call this to decide rebuild-vs-reuse for persisted store dirs */
-  def isCurrentLayout(spark: SparkSession, dir: String): Boolean = {
-    val f = Hfs.fs(spark, dir)
-    val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
-    f.exists(kd) && f.listStatus(kd).toSeq
-      .exists(_.getPath.getName.startsWith("eg="))
-  }
+    keyspace(spark, dir).getOrElse("eg", throw new IllegalStateException(
+      s"SRP store at $dir predates the v2 (single-embedding-copy) " +
+        "layout — rebuild it with SrpStore.write")).toLong
 
   /** `embed/` dir-count policy: ~[[DirRowTarget]] rows per dir, a
     * power of two, capped so the dir count never exceeds 2048 (the
@@ -216,9 +196,6 @@ object SrpStore {
     fsK.create(new org.apache.hadoop.fs.Path(kd, s"rpb=$rowsPerBand"), false).close()
     fsK.create(new org.apache.hadoop.fs.Path(kd, s"shift=$shift"), false).close()
     fsK.create(new org.apache.hadoop.fs.Path(kd, s"eg=$nEg"), false).close()
-    rpbCache.invalidate(_ == dir)
-    shiftCache.invalidate(_ == dir)
-    egCache.invalidate(_ == dir)
     // compact copy of the key assignment for BULK consumers (graph
     // builds, analytics): (vec_id, band, bk) is 12 B/row, and a
     // full-graph rebuild reading 2048 bucket dirs of point-probe-
@@ -236,14 +213,16 @@ object SrpStore {
   // memoize the DataFrame handle so the file index (a listing of up
   // to Bands·2^RowsPerBand partition dirs) is built once, not per
   // probe. Partition pruning still happens per query — the filter is
-  // applied to the retained index, not the data.
+  // applied to the retained index, not the data. `banded/` and
+  // `embed/` are rewritten inside [[upsert]]'s banding append, so the
+  // banding chain's stamp covers all three handles.
   private val frameCache = new graft.SessionCache[String, DataFrame](8, identity)
   private def bandedFrame(spark: SparkSession, dir: String): DataFrame =
-    frameCache.getOrElseUpdate(spark, dir)(spark.read.parquet(s"$dir/banded"))
+    Versioned.memo(frameCache, spark, dir, chain(dir))(_ => spark.read.parquet(s"$dir/banded"))
 
   /** memoized handle on the store's single full-embedding copy */
   private def embedFrame(spark: SparkSession, dir: String): DataFrame =
-    frameCache.getOrElseUpdate(spark, s"$dir/embed")(
+    Versioned.memo(frameCache, spark, s"$dir/embed", chain(dir))(_ =>
       spark.read.parquet(s"$dir/embed"))
 
   /** Memoized handle on the compact `banding/` artifact — bulk
@@ -255,11 +234,8 @@ object SrpStore {
     * consumers pay the merge shuffle only while un-compacted deltas
     * exist. */
   def bandingFrame(spark: SparkSession, dir: String): DataFrame =
-    frameCache.getOrElseUpdate(spark, s"$dir/banding") {
-      val vers = Versioned.live(spark, chain(dir))
-      require(vers.nonEmpty, s"no committed banding versions under $dir/banding")
-      Versioned.latest(spark.read.parquet(s"$dir/banding/data"), vers, "vec_id")
-    }
+    Versioned.memo(frameCache, spark, s"$dir/banding", chain(dir))(vers =>
+      Versioned.latest(spark.read.parquet(s"$dir/banding/data"), vers, "vec_id"))
 
   /** Pruned multi-probe read: distinct (vec_id, embedding) across the
     * probed buckets, exact-scored against the query. The predicate is
@@ -403,7 +379,7 @@ object SrpStore {
     * [[HnswStore.localLayers]]. */
   private[graft] def localStore(spark: SparkSession,
       dir: String): Option[LocalStore] =
-    localStoreCache.getOrElseUpdate(spark, (dir, BucketCacheBudgetBytes)) {
+    Versioned.memo(localStoreCache, spark, (dir, BucketCacheBudgetBytes), chain(dir)) { _ =>
       val embF = embedFrame(spark, dir).select(col("vec_id"), col("embedding"))
       if (embF.count() * vectorCacheBytes >
           BucketCacheBudgetBytes / BucketCacheEntries) None
@@ -670,10 +646,6 @@ object SrpStore {
   def storeFor(spark: SparkSession, d: String): String =
     storeFor(spark, d, SrpBanded.RowsPerBand)
   def storeFor(spark: SparkSession, d: String, rowsPerBand: Int): String =
-    storeCache.getOrElseUpdate(spark, (d, rowsPerBand)) {
-      val dir = TempStores.track(
-        java.nio.file.Files.createTempDirectory("srpstore").toString)
-      write(spark, d, dir, rowsPerBand)
-      dir
-    }
+    storeCache.getOrElseUpdate(spark, (d, rowsPerBand))(
+      TempStores.create("srpstore")(write(spark, d, _, rowsPerBand)))
 }

@@ -22,8 +22,14 @@ private[graft] object TempStores {
     dirs.forEach(d => delete(d))
   }: Unit
 
-  /** register a freshly created temp store dir; returns it */
-  def track(dir: String): String = { dirs.add(dir): Unit; dir }
+  /** a fresh tracked temp dir (name starting `prefix`), written by
+    * `write`; returns it */
+  def create(prefix: String)(write: String => Unit): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    dirs.add(dir)
+    write(dir)
+    dir
+  }
 
   /** best-effort recursive delete + untrack — the invalidation callback */
   def delete(dir: String): Unit = {

@@ -43,33 +43,50 @@ private[graft] object Versioned {
     * window between a fold marker and the superseded deletes */
   @volatile var gcAfterPublish = true
 
-  /** One store's chain: `dir` is the store (what a publish
-    * invalidates), `root` holds the markers, `dirsOf(v)` lists
-    * version v's data dirs. */
+  /** One store's chain: `dir` is the store (what a full rebuild
+    * invalidates; a memo over it follows its [[stamp]]), `root` holds
+    * the markers, `dirsOf(v)` lists version v's data dirs. */
   final case class Chain(dir: String, root: String, dirsOf: Int => Seq[String])
 
   private def markerDir(c: Chain) = new Path(s"${c.root}/_commits")
 
-  /** all markers as (version, isFold) */
-  private def marks(spark: SparkSession, c: Chain): Seq[(Int, Boolean)] = {
+  /** all markers as (version, isFold, mtime): one listing */
+  private def marks(spark: SparkSession, c: Chain): Seq[(Int, Boolean, Long)] = {
     val f = Hfs.fs(spark, c.dir)
     val md = markerDir(c)
     if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq.map(_.getPath.getName).collect {
-      case s if s.startsWith("v") => (s.drop(1).toInt, false)
-      case s if s.startsWith("c") => (s.drop(1).toInt, true)
+    else f.listStatus(md).toSeq.map(st => (st.getPath.getName, st.getModificationTime)).collect {
+      case (s, t) if s.startsWith("v") => (s.drop(1).toInt, false, t)
+      case (s, t) if s.startsWith("c") => (s.drop(1).toInt, true, t)
     }
   }
 
-  private def liveOf(ms: Seq[(Int, Boolean)]): Seq[(Int, Boolean)] =
-    ms.collect { case (v, true) => v }.maxOption
+  private def liveOf(ms: Seq[(Int, Boolean, Long)]): Seq[(Int, Boolean, Long)] =
+    ms.collect { case (v, true, _) => v }.maxOption
       .fold(ms)(fv => ms.filter(_._1 >= fv))
 
   /** live versions, ascending: everything at or above the highest
     * fold marker. A fold holds every row of the versions it folded,
     * so reading it beside its inputs would serve those rows twice. */
-  def live(spark: SparkSession, c: Chain): Seq[Int] =
-    liveOf(marks(spark, c)).map(_._1).distinct.sorted
+  def live(spark: SparkSession, c: Chain): Seq[Int] = stamp(spark, c).map(_._1).distinct
+
+  /** The live markers as (version, isFold, mtime), ascending: the
+    * state of the store a memo over it is valid for. A publish adds a
+    * marker and a fold replaces the set. A full rebuild restarts the
+    * chain at `v0`, so only the mtime tells its `v0` from the old one. */
+  def stamp(spark: SparkSession, c: Chain): Seq[(Int, Boolean, Long)] = liveOf(marks(spark, c)).sorted
+
+  /** `build(live versions)` memoized in `cache` under `key` and the
+    * chain's [[stamp]], both from one listing per call. A publish,
+    * fold or rebuild by any process changes the stamp, so the next
+    * call builds afresh and drops the superseded entry; a build that
+    * raced a publish sits under the stamp it listed. */
+  def memo[K, V](cache: graft.SessionCache[K, V], spark: SparkSession, key: K, c: Chain)(
+      build: Seq[Int] => V): V = {
+    val s = stamp(spark, c)
+    require(s.nonEmpty, s"no committed versions under ${c.root}")
+    cache.getOrElseUpdate(spark, key, s)(build(s.map(_._1).distinct))
+  }
 
   /** make version `v` visible: one marker-file create */
   private def publish(spark: SparkSession, c: Chain, v: Int, fold: Boolean = false): Unit = {
@@ -85,9 +102,9 @@ private[graft] object Versioned {
   }
 
   /** delete the given versions, each one's data before its marker */
-  private def drop(spark: SparkSession, c: Chain, ms: Seq[(Int, Boolean)]): Unit = {
+  private def drop(spark: SparkSession, c: Chain, ms: Seq[(Int, Boolean, Long)]): Unit = {
     val f = Hfs.fs(spark, c.dir)
-    ms.foreach { case (v, isFold) =>
+    ms.foreach { case (v, isFold, _) =>
       clear(spark, c, v)
       f.delete(new Path(markerDir(c), s"${if (isFold) "c" else "v"}$v"), false): Unit
     }
@@ -102,7 +119,8 @@ private[graft] object Versioned {
   }
 
   /** a full (re)build: [[reset]] the chain over `roots`, run `write`
-    * (which writes version 0), publish version 0 */
+    * (which writes version 0), publish version 0, then REFRESH the
+    * memos of the markers a rebuild rewrites (`_keyspace/`, `_meta/`) */
   def create(spark: SparkSession, c: Chain, roots: String*)(write: => Unit): Unit = {
     reset(spark, c, roots)
     write
@@ -111,16 +129,16 @@ private[graft] object Versioned {
   }
 
   /** Append one delta version: clear a torn leftover of the next
-    * version, `write(next)`, publish, invalidate, then run the store's
-    * `compact` once the chain reaches [[CompactAfter]] versions.
-    * Returns the published version. */
+    * version, `write(next)`, publish, then run the store's `compact`
+    * once the chain reaches [[CompactAfter]] versions. The publish
+    * changes the [[stamp]], which is all a [[memo]] needs. Returns the
+    * published version. */
   def append(spark: SparkSession, c: Chain, compact: => Unit)(write: Int => Unit): Int = {
     val vers = live(spark, c)
     val next = vers.lastOption.getOrElse(-1) + 1
     clear(spark, c, next)
     write(next)
     publish(spark, c, next)
-    graft.Tables.invalidate(c.dir)
     if (vers.length + 1 >= CompactAfter) compact
     next
   }
@@ -140,7 +158,6 @@ private[graft] object Versioned {
       write(next)
       publish(spark, c, next, fold = true)
       if (gcAfterPublish) drop(spark, c, lv)
-      graft.Tables.invalidate(c.dir)
     }
   }
 

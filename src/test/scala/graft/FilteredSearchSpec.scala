@@ -760,12 +760,10 @@ class FilteredSearchSpec extends AnyFunSuite {
     def vec(): Array[Float] = Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
     val rows = (0 until n).map(i =>
       (i.toLong, vec(), if (i % 6 == 0) "bb" else "aa"))
-    val dir = graft.sources.TempStores.track(
-      java.nio.file.Files.createTempDirectory("bigmeta").toString)
-    FilteredServe.writeMetaFrom(spark, dir,
+    val dir = graft.sources.TempStores.create("bigmeta")(FilteredServe.writeMetaFrom(spark, _,
       rows.map(r => (r._1, r._3)).toDF("vec_id", "m"),
       Seq("m"),
-      rows.map(r => (r._1, r._2)).toDF("vec_id", "embedding"))
+      rows.map(r => (r._1, r._2)).toDF("vec_id", "embedding")))
     (dir, rows.filter(_._3 == "aa").map(r => (r._1, r._2)), vec())
   }
 
@@ -971,11 +969,9 @@ class FilteredSearchSpec extends AnyFunSuite {
     val rows = (0 until 40).map(i => (i.toLong,
       Array.fill(dim)(rnd.nextFloat() * 2f - 1f),
       if (i % 2 == 0) "5" else "5.0"))
-    val dir = graft.sources.TempStores.track(
-      java.nio.file.Files.createTempDirectory("numeq").toString)
-    FilteredServe.writeMetaFrom(spark, dir,
+    val dir = graft.sources.TempStores.create("numeq")(FilteredServe.writeMetaFrom(spark, _,
       rows.map(r => (r._1, r._3)).toDF("vec_id", "m"), Seq("m"),
-      rows.map(r => (r._1, r._2)).toDF("vec_id", "embedding"))
+      rows.map(r => (r._1, r._2)).toDF("vec_id", "embedding")))
     val queries = rows.take(4).map(r => (r._1, r._2, r._3))
       .toDF("query_id", "q_vec", "m")
     def run(maxGroups: Int) = FilteredServe.searchFilteredBatchMixedOps(
@@ -1312,13 +1308,11 @@ class FilteredSearchSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(4242L)
     val rows = (0 until 30).map(i =>
       (i, Array.fill(dim)(rnd.nextDouble() * 2 - 1), "x"))
-    val dir = graft.sources.TempStores.track(
-      java.nio.file.Files.createTempDirectory("dblmeta").toString)
     // embedding arrives as array<double>, vec_id as INT — the write
     // side must normalize to the long/array<float> schema readByVal pins
-    FilteredServe.writeMetaFrom(spark, dir,
+    val dir = graft.sources.TempStores.create("dblmeta")(FilteredServe.writeMetaFrom(spark, _,
       rows.map(r => (r._1, r._3)).toDF("vec_id", "m"), Seq("m"),
-      rows.map(r => (r._1, r._2)).toDF("vec_id", "embedding"))
+      rows.map(r => (r._1, r._2)).toDF("vec_id", "embedding")))
     val qv = rows.head._2.map(_.toFloat)
     val res = FilteredServe.searchFilteredMetaTerms(spark, dir, qv,
       Seq(MetaTerm.Eq("m", "x")), k = 5).collect()

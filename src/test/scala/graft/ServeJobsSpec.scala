@@ -111,6 +111,32 @@ class ServeJobsSpec extends AnyFunSuite {
     } finally graft.sources.TempStores.delete(dir)
   }
 
+  test("HNSW serve over a top layer of one node: 0 jobs, same rows at budget 0") {
+    // the corpus keeps one id at the top level, so the top layer holds
+    // the entry alone and no edge: the layer cache must still admit it
+    val root = Files.createTempDirectory("jobs-hnsw-top").toString
+    val (d, dir) = (s"$root/corpus", s"$root/hnsw")
+    try {
+      val emb = Tables.embeddings(spark, sf)
+      val top = Hnsw.levelCol(col("vec_id")) >= Hnsw.MaxLevel
+      emb.filter(top).orderBy(col("vec_id")).limit(1).unionByName(emb.filter(!top))
+        .write.parquet(s"$d/embeddings.parquet")
+      HnswStore.write(spark, d, dir)
+      assert(HnswStore.layersFrame(spark, dir).filter(col("layer") === Hnsw.MaxLevel).isEmpty,
+        "fixture: the top layer has edges")
+      warmJobs[Array[Float]]("hnsw, one-node top layer", q => HnswStore.search(spark, dir, q),
+        qa, qb, max = 0)
+      assert(HnswStore.lastLocalLayers == (0 to Hnsw.MaxLevel).toSet)
+      val cached = HnswStore.search(spark, dir, qb).collect().toSeq
+      val prev = HnswStore.LayerCacheBudgetBytes
+      try {
+        HnswStore.LayerCacheBudgetBytes = 0L
+        assert(HnswStore.search(spark, dir, qb).collect().toSeq == cached)
+        assert(HnswStore.lastLocalLayers.isEmpty)
+      } finally HnswStore.LayerCacheBudgetBytes = prev
+    } finally graft.sources.TempStores.delete(root)
+  }
+
   test("v28 cold graph serve: 2 jobs, the pruned layer-0 hops") {
     val srpDir = SrpStore.storeFor(spark, sf)
     val edgeDir = EdgeStore.refinedStoreFor(spark, sf)

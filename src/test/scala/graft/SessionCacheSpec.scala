@@ -10,14 +10,30 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FakeEmbedder
 import graft.operators.SrpBanded
-import graft.sources.{CodeStore, FilteredServe, HnswStore, SrpStore}
+import graft.sources.{CodeStore, FilteredServe, HnswStore, SrpStore, Versioned}
 
 /** [[SessionCache]]'s contract: the one invalidation rule, access-
-  * ordered overflow, session scoping, identity keys, and the registry
-  * that lets [[Tables.invalidate]] reach every memo. */
+  * ordered overflow, session scoping, identity keys, the registry
+  * that lets [[Tables.invalidate]] reach every memo, one build per
+  * key, and versioned-store memos that follow the live version stamp
+  * across publishes and rebuilds, in this JVM or another. */
 class SessionCacheSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val sf = SparkTestSession.Sf
+
+  /** run `main` of `probe` in a child JVM on this JVM's class path;
+    * (exit code, output) */
+  private def childJvm(probe: String, args: String*): (Int, String) = {
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(javaBin, "-Xmx1g") ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), probe) ++ args
+    val out = new StringBuilder
+    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), _ => ()))
+    (code, out.toString)
+  }
 
   /** (value, whether `build` ran) */
   private def probe[K, V](c: SessionCache[K, V], k: K, v: V): (V, Boolean) = {
@@ -83,16 +99,121 @@ class SessionCacheSpec extends AnyFunSuite {
   test("entries of a stopped session are dropped without onEvict") {
     // stopping a SparkContext ends this JVM's test session, so the
     // check runs in a child JVM (SessionCacheStopProbe)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
-    val cmd = Seq(javaBin, "-Xmx1g") ++ jvmArgs ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.SessionCacheStopProbe")
-    val out = new StringBuilder
-    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
-      l => out.append(l).append('\n'), _ => ()))
-    assert(code == 0 && out.toString.contains("stopped-session: dropped=true evicted=0 shared=kept"),
+    val (code, out) = childJvm("graft.SessionCacheStopProbe")
+    assert(code == 0 && out.contains("stopped-session: dropped=true evicted=0 shared=kept"),
       s"probe exit $code:\n$out")
+  }
+
+  test("concurrent misses on one key run one build; the waiters count as hits") {
+    val c = new SessionCache[String, Int](8, identity)
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val n = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val (_, misses0, _) = SessionCache.memoCounts
+      val got = (1 to n).map(_ => pool.submit(() =>
+        c.getOrElseUpdate(spark, "/once/k") { builds.incrementAndGet(); release.await(); 42 }))
+      while (builds.get() == 0) Thread.sleep(5)
+      Thread.sleep(200) // let the other threads reach the entry and wait on it
+      release.countDown()
+      assert(got.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS)) == Seq.fill(n)(42))
+      assert(builds.get() == 1, s"${builds.get()} builds for one key")
+      assert(SessionCache.memoCounts._2 - misses0 == 1, "misses must equal builds")
+    } finally pool.shutdownNow(): Unit
+  }
+
+  test("a build that throws is not memoized: the next call retries it") {
+    val c = new SessionCache[String, Int](8, identity)
+    var calls = 0
+    intercept[IllegalStateException](
+      c.getOrElseUpdate(spark, "/retry/k") { calls += 1; throw new IllegalStateException("boom") })
+    assert(c.getOrElseUpdate(spark, "/retry/k") { calls += 1; 7 } == 7)
+    assert(c.getOrElseUpdate(spark, "/retry/k") { calls += 1; 8 } == 7)
+    assert(calls == 2)
+  }
+
+  test("a build that rewrites its own dir runs once and is not handed to onEvict") {
+    var evicted = 0
+    val c = new SessionCache[String, Int](8, identity, _ => evicted += 1)
+    var builds = 0
+    assert(c.getOrElseUpdate("/self/k") { builds += 1; Tables.invalidate("/self/k"); 1 } == 1)
+    assert(builds == 1 && evicted == 0, s"builds $builds, evicted $evicted")
+  }
+
+  test("a newer stamp rebuilds and replaces the key's entry") {
+    val c = new SessionCache[String, Int](8, identity)
+    assert(c.getOrElseUpdate(spark, "/stamp/k", Seq(("v0", 1L)))(1) == 1)
+    assert(c.getOrElseUpdate(spark, "/stamp/k", Seq(("v0", 1L)))(2) == 1, "same stamp missed")
+    assert(c.getOrElseUpdate(spark, "/stamp/k", Seq(("v0", 1L), ("v1", 2L)))(3) == 3)
+    assert(SessionCache.registeredDirs.count(_ == "/stamp/k") == 1,
+      "the superseded entry was kept beside the new one")
+  }
+
+  test("stale build: a read after a publish sees the published version") {
+    // a build lists the live versions, then stalls while a writer
+    // publishes: the entry it inserts is keyed on the stamp it listed,
+    // so the next read lists the new stamp and rebuilds
+    val root = Files.createTempDirectory("stale-build").toString
+    val c = Versioned.Chain(root, root, v => Seq(s"$root/data/v$v"))
+    Versioned.create(spark, c, s"$root/data")(())
+    val cache = new SessionCache[String, Seq[Int]](8, identity)
+    val listed = new java.util.concurrent.CountDownLatch(1)
+    val published = new java.util.concurrent.CountDownLatch(1)
+    @volatile var first = true
+    def read(): Seq[Int] = Versioned.memo(cache, spark, root, c) { vers =>
+      if (first) { first = false; listed.countDown(); published.await() }
+      vers
+    }
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val racing = scala.concurrent.Future(read())
+    listed.await()
+    Versioned.append(spark, c, compact = ())(_ => ())
+    published.countDown()
+    assert(scala.concurrent.Await.result(racing, scala.concurrent.duration.Duration(60, "s")) == Seq(0))
+    assert(read() == Seq(0, 1), "a read after the publish returned the build that raced it")
+    graft.sources.TempStores.delete(root)
+  }
+
+  private val probeText = "a delta row written by another driver process"
+
+  test("another JVM's upsert is seen by the next warm code serve") {
+    val dir = Files.createTempDirectory("sc-xproc").toString
+    try {
+      CodeStore.write(spark, sf, dir)
+      val q = FakeEmbedder.embed(probeText)
+      CodeStore.search(spark, dir, q).collect()
+      val warm = CodeStore.search(spark, dir, q).collect()
+      val id = 900000001L
+      assert(!warm.exists(_.getLong(0) == id))
+      val (code, out) = childJvm("graft.StoreWriterProbe", "upsert", dir, id.toString, probeText)
+      assert(code == 0 && out.contains("store-writer: upsert done"), s"probe exit $code:\n$out")
+      val top = CodeStore.search(spark, dir, q, k = 1).collect()
+      assert(top.map(_.getLong(0)).toSeq == Seq(id), s"the delta's row was not served: ${top.toSeq}")
+    } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("another JVM's full rebuild (chain restarted at v0) is seen by the next warm code serve") {
+    val root = Files.createTempDirectory("sc-rebuild").toString
+    val (dir, evens) = (s"$root/code", s"$root/evens")
+    try {
+      Tables.embeddings(spark, sf).filter(col("vec_id") % 2 === 0)
+        .write.parquet(s"$evens/embeddings.parquet")
+      CodeStore.write(spark, sf, dir)
+      val oddId = Tables.embeddings(spark, sf)
+        .filter(col("vec_id") % 2 === 1 && col("embedding").isNotNull &&
+          size(col("embedding")) === SrpBanded.Dim)
+        .orderBy(col("vec_id")).select(col("vec_id"), col("embedding")).first()
+      val q = oddId.getSeq[Float](1).toArray
+      CodeStore.search(spark, dir, q).collect()
+      assert(CodeStore.search(spark, dir, q, k = 1).collect().map(_.getLong(0)).toSeq ==
+        Seq(oddId.getLong(0)))
+      val (code, out) = childJvm("graft.StoreWriterProbe", "write", dir, evens)
+      assert(code == 0 && out.contains("store-writer: write done"), s"probe exit $code:\n$out")
+      val rebuilt = CodeStore.search(spark, dir, q).collect()
+      assert(rebuilt.forall(_.getLong(0) % 2 == 0), s"rows of the replaced store served: ${rebuilt.toSeq}")
+      assert(rebuilt.toSeq == CodeStore.search(spark.newSession(), dir, q).collect().toSeq)
+    } finally graft.sources.TempStores.delete(root)
   }
 
   private def edgeFile(rows: Int): String = {
@@ -179,6 +300,24 @@ class SessionCacheSpec extends AnyFunSuite {
     serve()
     Tables.invalidate(root)
     Seq(hnsw, code, srp).foreach(d => assert(under(d).isEmpty, s"memos left under $d: ${under(d)}"))
+  }
+}
+
+/** Child-JVM writer for the cross-process specs: `upsert <dir> <id>
+  * <text>` appends one embedded row to the code store at `dir`;
+  * `write <dir> <corpus>` rebuilds it from another corpus. Prints one
+  * verdict line. */
+object StoreWriterProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = LocalSpark.builder(1).getOrCreate()
+    import spark.implicits._
+    args.toSeq match {
+      case Seq("upsert", dir, id, text) =>
+        CodeStore.upsert(spark, dir, Seq((id.toLong, FakeEmbedder.embed(text))).toDF("vec_id", "embedding"))
+      case Seq("write", dir, corpus) => CodeStore.write(spark, corpus, dir)
+    }
+    println(s"store-writer: ${args(0)} done")
+    spark.stop()
   }
 }
 

@@ -92,22 +92,18 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
     try e.value catch { case t: Throwable => m.remove(k, e); throw t }
   }
 
-  /** drop the entries whose key matches `pred`, handing their values
-    * to `onEvict` — for a writer that knows exactly which entries its
-    * rewrite made stale (the registry-wide rule is [[Tables.invalidate]]) */
-  def invalidate(pred: K => Boolean): Unit =
+  /** drop the entries derived from a dir overlapping `prefix`,
+    * handing their values to `onEvict` ([[Tables.invalidate]]) */
+  private def invalidateUnder(prefix: String): Unit =
     m.toSeq.foreach { case (k, e) =>
-      if (pred(k._2) && m.remove(k).isDefined) {
+      if (SessionCache.overlaps(dirOf(k._2), prefix) && m.remove(k).isDefined) {
         SessionCache.evictions.incrementAndGet()
         // best-effort: invalidation must not fail the caller. An entry
-        // still building (a build may rewrite its own dir, as
-        // FilteredServe.ensureMeta does) is dropped as on overflow
+        // still building (a build may rewrite its own dir) is dropped
+        // as on overflow
         if (e.built) try onEvict(e.value) catch { case _: Throwable => () }
       }
     }
-
-  private def invalidateUnder(prefix: String): Unit =
-    invalidate(k => SessionCache.overlaps(dirOf(k), prefix))
 
   private def dirs: Iterable[String] = m.keys.map(k => dirOf(k._2))
 }

@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Tables
 import graft.operators.SrpBanded
 import graft.functions.{bound, vectors}
@@ -90,13 +93,22 @@ object MetaTerm {
   * The tier decision reads the write-time `meta/stats/` value-count
   * artifact (one tiny memoized collect — the catalog-statistics role).
   *
-  * Artifacts (written once per store, the ingest-time cost every
-  * index here pays):
+  * Artifacts — a merge-on-read [[Versioned]] chain rooted at
+  * `<srpDir>/meta` (markers and crash contract there), one `__ver=N`
+  * dir per artifact and version:
   * {{{
-  *   <srpDir>/meta/byval/<c1>=<v1>/.../  (vec_id, embedding, keys) sorted by vec_id
-  *   <srpDir>/meta/byid/mb=<m>/          (vec_id, c1, c2, ...)  mb = pmod(vec_id, 64)
-  *   <srpDir>/meta/stats/                (c1, c2, ..., cnt)
+  *   <srpDir>/meta/byval/__ver=N/<c1>=<v1>/.../  (vec_id, embedding, keys) sorted by vec_id
+  *   <srpDir>/meta/byid/__ver=N/pb=<p>/          (vec_id, c1, c2, ...)
+  *   <srpDir>/meta/stats/__ver=N/                (c1, c2, ..., cnt), every combo
+  *   <srpDir>/meta/rstats/__ver=N/               range histograms, if declared
   * }}}
+  * `pb = pmod(vec_id, n)`, with `n` sized from the store's bytes
+  * ([[StoreLayout]]; at most 64) and pinned under
+  * `<srpDir>/meta/layout/v<N>/`. A byval row is resolved per (value
+  * combo, vec_id) and a byid row per vec_id: the latest live version
+  * wins, and a null-keys byval row is the tombstone a moved id leaves
+  * in its old combo. Each version holds the full stats, so a read
+  * takes only the latest version's.
   */
 object FilteredServe {
 
@@ -109,8 +121,13 @@ object FilteredServe {
     * highest-recall plan (the Qdrant/pgvector cardinality crossover) */
   val ExactScanMax = 100000L
 
-  /** byid partition count — the EdgeStore pb convention */
-  val IdPartitions = 64
+  /** byid pb bucket cap (the count of a store of ≥ 64 × 4 MB) —
+    * the [[CodeStore.Partitions]] convention */
+  private val IdBucketCap = 64
+
+  /** bytes of one byid row as [[StoreLayout]] sizes it: the id plus
+    * a few short metadata strings */
+  private val IdRowBytes = 64L
 
   /** deterministic walk-escalation schedule: multiplies maxEntries
     * (and, capped at 4, beam) until k matching candidates surface */
@@ -275,12 +292,18 @@ object FilteredServe {
   def filteredServes: Long = coverageServes.get()
   def filteredServesBelowFloor: Long = coverageBelowFloor.get()
 
+  /** the meta chain of the store at `srpDir`: a version's data is its
+    * four artifact dirs and its byid layout pin */
+  private[graft] def chain(srpDir: String): Versioned.Chain = {
+    val m = s"$srpDir/meta"
+    Versioned.Chain(m, m, v =>
+      Seq("byval", "byid", "stats", "rstats").map(a => s"$m/$a/__ver=$v") :+ StoreLayout.dir(m, v))
+  }
+
   /** Write the meta artifacts under an existing SRP store dir with
     * the default corpus wiring ([[MetaCols]] over the documents
-    * table). The `stats/` write comes LAST and carries parquet's
-    * _SUCCESS marker, so its presence commits the whole artifact set
-    * (a crash mid-write leaves [[ensureMeta]] rebuilding — never
-    * serving a torn copy). */
+    * table), as version 0 of the meta chain: a crash mid-write leaves
+    * no live version, and [[ensureMeta]] rebuilds. */
   def writeMeta(spark: SparkSession, d: String, srpDir: String): Unit =
     writeMetaFrom(spark, srpDir,
       Tables.documents(spark, d)
@@ -319,8 +342,6 @@ object FilteredServe {
       s"docs frame must carry declared meta column '$c'"))
     require(metaCols.intersect(rangeCols).isEmpty,
       "a column cannot be both partition-class and range-class")
-    val f = Hfs.fs(spark, srpDir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$srpDir/meta"), true): Unit
     // the store is STRING-canonical in its declared columns: partition
     // values are path strings anyway, every read path casts to string,
     // and upsertMeta reads update values as strings — an int-typed
@@ -336,63 +357,83 @@ object FilteredServe {
     // float values the rerank will score.
     val embS = emb.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding").cast("array<float>").as("embedding"))
-    val joined = embS.join(docsS, Seq("vec_id"))
-    // value-partitioned embedding copy: the selective path's pruned
-    // exact scan (partition count = distinct value combinations — the
-    // tenant/category layout a production corpus already has). Rows
-    // carry the [[CodeRpb]]-bit sign sketch in-row (the per-value CODE
-    // index — 64 bytes vs the embedding's ~3 KB, column-projected so
-    // the code tier never reads embedding bytes) and are sorted by
-    // vec_id within each value dir, so the shortlist's point fetch
-    // prunes at parquet row-group min/max, not just partition dirs.
-    joined
-      .withColumn("keys",
-        SrpBanded.bandKeysCol(col("embedding"), SrpBanded.Dim, CodeRpb))
-      .repartition(metaCols.map(col): _*)
-      .sortWithinPartitions((metaCols :+ "vec_id").map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(metaCols: _*)
-      .parquet(s"$srpDir/meta/byval")
-    // id-keyed metadata rows: the walk path's bounded post-filter
-    // point read (no embedding — a candidate's meta is a few bytes)
-    docsS
-      .withColumn("mb", pmod(col("vec_id"), lit(IdPartitions.toLong)))
-      .repartition(col("mb"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("mb")
-      .parquet(s"$srpDir/meta/byid")
-    // range-column histograms — the planner's cardinality source for
-    // comparison terms (before stats: stats is the commit marker)
-    if (rangeCols.nonEmpty)
-      writeRangeStats(spark, srpDir, docsS, rangeCols)
-    // value counts — the planner's statistics (written last: commit)
-    joined.groupBy(metaCols.map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$srpDir/meta/stats")
-    statsCache.invalidate(_ == srpDir)
-    rstatsCache.invalidate(_ == srpDir)
-    metaVerified.invalidate(_ == srpDir)
-    byValDfCache.invalidate(_._1 == srpDir)
+    val m = s"$srpDir/meta"
+    Versioned.create(spark, chain(srpDir), m) {
+      // value-partitioned embedding copy: the selective path's pruned
+      // exact scan (partition count = distinct value combinations — the
+      // tenant/category layout a production corpus already has). Rows
+      // carry the [[CodeRpb]]-bit sign sketch in-row (the per-value CODE
+      // index — 64 bytes vs the embedding's ~3 KB, column-projected so
+      // the code tier never reads embedding bytes).
+      writeByVal(embS.join(docsS, Seq("vec_id"))
+        .withColumn("keys", SrpBanded.bandKeysCol(col("embedding"), SrpBanded.Dim, CodeRpb)),
+        m, metaCols, 0)
+      // the other artifacts come from the rows just written, read back
+      // without their embeddings: value counts (the planner's
+      // statistics), the id-keyed rows of the walk path's bounded
+      // post-filter point read, and the range histograms
+      val rows = byValAt(spark, m, metaCols, rangeCols, Seq(0))
+        .select((col("vec_id") +: (metaCols ++ rangeCols).map(col)): _*)
+      val combos = rows.groupBy(metaCols.map(col): _*).agg(count(lit(1)).as("cnt"))
+        .collect().toSeq.map(r => (metaCols.map(c => r.getAs[String](c)), r.getAs[Long]("cnt")))
+      writeStats(spark, m, 0, metaCols, combos)
+      writeByIdSized(rows, combos.map(_._2).sum, m, 0)
+      if (rangeCols.nonEmpty) writeRangeStats(spark, m, 0, rows, rangeCols)
+    }
+  }
+
+  /** write version v's byval rows, sorted by vec_id within each value
+    * dir so the shortlist's point fetch prunes at parquet row-group
+    * min/max, not just partition dirs */
+  private def writeByVal(rows: DataFrame, m: String, cols: Seq[String], v: Int): Unit =
+    rows.withColumn("__ver", lit(v))
+      .repartition(cols.map(col): _*)
+      .sortWithinPartitions(("__ver" +: cols :+ "vec_id").map(col): _*)
+      .write.mode(SaveMode.Append)
+      .partitionBy("__ver" +: cols: _*)
+      .parquet(s"$m/byval")
+
+  /** write version v's byid rows (vec_id, <meta cols>, <range cols>)
+    * in `buckets` pb buckets */
+  private def writeById(rows: DataFrame, m: String, v: Int, buckets: Int): Unit =
+    rows.withColumn("pb", pmod(col("vec_id"), lit(buckets.toLong)))
+      .withColumn("__ver", lit(v))
+      .repartition(col("pb"))
+      .write.mode(SaveMode.Append)
+      .partitionBy("__ver", "pb")
+      .parquet(s"$m/byid")
+
+  /** write `rows` (`count` of them) as version v's byid at the bucket
+    * count their size gives (a full build or a fold), and pin it */
+  private def writeByIdSized(rows: DataFrame, count: Long, m: String, v: Int): Unit =
+    StoreLayout.writeSized(rows.sparkSession, m, v, count, IdRowBytes, IdBucketCap)(
+      writeById(rows, m, v, _))
+
+  /** write version v's stats: every value combo with its row count */
+  private def writeStats(spark: SparkSession, m: String, v: Int, cols: Seq[String],
+                         combos: Seq[(Seq[String], Long)]): Unit = {
+    val schema = StructType(cols.map(StructField(_, StringType)) :+ StructField("cnt", LongType))
+    spark.createDataFrame(combos.map { case (vs, n) => Row.fromSeq(vs :+ n) }.asJava, schema)
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$m/stats/__ver=$v")
   }
 
   /** equi-width bins per range-column histogram */
   val HistBins = 64
 
-  /** Build + write the `meta/rstats/` histogram: per declared range
-    * column, [[HistBins]] equi-width bins over the numeric parse of
-    * the (string-canonical) values — rows `(rcol, bin, lo, hi, cnt)`.
-    * Non-numeric values land in bin −1 (the estimator counts them as
-    * always-matching: a conservative over-estimate that only ever
-    * pushes the planner toward a cheaper-per-row tier). */
-  private def writeRangeStats(spark: SparkSession, srpDir: String,
-                              docsS: DataFrame, rangeCols: Seq[String]): Unit = {
+  /** Build + write version v's `meta/rstats/` histogram from `rows`:
+    * per declared range column, [[HistBins]] equi-width bins over the
+    * numeric parse of the (string-canonical) values — rows `(rcol,
+    * bin, lo, hi, cnt)`. Non-numeric values land in bin −1 (the
+    * estimator counts them as always-matching: a conservative
+    * over-estimate that only ever pushes the planner toward a
+    * cheaper-per-row tier). */
+  private def writeRangeStats(spark: SparkSession, m: String, v: Int,
+                              rows: DataFrame, rangeCols: Seq[String]): Unit = {
     import spark.implicits._
     val hists = rangeCols.map { rc =>
       // try_cast: non-numeric values land as NULL → counted into the
       // always-matching bin −1 (plain cast would throw under ANSI)
-      val vals = docsS.select(col(rc).try_cast("double").as("v"))
+      val vals = rows.select(col(rc).try_cast("double").as("v"))
       val mm = vals.agg(min(col("v")).as("lo"), max(col("v")).as("hi"),
         sum(when(col("v").isNull, 1L).otherwise(0L)).as("nonnum")).head()
       val nNonNum = if (mm.isNullAt(2)) 0L else mm.getLong(2)
@@ -416,50 +457,43 @@ object FilteredServe {
     hists.reduce(_ unionByName _)
       .coalesce(1)
       .write.mode(SaveMode.Overwrite)
-      .parquet(s"$srpDir/meta/rstats")
+      .parquet(s"$m/rstats/__ver=$v")
   }
 
   /** Incremental meta maintenance — the [[SrpStore.upsert]] contract
-    * applied to the three meta artifacts, so a corpus upsert never
-    * forces an O(corpus) meta rebuild:
+    * applied to the meta chain: one [[Versioned.append]] of O(batch)
+    * rows, so a corpus upsert never forces an O(corpus) meta rebuild
+    * and a concurrent serve reads the store before the append or
+    * after it, never a mix:
     *
     *  - `updates` carries (vec_id, embedding, <MetaCols>) — metadata
     *    rides the update batch the way embeddings do (an ingest knows
     *    both); a re-ingested document may CHANGE its metadata values,
     *    which moves it across byval partitions;
-    *  - byval: only the touched value partitions are rewritten via
-    *    dynamic partition overwrite — partitions gaining rows plus
-    *    partitions holding a stale copy of an updated id (located by
-    *    the one unavoidable id-column-pruned store scan, the
-    *    IvfStore.upsert adjudication); emptied value dirs deleted;
-    *  - byid: `mb` is a pure function of vec_id, so stale and new
-    *    rows share a partition — only the updated ids' mb partitions
-    *    rewrite;
-    *  - crash contract: the stats `_SUCCESS` marker is DELETED before
-    *    the first rewrite and stats are rewritten LAST — it is the
-    *    artifact [[ensureMeta]] gates on, so a crash anywhere
-    *    mid-upsert leaves the store visibly uncommitted and the next
-    *    serve's ensureMeta rebuilds it from the corpus; only a
-    *    completed upsert re-commits. (Without the up-front delete,
-    *    the PREVIOUS stats marker would vouch for a half-rewritten
-    *    byval/byid set — a torn store served as consistent.)
+    *  - byval gets the batch's rows, plus a null-keys tombstone in the
+    *    old value partition of each updated id whose values changed
+    *    (old values from a pruned byid point read);
+    *  - byid gets the batch's rows (the latest row per vec_id wins);
+    *  - stats get a full copy of the combo counts: the previous ones
+    *    plus the batch's new and minus its ids' old combos, computed
+    *    on the driver, emptied combos dropped; rstats, when range
+    *    columns are declared, are rebuilt from the live rows;
+    *  - once the chain reaches [[Versioned.CompactAfter]] versions it
+    *    folds to one copy of the resolved view.
     *
-    * Returns the touched byval (value...) partitions (what the
-    * rewrite-minimality spec asserts against). */
+    * Returns the touched byval value combos, old ∪ new. */
   def upsertMeta(spark: SparkSession, srpDir: String,
                  updates: DataFrame): Seq[Seq[String]] = {
-    // declared columns come from the store's own stats/rstats
-    // artifacts — read BEFORE the uncommit drops the cache entries
-    val cols = storeMetaCols(spark, srpDir)
-    val rcols = storeRangeCols(spark, srpDir)
+    val before = view(spark, srpDir)
+    val (cols, rcols) = (before.cols, before.rcols)
     (cols ++ rcols).foreach(c => require(updates.columns.contains(c),
       s"upsertMeta updates must carry meta column '$c'"))
     val upd = updates
       .filter(col("embedding").isNotNull &&
         size(col("embedding")) === SrpBanded.Dim)
-      // same write-side type pinning as writeMetaFrom: the merged byval
-      // must keep the long/array<float> schema readByVal enforces, and
-      // keys are computed from the float-cast values the store ranks
+      // same write-side type pinning as writeMetaFrom: the delta must
+      // keep the long/array<float> schema readByVal enforces, and keys
+      // are computed from the float-cast values the store ranks
       .select((Seq(col("vec_id").cast("long").as("vec_id"),
         col("embedding").cast("array<float>").as("embedding"),
         SrpBanded.bandKeysCol(col("embedding").cast("array<float>"),
@@ -467,246 +501,169 @@ object FilteredServe {
           .as("keys")) ++
         // string-cast like the store itself (writeMetaFrom): an
         // int-typed updates frame must merge, not throw on getString
-        (cols ++ rcols).map(c => col(c).cast("string").as(c))): _*)
-      .localCheckpoint(true)
-    val updIds = upd.select(col("vec_id")).distinct()
-    // the keys guard needs the RAW footer schema (a schema-enforced
-    // read would surface a missing column as nulls, not absence)
-    require(spark.read.parquet(s"$srpDir/meta/byval").columns.contains("keys"),
-      s"byval at $srpDir predates the code-tier keys column — run " +
-        "ensureMeta/writeMeta before upserting (a mixed-schema byval " +
-        "would rank null-key rows first in the Hamming shortlist)")
-    val byval = readByValAs(spark, srpDir, cols, rcols)
-      .select((Seq(col("vec_id"), col("embedding"), col("keys")) ++
-        (cols ++ rcols).map(col)): _*)
-    val oldVals = byval.join(broadcast(updIds), Seq("vec_id"))
-      .select(cols.map(col): _*).distinct()
-      .collect().map(r => cols.indices.map(r.getString)).toSeq
-    val newVals = upd.select(cols.map(col): _*).distinct()
-      .collect().map(r => cols.indices.map(r.getString)).toSeq
-    val touched = (oldVals ++ newVals).distinct
-    if (touched.nonEmpty) {
-      // uncommit FIRST: from here to the final stats write the store
-      // is in-flux, and a crash must leave it rebuild-on-next-read,
-      // never served-as-consistent
-      Hfs.fs(spark, srpDir).delete(
-        new org.apache.hadoop.fs.Path(s"$srpDir/meta/stats/_SUCCESS"), false): Unit
-      statsCache.invalidate(_ == srpDir)
-      // drop the ensureMeta memo too: if this upsert dies mid-flight
-      // (exception, not JVM death), the next serve must re-check the
-      // commit marker and rebuild, not trust a stale "verified"
-      metaVerified.invalidate(_ == srpDir)
-      // the cached analyzed scan's file index is about to go stale
-      byValDfCache.invalidate(_._1 == srpDir)
-      val touchedPred = touched.map(vs =>
-        cols.zip(vs).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-        .reduce(_ || _)
-      val survivors = byval.filter(touchedPred)
-        .join(broadcast(updIds), Seq("vec_id"), "left_anti")
-      val merged = survivors
-        .unionByName(upd.select(byval.columns.map(col): _*))
-        .repartition(cols.map(col): _*)
-        .localCheckpoint(true)
-      try {
-        // sort AFTER the checkpoint so the writer sees the ordering
-        // (a checkpoint erases outputOrdering and the writer's own
-        // partition-column re-sort would drop the vec_id sub-order
-        // the shortlist point fetch row-group-prunes on)
-        merged
-          .sortWithinPartitions((cols :+ "vec_id").map(col): _*)
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(cols: _*)
-          .parquet(s"$srpDir/meta/byval")
-        // a value partition emptied by a move survives dynamic
-        // overwrite — delete it (the SrpStore.upsert emptied-bucket move)
-        val present = merged.select(cols.map(col): _*).distinct()
-          .collect().map(r => cols.indices.map(i => String.valueOf(r.get(i)))).toSet
-        val f = Hfs.fs(spark, srpDir)
-        touched.filterNot(present).foreach { vs =>
-          // partition dirs on disk carry Spark's Hive-style escaping
-          // (space, '/', '=', '%', …) — the delete path must use the
-          // SAME escaping or an emptied partition with such a value
-          // survives and keeps serving its stale rows
-          val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-          val sub = cols.zip(vs).map { case (c, v) => s"${esc(c)}=${esc(v)}" }.mkString("/")
-          f.delete(new org.apache.hadoop.fs.Path(s"$srpDir/meta/byval/$sub"), true): Unit
-        }
-      } finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(merged)
-      // byid: rewrite the updated ids' mb partitions
-      val mbs = updIds.collect().map(r =>
-        Math.floorMod(r.getLong(0), IdPartitions.toLong)).distinct.toSeq
-      val byid = spark.read.parquet(s"$srpDir/meta/byid")
-        .select((Seq(col("vec_id")) ++
-          (cols ++ rcols).map(c => col(c).cast("string").as(c)) :+
-          col("mb").cast("long").as("mb")): _*)
-      val idSurvivors = byid.filter(col("mb").isin(mbs: _*))
-        .join(broadcast(updIds), Seq("vec_id"), "left_anti")
-      val idMerged = idSurvivors
-        .unionByName(upd.select((Seq(col("vec_id")) ++ (cols ++ rcols).map(col)): _*)
-          .withColumn("mb", pmod(col("vec_id"), lit(IdPartitions.toLong))))
-        .repartition(col("mb"))
-        .localCheckpoint(true)
-      try idMerged.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("mb")
-        .parquet(s"$srpDir/meta/byid")
-      finally org.apache.spark.sql.GraftBridge.unpersistPlanRdds(idMerged)
-      // range histograms rebuilt from the merged byval (cheap columns)
-      // before the committing stats write
-      if (rcols.nonEmpty) {
-        writeRangeStats(spark, srpDir,
-          readByValAs(spark, srpDir, cols, rcols)
-            .select((col("vec_id") +: rcols.map(col)): _*),
-          rcols)
-        rstatsCache.invalidate(_ == srpDir)
-      }
-      // stats last (the ensureMeta gate): partition-column-only scan
-      readByValAs(spark, srpDir, cols, rcols)
-        .groupBy(cols.map(col): _*)
-        .agg(count(lit(1)).as("cnt"))
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$srpDir/meta/stats")
-      statsCache.invalidate(_ == srpDir)
-      byValDfCache.invalidate(_._1 == srpDir)
+        (rcols ++ cols).map(c => col(c).cast("string").as(c))): _*)
+    def combo(r: Row): Seq[String] = cols.map(c => r.getAs[String](c))
+    val news = upd.select((col("vec_id") +: cols.map(col)): _*).collect()
+      .map(r => (r.getLong(0), combo(r))).toSeq
+    val ids = news.map(_._1).distinct
+    val olds: Map[Long, Seq[String]] =
+      if (ids.isEmpty) Map.empty
+      else byIdPoint(before, ids).select((col("vec_id") +: cols.map(col)): _*).collect()
+        .map(r => r.getLong(0) -> combo(r)).toMap
+    if (news.nonEmpty) {
+      val counts = scala.collection.mutable.LinkedHashMap(before.combos: _*)
+      news.foreach { case (_, vs) => counts(vs) = counts.getOrElse(vs, 0L) + 1L }
+      olds.values.foreach(vs => counts(vs) = counts.getOrElse(vs, 0L) - 1L)
+      val tombs = news.collect { case (id, vs) if olds.get(id).exists(_ != vs) =>
+        Row.fromSeq(Seq(id, null, null) ++ rcols.map(_ => null) ++ olds(id))
+      }.distinct
+      val tombSchema = StructType(upd.schema.map(_.copy(nullable = true)))
+      val m = s"$srpDir/meta"
+      Versioned.append(spark, chain(srpDir), compactMeta(spark, srpDir)) { v =>
+        writeByVal(upd.unionByName(spark.createDataFrame(tombs.asJava, tombSchema)), m, cols, v)
+        writeById(upd.select((col("vec_id") +: (cols ++ rcols).map(col)): _*), m, v, before.buckets)
+        writeStats(spark, m, v, cols, counts.toSeq.filter(_._2 > 0))
+        if (rcols.nonEmpty)
+          writeRangeStats(spark, m, v, byIdAt(spark, m, cols, rcols, before.vers :+ v), rcols)
+      }: Unit
     }
-    org.apache.spark.sql.GraftBridge.unpersistPlanRdds(upd)
-    touched
+    (olds.values.toSeq ++ news.map(_._2)).distinct
   }
 
-  /** Schema-enforced byval read — EVERY byval data read funnels here.
-    * Spark's partition-column TYPE INFERENCE would parse
-    * numeric-looking partition dir values ("withdrawn=0", "m=5") into
-    * numbers, merging distinct string values whose numeric forms
-    * collide ("5" and "5.0" both read back as 5.0, "00" as 0) and
-    * breaking the store's string-canonical contract UNRECOVERABLY
+  /** [[Versioned.fold]] the meta chain into one copy of its resolved
+    * view: tombstones dropped, byid re-sized from the live row count,
+    * the latest stats and histograms carried over */
+  private def compactMeta(spark: SparkSession, srpDir: String): Unit = {
+    val m = s"$srpDir/meta"
+    Versioned.fold(spark, chain(srpDir)) { next =>
+      val cur = view(spark, srpDir)
+      writeByVal(cur.byval, m, cur.cols, next)
+      writeByIdSized(cur.byid.drop("pb"), cur.combos.map(_._2).sum, m, next)
+      writeStats(spark, m, next, cur.cols, cur.combos)
+      if (cur.rcols.nonEmpty)
+        spark.read.parquet(s"$m/rstats/__ver=${cur.vers.max}")
+          .write.mode(SaveMode.Overwrite).parquet(s"$m/rstats/__ver=$next")
+    }
+  }
+
+  /** Schema-enforced byval read over versions `vers` — EVERY byval
+    * data read funnels here. Spark's partition-column TYPE INFERENCE
+    * would parse numeric-looking partition dir values ("withdrawn=0",
+    * "m=5") into numbers, merging distinct string values whose numeric
+    * forms collide ("5" and "5.0" both read back as 5.0, "00" as 0)
+    * and breaking the store's string-canonical contract UNRECOVERABLY
     * (casting back yields the canonical numeric rendering, not the
     * written dir value). Supplying the schema pins every declared
     * column to STRING, so partition values round-trip byte-exactly
     * and static file-index pruning compares the strings the store
-    * wrote. (Schema reads on missing columns yield nulls, so the
-    * pre-r13 `keys` guard in ensureMeta/upsertMeta must keep its raw
-    * footer read.) */
-  private[graft] def readByVal(spark: SparkSession, srpDir: String): DataFrame =
-    // memoize the ANALYZED scan (plan + file index), not data: every
-    // spark.read.parquet builds a fresh InMemoryFileIndex — a full
-    // driver-side directory listing of the value-partitioned store —
-    // and the batched serves call this once per predicate group per
-    // serve (the grouped mixed batch paid it 2× per group). Entries
-    // are invalidated wherever the byval files are rewritten
-    // (writeMetaFrom, upsertMeta) and on corpus invalidation (r16),
-    // AND keyed on the stats commit marker's (mtime, length): an
-    // out-of-band rewrite that bypasses this JVM's invalidation still
-    // rewrites the marker, so its stale file listing MISSES even when
-    // the rewrite lands within the file system's mtime granularity —
-    // one cheap getFileStatus per call, never a re-listing.
-    byValDfCache.getOrElseUpdate(spark, (srpDir, statsMarkerStamp(spark, srpDir))) {
-      readByValAs(spark, srpDir,
-        storeMetaCols(spark, srpDir), storeRangeCols(spark, srpDir))
-    }
-
-  /** (mtime, length) of the store's stats commit marker ((0, -1) when
-    * it cannot be read) — the out-of-band-rewrite cache key for
-    * [[readByVal]] */
-  private[graft] def statsMarkerStamp(spark: SparkSession, srpDir: String): (Long, Long) =
-    try {
-      val st = Hfs.fs(spark, srpDir)
-        .getFileStatus(new org.apache.hadoop.fs.Path(s"$srpDir/meta/stats/_SUCCESS"))
-      (st.getModificationTime, st.getLen)
-    } catch { case scala.util.control.NonFatal(_) => (0L, -1L) }
-
-  /** analyzed-scan memo for [[readByVal]] — plan reuse only, nothing
-    * persisted (no onEvict needed); keyed (store dir, stats marker
-    * stamp) so out-of-band rewrites miss */
-  private val byValDfCache =
-    new graft.SessionCache[(String, (Long, Long)), DataFrame](16, _._1)
-
-  /** [[readByVal]] with the declared columns already in hand (the
-    * upsert path, where the stats artifact is mid-rewrite) */
-  private def readByValAs(spark: SparkSession, srpDir: String,
-                          metaCols: Seq[String],
-                          rangeCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val fields =
-      StructField("vec_id", LongType) ::
-        StructField("embedding", ArrayType(FloatType)) ::
-        StructField("keys", ArrayType(LongType)) ::
-        (rangeCols ++ metaCols)
-          .map(c => StructField(c, StringType)).toList
-    spark.read.schema(StructType(fields)).parquet(s"$srpDir/meta/byval")
+    * wrote.
+    *
+    * The latest version per (value combo, vec_id) wins
+    * ([[Versioned.latest]]): the window is keyed on the partition
+    * columns, so value predicates still push below it and prune in
+    * the file index. A single live version (fresh or just folded)
+    * holds no tombstone and skips both the window and the tombstone
+    * filter. */
+  private def byValAt(spark: SparkSession, m: String, cols: Seq[String],
+                      rcols: Seq[String], vers: Seq[Int]): DataFrame = {
+    val fields = Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("keys", ArrayType(LongType))) ++
+      (rcols ++ cols).map(StructField(_, StringType)) :+
+      StructField("__ver", IntegerType)
+    val live = Versioned.latest(spark.read.schema(StructType(fields)).parquet(s"$m/byval"),
+      vers, (cols :+ "vec_id"): _*)
+    if (vers.size == 1) live else live.filter(col("keys").isNotNull)
   }
 
-  private def metaCommitted(spark: SparkSession, srpDir: String): Boolean =
-    Hfs.fs(spark, srpDir)
-      .exists(new org.apache.hadoop.fs.Path(s"$srpDir/meta/stats/_SUCCESS"))
+  /** byid over versions `vers`, latest row per (pb, vec_id) — pb is
+    * a pure function of vec_id, so a pb-pruned point read stays
+    * pruned below the window */
+  private def byIdAt(spark: SparkSession, m: String, cols: Seq[String],
+                     rcols: Seq[String], vers: Seq[Int]): DataFrame = {
+    val fields = StructField("vec_id", LongType) +:
+      (cols ++ rcols).map(StructField(_, StringType)) :+
+      StructField("__ver", IntegerType) :+ StructField("pb", LongType)
+    Versioned.latest(spark.read.schema(StructType(fields)).parquet(s"$m/byid"),
+      vers, "pb", "vec_id")
+  }
 
-  /** build-once guard, keyed by the store dir (the storeFor pattern).
-    * Also a SCHEMA guard: a committed byval predating the code tier
-    * (no `keys` column) is rebuilt, never served mixed-schema. The
-    * footer read behind the check is memoized per store dir. */
-  def ensureMeta(spark: SparkSession, d: String, srpDir: String): Unit =
-    metaVerified.getOrElseUpdate(srpDir) {
-      val ok = metaCommitted(spark, srpDir) &&
-        spark.read.parquet(s"$srpDir/meta/byval").columns.contains("keys")
-      if (!ok) writeMeta(spark, d, srpDir)
-    }
+  /** the pb-pruned byid rows of `ids` */
+  private def byIdPoint(v: View, ids: Seq[Long]): DataFrame =
+    v.byid.filter(bound.isin(col("pb"), ids.map(Math.floorMod(_, v.buckets.toLong)).distinct) &&
+      bound.isin(col("vec_id"), ids))
 
-  // stats are a handful of rows per store — memoized like centroids.
-  // The cache entry also carries the store's DECLARED meta columns
-  // (the stats schema minus "cnt"): every read path infers them from
-  // the artifact itself, so stores declared over different columns
-  // (the reference's withdrawn/type vs the corpus default
-  // lang/source) serve through the same code with no configuration.
-  private val statsCache =
-    new graft.SessionCache[String, (Seq[String], Seq[(Map[String, String], Long)])](64, identity)
-  private val metaVerified = new graft.SessionCache[String, Unit](64, identity)
-
-  private def statsEntry(spark: SparkSession,
-                         srpDir: String): (Seq[String], Seq[(Map[String, String], Long)]) =
-    statsCache.getOrElseUpdate(srpDir) {
-      // the crash contract's read-side gate, enforced at the ONE entry
-      // every serve path (matchCount/byValPruned/range/meta serves)
-      // funnels through: a torn store (upsertMeta uncommitted before
-      // its rewrites, then died) still has readable stats FILES but no
-      // _SUCCESS — it must refuse loudly, never serve stale rows
-      require(metaCommitted(spark, srpDir),
-        s"meta artifacts at $srpDir are uncommitted (crashed " +
-          "write/upsert?) — rebuild via ensureMeta/writeMeta before serving")
-      val df = spark.read.parquet(s"$srpDir/meta/stats")
-      val cols = df.schema.fieldNames.filterNot(_ == "cnt").toSeq
-      (cols, df.collect().toSeq.map { r =>
-        (cols.map(c => c -> String.valueOf(r.getAs[Any](c))).toMap,
-          r.getAs[Long]("cnt"))
-      })
-    }
-
-  /** the store's declared filter columns, read from its own stats
-    * artifact */
-  def storeMetaCols(spark: SparkSession, srpDir: String): Seq[String] =
-    statsEntry(spark, srpDir)._1
-
-  private def stats(spark: SparkSession, srpDir: String): Seq[(Map[String, String], Long)] =
-    statsEntry(spark, srpDir)._2
-
-  // range-column histograms, memoized like stats; a store without the
-  // rstats artifact has no declared range columns
-  private val rstatsCache =
-    new graft.SessionCache[String, Map[String, Seq[(Int, Double, Double, Long)]]](64, identity)
-  private def rstats(spark: SparkSession,
-                     srpDir: String): Map[String, Seq[(Int, Double, Double, Long)]] =
-    rstatsCache.getOrElseUpdate(srpDir) {
-      val p = new org.apache.hadoop.fs.Path(s"$srpDir/meta/rstats")
-      if (!Hfs.fs(spark, srpDir).exists(p)) Map.empty
-      else spark.read.parquet(s"$srpDir/meta/rstats").collect().toSeq
+  /** The store as one live version set `vers` sees it: its declared
+    * columns (the stats schema minus "cnt" — every read path infers
+    * them from the store itself, so stores declared over different
+    * columns serve through the same code with no configuration), its
+    * stats and range histograms (a handful of rows, collected once;
+    * the latest version holds them in full) and its resolved byval and
+    * byid frames (analyzed scans — plan and file index — built on
+    * first use, so a serve never re-lists the store). */
+  private final class View(spark: SparkSession, m: String, val vers: Seq[Int]) {
+    private val statsDf = spark.read.parquet(s"$m/stats/__ver=${vers.max}")
+    val cols: Seq[String] = statsDf.schema.fieldNames.filterNot(_ == "cnt").toSeq
+    /** (value combo, rows) */
+    val combos: Seq[(Seq[String], Long)] =
+      statsDf.collect().toSeq.map(r => (cols.map(c => r.getAs[String](c)), r.getAs[Long]("cnt")))
+    val stats: Seq[(Map[String, String], Long)] =
+      combos.map { case (vs, n) => (cols.zip(vs.map(String.valueOf)).toMap, n) }
+    // a store without the rstats artifact has no declared range columns
+    val rstats: Map[String, Seq[(Int, Double, Double, Long)]] = {
+      val p = s"$m/rstats/__ver=${vers.max}"
+      if (!Hfs.fs(spark, m).exists(new org.apache.hadoop.fs.Path(p))) Map.empty
+      else spark.read.parquet(p).collect().toSeq
         .map(r => (r.getAs[String]("rcol"), r.getAs[Int]("bin"),
           r.getAs[Double]("lo"), r.getAs[Double]("hi"), r.getAs[Long]("cnt")))
         .groupBy(_._1)
         .map { case (c, rows) => c -> rows.map(t => (t._2, t._3, t._4, t._5)) }
     }
+    val rcols: Seq[String] = rstats.keys.toSeq.sorted
+    lazy val byval: DataFrame = byValAt(spark, m, cols, rcols, vers)
+    lazy val byid: DataFrame = byIdAt(spark, m, cols, rcols, vers)
+    lazy val buckets: Int = StoreLayout.pinned(spark, m, vers, IdBucketCap)
+  }
+
+  private val viewCache = new graft.SessionCache[String, View](16, identity)
+
+  /** the live [[View]], one memo per version stamp */
+  private def view(spark: SparkSession, srpDir: String): View =
+    Versioned.memo(viewCache, spark, srpDir, chain(srpDir))(
+      new View(spark, s"$srpDir/meta", _))
+
+  /** the live resolved byval rows (vec_id, embedding, keys, <range
+    * cols>, <meta cols>) */
+  private[graft] def readByVal(spark: SparkSession, srpDir: String): DataFrame =
+    view(spark, srpDir).byval
+
+  /** the live resolved byid rows (vec_id, <meta cols>, <range cols>,
+    * pb) */
+  private[graft] def readById(spark: SparkSession, srpDir: String): DataFrame =
+    view(spark, srpDir).byid
+
+  private val buildLock = new Object
+
+  /** Build the meta chain from the corpus when it has no live version:
+    * never built, a build that crashed before its marker, or a store
+    * written before the chain. The lock is the build-once guard, so
+    * concurrent first serves do not race two builds. */
+  def ensureMeta(spark: SparkSession, d: String, srpDir: String): Unit = {
+    def missing = Versioned.live(spark, chain(srpDir)).isEmpty
+    if (missing) buildLock.synchronized { if (missing) writeMeta(spark, d, srpDir) }
+  }
+
+  /** the store's declared filter columns, read from its own stats
+    * artifact */
+  def storeMetaCols(spark: SparkSession, srpDir: String): Seq[String] =
+    view(spark, srpDir).cols
+
+  private def stats(spark: SparkSession, srpDir: String): Seq[(Map[String, String], Long)] =
+    view(spark, srpDir).stats
 
   /** the store's declared RANGE columns (in-row numeric class) */
   def storeRangeCols(spark: SparkSession, srpDir: String): Seq[String] =
-    rstats(spark, srpDir).keys.toSeq.sorted
+    view(spark, srpDir).rcols
 
   // ---- typed-term machinery -------------------------------------
 
@@ -761,16 +718,14 @@ object FilteredServe {
   private def termsCol(ts: Seq[MetaTerm]): Column =
     ts.map(termCol).reduce(_ && _)
 
-  private def requireTerms(spark: SparkSession, srpDir: String,
-                           terms: Seq[MetaTerm]): Unit = {
+  private def requireTerms(v: View, terms: Seq[MetaTerm]): Unit = {
     require(terms.nonEmpty, "filtered search needs at least one predicate term")
-    val declared = storeMetaCols(spark, srpDir) ++ storeRangeCols(spark, srpDir)
+    val declared = v.cols ++ v.rcols
     val bad = terms.map(_.column).filterNot(declared.contains)
     require(bad.isEmpty,
       s"predicate columns ${bad.mkString(",")} not in declared columns ${declared.mkString(",")}")
-    val partCols = storeMetaCols(spark, srpDir)
     terms.foreach {
-      case MetaTerm.Eq(c, _) => require(partCols.contains(c),
+      case MetaTerm.Eq(c, _) => require(v.cols.contains(c),
         s"equality column '$c' is range-class — spell it as a Cmp or declare it partition-class")
       case _ => ()
     }
@@ -779,11 +734,9 @@ object FilteredServe {
   /** the stats combos a term conjunction's PARTITION-class terms admit
     * — any term over a partition column (equality or comparison)
     * reduces to this enumerated set, so byval pruning stays static */
-  private def matchingCombos(spark: SparkSession, srpDir: String,
-                             terms: Seq[MetaTerm]): Seq[(Map[String, String], Long)] = {
-    val partCols = storeMetaCols(spark, srpDir).toSet
-    val partTerms = terms.filter(t => partCols.contains(t.column))
-    stats(spark, srpDir)
+  private def matchingCombos(v: View, terms: Seq[MetaTerm]): Seq[(Map[String, String], Long)] = {
+    val partTerms = terms.filter(t => v.cols.contains(t.column))
+    v.stats
       .filter { case (vals, _) => partTerms.forall(termMatches(vals, _)) }
   }
 
@@ -825,12 +778,12 @@ object FilteredServe {
     * only the tier CHOICE rides it). */
   def estimateCount(spark: SparkSession, srpDir: String,
                     terms: Seq[MetaTerm]): Long = {
-    requireTerms(spark, srpDir, terms)
-    val comboCnt = matchingCombos(spark, srpDir, terms).map(_._2).sum
-    val rCols = storeRangeCols(spark, srpDir).toSet
+    val v = view(spark, srpDir)
+    requireTerms(v, terms)
+    val comboCnt = matchingCombos(v, terms).map(_._2).sum
     val frac = terms.collect {
-      case t: MetaTerm.Cmp if rCols.contains(t.column) =>
-        histFrac(rstats(spark, srpDir)(t.column), t)
+      case t: MetaTerm.Cmp if v.rstats.contains(t.column) =>
+        histFrac(v.rstats(t.column), t)
     }.product
     math.ceil(comboCnt * frac).toLong
   }
@@ -886,11 +839,12 @@ object FilteredServe {
     * matching set by construction. */
   private def byValMatching(spark: SparkSession, srpDir: String,
                             terms: Seq[MetaTerm]): DataFrame = {
-    requireTerms(spark, srpDir, terms)
-    val partCols = storeMetaCols(spark, srpDir)
+    val v = view(spark, srpDir)
+    requireTerms(v, terms)
+    val partCols = v.cols
     val partTerms = terms.filter(t => partCols.contains(t.column))
     val rowTerms = terms.filterNot(t => partCols.contains(t.column))
-    val raw = readByVal(spark, srpDir)
+    val raw = v.byval
     // all-equality partition terms filter DIRECTLY (one comparison per
     // term per row — the r13 shape; the combo OR costs ~|combos|×
     // per-row work: measured 2.3× on the 10000×-decade code scan).
@@ -900,7 +854,7 @@ object FilteredServe {
       if (partTerms.forall(_.isInstanceOf[MetaTerm.Eq]))
         partTerms.foldLeft(raw)((df, t) => df.filter(termCol(t)))
       else {
-        val combos = matchingCombos(spark, srpDir, terms)
+        val combos = matchingCombos(v, terms)
         if (combos.isEmpty) raw.filter(lit(false))
         else raw.filter(combos.map { case (vals, _) =>
           partCols.map(c => col(c) === lit(vals(c))).reduce(_ && _)
@@ -938,10 +892,7 @@ object FilteredServe {
   def matchingIdsTerms(spark: SparkSession, srpDir: String,
                        terms: Seq[MetaTerm], ids: Seq[Long]): Set[Long] = {
     if (ids.isEmpty) return Set.empty
-    val mbs = ids.map(Math.floorMod(_, IdPartitions.toLong)).distinct
-    val read = spark.read.parquet(s"$srpDir/meta/byid")
-      .filter(bound.isin(col("mb"), mbs) && bound.isin(col("vec_id"), ids) &&
-        termsCol(terms))
+    val read = byIdPoint(view(spark, srpDir), ids).filter(termsCol(terms))
       .select(col("vec_id"))
     lastByIdPlanThunk = () => read.queryExecution.executedPlan.toString
     read.collect().map(_.getLong(0)).toSet

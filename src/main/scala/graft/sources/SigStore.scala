@@ -77,9 +77,12 @@ object SigStore {
   private[graft] def chain(dir: String): Versioned.Chain =
     Versioned.Chain(dir, dir, v => Seq(s"$dir/sigs/__ver=$v", s"$dir/docs/__ver=$v"))
 
+  /** the `_meta/` bucket-group count, one memo per version stamp
+    * ([[write]] rewrites it inside the rebuild that restarts the
+    * chain, so a rebuild by any process is seen) */
   private val groupsCache = new graft.SessionCache[String, Int](64, identity)
   private[graft] def storeGroups(spark: SparkSession, dir: String): Int =
-    groupsCache.getOrElseUpdate(dir) {
+    Versioned.memo(groupsCache, spark, dir, chain(dir)) { _ =>
       val md = new org.apache.hadoop.fs.Path(s"$dir/_meta")
       val f = Hfs.fs(spark, dir)
       require(f.exists(md), s"SigStore at $dir has no _meta marker")
@@ -475,20 +478,12 @@ object SigStore {
         storeGroups(spark, dir))
     }
 
-  private def deleteTempStore(dir: String): Unit = {
-    // the store carries a full corpus-sized docs/text artifact —
-    // orphaning it per evicted temp dir accumulates corpus-sized /tmp
-    // copies across bench/test JVMs (shared lifecycle: TempStores,
-    // which every storeFor memo now routes through)
-    TempStores.delete(dir)
-    groupsCache.invalidate(_ == dir)
-  }
-
   // memoized store of the non-batch corpus slice, keyed by corpus
   // dir; invalidation deletes the temp store on disk (its data was
-  // derived from the rewritten corpus, so no live handle is valid),
-  // and a shutdown hook sweeps whatever the JVM still holds
-  private val storeCache = new graft.SessionCache[String, String](4, identity, deleteTempStore)
+  // derived from the rewritten corpus, so no live handle is valid —
+  // and it carries a full corpus-sized docs/text artifact), and a
+  // shutdown hook sweeps whatever the JVM still holds
+  private val storeCache = new graft.SessionCache[String, String](4, identity, TempStores.delete)
   def storeFor(spark: SparkSession, d: String): String =
     storeCache.getOrElseUpdate(spark, d)(TempStores.create("sigstore")(write(spark,
       Tables.documents(spark, d).filter(col("doc_id") % BatchMod =!= 0)

@@ -64,10 +64,11 @@ object SrpStore {
   /** The layout markers [[write]] records under `_keyspace/` (`rpb=`,
     * `shift=`, `eg=`) as name → value, so every read path follows the
     * layout the store was written with; empty before any marker. One
-    * JVM-wide memo per dir, dropped by a rebuild's [[Versioned.create]]. */
+    * memo per banding stamp: [[write]] rewrites the markers before it
+    * restarts the chain, so a rebuild by any process is seen. */
   private val keyspaceCache = new graft.SessionCache[String, Map[String, String]](64, identity)
   private def keyspace(spark: SparkSession, dir: String): Map[String, String] =
-    keyspaceCache.getOrElseUpdate(dir) {
+    Versioned.memo(keyspaceCache, spark, dir, chain(dir)) { _ =>
       val kd = new org.apache.hadoop.fs.Path(s"$dir/_keyspace")
       val f = Hfs.fs(spark, dir)
       if (!f.exists(kd)) Map.empty

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** The one version-chain protocol every append-only store publishes
   * through ([[SrpStore]]'s banding, [[SigStore]], [[IvfStore]],
-  * [[HnswStore]], [[EdgeStore]], [[CodeStore]]). It is how graft keeps
+  * [[HnswStore]], [[EdgeStore]], [[CodeStore]], [[FilteredServe]]'s
+  * metadata). It is how graft keeps
   * the reference's always-resident index current (a per-row
   * `UPDATE ... SET abstract_embeddings`, `sql/04_embeddings.sql:5-7`,
   * feeding `sql/05_vector_index.sql:3-6`) without ever rewriting
@@ -119,13 +120,13 @@ private[graft] object Versioned {
   }
 
   /** a full (re)build: [[reset]] the chain over `roots`, run `write`
-    * (which writes version 0), publish version 0, then REFRESH the
-    * memos of the markers a rebuild rewrites (`_keyspace/`, `_meta/`) */
+    * (which writes version 0), publish version 0. The new `v0`'s
+    * mtime changes the [[stamp]], so every [[memo]] over the store —
+    * the layout markers a rebuild rewrites included — builds afresh. */
   def create(spark: SparkSession, c: Chain, roots: String*)(write: => Unit): Unit = {
     reset(spark, c, roots)
     write
     publish(spark, c, 0)
-    graft.Tables.invalidate(c.dir)
   }
 
   /** Append one delta version: clear a torn leftover of the next

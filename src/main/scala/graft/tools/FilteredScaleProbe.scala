@@ -87,10 +87,7 @@ object FilteredScaleProbe {
         SrpBanded.materializedGraph(spark, dir, 5), edgeDir))
       builds += "edge_store" -> s
     }
-    // rebuild when missing OR when a pre-r13 meta (no keys column)
-    // survives in the reused scale dir — same guard ensureMeta applies
-    if (!new java.io.File(s"$srpDir/meta/stats/_SUCCESS").exists() ||
-        !spark.read.parquet(s"$srpDir/meta/byval").columns.contains("keys")) {
+    if (Versioned.live(spark, FilteredServe.chain(srpDir)).isEmpty) {
       val (_, s) = time(FilteredServe.writeMeta(spark, dir, srpDir))
       builds += "meta" -> s
     }

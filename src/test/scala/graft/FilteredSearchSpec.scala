@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.FakeEmbedder
@@ -58,7 +60,7 @@ class FilteredSearchSpec extends AnyFunSuite {
       .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
       .getOrElse(fail("no file scan in byval plan"))
     val read = scan.selectedPartitions.partitionCount
-    val total = spark.read.parquet(s"$srpDir/meta/byval")
+    val total = FilteredServe.readByVal(spark, srpDir)
       .select("lang", "source").distinct().count()
     info(s"byval read $read of $total value partitions")
     assert(read == 1 && read < total,
@@ -101,9 +103,8 @@ class FilteredSearchSpec extends AnyFunSuite {
     val recall = got.count(r => exactTop(r.getLong(0))) / 5.0
     info(s"walk-path filtered recall@5 = $recall")
     assert(recall >= 0.6, s"filtered walk recall collapsed: $recall")
-    // the byid post-filter read pruned to the candidates' mb partitions
-    assert(FilteredServe.lastByIdPlan.contains("PartitionFilters") &&
-      FilteredServe.lastByIdPlan.contains("mb"),
+    // the byid post-filter read pruned to the candidates' pb buckets
+    assert("PartitionFilters: \\[[^\\]]*pb#".r.findFirstIn(FilteredServe.lastByIdPlan).nonEmpty,
       s"byid read not partition-pruned:\n${FilteredServe.lastByIdPlan}")
     // deterministic: same serve, same rows
     val again = FilteredServe.searchFiltered(spark, sf, srpDir, edgeDir, q,
@@ -258,6 +259,13 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(fb == exactFiltered(sel, 10) && fb.size == 1)
   }
 
+  private def live(c: graft.sources.Versioned.Chain): Seq[Int] = graft.sources.Versioned.live(spark, c)
+
+  /** the (lang, source) of every served byval copy of `id` */
+  private def servedCopies(dir: String, id: Long): Seq[(String, String)] =
+    FilteredServe.readByVal(spark, dir).filter(col("vec_id") === id)
+      .select(col("lang"), col("source")).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+
   test("upsertMeta: new/moved values searchable, stale copies gone, untouched partitions stable") {
     import spark.implicits._
     import graft.sources.SrpStore
@@ -265,13 +273,15 @@ class FilteredSearchSpec extends AnyFunSuite {
     SrpStore.write(spark, sf, dir)
     FilteredServe.writeMeta(spark, sf, dir)
     // snapshot an untouched partition's files (rewrite minimality)
-    val untouchedDir = new java.io.File(s"$dir/meta/byval/lang=en/source=src0")
+    val untouchedDir = new java.io.File(s"$dir/meta/byval/__ver=0/lang=en/source=src0")
     val before = untouchedDir.listFiles().map(f => (f.getName, f.lastModified())).toSet
     // a moved id: doc 42 exists (v7's lookup row) — move it to (xx, zz)
     val moved = Tables.embeddings(spark, sf)
       .filter(col("vec_id") === 42L).select(col("embedding")).head().getSeq[Float](0).toArray
     val oldVal = Tables.documents(spark, sf).filter(col("doc_id") === 42L)
       .select(col("lang"), col("source")).head()
+    val oldPred = Seq("lang" -> oldVal.getString(0), "source" -> oldVal.getString(1))
+    val oldCount = FilteredServe.matchCount(spark, dir, oldPred)
     val fresh = FakeEmbedder.embed("a brand new filtered document")
     val updates = Seq(
       (900000L, fresh, "xx", "zz"),
@@ -284,18 +294,19 @@ class FilteredSearchSpec extends AnyFunSuite {
     // new value partition serves through the filtered exact path
     val pred = Seq("lang" -> "xx", "source" -> "zz")
     assert(FilteredServe.matchCount(spark, dir, pred) == 2L)
+    assert(FilteredServe.matchCount(spark, dir, oldPred) == oldCount - 1)
     val got = FilteredServe.searchFiltered(spark, sf, dir,
       edgeDir = "/nonexistent/edge-store", fresh, pred, k = 2)
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(42L, 900000L), s"upserted rows not served: $got")
-    // no stale copy of the moved id anywhere in byval
-    val copies = spark.read.parquet(s"$dir/meta/byval")
-      .filter(col("vec_id") === 42L)
-      .select(col("lang").cast("string"), col("source").cast("string"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(copies == Seq(("xx", "zz")), s"stale byval copies: $copies")
+    // one served copy of the moved id, and its old value's serve no
+    // longer returns it
+    assert(servedCopies(dir, 42L) == Seq(("xx", "zz")), s"stale byval copies: ${servedCopies(dir, 42L)}")
+    val oldServe = FilteredServe.searchFiltered(spark, sf, dir,
+      edgeDir = "/nonexistent/edge-store", moved, oldPred, k = 3).collect().map(_.getLong(0))
+    assert(!oldServe.contains(42L), s"the moved id still served under its old value: ${oldServe.toSeq}")
     // byid reflects the move
-    val idRow = spark.read.parquet(s"$dir/meta/byid")
+    val idRow = FilteredServe.readById(spark, dir)
       .filter(col("vec_id") === 42L)
       .select(col("lang"), col("source")).collect().map(r => (r.getString(0), r.getString(1)))
     assert(idRow.toSeq == Seq(("xx", "zz")), s"byid stale: ${idRow.toSeq}")
@@ -313,24 +324,99 @@ class FilteredSearchSpec extends AnyFunSuite {
     val emb42 = Tables.embeddings(spark, sf)
       .filter(col("vec_id") === 42L).select(col("embedding")).head().getSeq[Float](0).toArray
     // move doc 42 into a value needing Hive path escaping, then away
-    // again: the emptied partition's on-disk dir is escaped, so the
-    // delete must build the ESCAPED path or the stale copy survives
+    // again: the emptied combo must serve nothing, and the fold must
+    // drop its escaped dir from disk
     def move(l: String, s: String) = FilteredServe.upsertMeta(spark, dir,
       Seq((42L, emb42, l, s)).toDF("vec_id", "embedding", "lang", "source"))
+    val escaped = Seq("lang" -> "a b", "source" -> "c/d")
     move("a b", "c/d")
-    assert(FilteredServe.matchCount(spark, dir, Seq("lang" -> "a b", "source" -> "c/d")) == 1L)
+    assert(FilteredServe.matchCount(spark, dir, escaped) == 1L)
     move("xx", "zz")
-    // no stale copy anywhere in byval (the pre-fix failure mode: the
-    // raw-path delete misses the escaped dir and 42 is served twice)
-    val copies = spark.read.parquet(s"$dir/meta/byval")
-      .filter(col("vec_id") === 42L)
-      .select(col("lang").cast("string"), col("source").cast("string"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(copies == Seq(("xx", "zz")), s"stale byval copies survived: $copies")
-    // and the emptied escaped dir itself is gone from disk
+    assert(FilteredServe.matchCount(spark, dir, escaped) == 0L)
+    assert(servedCopies(dir, 42L) == Seq(("xx", "zz")), s"stale byval copies survived: ${servedCopies(dir, 42L)}")
+    assert(FilteredServe.searchFiltered(spark, sf, dir, "/nonexistent/edge-store", emb42, escaped, k = 5)
+      .collect().isEmpty, "the emptied combo still serves")
+    // more upserts until the chain folds: the fold writes the resolved
+    // view, and GC takes the versions that held the escaped dir
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-    val gone = new java.io.File(s"$dir/meta/byval/lang=${esc("a b")}/source=${esc("c/d")}")
-    assert(!gone.exists(), s"emptied escaped partition dir survived: $gone")
+    val sub = s"lang=${esc("a b")}/source=${esc("c/d")}"
+    def escapedDirs = new java.io.File(s"$dir/meta/byval").listFiles()
+      .filter(_.getName.startsWith("__ver=")).map(v => new java.io.File(v, sub)).filter(_.exists()).toSeq
+    assert(escapedDirs.nonEmpty, "the escaped dir was never written")
+    (live(FilteredServe.chain(dir)).size until graft.sources.Versioned.CompactAfter)
+      .foreach(_ => move("xx", "zz"))
+    assert(live(FilteredServe.chain(dir)).size == 1, s"no fold: ${live(FilteredServe.chain(dir))}")
+    assert(escapedDirs.isEmpty, s"emptied escaped partition dir survived the fold: $escapedDirs")
+    assert(servedCopies(dir, 42L) == Seq(("xx", "zz")))
+    assert(FilteredServe.matchCount(spark, dir, escaped) == 0L)
+    assert(FilteredServe.matchCount(spark, dir, Seq("lang" -> "xx", "source" -> "zz")) == 1L)
+  }
+
+  test("meta crash contract: a delta with no marker is invisible, the retry clears it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("meta_torn").toString
+    try {
+      FilteredServe.writeMeta(spark, sf, dir)
+      val pred = Seq("lang" -> "xx", "source" -> "zz")
+      val vec = FakeEmbedder.embed("a row whose write crashed before its marker")
+      val id = 900001L
+      // a crash after the delta's data but before its marker: version
+      // 1's byval and stats by hand, another embedding for the same id
+      val torn = vec.map(_ + 0.5f)
+      Seq((id, torn, Array.fill(graft.operators.SrpBanded.Bands)(0L), 1, "xx", "zz"))
+        .toDF("vec_id", "embedding", "keys", "__ver", "lang", "source")
+        .write.mode("append").partitionBy("__ver", "lang", "source").parquet(s"$dir/meta/byval")
+      Seq(("xx", "zz", 1L)).toDF("lang", "source", "cnt").write.parquet(s"$dir/meta/stats/__ver=1")
+      assert(live(FilteredServe.chain(dir)) == Seq(0))
+      assert(FilteredServe.matchCount(spark, dir, pred) == 0L)
+      def serve() = FilteredServe.searchFiltered(spark, sf, dir, "/nonexistent/edge-store", vec, pred, k = 5)
+        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      assert(serve().isEmpty, "the uncommitted delta was served")
+      FilteredServe.upsertMeta(spark, dir, Seq((id, vec, "xx", "zz")).toDF("vec_id", "embedding", "lang", "source"))
+      assert(live(FilteredServe.chain(dir)) == Seq(0, 1))
+      assert(FilteredServe.matchCount(spark, dir, pred) == 1L)
+      // one row, the retry's: the torn copy would rank at a lower sim
+      assert(serve() == Seq((id, 1.0)), s"retry did not serve exactly the update: ${serve()}")
+    } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("upsertMeta under concurrent serves: every read sees the store before the write or after it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("meta_rw").toString
+    try {
+      FilteredServe.writeMeta(spark, sf, dir)
+      val emb42 = Tables.embeddings(spark, sf)
+        .filter(col("vec_id") === 42L).select(col("embedding")).head().getSeq[Float](0).toArray
+      val fresh = FakeEmbedder.embed("a document written while serves run")
+      val pred = Seq("lang" -> "xx", "source" -> "zz")
+      def observe(): (Long, Set[Long]) =
+        (FilteredServe.matchCount(spark, dir, pred),
+          FilteredServe.searchFiltered(spark, sf, dir, "/nonexistent/edge-store", fresh, pred, k = 5)
+            .collect().map(_.getLong(0)).toSet)
+      assert(observe() == ((0L, Set.empty[Long])))
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Either[String, (Long, Set[Long])]]()
+      val reader = new Thread(() => {
+        var last = false
+        while (!last) {
+          last = done.get()
+          seen.add(try Right(observe()) catch { case t: Throwable => Left(t.toString) })
+        }
+      })
+      reader.start()
+      FilteredServe.upsertMeta(spark, dir, Seq((900000L, fresh, "xx", "zz"), (42L, emb42, "xx", "zz"))
+        .toDF("vec_id", "embedding", "lang", "source"))
+      done.set(true)
+      reader.join()
+      val states = Set((0L, Set.empty[Long]), (2L, Set(42L, 900000L)))
+      val obs = seen.asScala.toSeq
+      val bad = obs.filterNot(_.exists { case (n, ids) =>
+        states.exists(_._1 == n) && states.exists(_._2 == ids) })
+      info(s"${obs.size} reads during the write")
+      assert(bad.isEmpty, s"${bad.size} of ${obs.size} reads were neither the old store nor " +
+        s"the new one: ${bad.distinct.take(3)}")
+      assert(obs.last == Right((2L, Set(42L, 900000L))), s"the last read missed the write: ${obs.last}")
+    } finally graft.sources.TempStores.delete(dir)
   }
 
   test("batched filtered serve: covering shortlist equals per-query exact filtered top-k, scan pruned + projected") {

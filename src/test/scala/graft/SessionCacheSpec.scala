@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FakeEmbedder
 import graft.operators.SrpBanded
-import graft.sources.{CodeStore, FilteredServe, HnswStore, SrpStore, Versioned}
+import graft.sources.{CodeStore, FilteredServe, HnswStore, SigStore, SrpStore, Versioned}
 
 /** [[SessionCache]]'s contract: the one invalidation rule, access-
   * ordered overflow, session scoping, identity keys, the registry
@@ -262,20 +262,52 @@ class SessionCacheSpec extends AnyFunSuite {
     graft.sources.TempStores.delete(root)
   }
 
-  test("byval scan memo: a same-mtime marker rewrite with a new length misses") {
-    val srp = Files.createTempDirectory("sc-marker").toString
+  test("another JVM's upsertMeta is seen by the next warm filtered serve") {
+    val dir = Files.createTempDirectory("sc-meta").toString
     try {
-      FilteredServe.writeMeta(spark, sf, srp)
-      val scan = FilteredServe.readByVal(spark, srp)
-      assert(FilteredServe.readByVal(spark, srp) eq scan, "unchanged store missed")
-      // an out-of-band rewrite landing within the mtime granularity
-      val marker = java.nio.file.Paths.get(s"$srp/meta/stats/_SUCCESS")
-      val (mtime, len) = FilteredServe.statsMarkerStamp(spark, srp)
-      Files.write(marker, Array.fill(len.toInt + 7)('x'.toByte))
-      Files.setLastModifiedTime(marker, java.nio.file.attribute.FileTime.fromMillis(mtime))
-      assert(FilteredServe.statsMarkerStamp(spark, srp) == ((mtime, len + 7)))
-      assert(!(FilteredServe.readByVal(spark, srp) eq scan), "rewritten marker hit the stale scan")
-    } finally graft.sources.TempStores.delete(srp)
+      FilteredServe.writeMeta(spark, sf, dir)
+      val q = FakeEmbedder.embed(probeText)
+      val pred = Seq("lang" -> "xx", "source" -> "zz")
+      def serve(): Seq[Long] = FilteredServe.searchFiltered(spark, sf, dir, "/nonexistent/edge-store",
+        q, pred, k = 5).collect().map(_.getLong(0)).toSeq
+      serve()
+      assert(serve().isEmpty)
+      val id = 900000002L
+      val (code, out) = childJvm("graft.StoreWriterProbe", "upsertMeta", dir, id.toString, probeText)
+      assert(code == 0 && out.contains("store-writer: upsertMeta done"), s"probe exit $code:\n$out")
+      assert(serve() == Seq(id), "the child's metadata row was not served")
+      assert(FilteredServe.matchCount(spark, dir, pred) == 1L)
+    } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("another JVM's SigStore rebuild with a new group count is seen by the next warm near-dup") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("sc-sig").toString
+    try {
+      val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      val quarter = docs.filter(col("doc_id") % 4 === 0)
+      SigStore.write(spark, quarter, dir)
+      val groups = SigStore.storeGroups(spark, dir)
+      assert(SigStore.groupsFor(docs.count()) > groups, "the full corpus does not change the group count")
+      // a document outside the quarter whose band keys all miss the
+      // quarter store's bg = 0 probe: the rebuilt store finds its twin
+      // only through the rebuilt group count
+      val oddKeys = SigStore.bandedSigs(docs.filter(col("doc_id") % 4 =!= 0))
+        .groupBy(col("doc_id")).agg(min(col("band_key").bitwiseAND(lit(1L))).as("odd"))
+        .filter(col("odd") === 1L).orderBy(col("doc_id")).select(col("doc_id")).first().getLong(0)
+      val text = docs.filter(col("doc_id") === oddKeys).first().getString(1)
+      def nearDup(): Seq[(Long, Long)] = SigStore.incrementalNearDup(spark, dir,
+        Seq((900000003L, text)).toDF("doc_id", "text")).collect()
+        .map(r => (r.getAs[Number]("id_a").longValue, r.getAs[Number]("id_b").longValue)).toSeq
+      def twin(pairs: Seq[(Long, Long)]) = pairs.exists { case (a, b) => Set(a, b) == Set(oddKeys, 900000003L) }
+      nearDup()
+      assert(!twin(nearDup()))
+      val (code, out) = childJvm("graft.StoreWriterProbe", "sigWrite", dir, sf)
+      assert(code == 0 && out.contains("store-writer: sigWrite done"), s"probe exit $code:\n$out")
+      val got = nearDup()
+      assert(twin(got), s"the rebuilt store's twin was not found: $got")
+      assert(SigStore.storeGroups(spark, dir) > groups)
+    } finally graft.sources.TempStores.delete(dir)
   }
 
   test("Tables.invalidate drops every registered memo under the rewritten store") {
@@ -305,8 +337,11 @@ class SessionCacheSpec extends AnyFunSuite {
 
 /** Child-JVM writer for the cross-process specs: `upsert <dir> <id>
   * <text>` appends one embedded row to the code store at `dir`;
-  * `write <dir> <corpus>` rebuilds it from another corpus. Prints one
-  * verdict line. */
+  * `write <dir> <corpus>` rebuilds it from another corpus;
+  * `upsertMeta <srpDir> <id> <text>` upserts one row with values
+  * (xx, zz) into the filtered metadata at `srpDir`; `sigWrite <dir>
+  * <corpus>` rebuilds the signature store at `dir` from a corpus's
+  * documents. Prints one verdict line. */
 object StoreWriterProbe {
   def main(args: Array[String]): Unit = {
     val spark = LocalSpark.builder(1).getOrCreate()
@@ -315,6 +350,11 @@ object StoreWriterProbe {
       case Seq("upsert", dir, id, text) =>
         CodeStore.upsert(spark, dir, Seq((id.toLong, FakeEmbedder.embed(text))).toDF("vec_id", "embedding"))
       case Seq("write", dir, corpus) => CodeStore.write(spark, corpus, dir)
+      case Seq("upsertMeta", dir, id, text) =>
+        FilteredServe.upsertMeta(spark, dir, Seq((id.toLong, FakeEmbedder.embed(text), "xx", "zz"))
+          .toDF("vec_id", "embedding", "lang", "source")): Unit
+      case Seq("sigWrite", dir, corpus) =>
+        SigStore.write(spark, Tables.documents(spark, corpus).select(col("doc_id"), col("text")), dir)
     }
     println(s"store-writer: ${args(0)} done")
     spark.stop()

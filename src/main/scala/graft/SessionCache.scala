@@ -106,6 +106,9 @@ final class SessionCache[K, V](maxEntries: Int, dirOf: K => String,
     }
 
   private def dirs: Iterable[String] = m.keys.map(k => dirOf(k._2))
+
+  /** the values built and held now, over every session */
+  private[graft] def values: Seq[V] = m.values.toSeq.flatMap(_.peek)
 }
 
 object SessionCache {
@@ -114,6 +117,7 @@ object SessionCache {
   private final class Entry[V](val stamp: Any, build: => V, @volatile var age: Long) {
     @volatile private[this] var result: scala.util.Try[V] = _
     def built: Boolean = result != null
+    def peek: Option[V] = Option(result).flatMap(_.toOption)
     def value: V = {
       if (result == null) synchronized { if (result == null) result = scala.util.Try(build) }
       result.get

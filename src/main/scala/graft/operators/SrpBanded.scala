@@ -1360,7 +1360,7 @@ object SrpBanded {
       scoredPool: DataFrame, k: Int, beam: Int, iters: Int, maxEntries: Int,
       fetchScored: Seq[Long] => Map[Long, Array[(Long, Double)]]): DataFrame =
     topKCut(spark,
-      graphWalkVisited(scoredPool, beam, iters, maxEntries, fetchScored), k)
+      walkFromSeed(seedCut(scoredPool, maxEntries), beam, iters, fetchScored), k)
 
   /** [[graphSearchFrom]] over an ALREADY-LOCAL scored pool (an HNSW
     * descent path, model-sized by construction) — the seed cut is the
@@ -1420,26 +1420,15 @@ object SrpBanded {
       if (c != 0) c > 0 else ida < idb
   }
 
-  /** The beam walk of [[graphSearchFrom]] returning its FULL visited
-    * set (every scored candidate the walk touched, insertion order)
-    * instead of the top-k cut — the seam the metadata-filtered serve
-    * (v39) post-filters and escalates over. Identical walk state and
-    * ordering to [[graphSearchFrom]]: that method is now a top-k cut
-    * of this one. */
-  private[graft] def graphWalkVisited(scoredPool: DataFrame, beam: Int,
-      iters: Int, maxEntries: Int,
-      fetchScored: Seq[Long] => Map[Long, Array[(Long, Double)]]): Seq[(Long, Double)] = {
-    // seed cut: keep the best maxEntries of the scored pool — the one
-    // collect whose input is corpus-sized is still cut distributed
-    val seed = scoredPool
-      .orderBy(col("sim").desc, col("vec_id")).limit(maxEntries)
+  /** the seed cut: the best maxEntries of a scored pool — the one
+    * collect whose input is corpus-sized is still cut distributed */
+  private[graft] def seedCut(scoredPool: DataFrame, maxEntries: Int): Seq[(Long, Double)] =
+    scoredPool.orderBy(col("sim").desc, col("vec_id")).limit(maxEntries)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toSeq
-    walkFromSeed(seed, beam, iters, fetchScored)
-  }
 
-  /** The beam hops alone, from an already-cut seed — shared by the
-    * DataFrame-pool path above and the local-pool serves
-    * ([[graphSearchFromLocal]], the filtered walks). `fetchScored`
+  /** The beam hops alone, from an already-cut seed — shared by
+    * [[graphSearchFrom]] and the local-pool serves
+    * ([[graphSearchFromLocal]], the stored walks). `fetchScored`
     * gives the frontier's out-edges already scored (src → (dst, sim)),
     * the seam [[Hnsw.descentPoolBy]] uses: a Spark read
     * ([[Hnsw.fetchScoredDf]] — a pruned [[graft.sources.EdgeStore]]

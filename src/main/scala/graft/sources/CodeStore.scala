@@ -70,11 +70,13 @@ object CodeStore {
       writeVer(rows, dir, v, _))
 
   /** Full build: code the corpus (one map-only scan), written as
-    * version 0 of the chain. */
+    * version 0 of the chain, sized from the corpus's parquet footers
+    * (no second scan); they also count rows with a null or short
+    * embedding, which it drops: over-sizing, the safe direction. */
   def write(spark: SparkSession, d: String, dir: String): Unit =
     Versioned.create(spark, chain(dir), s"$dir/codes") {
-      val coded = HammingIndex.coded(spark, d)
-      writeSized(coded, coded.count(), dir, 0)
+      writeSized(HammingIndex.coded(spark, d),
+        StoreLayout.footerRows(spark, Seq(s"$d/embeddings.parquet")), dir, 0)
     }
 
   private val frameCache = new graft.SessionCache[String, (DataFrame, Int)](8, identity)

@@ -2,15 +2,16 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.SrpBanded
+import graft.operators.{Hnsw, SrpBanded}
 import graft.functions.{bound, vectors}
 
 /** Persisted k-NN graph edges — the third and last index artifact a
   * graph-ANN serving process needs on disk (reference role: sql/05's
   * always-resident index). With [[SrpStore]] (seed buckets + compact
   * banding) and this edge table, a FRESH session serves queries with
-  * zero training or graph construction at startup: seeds come from
-  * pruned bucket partitions, hops from pruned edge point reads.
+  * zero training or graph construction at startup: seeds and hops come
+  * from [[Resident]] images where the stores fit ([[fetchScored]]),
+  * from pruned bucket partitions and edge point reads otherwise.
   *
   * Rows are `(src, dst, dst_emb)` — the DESTINATION EMBEDDING rides in
   * the edge row (the HNSW-paper layout: vectors live with the graph),
@@ -132,6 +133,28 @@ object EdgeStore {
       .select(col("src"), col("dst"), col("dst_emb"))
     lastEdgePlanThunk = () => step.queryExecution.executedPlan.toString
     step
+  }
+
+  /** which source the last [[fetchScored]] hops from — spec hook */
+  @volatile var lastHopSource: String = ""
+
+  /** the resolved edges as a [[Resident]] image, when the live
+    * versions' footer rows fit one share */
+  private[graft] def image(spark: SparkSession, dir: String): Option[Resident.Adjacency] =
+    Resident.image(spark, "edges", chain(dir)) { (vers, share) =>
+      val rows = StoreLayout.footerRows(spark, vers.map(v => s"$dir/edges/data/__ver=$v"))
+      Option.when(rows * Resident.VectorBytes <= share)(Resident.adjacency(read(spark, dir).collect()))
+    }
+
+  /** A hop's scored out-edges: from the image when resident (no Spark
+    * job), the pruned [[edgesFor]] read otherwise — the same edges and
+    * bit-identical scores either way. */
+  def fetchScored(spark: SparkSession, dir: String,
+                  queryVec: Array[Float]): Seq[Long] => Map[Long, Array[(Long, Double)]] = {
+    val m = image(spark, dir)
+    lastHopSource = if (m.isDefined) "local" else "pruned"
+    fr => m.fold(Hnsw.fetchScoredDf(edgesFor(spark, dir, fr), queryVec))(
+      Hnsw.fetchScoredLocal(_, fr, queryVec))
   }
 
   /** Incremental graph maintenance — the edge-table analogue of

@@ -1724,10 +1724,10 @@ object FilteredServe {
     ensureMeta(spark, d, srpDir)
     searchFilteredBy(spark, srpDir, queryVec, pred, k, exactScanMax,
       codeScanMax) { f =>
-      // the v28 serve's own seed path: driver bucket cache when the
-      // store fits its byte budget (zero seed Spark jobs — and the
-      // escalation rungs re-seed, so this is paid up to 3× per serve),
-      // pruned distributed read when over
+      // the v28 serve's own walk: seeds and hops from the stores'
+      // Resident images when they fit (zero Spark jobs — and the
+      // escalation rungs re-walk, so this is paid up to 3× per serve),
+      // pruned distributed reads when over
       SrpStore.walkVisitedCold(spark, srpDir, edgeDir, queryVec,
         beam * math.min(f, 4), iters, maxEntries * f, graphK, probeRadius)
     }

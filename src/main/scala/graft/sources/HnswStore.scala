@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Hnsw, SrpBanded}
 import graft.functions.bound
@@ -119,89 +119,44 @@ object HnswStore {
     * for the partition-pruning assertion */
   @volatile var lastLayerPlanThunk: () => String = () => ""
   def lastLayerPlan: String = lastLayerPlanThunk()
-  /** which layers the last serve answered from the driver cache (0 is
+  /** which layers the last serve answered from driver images (0 is
     * the `l0` beam walk) — spec hook for the local-serve contract */
   @volatile var lastLocalLayers: Set[Int] = Set.empty
 
-  /** Driver-side layer cache budget. The hierarchy thins 4× per
-    * level, so the TOP layers are always tiny; whether a given layer
-    * fits the driver is a byte question, answered per store from the
-    * layer's edge count. Layers over budget keep the distributed
-    * pruned point read — at 100 TB that is layer 1 and `l0` (and the
-    * budget is the honesty: nothing corpus-sized is ever collected).
-    * `var` so specs can force the distributed path (set 0) and assert
-    * identity against the cached one. The budget is the AGGREGATE
-    * across every cached store: per-entry admission gets
-    * budget/[[LayerCacheEntries]], so a gateway opening many stores
-    * cannot pin entries×budget of driver heap while each entry
-    * individually claims honesty. */
-  @volatile var LayerCacheBudgetBytes: Long = 256L << 20
-  /** cache slots; per-store admission ceiling = budget / entries */
-  val LayerCacheEntries = 8
-  /** conservative JVM bytes per cached edge: ids + boxed tuple/array
-    * overhead + Dim floats */
-  private[graft] def edgeBytes: Long = 96L + 4L * SrpBanded.Dim
-
-  private val localLayerCache =
-    new graft.SessionCache[(String, Long), Map[Int, Map[Long, Array[(Long, Array[Float])]]]](
-      LayerCacheEntries, _._1)
-
-  /** The layers that fit [[LayerCacheBudgetBytes]], collected ONCE per
-    * opened store as driver-side maps layer → src → (dst, dst_emb):
-    * the upper layers top first (the exponential thinning means the
-    * cheapest layers admit first), then the `l0` [[EdgeStore]] as
-    * layer 0, the largest. One job counts every layer's edges and one
-    * collects the admitted ones. A layer with no edges (a top layer
-    * holding only the entry) is admitted as an empty map. With every
-    * layer admitted a warm serve (descent and layer-0 beam walk) runs
-    * with zero Spark jobs; a layer over its share keeps the pruned
-    * point read. The entry follows the stamps of both chains, `layers/`
-    * and `l0/`, so a commit to either is seen by the next serve. */
+  /** The upper layers as one [[Resident]] image, layer → src → (dst,
+    * dst_emb): each layer counted from its `layer=L` footers and
+    * admitted top first (the 4× thinning makes the top cheapest) within
+    * one share, then collected in one job. A layer with no edges is an
+    * empty map; one over what is left keeps the pruned (layer, pb)
+    * read. `l0` is an [[EdgeStore]] image with its own share. */
   private[graft] def localLayers(spark: SparkSession,
-      dir: String): Map[Int, Map[Long, Array[(Long, Array[Float])]]] =
-    localLayerCache.getOrElseUpdate(spark, (dir, LayerCacheBudgetBytes),
-        (Versioned.stamp(spark, chain(dir)), Versioned.stamp(spark, EdgeStore.chain(s"$dir/l0")))) {
-      val all = layersFrame(spark, dir)
-        .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
-        .unionByName(EdgeStore.read(spark, s"$dir/l0").select(lit(0).as("layer"),
-          col("src"), col("dst"), col("dst_emb")))
-      val counts = all.groupBy(col("layer")).count().collect()
-        .map(r => (r.getInt(0), r.getLong(1))).toMap
-      val perStore = LayerCacheBudgetBytes / LayerCacheEntries
-      val admit = (Hnsw.MaxLevel to 0 by -1).foldLeft((perStore, Set.empty[Int])) {
+      dir: String): Map[Int, Resident.Adjacency] =
+    Resident.image(spark, "layers", chain(dir)) { (vers, share) =>
+      val admit = (Hnsw.MaxLevel to 1 by -1).foldLeft((share, Seq.empty[Int])) {
         case ((left, ok), l) =>
-          val b = counts.getOrElse(l, 0L) * edgeBytes
-          if (perStore > 0 && b <= left) (left - b, ok + l) else (left, ok)
+          val b = Resident.VectorBytes * StoreLayout.footerRows(spark,
+            vers.map(v => s"$dir/layers/data/__ver=$v/layer=$l"))
+          if (b <= left) (left - b, ok :+ l) else (left, ok)
       }._2
-      val rows = all.filter(col("layer").isin(admit.toSeq: _*)).collect().groupBy(_.getInt(0))
-      admit.map { l =>
-        // a dst's in-edges carry the same embedding: hold one array
-        // per (dst, bytes), not one per edge
-        val embs = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
-        def shared(dst: Long, e: Array[Float]): Array[Float] = embs.get(dst) match {
-          case Some(h) if java.util.Arrays.equals(h, e) => h
-          case _ => embs(dst) = e; e
-        }
-        l -> rows.getOrElse(l, Array.empty).groupBy(_.getLong(1)).map { case (s, es) =>
-          s -> es.map(r => (r.getLong(2), shared(r.getLong(2), r.getSeq[Float](3).toArray)))
-        }
-      }.toMap
-    }
+      val rows = layersFrame(spark, dir).filter(col("layer").isin(admit: _*))
+        .select(col("src"), col("dst"), col("dst_emb"), col("layer")).collect().groupBy(_.getInt(3))
+      Some(admit.map(l => l -> Resident.adjacency(rows.getOrElse(l, Array.empty[Row]))).toMap)
+    }.getOrElse(Map.empty)
 
-  /** The store-backed fetch, layer 0 included: driver-cache hit where
-    * the layer is admitted, pruned point read otherwise ((layer, pb)
-    * of the upper layers, [[EdgeStore.edgesFor]] on `l0`) — the SAME
-    * edges and bit-identical scores either way. */
+  /** The store-backed fetch, layer 0 included: a driver-image hit
+    * where the layer is resident, pruned point read otherwise ((layer,
+    * pb) of the upper layers, [[EdgeStore.fetchScored]] on `l0`) — the
+    * SAME edges and bit-identical scores either way. */
   private def storeFetch(spark: SparkSession, dir: String,
       queryVec: Array[Float]): (Int, Seq[Long]) => Map[Long, Array[(Long, Double)]] = {
     val cached = localLayers(spark, dir)
-    lastLocalLayers = cached.keySet
+    val hop = EdgeStore.fetchScored(spark, s"$dir/l0", queryVec)
+    lastLocalLayers = cached.keySet ++ Option.when(EdgeStore.lastHopSource == "local")(0)
     val (frame, n) = layers(spark, dir)
     (l, frontier) =>
       cached.get(l) match {
         case Some(m) => Hnsw.fetchScoredLocal(m, frontier, queryVec)
-        case None if l == 0 =>
-          Hnsw.fetchScoredDf(EdgeStore.edgesFor(spark, s"$dir/l0", frontier), queryVec)
+        case None if l == 0 => hop(frontier)
         case None =>
           val pbs = frontier.map(Math.floorMod(_, n.toLong)).distinct
           val step = frame
@@ -214,12 +169,12 @@ object HnswStore {
 
   /** v32: v31's search served ENTIRELY from the persisted artifacts —
     * entry from `entry/`, descent steps and layer-0 hops from the
-    * driver layer cache, or where a layer is over budget from pruned
-    * (layer, pb) partitions and the stored [[EdgeStore]] — all of
+    * [[Resident]] images, or where an image is over its share from
+    * pruned (layer, pb) partitions and the stored [[EdgeStore]] — all of
     * which carry their embeddings in-row, so no stage of the serve
     * path reads the corpus table (note the signature: no corpus dir).
     * One scored fetch serves both the descent and the beam walk, so
-    * a warm serve with every layer cached runs no Spark job (the
+    * a warm serve with every layer resident runs no Spark job (the
     * emission is a local relation). Identical rows to the
     * in-memory path (same edges, same IEEE scores), so it shares v31's
     * oracle. */

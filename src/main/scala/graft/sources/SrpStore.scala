@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Hnsw, SrpBanded}
+import graft.operators.SrpBanded
 import graft.functions.vectors
 
 /** On-disk SRP-banded LSH table — the persisted serve path for v19's
@@ -340,22 +340,6 @@ object SrpStore {
     }
   }
 
-  /** Driver-side probed-seed cache budget — the v32 layer-cache move
-    * applied to this store's seed read. Whether the store fits the
-    * driver is a byte question answered per store (row count ×
-    * conservative JVM bytes); over budget — every 100 TB corpus — the
-    * serve keeps the distributed partition-pruned scan below. `var` so
-    * specs can force the distributed path and assert identity. The
-    * budget is the AGGREGATE across cached stores (per-entry admission
-    * = budget / [[BucketCacheEntries]] — the HnswStore layer-cache
-    * convention), bounding the driver heap a many-store gateway pins. */
-  @volatile var BucketCacheBudgetBytes: Long = 256L << 20
-  /** cache slots; per-store admission ceiling = budget / entries */
-  val BucketCacheEntries = 4
-  // v2 layout: per-vector cache cost = one embedding row + Bands
-  // bucket-membership ids (16 B each as boxed-ish JVM state)
-  private def vectorCacheBytes: Long =
-    (96L + 4L * SrpBanded.Dim) + 24L * SrpBanded.Bands
   /** which seed source the last single-query serve took — spec hook */
   @volatile var lastSeedSource: String = ""
   /** executed plan of the last pruned banded seed scan — spec hook */
@@ -368,52 +352,42 @@ object SrpStore {
       buckets: Map[(Int, Long), Array[Long]],
       emb: Map[Long, Array[Float]])
 
-  private val localStoreCache = new graft.SessionCache[(String, Long),
-    Option[LocalStore]](BucketCacheEntries, _._1)
-
-  /** The store as a driver image — bucket membership ids plus the
-    * embedding map — collected once per opened store IF it fits the
-    * budget (None otherwise — the cache never holds anything
-    * corpus-sized). The single-query serve's remaining floor is Spark
-    * jobs × scheduling overhead; with the store local, the seed stage
-    * runs with zero jobs, like the HNSW descent over
-    * [[HnswStore.localLayers]]. */
+  /** The store as a [[Resident]] image, when the `embed/` footer rows,
+    * at one vector and Bands membership ids each, fit one share: with
+    * it the seed stage runs with zero jobs. */
   private[graft] def localStore(spark: SparkSession,
       dir: String): Option[LocalStore] =
-    Versioned.memo(localStoreCache, spark, (dir, BucketCacheBudgetBytes), chain(dir)) { _ =>
-      val embF = embedFrame(spark, dir).select(col("vec_id"), col("embedding"))
-      if (embF.count() * vectorCacheBytes >
-          BucketCacheBudgetBytes / BucketCacheEntries) None
-      else {
+    Resident.image(spark, "srp", chain(dir)) { (_, share) =>
+      Option.when(StoreLayout.footerRows(spark, Seq(s"$dir/embed")) *
+          (Resident.VectorBytes + Resident.MemberBytes * SrpBanded.Bands) <= share) {
         val buckets = bandedFrame(spark, dir)
           .select(col("band").cast("int").as("band"),
             col("bk").cast("long").as("bk"), col("vec_id"))
           .collect()
           .groupBy(r => (r.getInt(0), r.getLong(1)))
           .map { case (k, rows) => k -> rows.map(_.getLong(2)) }
-        val emb = embF.collect()
+        val emb = embedFrame(spark, dir).select(col("vec_id"), col("embedding")).collect()
           .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        Some(LocalStore(buckets, emb))
+        LocalStore(buckets, emb)
       }
     }
 
-  /** [[scoredPool]] computed driver-side from the local store image:
-    * probed buckets looked up locally, the FULL pool scored by the
-    * kernel's bit-identical local twin
-    * ([[graft.functions.vectors.cosine_sim_local]]), deduped per
-    * vec_id (band copies would carry bit-identical sims). None when
-    * the store is over budget — caller falls back to the pruned scan. */
-  private[graft] def scoredPoolLocal(spark: SparkSession, dir: String,
-      queryVec: Array[Float],
-      probeRadius: Int = 2): Option[Seq[(Long, Double)]] =
-    localStore(spark, dir).map { ls =>
-      val keys = SrpBanded.queryProbeKeys(queryVec, probeRadius,
-        storeRpb(spark, dir))
-      keys.iterator
-        .flatMap(k => ls.buckets.getOrElse(k, Array.empty[Long]))
-        .toSeq.distinct
-        .map(id =>
-          (id, graft.functions.vectors.cosine_sim_local(ls.emb(id), queryVec)))
+  /** The seed cut, the best `maxEntries` of the scored pool by (sim
+    * DESC, id): from the store's image, scored by the kernel's
+    * bit-identical local twin, when it is resident; the pruned
+    * [[scoredPool]] cut distributed otherwise — the same seeds. */
+  private def seeds(spark: SparkSession, dir: String, queryVec: Array[Float],
+      probeRadius: Int, maxEntries: Int): Seq[(Long, Double)] =
+    localStore(spark, dir) match {
+      case Some(ls) =>
+        lastSeedSource = "local"
+        SrpBanded.queryProbeKeys(queryVec, probeRadius, storeRpb(spark, dir)).iterator
+          .flatMap(k => ls.buckets.getOrElse(k, Array.empty[Long])).toSeq.distinct
+          .map(id => (id, vectors.cosine_sim_local(ls.emb(id), queryVec)))
+          .sortWith(SrpBanded.simDescIdAsc).take(maxEntries)
+      case None =>
+        lastSeedSource = "pruned"
+        SrpBanded.seedCut(scoredPool(spark, dir, queryVec, probeRadius), maxEntries)
     }
 
   /** The pruned banded seed read alone — (vec_id, band, bk) of the
@@ -462,24 +436,19 @@ object SrpStore {
                   iters: Int = 2, maxEntries: Int = 64, graphK: Int = 5,
                   probeRadius: Int = 2): DataFrame = {
     val fetch = SrpBanded.graphFetch(SrpBanded.materializedGraph(spark, d, graphK), queryVec)
-    scoredPoolLocal(spark, dir, queryVec, probeRadius) match {
-      case Some(pool) =>
-        lastSeedSource = "local"
-        SrpBanded.graphSearchFromLocal(spark, pool, k, beam, iters, maxEntries, fetch)
-      case None =>
-        lastSeedSource = "pruned"
-        SrpBanded.graphSearchFrom(spark, scoredPool(spark, dir, queryVec, probeRadius),
-          k, beam, iters, maxEntries, fetch)
-    }
+    SrpBanded.topKCut(spark, SrpBanded.walkFromSeed(
+      seeds(spark, dir, queryVec, probeRadius, maxEntries), beam, iters, fetch), k)
   }
 
   /** v28: FULLY store-backed serving — seeds read from this store's
-    * pruned bucket partitions AND hops over a persisted
-    * [[EdgeStore]] edge table (the refined v21 graph). Nothing is
+    * buckets AND hops over a persisted [[EdgeStore]] edge table (the
+    * refined v21 graph), each from its [[Resident]] driver image when
+    * it fits one share (a warm serve then runs no Spark job) and from
+    * pruned partition reads when it does not. Nothing is
     * trained, hashed or graph-built at query time, and NO stage reads
     * the corpus table (note the signature: no corpus dir): seeds
     * score the embeddings stored in the probed buckets, hops score
-    * the embeddings stored in the pruned edge rows. A fresh serving
+    * the embeddings stored in the edge rows. A fresh serving
     * process answers its first query from three on-disk artifacts
     * (buckets, banding, edges). Results are identical to the
     * in-memory refined path ([[SrpBanded.graphSearchRefined]] — same
@@ -494,28 +463,15 @@ object SrpStore {
         maxEntries, graphK, probeRadius), k)
 
   /** v28's walk returning the FULL visited set (the filtered serve's
-    * candidate generator) — seeds from the driver bucket cache when
-    * the store fits its per-store admission share
-    * ([[BucketCacheBudgetBytes]] / [[BucketCacheEntries]] — the
-    * budget is the aggregate across cached stores), from the pruned
-    * bucket scan otherwise; identical candidates either way. */
+    * candidate generator): seeds and hops ([[EdgeStore.fetchScored]])
+    * each from its store's [[Resident]] image when it fits one share,
+    * from pruned reads otherwise — identical candidates on every path. */
   private[graft] def walkVisitedCold(spark: SparkSession, dir: String,
       edgeDir: String, queryVec: Array[Float], beam: Int, iters: Int,
       maxEntries: Int, graphK: Int,
-      probeRadius: Int): Seq[(Long, Double)] = {
-    val fetch = (fr: Seq[Long]) =>
-      Hnsw.fetchScoredDf(EdgeStore.edgesFor(spark, edgeDir, fr), queryVec)
-    scoredPoolLocal(spark, dir, queryVec, probeRadius) match {
-      case Some(pool) =>
-        lastSeedSource = "local"
-        SrpBanded.walkFromSeed(pool.sortWith(SrpBanded.simDescIdAsc).take(maxEntries),
-          beam, iters, fetch)
-      case None =>
-        lastSeedSource = "pruned"
-        SrpBanded.graphWalkVisited(scoredPool(spark, dir, queryVec, probeRadius),
-          beam, iters, maxEntries, fetch)
-    }
-  }
+      probeRadius: Int): Seq[(Long, Double)] =
+    SrpBanded.walkFromSeed(seeds(spark, dir, queryVec, probeRadius, maxEntries),
+      beam, iters, EdgeStore.fetchScored(spark, edgeDir, queryVec))
 
   /** Incremental maintenance — the SRP analogue of
     * [[IvfStore.upsert]]: new/updated vectors are banded against the

@@ -21,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   * The `pb` stores ([[CodeStore]], [[EdgeStore]], [[HnswStore]]'s
   * layers) choose the count at a full write and at a fold, from the
   * rows they write (a fold counts them from its live versions'
-  * footers, [[liveRows]]), and pin it as a data dir of that version,
+  * footers, [[liveRows]], and a code store's full write from its
+  * corpus's, [[footerRows]]), and pin it as a data dir of that version,
   * `<chain root>/layout/v<N>/pb=<count>`, listed in the chain's
   * `dirsOf` — so [[Versioned]]'s clear, GC and crash contract covers
   * it like any other data of the version. A delta reuses its live
@@ -61,25 +62,20 @@ private[graft] object StoreLayout {
     pin(spark, root, v, n)
   }
 
-  /** driver threads [[liveRows]] reads footers on */
+  /** driver threads [[footerRows]] reads footers on */
   private val FooterThreads = 8
 
-  /** Rows the live versions of chain `c` hold in the `__ver`-
-    * partitioned parquet dir `data`, summed from the file footers — no
-    * Spark job. A fold sizes from this rather than from a count of its
-    * merge-on-read view, which would resolve the whole store once to
-    * size it and again to write it. An id re-written by a delta counts
-    * once per version holding it, and a tombstone counts, so this
-    * exceeds the resolved count by at most the deltas' rows. */
-  def liveRows(spark: SparkSession, c: Versioned.Chain, data: String): Long = {
+  /** Rows in the parquet files under `dirs` (a dir, or a single
+    * parquet file), summed from the file footers — no Spark job. A
+    * missing dir holds 0 rows. */
+  def footerRows(spark: SparkSession, dirs: Seq[String]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val f = Hfs.fs(spark, data)
     // plain listings: a located listing asks for every file's block
     // locations, ~3 ms a file on a local disk
-    def files(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      f.listStatus(p).toSeq.flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st))
-    val parts = Versioned.live(spark, c).map(v => new Path(s"$data/__ver=$v")).filter(f.exists)
-      .flatMap(files).filter(_.getPath.getName.endsWith(".parquet"))
+    def files(f: org.apache.hadoop.fs.FileSystem, p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      f.listStatus(p).toSeq.flatMap(st => if (st.isDirectory) files(f, st.getPath) else Seq(st))
+    val parts = dirs.map(new Path(_)).flatMap(p => Some(p.getFileSystem(conf)).filter(_.exists(p))
+      .toSeq.flatMap(files(_, p))).filter(_.getPath.getName.endsWith(".parquet"))
     // ~4 ms a footer measured on a local disk: read them on a few
     // threads (64 footers 280 → 135 ms)
     org.apache.spark.sql.GraftBridge.parmap(parts, "store-layout-footers", FooterThreads) { st =>
@@ -87,6 +83,17 @@ private[graft] object StoreLayout {
       try r.getRecordCount finally r.close()
     }.sum
   }
+
+  /** Rows the live versions of chain `c` hold in the `__ver`-
+    * partitioned parquet dir `data`, from the footers ([[footerRows]]).
+    * A fold sizes from this rather than from a count of its merge-on-
+    * read view, which would resolve the whole store once to size it
+    * and again to write it. An id re-written by a delta counts once per
+    * version holding it, and a tombstone counts, so this exceeds the
+    * resolved count by at most the deltas' rows. An unmarked (torn)
+    * version is not live, so it is never counted. */
+  def liveRows(spark: SparkSession, c: Versioned.Chain, data: String): Long =
+    footerRows(spark, Versioned.live(spark, c).map(v => s"$data/__ver=$v"))
 
   /** version v's layout dir under a chain root */
   def dir(root: String, v: Int): String = s"$root/layout/v$v"

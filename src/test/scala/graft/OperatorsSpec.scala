@@ -1624,28 +1624,30 @@ class OperatorsSpec extends AnyFunSuite {
     val coldRows = cold.collect().map(_.toSeq).toSeq
     assert(coldRows == refined.collect().map(_.toSeq).toSeq,
       "cold-start serve diverged from the in-memory refined path")
-    // the spec corpus fits the driver bucket cache, so the default
-    // serve seeds locally (zero seed jobs); forcing the budget to 0
-    // must take the pruned distributed scan and return IDENTICAL rows
+    // the spec corpus fits the driver images, so the default serve
+    // seeds and hops locally (zero jobs); forcing the budget to 0
+    // must take the pruned distributed reads and return IDENTICAL rows
     assert(graft.sources.SrpStore.lastSeedSource == "local",
-      s"seed not served from the bucket cache: ${graft.sources.SrpStore.lastSeedSource}")
-    val prevBudget = graft.sources.SrpStore.BucketCacheBudgetBytes
-    try {
-      graft.sources.SrpStore.BucketCacheBudgetBytes = 0L
+      s"seed not served from the bucket image: ${graft.sources.SrpStore.lastSeedSource}")
+    assert(graft.sources.EdgeStore.lastHopSource == "local",
+      s"hops not served from the edge image: ${graft.sources.EdgeStore.lastHopSource}")
+    StoreFixtures.atBudget(0L) {
+      graft.sources.EdgeStore.lastEdgePlanThunk = () => ""
       val dist = graft.sources.SrpStore.graphSearchCold(spark, dir, edgeDir, q)
         .collect().map(_.toSeq).toSeq
       assert(graft.sources.SrpStore.lastSeedSource == "pruned")
+      assert(graft.sources.EdgeStore.lastHopSource == "pruned")
       assert(dist == coldRows,
-        s"pruned-seed serve diverged from cached-seed: $dist vs $coldRows")
-    } finally graft.sources.SrpStore.BucketCacheBudgetBytes = prevBudget
-    // the persisted edge table really is what the hops read — a
-    // pruned, SELF-CONTAINED point read: dst embeddings in-row, pb
-    // partitions pruned in the file index, no corpus table anywhere
-    val hopPlan = graft.sources.EdgeStore.lastEdgePlan
-    assert(hopPlan.contains("PartitionFilters") && hopPlan.contains("pb"),
-      s"cold hop read not partition-pruned:\n$hopPlan")
-    assert(hopPlan.contains("dst_emb") && !hopPlan.contains("embeddings.parquet"),
-      s"cold hop read not self-contained:\n$hopPlan")
+        s"pruned serve diverged from the resident one: $dist vs $coldRows")
+      // the persisted edge table really is what the hops read — a
+      // pruned, SELF-CONTAINED point read: dst embeddings in-row, pb
+      // partitions pruned in the file index, no corpus table anywhere
+      val hopPlan = graft.sources.EdgeStore.lastEdgePlan
+      assert(hopPlan.contains("PartitionFilters") && hopPlan.contains("pb"),
+        s"cold hop read not partition-pruned:\n$hopPlan")
+      assert(hopPlan.contains("dst_emb") && !hopPlan.contains("embeddings.parquet"),
+        s"cold hop read not self-contained:\n$hopPlan")
+    }
   }
 
   test("v24 residual store probe: identical to in-memory v22, scan is partition-pruned") {

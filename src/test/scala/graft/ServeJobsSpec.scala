@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FakeEmbedder
-import graft.operators.{Hnsw, SimilaritySearch}
-import graft.sources.{CodeStore, EdgeStore, FilteredServe, HnswStore, SigStore, SrpStore}
+import graft.operators.{Hnsw, SimilaritySearch, SrpBanded}
+import graft.sources.{CodeStore, EdgeStore, FilteredServe, HnswStore, Resident, SigStore, SrpStore, StoreLayout}
 
 /** How many Spark jobs one warm single-request serve runs — the job
   * count is the serve's scheduling cost, so a plan change that adds a
@@ -96,24 +96,22 @@ class ServeJobsSpec extends AnyFunSuite {
       HnswStore.write(spark, sf, dir)
       warmJobs[Array[Float]]("hnsw", q => HnswStore.search(spark, dir, q), qa, qb, max = 0)
       assert(HnswStore.lastLocalLayers == (0 to Hnsw.MaxLevel).toSet)
-      // no layer admitted: every descent step and layer-0 hop is a
+      // no image admitted: every descent step and layer-0 hop is a
       // pruned point read
-      val prev = HnswStore.LayerCacheBudgetBytes
-      try {
-        HnswStore.LayerCacheBudgetBytes = 0L
+      StoreFixtures.atBudget(0L) {
         val q = (x: Array[Float]) => HnswStore.search(spark, dir, x)
         q(qa).collect()
         val n = jobs(q(qb))
         info(s"hnsw at budget 0: $n jobs")
         assert(HnswStore.lastLocalLayers.isEmpty)
         assert(n == 15, s"hnsw at budget 0: a warm request ran $n jobs, pinned 15")
-      } finally HnswStore.LayerCacheBudgetBytes = prev
+      }
     } finally graft.sources.TempStores.delete(dir)
   }
 
   test("HNSW serve over a top layer of one node: 0 jobs, same rows at budget 0") {
     // the corpus keeps one id at the top level, so the top layer holds
-    // the entry alone and no edge: the layer cache must still admit it
+    // the entry alone and no edge: the layer image must still admit it
     val root = Files.createTempDirectory("jobs-hnsw-top").toString
     val (d, dir) = (s"$root/corpus", s"$root/hnsw")
     try {
@@ -128,25 +126,49 @@ class ServeJobsSpec extends AnyFunSuite {
         qa, qb, max = 0)
       assert(HnswStore.lastLocalLayers == (0 to Hnsw.MaxLevel).toSet)
       val cached = HnswStore.search(spark, dir, qb).collect().toSeq
-      val prev = HnswStore.LayerCacheBudgetBytes
-      try {
-        HnswStore.LayerCacheBudgetBytes = 0L
+      StoreFixtures.atBudget(0L) {
         assert(HnswStore.search(spark, dir, qb).collect().toSeq == cached)
         assert(HnswStore.lastLocalLayers.isEmpty)
-      } finally HnswStore.LayerCacheBudgetBytes = prev
+      }
     } finally graft.sources.TempStores.delete(root)
   }
 
-  test("v28 cold graph serve: 2 jobs, the pruned layer-0 hops") {
+  test("v28 cold graph serve: 0 jobs, 2 with pruned hops, 5 at budget 0") {
     val srpDir = SrpStore.storeFor(spark, sf)
     val edgeDir = EdgeStore.refinedStoreFor(spark, sf)
-    // seeds from the driver bucket cache and a local emission: the
-    // jobs are the two beam hops' pruned edge reads (iters = 2)
+    // seeds from the bucket image, hops from the edge image, a local
+    // emission
     val q = (x: Array[Float]) => SrpStore.graphSearchCold(spark, srpDir, edgeDir, x)
-    q(qa).collect()
-    val n = jobs(q(qb))
-    info(s"v28 graphSearchCold: $n jobs")
-    assert(SrpStore.lastSeedSource == "local")
-    assert(n == 2, s"v28: a warm request ran $n jobs, pinned 2")
+    warmJobs[Array[Float]]("v28 graphSearchCold", q, qa, qb, max = 0)
+    assert(SrpStore.lastSeedSource == "local" && EdgeStore.lastHopSource == "local")
+    val resident = q(qb).collect().toSeq
+    def pinned(budget: Long, seeds: String, hops: String, pin: Int): Unit =
+      StoreFixtures.atBudget(budget) {
+        q(qa).collect()
+        val n = jobs(q(qb))
+        info(s"v28 graphSearchCold at budget $budget: $n jobs")
+        assert(SrpStore.lastSeedSource == seeds && EdgeStore.lastHopSource == hops)
+        assert(n == pin, s"v28 at budget $budget: a warm request ran $n jobs, pinned $pin")
+        assert(q(qb).collect().toSeq == resident, s"v28 at budget $budget served other rows")
+      }
+    // a share that fits the bucket image but not the edges: the jobs
+    // are the two beam hops' pruned edge reads (iters = 2)
+    val srpBytes = StoreLayout.footerRows(spark, Seq(s"$srpDir/embed")) *
+      (Resident.VectorBytes + Resident.MemberBytes * SrpBanded.Bands)
+    pinned(Resident.Slots * srpBytes, "local", "pruned", 2)
+    // no image: the pruned seed scan too
+    pinned(0L, "pruned", "pruned", 5)
+  }
+
+  test("filtered walk tier: ≤ 1 job") {
+    val srpDir = SrpStore.storeFor(spark, sf)
+    val edgeDir = EdgeStore.refinedStoreFor(spark, sf)
+    // past both scan ceilings the serve walks v28's graph from the
+    // driver images and post-filters the visited set: the job is the
+    // pruned byid read of the visited ids
+    warmJobs[Array[Float]]("filtered walk", q => FilteredServe.searchFiltered(
+      spark, sf, srpDir, edgeDir, q, Seq("lang" -> "en"), k = 5,
+      exactScanMax = 0L, codeScanMax = 0L), qa, qb, max = 1)
+    assert(FilteredServe.lastFilteredPath.startsWith("walk:"), FilteredServe.lastFilteredPath)
   }
 }

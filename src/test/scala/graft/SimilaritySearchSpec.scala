@@ -795,19 +795,15 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rk"), r.getAs[Double]("sim")))
     assert(stored.sameElements(inMem),
       s"stored HNSW diverged: ${stored.toSeq} vs ${inMem.toSeq}")
-    // the default serve walks every layer from the driver cache, the
-    // l0 beam graph included (zero jobs per request) — all fit budget
+    // the default serve walks every layer from the driver images, the
+    // l0 beam graph included (zero jobs per request) — all fit a share
     assert(graft.sources.HnswStore.lastLocalLayers ==
       (0 to graft.operators.Hnsw.MaxLevel).toSet,
-      s"serve not answered from the driver layer cache: ${graft.sources.HnswStore.lastLocalLayers}")
+      s"serve not answered from the driver images: ${graft.sources.HnswStore.lastLocalLayers}")
     def serveAt(budget: Long): Seq[(Long, Int, Double)] = {
-      val prevBudget = graft.sources.HnswStore.LayerCacheBudgetBytes
       graft.sources.EdgeStore.lastEdgePlanThunk = () => ""
-      try {
-        graft.sources.HnswStore.LayerCacheBudgetBytes = budget
-        graft.sources.HnswStore.search(spark, dir, q).collect()
-          .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rk"), r.getAs[Double]("sim"))).toSeq
-      } finally graft.sources.HnswStore.LayerCacheBudgetBytes = prevBudget
+      StoreFixtures.atBudget(budget)(graft.sources.HnswStore.search(spark, dir, q).collect()
+        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rk"), r.getAs[Double]("sim"))).toSeq)
     }
     // the layer-0 hop read is the pruned EdgeStore point read, with
     // the destination embedding in-row — corpus-free
@@ -832,12 +828,14 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(!plan.contains("embeddings.parquet"),
       s"stored layer read touches the corpus table:\n$plan")
     assertPrunedHops()
-    // a budget that fits the upper layers but not l0: the descent is
-    // local, the layer-0 hops distributed, the rows identical
+    // a budget whose share fits the upper layers but not l0 (each
+    // image gets its own share): the descent is local, the layer-0
+    // hops distributed, the rows identical
     val upper = graft.sources.HnswStore.layersFrame(spark, dir).count()
     val l0 = graft.sources.EdgeStore.read(spark, s"$dir/l0").count()
-    val split = serveAt(graft.sources.HnswStore.LayerCacheEntries *
-      graft.sources.HnswStore.edgeBytes * (upper + l0 - 1))
+    assert(upper < l0, s"fixture: upper layers $upper edges, l0 $l0")
+    val split = serveAt(graft.sources.Resident.Slots *
+      graft.sources.Resident.VectorBytes * upper)
     assert(graft.sources.HnswStore.lastLocalLayers ==
       (1 to graft.operators.Hnsw.MaxLevel).toSet,
       s"upper layers cached, l0 not: ${graft.sources.HnswStore.lastLocalLayers}")
@@ -890,10 +888,12 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     val before = verFiles(0)
     assert(before.nonEmpty, "no v0 layer partitions written")
-    // warm the driver layer cache, l0 included, before the upserts
+    // warm the driver images, l0 included, before the upserts
     graft.sources.HnswStore.search(spark, dir, twin).collect()
     val warm0 = graft.sources.HnswStore.localLayers(spark, dir)
-    assert(warm0.keySet == (0 to graft.operators.Hnsw.MaxLevel).toSet)
+    assert(warm0.keySet == (1 to graft.operators.Hnsw.MaxLevel).toSet)
+    val l0Warm0 = graft.sources.EdgeStore.image(spark, s"$dir/l0")
+    assert(l0Warm0.isDefined, "the l0 image was not admitted")
 
     val touched = graft.sources.HnswStore.upsert(spark, dir, d2, srpDir, updates)
     assert(touched.nonEmpty, "upsert touched no layer partitions")
@@ -914,21 +914,19 @@ class SimilaritySearchSpec extends AnyFunSuite {
       s"twin base $baseId did not adopt the upserted id on layer 1")
 
     // functionally: the full stored hierarchy serves the new vector
-    // after the layer-0 edge upsert, with no rebuild anywhere
-    // each commit drops the cached layers: the layer delta under
-    // `layers/`, the edge delta under `l0/` (Tables.invalidate's prefix
-    // overlap with the entry's store dir)
+    // after the layer-0 edge upsert, with no rebuild anywhere.
+    // Each image follows its own chain's version stamp: the layer
+    // delta under `layers/` rebuilds the upper-layer image, the edge
+    // delta under `l0/` the l0 image
     val warm1 = graft.sources.HnswStore.localLayers(spark, dir)
-    val layerCommitDropped = !(warm1 eq warm0)
-    assert(layerCommitDropped, "the layer upsert left the cached layers in place")
-    val l1HasNew = warm1(1).contains(newId)
-    assert(l1HasNew, "re-collected layer 1 lacks the upserted id")
+    assert(!(warm1 eq warm0), "the layer upsert left the upper-layer image in place")
+    assert(warm1(1).contains(newId), "re-collected layer 1 lacks the upserted id")
+    assert(graft.sources.EdgeStore.image(spark, s"$dir/l0").get eq l0Warm0.get,
+      "the layer upsert rebuilt the l0 image")
     graft.sources.EdgeStore.upsert(spark, s"$dir/l0", d2, srpDir, updates)
-    val warm2 = graft.sources.HnswStore.localLayers(spark, dir)
-    val l0CommitDropped = !(warm2 eq warm1)
-    assert(l0CommitDropped, "the l0 upsert left the cached layers in place")
-    val l0HasNew = warm2(0).contains(newId)
-    assert(l0HasNew, "re-collected l0 lacks the upserted id")
+    val l0Warm1 = graft.sources.EdgeStore.image(spark, s"$dir/l0")
+    assert(!(l0Warm1.get eq l0Warm0.get), "the l0 upsert left the l0 image in place")
+    assert(l0Warm1.get.contains(newId), "re-collected l0 lacks the upserted id")
     val servedRows = graft.sources.HnswStore.search(spark, dir, twin).collect().map(_.toSeq).toSeq
     assert(graft.sources.HnswStore.lastLocalLayers == (0 to graft.operators.Hnsw.MaxLevel).toSet)
     val served = servedRows.map(_.head.asInstanceOf[Long]).toSet
@@ -1055,7 +1053,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // included, comes from the driver cache (zero jobs per walk step)
     assert(graft.sources.HnswStore.lastLocalLayers ==
       (0 to graft.operators.Hnsw.MaxLevel).toSet,
-      s"descent not served from the driver layer cache: ${graft.sources.HnswStore.lastLocalLayers}")
+      s"descent not served from the driver images: ${graft.sources.HnswStore.lastLocalLayers}")
   }
 
   test("v33 batched HNSW: equals the single-query walk per query, no query broadcast") {

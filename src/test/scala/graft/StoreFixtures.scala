@@ -14,6 +14,15 @@ object StoreFixtures {
     try f finally graft.sources.StoreLayout.bucketBytes = old
   }
 
+  /** Run `f` with the driver-image budget at `b` bytes
+    * ([[graft.sources.Resident.BudgetBytes]]); 0 forces every serve
+    * onto its distributed pruned reads. */
+  def atBudget[A](b: Long)(f: => A): A = {
+    val old = graft.sources.Resident.BudgetBytes
+    graft.sources.Resident.BudgetBytes = b
+    try f finally graft.sources.Resident.BudgetBytes = old
+  }
+
   /** Run `f` with every sized store write at its cap — the fixed pb
     * layout stores had before they were sized, many buckets even on the
     * spec corpus, which sizes to one. */

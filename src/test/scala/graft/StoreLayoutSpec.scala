@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FakeEmbedder
 import graft.operators.SrpBanded
-import graft.sources.{CodeStore, EdgeStore, HnswStore, SigStore, SrpStore, StoreLayout, TempStores, Versioned}
+import graft.sources.{CodeStore, EdgeStore, HnswStore, Resident, SigStore, SrpStore, StoreLayout, TempStores, Versioned}
 
 /** [[StoreLayout]]: the bucket rule itself, the two dir-count policies
   * that share it, and the pb stores sized by it — same rows at any
@@ -77,12 +77,9 @@ class StoreLayoutSpec extends AnyFunSuite {
         assert(rows(CodeStore.search(spark, s"$sized/code", q)) ==
           rows(CodeStore.search(spark, s"$fixed/code", q)), "code search")
         // the descent from the driver cache and from pruned layer reads
-        Seq(HnswStore.LayerCacheBudgetBytes, 0L).foreach { budget =>
-          val old = HnswStore.LayerCacheBudgetBytes
-          HnswStore.LayerCacheBudgetBytes = budget
-          try assert(rows(HnswStore.search(spark, s"$sized/hnsw", q)) ==
-            rows(HnswStore.search(spark, s"$fixed/hnsw", q)), s"hnsw search, layer budget $budget")
-          finally HnswStore.LayerCacheBudgetBytes = old
+        Seq(Resident.BudgetBytes, 0L).foreach { budget =>
+          StoreFixtures.atBudget(budget)(assert(rows(HnswStore.search(spark, s"$sized/hnsw", q)) ==
+            rows(HnswStore.search(spark, s"$fixed/hnsw", q)), s"hnsw search, image budget $budget"))
         }
       }
       assert(rows(CodeStore.searchBatch(spark, s"$sized/code", sf, 50)) ==

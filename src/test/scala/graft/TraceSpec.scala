@@ -110,15 +110,13 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
       HnswStore.write(spark, sf, hnswDir)
       val cached = check[Array[Float]]("hnsw", q => HnswStore.search(spark, hnswDir, q), qa, qb)
       assert(cached.jobs == 0 && cached.filesRead == 0,
-        s"hnsw: a serve from the driver layer cache ran jobs or read files: ${cached.json}")
+        s"hnsw: a serve from the driver images ran jobs or read files: ${cached.json}")
       // the same serve with no layer admitted reads its layers' files
-      val prev = HnswStore.LayerCacheBudgetBytes
-      try {
-        HnswStore.LayerCacheBudgetBytes = 0L
+      StoreFixtures.atBudget(0L) {
         val dist = check[Array[Float]]("hnsw at budget 0",
           q => HnswStore.search(spark, hnswDir, q), qa, qb)
         assert(dist.filesRead > 0, s"hnsw at budget 0: no file read: ${dist.json}")
-      } finally HnswStore.LayerCacheBudgetBytes = prev
+      }
       assert(planMs > 0, "no Catalyst phase reached any span")
     } finally dirs.foreach(TempStores.delete)
   }

@@ -72,7 +72,7 @@ object DedupScaleBench {
       "p1_curation_pipeline", "p2_curation_summary",
       "t3_token_count", "t7_tfidf_top_terms",
       "d5_embedding_neardup", "d11_semdedup", "d11_semdedup_scaled",
-      "d13_incremental_neardup", "d13_incremental_neardup_joined",
+      "d13_incremental_neardup", "d13_incremental_neardup_joined", "d13_one_doc",
       "m8_frame_dedup")
     val names = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -133,7 +133,12 @@ object DedupScaleBench {
       // claim of the crossover's far side instead of arguing it
       "d13_incremental_neardup_joined" -> (() =>
         graft.sources.SigStore.incrementalNearDup(spark, sigDir, d13Batch(),
-          probeCollectMax = 0L)))
+          probeCollectMax = 0L)),
+      // a gateway's one-document check: the batch's first doc, served
+      // on the driver from the store's images where they fit
+      "d13_one_doc" -> (() =>
+        graft.sources.SigStore.incrementalNearDup(spark, sigDir,
+          d13Batch().orderBy(col("doc_id")).limit(1))))
     // which probe/text shape the last d13 serve actually took — the
     // joined-path decade row must SAY it ran joined
     val shapeOf = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -158,9 +163,11 @@ object DedupScaleBench {
     val oj = warm.map { case (k, _, c) => s""""$k":$c""" }.mkString(",")
     // embedding-family entries amortize over the embeddings rows,
     // document entries over the documents rows (d13 over its batch
-    // slice — the serve's own unit)
+    // slice — the serve's own unit; the one-document check over its
+    // one doc)
     def unitRows(k: String): Double =
-      if (k.startsWith("d5_") || k.startsWith("d11_")) nEmb / 1000.0
+      if (k == "d13_one_doc") 1 / 1000.0
+      else if (k.startsWith("d5_") || k.startsWith("d11_")) nEmb / 1000.0
       else if (k.startsWith("d13_")) rows / 3.0 / 1000.0
       else rows / 1000.0
     val aj = warm.collect { case (k, v, _) if v >= 0 =>

@@ -114,7 +114,7 @@ object ScaleBench {
       "v28_graph_search_cold", "v26_graph_search_batch", "v27_graph_search_batch_stored",
       "v26_graph_search_batch_scaled", "v27_graph_search_batch_stored_scaled",
       "v29_ivfpq_batch", "v31_hnsw_search", "v32_hnsw_stored", "v33_hnsw_batch",
-      "v34_hnsw_batch_stored", "v38_hamming_batch", "v38_hamming_batch_4k")
+      "v34_hnsw_batch_stored", "v37_hamming_stored", "v38_hamming_batch", "v38_hamming_batch_4k")
     val names = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(allNames)
@@ -143,7 +143,7 @@ object ScaleBench {
       "hnsw_store" -> Set("v32_hnsw_stored", "v34_hnsw_batch_stored"),
       "ivfpq_model" -> Set("v29_ivfpq_batch"),
       "ivfpq_store" -> Set("v29_ivfpq_batch"),
-      "code_store" -> Set("v38_hamming_batch", "v38_hamming_batch_4k"))
+      "code_store" -> Set("v37_hamming_stored", "v38_hamming_batch", "v38_hamming_batch_4k"))
     val builds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def build(name: String)(f: => Any): Unit =
       if (buildDeps(name).exists(names.contains)) {
@@ -197,6 +197,9 @@ object ScaleBench {
     // the stable comparison on this contended box is shuffle bytes and
     // stage structure, not wall clock (PERF.md r15 variance attribution)
     val trace = graft.obs.Trace(spark)
+    // which path a single-query store serve took: its driver image
+    // ("resident") or its distributed reads ("pruned")
+    val paths = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def pass(): Seq[(String, (Double, Option[graft.obs.Trace.Record]))] = names.map { n =>
       System.err.println(s"[scale] serve $n ...")
       val rec = try {
@@ -205,6 +208,7 @@ object ScaleBench {
           .getOrElse(SparkEntry.queries(n)(spark, dir))
           .count())._2)
       } catch { case _: Throwable => None }
+      if (n == "v37_hamming_stored") paths(n) = graft.sources.CodeStore.lastShortlistSource
       val secs = rec.fold(-1.0)(_.wallMs / 1e3)
       System.err.println(f"[scale] serve $n done $secs%.1f s ${rec.map(_.json).getOrElse("")}")
       // release the pass's checkpoint/shuffle references eagerly so
@@ -235,8 +239,9 @@ object ScaleBench {
       val nq = if (k == "v38_hamming_batch_4k") nQueries4k else nQueries
       s""""$k":${f"${v * 1000.0 / math.max(nq, 1)}%.3f"}""" }.mkString(",")
     val tj = warmTraced.collect { case (k, (_, Some(r))) => s""""$k":${r.json}""" }.mkString(",")
+    val pj = paths.map { case (k, v) => s""""$k":"$v"""" }.mkString(",")
     val total = warm.map(_._2).filter(_ >= 0).sum
-    println(s"""{"metric":"scale_total","value":${f"$total%.3f"},"unit":"sec","sf_copies":$copies,"rows":$rows,"batch_queries":$nQueries,"scaled_rpb":$scaledRpb,"builds":{$bj},"queries":{$qj},"batch_ms_per_query":{$aj},"traces":{$tj}}""")
+    println(s"""{"metric":"scale_total","value":${f"$total%.3f"},"unit":"sec","sf_copies":$copies,"rows":$rows,"batch_queries":$nQueries,"scaled_rpb":$scaledRpb,"builds":{$bj},"queries":{$qj},"batch_ms_per_query":{$aj},"paths":{$pj},"traces":{$tj}}""")
     spark.stop()
   }
 }

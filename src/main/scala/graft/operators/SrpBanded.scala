@@ -100,6 +100,21 @@ object HammingDistance {
     }
     s
   }
+
+  /** Driver twin of [[distanceJ]] over a flat block of keys: the
+    * `q.length` longs from `off`, all present. A row the kernel scores
+    * null (null keys, a null element, too few keys) is marked as such
+    * where its keys are flattened, [[graft.sources.CodeStore]]'s
+    * image, and never reaches this. */
+  def distanceLocal(keys: Array[Long], off: Int, q: Array[Long]): Int = {
+    var s = 0
+    var b = 0
+    while (b < q.length) {
+      s += java.lang.Long.bitCount(keys(off + b) ^ q(b))
+      b += 1
+    }
+    s
+  }
 }
 
 object SrpBanded {

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{HammingIndex, SrpBanded}
+import graft.operators.{HammingDistance, HammingIndex, SrpBanded}
 import graft.functions.{bound, vectors}
 
 /** Persisted binary-code store — the on-disk artifact for the
@@ -37,6 +37,15 @@ import graft.functions.{bound, vectors}
   *    ≤ shortlist winners with a pb-pruned read (PartitionFilters
   *    decided in the file index before any IO) — the embeddings
   *    live in the SAME rows, so no stage joins the corpus table.
+  *
+  * A store whose live versions' footer rows, at [[RowBytes]] each, fit
+  * one [[Resident]] share is also held on the driver as an [[Image]] of
+  * its resolved rows, built with one collect per live version stamp.
+  * Both stages then run there — the shortlist by the Hamming kernel's
+  * twin, the rerank by `cosine_sim_local` — and a warm single-query
+  * serve runs no Spark job. A store over its share, or any store at
+  * `Resident.BudgetBytes = 0`, keeps the two reads above; the rows are
+  * the same either way.
   */
 object CodeStore {
 
@@ -122,31 +131,135 @@ object CodeStore {
       .select(col("vec_id"), col("embedding"))
   }
 
-  /** executed plans of the last serve — spec hooks */
+  /** executed plans of the last serve's distributed shortlist and
+    * fetch ("" when the image served them) — spec hooks */
   @volatile var lastScanPlanThunk: () => String = () => ""
   def lastScanPlan: String = lastScanPlanThunk()
   @volatile var lastFetchPlanThunk: () => String = () => ""
   def lastFetchPlan: String = lastFetchPlanThunk()
+  /** which source the last shortlist came from: "resident" (the
+    * driver image) or "pruned" (the distributed code scan) — spec hook */
+  @volatile var lastShortlistSource: String = ""
 
-  /** v37: v36 served entirely from the store — code scan over the
-    * 8-byte rows, pb-pruned embedding point-fetch for the shortlist,
-    * exact rerank. No corpus dir in the signature. Identical rows to
-    * [[HammingIndex.search]] (same keys, same IEEE cosine), so it
-    * shares v36's oracle. */
+  /** The resolved live rows held on the driver as a [[Resident]] image,
+    * in vec_id order, in flat primitive arrays: the ids, `Bands` key
+    * longs and `Dim` embedding floats per row ([[RowBytes]] a row), and
+    * the rows whose keys the [[HammingDistance]] kernel scores null (a
+    * null element, or fewer than `Bands` keys). */
+  private[graft] final class Image(ids: Array[Long], keys: Array[Long],
+      nullHam: java.util.BitSet, emb: Array[Float]) {
+    def rows: Int = ids.length
+
+    /** row `i`'s Hamming distance to the query keys `q`, -1 where the
+      * kernel gives null — [[HammingDistance.distanceLocal]], the
+      * kernel's twin */
+    def ham(i: Int, q: Array[Long]): Int =
+      if (nullHam.get(i)) -1 else HammingDistance.distanceLocal(keys, i * SrpBanded.Bands, q)
+
+    /** the first `width` ids by (ham ASC NULLS FIRST, vec_id ASC), the
+      * distributed cut's order: the rows are in id order, so sorting
+      * (ham + 1) << 32 | row sorts by (ham, id) with a null first */
+    def shortlist(q: Array[Long], width: Int): Seq[Long] = {
+      val packed = Array.tabulate(ids.length)(i => (ham(i, q) + 1).toLong << 32 | i)
+      java.util.Arrays.sort(packed)
+      packed.iterator.take(width).map(p => ids(p.toInt)).toSeq
+    }
+
+    /** the embedding of a held id */
+    def embedding(id: Long): Array[Float] = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      java.util.Arrays.copyOfRange(emb, i * SrpBanded.Dim, (i + 1) * SrpBanded.Dim)
+    }
+  }
+
+  /** The [[Image]] of the live versions' raw rows (vec_id, keys,
+    * embedding, __ver), resolved on the driver as [[resolvedFrame]]
+    * resolves them: per vec_id the latest version wins, and a null-keys
+    * tombstone masks the id. One collect; the kernel itself marks the
+    * rows it scores null. */
+  private[graft] def imageOf(raw: DataFrame): Image = {
+    val nullHam = HammingIndex.hammingCol(Seq.fill(SrpBanded.Bands)(0L)).isNull
+    // (vec_id, __ver, tombstone, scored null, the first Bands keys,
+    // embedding); the keys of a row the kernel scores null are not read
+    val live = raw
+      .select(col("vec_id"), col("__ver").cast("int"), col("keys").isNull, nullHam,
+        slice(col("keys"), 1, SrpBanded.Bands), col("embedding"))
+      .collect().groupBy(_.getLong(0)).valuesIterator.map(_.maxBy(_.getInt(1)))
+      .filterNot(_.getBoolean(2)).toArray.sortBy(_.getLong(0))
+    val (b, d) = (SrpBanded.Bands, SrpBanded.Dim)
+    val ids = new Array[Long](live.length)
+    val keys = new Array[Long](live.length * b)
+    val nulls = new java.util.BitSet(live.length)
+    val emb = new Array[Float](live.length * d)
+    live.iterator.zipWithIndex.foreach { case (r, i) =>
+      ids(i) = r.getLong(0)
+      if (r.getBoolean(3)) nulls.set(i)
+      else r.getSeq[Long](4).copyToArray(keys, i * b)
+      r.getSeq[Float](5).copyToArray(emb, i * d)
+    }
+    new Image(ids, keys, nulls, emb)
+  }
+
+  /** the store's [[Image]], when its live versions' footer rows (which
+    * count superseded rows and tombstones too) at [[RowBytes]] each fit
+    * one [[Resident]] share */
+  private[graft] def image(spark: SparkSession, dir: String): Option[Image] =
+    Resident.image(spark, "codes", chain(dir)) { (vers, share) =>
+      val data = s"$dir/codes/data"
+      Option.when(StoreLayout.footerRows(spark, vers.map(v => s"$data/__ver=$v")) * RowBytes <= share)(
+        imageOf(spark.read.parquet(data).filter(col("__ver").isin(vers: _*))))
+    }
+
+  /** The first `width` ids by (ham ASC NULLS FIRST, vec_id ASC) — the
+    * one shortlist of [[search]] and of [[searchFilteredTerms]]'s broad
+    * tier: from the image when resident (no Spark job), else the
+    * distributed TakeOrdered cut over the 8-byte code column. The same
+    * ids either way. */
+  private def shortlistIds(spark: SparkSession, dir: String, img: Option[Image],
+                           qk: Seq[Long], width: Int): Seq[Long] = img match {
+    case Some(im) =>
+      lastShortlistSource = "resident"
+      lastScanPlanThunk = () => ""
+      im.shortlist(qk.toArray, width)
+    case None =>
+      lastShortlistSource = "pruned"
+      val scan = codesOf(resolvedFrame(spark, dir))
+        .select(col("vec_id"), HammingIndex.hammingCol(qk).as("ham"))
+      lastScanPlanThunk = () => scan.queryExecution.executedPlan.toString
+      // bounded driver state: the shortlist ids (≤ width rows) — the
+      // same O(k) license every single-query serve here documents
+      scan.orderBy(col("ham").asc, col("vec_id").asc)
+        .limit(width).collect().map(_.getLong(0)).toSeq
+  }
+
+  /** The exact-cosine top `k` of shortlisted `ids`: scored by
+    * [[vectors.cosine_sim_local]] over the image's embeddings and cut by
+    * [[SrpBanded.topKCut]] when resident, else the pb-pruned embedding
+    * fetch and [[HammingIndex.rerank]] — bit-identical rows. */
+  private def rerankIds(spark: SparkSession, dir: String, img: Option[Image],
+                        ids: Seq[Long], queryVec: Array[Float], k: Int): DataFrame = img match {
+    case Some(im) =>
+      lastFetchPlanThunk = () => ""
+      SrpBanded.topKCut(spark,
+        ids.map(id => (id, vectors.cosine_sim_local(im.embedding(id), queryVec))), k)
+    case None =>
+      val (full, n) = resolved(spark, dir)
+      val fetch = fetchOf(full, n, ids)
+      lastFetchPlanThunk = () => fetch.queryExecution.executedPlan.toString
+      HammingIndex.rerank(fetch, queryVec, k)
+  }
+
+  /** v37: v36 served entirely from the store — the Hamming shortlist
+    * over the 8-byte codes, the exact rerank of its embeddings, both
+    * from the driver image when the store is resident (no Spark job),
+    * else a code scan and a pb-pruned point fetch. No corpus dir in the
+    * signature. Identical rows to [[HammingIndex.search]] (same keys,
+    * same IEEE cosine), so it shares v36's oracle. */
   def search(spark: SparkSession, dir: String, queryVec: Array[Float],
              k: Int = 10, shortlist: Int = HammingIndex.Shortlist): DataFrame = {
     val qk = SrpBanded.queryBandKeys(queryVec).map(_._2)
-    val (full, n) = resolved(spark, dir)
-    val scan = codesOf(full)
-      .select(col("vec_id"), HammingIndex.hammingCol(qk).as("ham"))
-    lastScanPlanThunk = () => scan.queryExecution.executedPlan.toString
-    // bounded driver state: the shortlist ids (≤ shortlist rows) —
-    // the same O(k) license every single-query serve here documents
-    val ids = scan.orderBy(col("ham").asc, col("vec_id").asc)
-      .limit(shortlist).collect().map(_.getLong(0)).toSeq
-    val fetch = fetchOf(full, n, ids)
-    lastFetchPlanThunk = () => fetch.queryExecution.executedPlan.toString
-    HammingIndex.rerank(fetch, queryVec, k)
+    val img = image(spark, dir)
+    rerankIds(spark, dir, img, shortlistIds(spark, dir, img, qk, shortlist), queryVec, k)
   }
 
   /** Metadata-filtered serve for the code-scan family — v39's
@@ -201,13 +314,10 @@ object CodeStore {
       val f0 = FilteredServe.walkStartFactor(matching,
         FilteredServe.totalCount(spark, metaDir))
       val qk = SrpBanded.queryBandKeys(queryVec).map(_._2)
-      val (full, n) = resolved(spark, dir)
-      val scan = codesOf(full)
-        .select(col("vec_id"), HammingIndex.hammingCol(qk).as("ham"))
+      val img = image(spark, dir)
       val hit = FilteredServe.EscalateFactors.iterator.map { e =>
         val f = math.min(e * f0, 64)
-        val ids = scan.orderBy(col("ham").asc, col("vec_id").asc)
-          .limit(shortlist * f).collect().map(_.getLong(0)).toSeq
+        val ids = shortlistIds(spark, dir, img, qk, shortlist * f)
         val ok = FilteredServe.matchingIdsTerms(spark, metaDir, terms, ids)
         (f, ids.length, ids.filter(ok))
       }.find(_._3.size >= k)
@@ -215,7 +325,7 @@ object CodeStore {
         case Some((f, scanned, okIds)) =>
           FilteredServe.lastFilteredPath = s"scan:$f"
           FilteredServe.recordCoverage(s"scan:$f", matching, scanned.toLong)
-          HammingIndex.rerank(fetchOf(full, n, okIds), queryVec, k)
+          rerankIds(spark, dir, img, okIds, queryVec, k)
         case None =>
           FilteredServe.lastFilteredPath = "fallback"
           FilteredServe.recordCoverage("fallback", matching, matching)

@@ -5,7 +5,9 @@ import graft.operators.SrpBanded
 
 /** Driver images of small stores, the way the reference serves from an
   * index held in memory (`sql/05_vector_index.sql:3-6`): the HNSW upper
-  * layers, an [[EdgeStore]] and an [[SrpStore]]'s buckets. A warm serve
+  * layers, an [[EdgeStore]], an [[SrpStore]]'s buckets, a
+  * [[CodeStore]]'s resolved rows, and a [[SigStore]]'s probe map and
+  * verify texts. A warm serve
   * whose steps all hit images runs no Spark job. One budget bounds every
   * image: an image is admitted when its rows, read from parquet footers
   * with no Spark job (they over-count superseded rows and tombstones,
@@ -29,6 +31,12 @@ object Resident {
   val VectorBytes: Long = 96L + 4L * SrpBanded.Dim
   /** JVM bytes per held bucket-membership id */
   val MemberBytes = 24L
+  /** JVM bytes per held signature row: its band key and doc id, in
+    * flat arrays */
+  val SigBytes = 16L
+  /** JVM bytes per held verify text besides its characters: the doc
+    * id, the reference, the String and byte array headers */
+  val TextBytes = 64L
 
   /** a graph image: src → (dst, dst_emb) */
   type Adjacency = Map[Long, Array[(Long, Array[Float])]]

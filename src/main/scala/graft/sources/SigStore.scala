@@ -38,6 +38,14 @@ import graft.functions.{TextHash, bound, text}
   *
   * [[upsert]] appends an O(batch) delta version (sigs + texts); the
   * chain folds only on an explicit [[compact]].
+  *
+  * Two [[Resident]] images serve the one-document check on the driver,
+  * each admitted from footers on its own and built once per live
+  * version stamp: `"sigs"`, the (band, band_key) → doc ids probe map
+  * ([[SigImage]]), and `"texts"`, doc_id → verify text ([[TextImage]]).
+  * With both, a warm check runs no Spark job; an image over its share,
+  * or both at `Resident.BudgetBytes = 0`, leaves its step on the pruned
+  * point read, with the same rows.
   */
 object SigStore {
 
@@ -197,6 +205,76 @@ object SigStore {
     pruned
   }
 
+  /** The live `sigs/` rows held on the driver as a [[Resident]] image:
+    * the (band, band_key) → doc ids probe map, one run per band of
+    * sorted keys with their doc ids beside them in flat arrays
+    * ([[Resident.SigBytes]] a row), and the positions of null doc ids
+    * (such a row fills its bucket but never pairs). */
+  private[graft] final class SigImage(starts: Array[Int], keys: Array[Long],
+      ids: Array[Long], nullIds: java.util.BitSet) {
+    /** the doc ids held in bucket (band, key), None for a null id */
+    def bucket(band: Int, key: Long): Iterator[Option[Long]] = {
+      val end = starts(band + 1)
+      var lo = starts(band)
+      var hi = end
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (keys(m) < key) lo = m + 1 else hi = m
+      }
+      Iterator.from(lo).takeWhile(i => i < end && keys(i) == key)
+        .map(i => Option.when(!nullIds.get(i))(ids(i)))
+    }
+  }
+
+  /** the [[SigImage]], when the live `sigs/` footer rows fit one share */
+  private[graft] def sigImage(spark: SparkSession, dir: String): Option[SigImage] =
+    Resident.image(spark, "sigs", chain(dir)) { (vers, share) =>
+      Option.when(StoreLayout.footerRows(spark, vers.map(v => s"$dir/sigs/__ver=$v")) *
+          Resident.SigBytes <= share) {
+        val rows = sigFrame(spark, dir).select(col("band"), col("band_key"), col("doc_id")).collect()
+          .map(r => (r.getInt(0), r.getLong(1), Option.when(!r.isNullAt(2))(r.getLong(2))))
+        val byBand = (0 until Bands).map(b => rows.filter(_._1 == b).sortBy(_._2))
+        val flat = byBand.flatten
+        val nulls = new java.util.BitSet(flat.length)
+        flat.indices.foreach(i => if (flat(i)._3.isEmpty) nulls.set(i))
+        new SigImage(byBand.scanLeft(0)(_ + _.length).toArray, flat.map(_._2).toArray,
+          flat.map(_._3.getOrElse(0L)).toArray, nulls)
+      }
+    }
+
+  /** The live verify texts held on the driver as a [[Resident]] image,
+    * sorted by doc_id; a doc_id more than one live version holds keeps
+    * every text, as the point read does. */
+  private[graft] final class TextImage(ids: Array[Long], texts: Array[String]) {
+    def textsOf(id: Long): Iterator[String] = {
+      var lo = 0
+      var hi = ids.length
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (ids(m) < id) lo = m + 1 else hi = m
+      }
+      Iterator.from(lo).takeWhile(i => i < ids.length && ids(i) == id).map(texts(_))
+    }
+  }
+
+  /** The [[TextImage]], when the live `docs/` footers fit one share: the
+    * `text` column's uncompressed bytes, twice (a JVM string holds a
+    * character in one or two bytes, its UTF-8 form in one to four),
+    * plus [[Resident.TextBytes]] per footer row. A dictionary-encoded
+    * column counts each distinct text once, so identical texts share
+    * one String in the image. Texts or ids that are null never pair and
+    * are not held. */
+  private[graft] def textImage(spark: SparkSession, dir: String): Option[TextImage] =
+    Resident.image(spark, "texts", chain(dir)) { (vers, share) =>
+      val (rows, bytes) = StoreLayout.footerRowsAndBytes(spark, vers.map(v => s"$dir/docs/__ver=$v"), "text")
+      Option.when(rows * Resident.TextBytes + 2 * bytes <= share) {
+        val held = docsFrame(spark, dir).filter(col("doc_id").isNotNull && col("text").isNotNull)
+          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+        val canon = new java.util.HashMap[String, String]
+        new TextImage(held.map(_._1), held.map(r => canon.computeIfAbsent(r._2, t => t)))
+      }
+    }
+
   /** probed-bucket predicate: ONE `IN` membership node per band over
     * the batch's band_key set (never a per-key OR tree — a predicate
     * whose size grows with the probe set must be a collection node;
@@ -246,11 +324,12 @@ object SigStore {
     * bounds, runs them as one shuffle plan ([[joinedNearDup]]);
     * `probeCollectMax = 0` forces it.
     */
-  /** last serve's probe-read shape ("pruned" for the driver-local
-    * plan's point read | "joined" | "empty"), its probe scan's physical
-    * plan, and the text-fetch shape — observability for the crossover
-    * and PartitionFilters specs (the [[SrpStore.lastBatchBandingSource]]
-    * pattern) */
+  /** last serve's probe-read shape (the driver-local plan's "resident"
+    * image probe or "pruned" point read | "joined" | "empty"), its probe
+    * scan's physical plan, and the text-fetch shape ("resident" |
+    * "pruned" | "joined", "empty" when no stored text was needed) —
+    * observability for the crossover and PartitionFilters specs (the
+    * [[SrpStore.lastBatchBandingSource]] pattern) */
   private[graft] var lastProbeSource: String = ""
   // plan hooks are LAZY (r16): eagerly planning + stringifying the
   // pruned scan — whose probe predicate carries the batch's whole
@@ -314,7 +393,9 @@ object SigStore {
 
   /** The driver-local plan: stages 1–5 over collected rows. Jobs: the
     * probe read, then the stored-text read — skipped when no pair has a
-    * stored side. Every collection the driver holds is bounded in rows,
+    * stored side. Each is a lookup with no job instead when its image
+    * ([[sigImage]], [[textImage]]) is resident, each admitted on its
+    * own; the rows are the same. Every collection the driver holds is bounded in rows,
     * with `cap` = `probeCollectMax` (8192 by default): the batch
     * (≤ min(`cap / Bands`, [[LocalBatchMax]]) docs and texts, so ≤ `cap`
     * keys), the probe rows (≤ min(keys × (MaxBucket + 1), `cap`)), the
@@ -340,15 +421,23 @@ object SigStore {
     val keysByBand = batchRows.map(_._1).distinct.groupMap(_._1)(_._2)
     val probeMax = math.min(
       keysByBand.valuesIterator.map(_.size.toLong).sum * (MaxBucket + 1), cap.toLong).toInt
-    val pruned = sigFrame(spark, storeDir)
-      .filter(probePred(keysByBand, storeGroups(spark, storeDir)))
-      .select(col("doc_id"), col("band"), col("band_key"))
-    // one task, one job, however many files the probed dirs hold
-    val stored = pruned.coalesce(1).limit(probeMax + 1).collect()
+    val (probeSource, probePlan, stored) = sigImage(spark, storeDir) match {
+      case Some(img) =>
+        ("resident", () => "", keysByBand.iterator.flatMap { case (b, ks) =>
+          ks.iterator.flatMap(k => img.bucket(b, k).map(id => ((b, k), (id, false))))
+        }.take(probeMax + 1).toSeq)
+      case None =>
+        val pruned = sigFrame(spark, storeDir)
+          .filter(probePred(keysByBand, storeGroups(spark, storeDir)))
+          .select(col("doc_id"), col("band"), col("band_key"))
+        // one task, one job, however many files the probed dirs hold
+        ("pruned", () => pruned.queryExecution.executedPlan.toString,
+          pruned.coalesce(1).limit(probeMax + 1).collect().toSeq
+            .map(r => ((r.getInt(1), r.getLong(2)), (idOf(r), false))))
+    }
     if (stored.length > probeMax) return None
 
-    val buckets = (stored.toSeq.map(r => ((r.getInt(1), r.getLong(2)), (idOf(r), false))) ++
-      batchRows).groupMap(_._1)(_._2)
+    val buckets = (stored ++ batchRows).groupMap(_._1)(_._2)
     val candidates = scala.collection.mutable.HashSet.empty[(Long, Long, Boolean, Boolean)]
     val capped = buckets.valuesIterator.filter(_.size <= MaxBucket)
     while (capped.hasNext && candidates.size <= cap) {
@@ -361,15 +450,22 @@ object SigStore {
       Option.when(!newA)(a) ++ Option.when(!newB)(b)
     }
 
-    lastProbeSource = "pruned"
-    lastPrunedPlanThunk = () => pruned.queryExecution.executedPlan.toString
-    lastTextSource = "pruned"
-    val storedTexts =
-      if (storedIds.isEmpty) { lastDocsPlanThunk = () => ""; Array.empty[Row] }
-      else docsForIds(spark, storeDir, storedIds.toSeq).collect()
-    val texts = (storedTexts ++ docs).toSeq
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .groupMap(_.getLong(0))(_.getString(1))
+    lastProbeSource = probeSource
+    lastPrunedPlanThunk = probePlan
+    lastDocsPlanThunk = () => ""
+    val storedTexts: Seq[(Long, String)] =
+      if (storedIds.isEmpty) { lastTextSource = "empty"; Nil }
+      else textImage(spark, storeDir) match {
+        case Some(img) =>
+          lastTextSource = "resident"
+          storedIds.toSeq.flatMap(id => img.textsOf(id).map(id -> _))
+        case None =>
+          lastTextSource = "pruned"
+          docsForIds(spark, storeDir, storedIds.toSeq).collect().toSeq
+            .filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(r => r.getLong(0) -> r.getString(1))
+      }
+    val texts = (storedTexts ++ docs.toSeq.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => r.getLong(0) -> r.getString(1))).groupMap(_._1)(_._2)
     val pairs = for {
       (a, b, _, _) <- candidates.toSeq
       ta <- texts.getOrElse(a, Nil)

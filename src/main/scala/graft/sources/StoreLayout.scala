@@ -1,7 +1,10 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
@@ -65,24 +68,38 @@ private[graft] object StoreLayout {
   /** driver threads [[footerRows]] reads footers on */
   private val FooterThreads = 8
 
-  /** Rows in the parquet files under `dirs` (a dir, or a single
-    * parquet file), summed from the file footers — no Spark job. A
-    * missing dir holds 0 rows. */
-  def footerRows(spark: SparkSession, dirs: Seq[String]): Long = {
+  /** `f` of every parquet footer under `dirs` (a dir, or a single
+    * parquet file) — no Spark job. A missing dir holds no footer. */
+  private def footers[A](spark: SparkSession, dirs: Seq[String])(f: ParquetMetadata => A): Seq[A] = {
     val conf = spark.sparkContext.hadoopConfiguration
     // plain listings: a located listing asks for every file's block
     // locations, ~3 ms a file on a local disk
-    def files(f: org.apache.hadoop.fs.FileSystem, p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      f.listStatus(p).toSeq.flatMap(st => if (st.isDirectory) files(f, st.getPath) else Seq(st))
+    def files(fs: org.apache.hadoop.fs.FileSystem, p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(st => if (st.isDirectory) files(fs, st.getPath) else Seq(st))
     val parts = dirs.map(new Path(_)).flatMap(p => Some(p.getFileSystem(conf)).filter(_.exists(p))
       .toSeq.flatMap(files(_, p))).filter(_.getPath.getName.endsWith(".parquet"))
     // ~4 ms a footer measured on a local disk: read them on a few
     // threads (64 footers 280 → 135 ms)
     org.apache.spark.sql.GraftBridge.parmap(parts, "store-layout-footers", FooterThreads) { st =>
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+      try f(r.getFooter) finally r.close()
+    }
   }
+
+  private def rowsOf(m: ParquetMetadata): Long = m.getBlocks.asScala.map(_.getRowCount).sum
+
+  /** Rows in the parquet files under `dirs`, summed from the footers */
+  def footerRows(spark: SparkSession, dirs: Seq[String]): Long = footers(spark, dirs)(rowsOf).sum
+
+  /** Rows and the uncompressed bytes of top-level column `column` in
+    * the parquet files under `dirs`, summed from the footers. A
+    * plain-encoded string column holds each value's UTF-8 bytes plus a
+    * 4-byte length; a dictionary-encoded one each distinct value once. */
+  def footerRowsAndBytes(spark: SparkSession, dirs: Seq[String], column: String): (Long, Long) =
+    footers(spark, dirs) { m =>
+      (rowsOf(m), m.getBlocks.asScala.iterator.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == column).map(_.getTotalUncompressedSize).sum)
+    }.foldLeft((0L, 0L)) { case ((r, b), (r1, b1)) => (r + r1, b + b1) }
 
   /** Rows the live versions of chain `c` hold in the `__ver`-
     * partitioned parquet dir `data`, from the footers ([[footerRows]]).

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SigStore
 
 /** The one-document near-dup serve runs on the driver for a bounded
-  * batch and as a shuffle plan past the bound. The driver plan re-runs
+  * batch — from the store's images, or its pruned reads at budget 0 —
+  * and as a shuffle plan past the bound. The driver plan re-runs
   * Spark's own kernels — band keys, `length`, `round` — so each is
   * checked against Spark here, and both plans must serve the same rows
   * under the same schema, the bucket cap included. */
@@ -59,12 +60,17 @@ class NearDupLocalSpec extends AnyFunSuite {
     (df.collect().toSeq, SigStore.lastProbeSource, df)
   }
 
-  /** local plan vs the forced joined plan: rows (as multisets) and schema */
-  private def assertSame(dir: String, batch: DataFrame, wantLocal: String = "pruned"): Seq[Row] = {
+  /** the local plan from the images, the local plan's pruned reads
+    * (budget 0) and the forced joined plan: rows (as multisets against
+    * the joined plan) and schema */
+  private def assertSame(dir: String, batch: DataFrame, empty: Boolean = false): Seq[Row] = {
     val (local, src, localDf) = serve(dir, batch, SigStore.ProbeCollectMax)
-    assert(src == wantLocal, s"local serve took $src")
+    assert(src == (if (empty) "empty" else "resident"), s"local serve took $src")
+    val (pruned, psrc, _) = StoreFixtures.atBudget(0L)(serve(dir, batch, SigStore.ProbeCollectMax))
+    assert(psrc == (if (empty) "empty" else "pruned"), s"local serve at budget 0 took $psrc")
+    assert(pruned == local, "the local plan's pruned reads served other rows than its images")
     val (joined, jsrc, joinedDf) = serve(dir, batch, 0L)
-    assert(jsrc == "joined" || (jsrc == "empty" && wantLocal == "empty"))
+    assert(jsrc == "joined" || (jsrc == "empty" && empty))
     assert(localDf.schema == joinedDf.schema,
       s"schema: local ${localDf.schema.treeString} joined ${joinedDf.schema.treeString}")
     assert(local.sortBy(_.toString) == joined.sortBy(_.toString))
@@ -107,14 +113,20 @@ class NearDupLocalSpec extends AnyFunSuite {
       val (overRows, overSrc, _) = serve(dir, Seq((9100L, over)).toDF("doc_id", "text"),
         SigStore.ProbeCollectMax)
       assert(overSrc == "joined" && overRows.isEmpty)
+      val (overPruned, overPrunedSrc, _) = StoreFixtures.atBudget(0L)(serve(dir,
+        Seq((9100L, over)).toDF("doc_id", "text"), SigStore.ProbeCollectMax))
+      assert(overPrunedSrc == "joined" && overPruned.isEmpty)
       // a batch with only batch-internal pairs fetches no stored text
       val internal = Seq((9200L, inner), (9201L, inner)).toDF("doc_id", "text")
       serve(dir, internal, SigStore.ProbeCollectMax)
-      assert(SigStore.lastProbeSource == "pruned" && SigStore.lastDocsPlan.isEmpty)
+      assert(SigStore.lastProbeSource == "resident" && SigStore.lastTextSource == "empty")
+      StoreFixtures.atBudget(0L)(serve(dir, internal, SigStore.ProbeCollectMax))
+      assert(SigStore.lastProbeSource == "pruned" && SigStore.lastDocsPlan.isEmpty &&
+        SigStore.lastTextSource == "empty")
       assert(assertSame(dir, internal).map(r => (r.getLong(0), r.getLong(1))) ==
         Seq((9200L, 9201L)))
       // empty batches: no docs, and docs that band into nothing
-      assertSame(dir, Seq.empty[(Long, String)].toDF("doc_id", "text"), wantLocal = "empty")
+      assertSame(dir, Seq.empty[(Long, String)].toDF("doc_id", "text"), empty = true)
       val short = Seq((9300L, "tiny"), (9301L, null: String)).toDF("doc_id", "text")
       val (none, src, df) = serve(dir, short, SigStore.ProbeCollectMax)
       assert(none.isEmpty && src == "empty" && df.schema == SigStore.PairSchema)
@@ -136,13 +148,18 @@ class NearDupLocalSpec extends AnyFunSuite {
       val (over, overSrc, _) = serve(dir, tens, 40L)
       assert(overSrc == "joined" && over == forced)
       val (within, withinSrc, _) = serve(dir, tens, 200L)
-      assert(withinSrc == "pruned" && within == forced)
+      assert(withinSrc == "resident" && within == forced)
+      val (pruned, prunedSrc, _) = StoreFixtures.atBudget(0L)(serve(dir, tens, 200L))
+      assert(prunedSrc == "pruned" && pruned == forced)
+      // the probe map's rows past the bound: the joined plan, as the
+      // pruned read's
+      StoreFixtures.atBudget(0L)(assert(serve(dir, tens, 40L)._2 == "joined"))
       // one doc past LocalBatchMax
       val big = (0 to SigStore.LocalBatchMax).map(i => (1000L + i, words(8))).toDF("doc_id", "text")
       serve(dir, big, SigStore.ProbeCollectMax)
       assert(SigStore.lastProbeSource == "joined")
       serve(dir, big.limit(SigStore.LocalBatchMax), SigStore.ProbeCollectMax)
-      assert(SigStore.lastProbeSource == "pruned")
+      assert(SigStore.lastProbeSource == "resident")
     } finally graft.sources.TempStores.delete(dir)
   }
 }

@@ -2007,35 +2007,42 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("SigStore probe read: pruned InSet point read, joined crossover, identical pairs") {
+    // the images, the pruned point reads they replace (budget 0) and the
+    // joined plan serve the same pairs
     import graft.sources.SigStore
     val dir = SigStore.storeFor(spark, sf)
     val batch = Tables.documents(spark, sf)
       .filter(col("doc_id") % SigStore.BatchMod === 0)
       .select(col("doc_id"), col("text"))
-    val pruned = SigStore.incrementalNearDup(spark, dir, batch)
-      .collect().map(_.toSeq).toSet
-    assert(SigStore.lastProbeSource == "pruned")
-    // static partition pruning on (band, bg) in the file index, and
-    // the key predicate as membership nodes — at a 1000×-scale probe
-    // set an OR tree would blow janino's method limit and fall out of
-    // codegen (docs/PERF.md r11); InSet is constant-size at any count
-    assert(SigStore.lastPrunedPlan.contains("PartitionFilters: [") &&
-      SigStore.lastPrunedPlan.contains("bg"),
-      s"no (band, bg) partition pruning in:\n${SigStore.lastPrunedPlan.take(800)}")
-    assert(!SigStore.lastPrunedPlan.contains("band_key = "),
-      "probed keys spelled as per-key equalities, not a membership node")
-    // the verify-text fetch is ALSO a pruned point read — the text
-    // column is the heaviest in the store and must never ride an
-    // O(corpus) scan for a batch-sized candidate set
-    assert(SigStore.lastTextSource == "pruned")
-    assert(SigStore.lastDocsPlan.contains("PartitionFilters: [") &&
-      SigStore.lastDocsPlan.contains("db"),
-      s"no (ver, db) partition pruning in:\n${SigStore.lastDocsPlan.take(800)}")
+    val resident = SigStore.incrementalNearDup(spark, dir, batch).collect().map(_.toSeq).toSeq
+    assert(SigStore.lastProbeSource == "resident" && SigStore.lastTextSource == "resident")
+    StoreFixtures.atBudget(0L) {
+      val pruned = SigStore.incrementalNearDup(spark, dir, batch)
+        .collect().map(_.toSeq).toSeq
+      assert(pruned == resident, "the pruned reads served other rows than the images")
+      assert(SigStore.lastProbeSource == "pruned")
+      // static partition pruning on (band, bg) in the file index, and
+      // the key predicate as membership nodes — at a 1000×-scale probe
+      // set an OR tree would blow janino's method limit and fall out of
+      // codegen (docs/PERF.md r11); InSet is constant-size at any count
+      assert(SigStore.lastPrunedPlan.contains("PartitionFilters: [") &&
+        SigStore.lastPrunedPlan.contains("bg"),
+        s"no (band, bg) partition pruning in:\n${SigStore.lastPrunedPlan.take(800)}")
+      assert(!SigStore.lastPrunedPlan.contains("band_key = "),
+        "probed keys spelled as per-key equalities, not a membership node")
+      // the verify-text fetch is ALSO a pruned point read — the text
+      // column is the heaviest in the store and must never ride an
+      // O(corpus) scan for a batch-sized candidate set
+      assert(SigStore.lastTextSource == "pruned")
+      assert(SigStore.lastDocsPlan.contains("PartitionFilters: [") &&
+        SigStore.lastDocsPlan.contains("db"),
+        s"no (ver, db) partition pruning in:\n${SigStore.lastDocsPlan.take(800)}")
+    }
     val joined = SigStore.incrementalNearDup(spark, dir, batch, probeCollectMax = 0)
       .collect().map(_.toSeq).toSet
     assert(SigStore.lastProbeSource == "joined")
     assert(SigStore.lastTextSource == "joined")
-    assert(pruned == joined, "crossover changed the served pair set")
+    assert(resident.toSet == joined, "crossover changed the served pair set")
     // an empty batch (no docs, or all shorter than the shingle) must
     // serve an empty result, not throw on an empty probe predicate
     import spark.implicits._

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FakeEmbedder
-import graft.sources.{EdgeStore, HnswStore, Resident, SrpStore, TempStores}
+import graft.operators.SrpBanded
+import graft.sources.{CodeStore, EdgeStore, HnswStore, Resident, SigStore, SrpStore, StoreLayout, TempStores}
 
 /** The driver-image facility ([[Resident]]): admission from parquet
   * footers, one budget over every kind of image, and the crash
@@ -115,6 +116,92 @@ class ResidentSpec extends AnyFunSuite {
       }
       StoreFixtures.atBudget(0L)(assert(v28(srpDir, edgeDir, fresh) == before,
         "the pruned serve read the unmarked delta"))
+    } finally TempStores.delete(root)
+  }
+
+  test("code and signature images: an unmarked delta is neither counted nor served") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("resident-torn-images").toString
+    try {
+      val (code, sig) = (s"$root/code", s"$root/sig")
+      val bogus = 1L << 40
+      val fresh = spark.newSession()
+
+      CodeStore.write(spark, sf, code)
+      val codeRows = CodeStore.search(spark, code, q).collect().toSeq
+      val raw = spark.read.parquet(s"$code/codes/data")
+      val n = raw.count()
+      // a torn version 1: every row again under a new id, coded to the
+      // query's own keys, so each would top the shortlist
+      raw.drop("__ver").withColumn("vec_id", col("vec_id") + bogus)
+        .withColumn("keys", typedLit(SrpBanded.queryBandKeys(q).map(_._2)))
+        .write.partitionBy("pb").parquet(s"$code/codes/data/__ver=1")
+      // a share that fits exactly the live version's rows
+      StoreFixtures.atBudget(Resident.Slots * CodeStore.RowBytes * n) {
+        assert(CodeStore.image(fresh, code).exists(_.rows == n), "the unmarked delta's rows were counted or held")
+        assert(CodeStore.search(fresh, code, q).collect().toSeq == codeRows,
+          "the resident serve read the unmarked delta")
+        assert(CodeStore.lastShortlistSource == "resident")
+      }
+      StoreFixtures.atBudget(0L)(assert(CodeStore.search(fresh, code, q).collect().toSeq == codeRows,
+        "the pruned serve read the unmarked delta"))
+
+      val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      SigStore.write(spark, docs, sig)
+      val (stored, text) = docs.orderBy(col("doc_id")).as[(Long, String)].first()
+      def echo(s: SparkSession): Seq[Row] = SigStore.incrementalNearDup(s, sig,
+        Seq((9000000L, text)).toDF("doc_id", "text")).collect().toSeq
+      val pairs = echo(spark)
+      assert(pairs.exists(_.getLong(0) == stored), s"the planted pair is missing: $pairs")
+      val sigRows = StoreLayout.footerRows(spark, Seq(s"$sig/sigs/__ver=0"))
+      val (docRows, docBytes) = StoreLayout.footerRowsAndBytes(spark, Seq(s"$sig/docs/__ver=0"), "text")
+      val textBytes = docRows * Resident.TextBytes + 2 * docBytes
+      // a torn version 1: every stored doc again under a new id, with its
+      // signatures, so the echo would pair with its twin too
+      spark.read.parquet(s"$sig/sigs").drop("__ver").withColumn("doc_id", col("doc_id") + bogus)
+        .write.partitionBy("band", "bg").parquet(s"$sig/sigs/__ver=1")
+      spark.read.parquet(s"$sig/docs").drop("__ver").withColumn("doc_id", col("doc_id") + bogus)
+        .write.partitionBy("db").parquet(s"$sig/docs/__ver=1")
+      StoreFixtures.atBudget(Resident.Slots * sigRows * Resident.SigBytes) {
+        assert(SigStore.sigImage(fresh, sig).isDefined, "the unmarked delta's signature rows were counted")
+        assert(echo(fresh) == pairs, "the resident probe read the unmarked delta")
+        assert(SigStore.lastProbeSource == "resident")
+      }
+      StoreFixtures.atBudget(Resident.Slots * textBytes) {
+        val texts = SigStore.textImage(fresh, sig)
+        assert(texts.isDefined, "the unmarked delta's texts were counted")
+        assert(texts.get.textsOf(stored + bogus).isEmpty, "the texts image holds a text of the unmarked delta")
+        assert(echo(fresh) == pairs && SigStore.lastTextSource == "resident")
+      }
+      StoreFixtures.atBudget(0L)(assert(echo(fresh) == pairs, "the pruned serve read the unmarked delta"))
+    } finally TempStores.delete(root)
+  }
+
+  test("an upsert is served by the next warm code and near-dup serve from the rebuilt images") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("resident-upsert").toString
+    try {
+      val (code, sig) = (s"$root/code", s"$root/sig")
+      CodeStore.write(spark, sf, code)
+      val text = "a delta row the next warm serve reads from its image"
+      val (id, v) = (900000011L, FakeEmbedder.embed(text))
+      def top(): Seq[Long] = CodeStore.search(spark, code, v, k = 1).collect().map(_.getLong(0)).toSeq
+      assert(top() != Seq(id))
+      CodeStore.upsert(spark, code, Seq((id, v)).toDF("vec_id", "embedding"))
+      assert(top() == Seq(id) && CodeStore.lastShortlistSource == "resident", "the upserted row was not served")
+      // a tombstone masks it again
+      CodeStore.upsert(spark, code, Seq((id, Option.empty[Array[Float]])).toDF("vec_id", "embedding"))
+      assert(top() != Seq(id) && CodeStore.lastShortlistSource == "resident", "a tombstoned row was served")
+
+      val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      SigStore.write(spark, docs, sig)
+      def echo(): Seq[(Long, Long)] = SigStore.incrementalNearDup(spark, sig,
+        Seq((9000000000L, text)).toDF("doc_id", "text")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(echo().isEmpty)
+      SigStore.upsert(spark, sig, Seq((id, text)).toDF("doc_id", "text"))
+      assert(echo() == Seq((id, 9000000000L)), "the upserted doc was not paired")
+      assert(SigStore.lastProbeSource == "resident" && SigStore.lastTextSource == "resident")
     } finally TempStores.delete(root)
   }
 }

@@ -67,6 +67,11 @@ class ServeCodegenSpec extends AnyFunSuite {
     try {
       CodeStore.write(spark, sf, dir)
       val got = reuses[Array[Float]]("code", q => CodeStore.search(spark, dir, q), qa, qb)
+      assert(CodeStore.lastShortlistSource == "resident")
+      // the distributed shortlist and fetch the image replaces
+      assert(StoreFixtures.atBudget(0L)(reuses[Array[Float]]("code at budget 0",
+        q => CodeStore.search(spark, dir, q), qa, qb)) == got)
+      assert(CodeStore.lastShortlistSource == "pruned")
       // the inlined form: per-band literal XOR sum, shortlist, rerank
       val qk = SrpBanded.queryBandKeys(qb).map(_._2)
       val ham = (0 until SrpBanded.Bands).map { b =>
@@ -128,6 +133,10 @@ class ServeCodegenSpec extends AnyFunSuite {
       def req(i: Int): DataFrame = Seq((1000000L + i, texts(i)._2)).toDF("doc_id", "text")
       val got = reuses[Int]("near-dup",
         i => SigStore.incrementalNearDup(spark, dir, req(i)), 0, 1 to 7: _*)
+      assert(SigStore.lastProbeSource == "resident" && SigStore.lastTextSource == "resident")
+      // the pruned point reads the images replace
+      assert(StoreFixtures.atBudget(0L)(reuses[Int]("near-dup at budget 0",
+        i => SigStore.incrementalNearDup(spark, dir, req(i)), 0, 1 to 7: _*)) == got)
       assert(SigStore.lastProbeSource == "pruned" && SigStore.lastTextSource == "pruned")
       assert(got.exists(r => r.toSeq.contains(texts(1)._1)), s"planted pair missing: $got")
       // the joined probe carries no request-derived set at all

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,7 +43,7 @@ class ServeJobsSpec extends AnyFunSuite {
   private val qa = FakeEmbedder.embed("fast vector search over spark tables")
   private val qb = FakeEmbedder.embed("incremental near duplicate detection for crawls")
 
-  test("near-dup of one document: ≤ 2 jobs, ≤ 1 for a text with no stored candidate") {
+  test("near-dup: 0 jobs resident; echo 2, fresh 1 at budget 0") {
     val dir = Files.createTempDirectory("jobs-sig").toString
     try {
       val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
@@ -51,15 +51,34 @@ class ServeJobsSpec extends AnyFunSuite {
       val texts = docs.orderBy(col("doc_id")).limit(2).collect().map(_.getString(1))
       def req(id: Long, t: String): DataFrame = Seq((id, t)).toDF("doc_id", "text")
       // an echo of a stored text: one planted pair, its stored text fetched
-      warmJobs[Int]("near-dup echo", i => SigStore.incrementalNearDup(spark, dir,
-        req(1000000L + i, texts(i))), 0, 1, max = 2)
-      assert(SigStore.lastProbeSource == "pruned" && SigStore.lastDocsPlan.nonEmpty)
-      // a text no stored doc shares a band with: the probe read alone
-      val fresh = "zq7 xv9 kw3 pj8 mb2 ty6 " * 4
-      warmJobs[String]("near-dup fresh", t => SigStore.incrementalNearDup(spark, dir,
-        req(2000000L, t)), fresh + "a", fresh + "b", max = 1)
-      assert(SigStore.lastProbeSource == "pruned" && SigStore.lastDocsPlan.isEmpty,
-        "a request with no stored candidate fetched stored texts")
+      val echo = (i: Int) => SigStore.incrementalNearDup(spark, dir, req(1000000L + i, texts(i)))
+      // a text no stored doc shares a band with: the probe alone
+      val fresh = (t: String) => SigStore.incrementalNearDup(spark, dir, req(2000000L, t))
+      val freshText = "zq7 xv9 kw3 pj8 mb2 ty6 " * 4
+      /** warm echo and fresh job counts at `budget`, pinned, and their rows */
+      def pinned(budget: Long, probe: String, text: String, echoPin: Int,
+                 freshPin: Int): (Seq[Row], Seq[Row]) = StoreFixtures.atBudget(budget) {
+        echo(0).collect()
+        val n = jobs(echo(1))
+        assert(SigStore.lastProbeSource == probe && SigStore.lastTextSource == text,
+          s"echo at budget $budget: ${SigStore.lastProbeSource}/${SigStore.lastTextSource}")
+        assert((text == "pruned") == SigStore.lastDocsPlan.nonEmpty)
+        fresh(freshText + "a").collect()
+        val m = jobs(fresh(freshText + "b"))
+        assert(SigStore.lastProbeSource == probe && SigStore.lastTextSource == "empty",
+          "a request with no stored candidate fetched stored texts")
+        info(s"near-dup at budget $budget: echo $n jobs, fresh $m")
+        assert(n == echoPin, s"echo at budget $budget: a warm request ran $n jobs, pinned $echoPin")
+        assert(m == freshPin, s"fresh at budget $budget: a warm request ran $m jobs, pinned $freshPin")
+        (echo(1).collect().toSeq, fresh(freshText + "b").collect().toSeq)
+      }
+      val resident = pinned(Resident.BudgetBytes, "resident", "resident", 0, 0)
+      assert(resident._1.nonEmpty, "the planted pair was not reported")
+      // a share that fits the probe map but not the texts: the echo's
+      // one job is its stored-text read
+      val sigBytes = StoreLayout.footerRows(spark, Seq(s"$dir/sigs")) * Resident.SigBytes
+      assert(pinned(Resident.Slots * sigBytes, "resident", "pruned", 1, 0) == resident)
+      assert(pinned(0L, "pruned", "pruned", 2, 1) == resident)
     } finally graft.sources.TempStores.delete(dir)
   }
 
@@ -71,12 +90,49 @@ class ServeJobsSpec extends AnyFunSuite {
       ids(0), ids(1), max = 1)
   }
 
-  test("code serve: ≤ 2 jobs") {
+  test("code serve: 0 jobs from the image, 2 at budget 0") {
     val dir = Files.createTempDirectory("jobs-code").toString
     try {
       CodeStore.write(spark, sf, dir)
-      warmJobs[Array[Float]]("code", q => CodeStore.search(spark, dir, q), qa, qb, max = 2)
+      val q = (x: Array[Float]) => CodeStore.search(spark, dir, x)
+      warmJobs[Array[Float]]("code", q, qa, qb, max = 0)
+      assert(CodeStore.lastShortlistSource == "resident")
+      val resident = q(qb).collect().toSeq
+      // no image: the shortlist scan and the pruned embedding fetch
+      StoreFixtures.atBudget(0L) {
+        q(qa).collect()
+        val n = jobs(q(qb))
+        info(s"code at budget 0: $n jobs")
+        assert(CodeStore.lastShortlistSource == "pruned")
+        assert(n == 2, s"code at budget 0: a warm request ran $n jobs, pinned 2")
+        assert(q(qb).collect().toSeq == resident, "code at budget 0 served other rows")
+      }
     } finally graft.sources.TempStores.delete(dir)
+  }
+
+  test("code filtered broad tier: 1 job resident, 3 at budget 0") {
+    val root = Files.createTempDirectory("jobs-code-broad").toString
+    val (dir, metaDir) = (s"$root/code", s"$root/meta")
+    try {
+      CodeStore.write(spark, sf, dir)
+      FilteredServe.writeMeta(spark, sf, metaDir)
+      // past both scan ceilings: the unfiltered Hamming shortlist, its
+      // ids post-filtered by the pruned byid read (the one job left with
+      // the image), the matching ids reranked; at budget 0 the shortlist
+      // and the rerank fetch are jobs too
+      val q = (x: Array[Float]) => CodeStore.searchFiltered(spark, dir, metaDir, x,
+        Seq("lang" -> "en"), k = 5, exactScanMax = 0L, codeScanMax = 0L)
+      def pinned(budget: Long, source: String, pin: Int): Seq[Row] = StoreFixtures.atBudget(budget) {
+        q(qa).collect()
+        val n = jobs(q(qb))
+        info(s"code broad tier at budget $budget: $n jobs (${FilteredServe.lastFilteredPath})")
+        assert(FilteredServe.lastFilteredPath.startsWith("scan:"), FilteredServe.lastFilteredPath)
+        assert(CodeStore.lastShortlistSource == source)
+        assert(n == pin, s"code broad tier at budget $budget: a warm request ran $n jobs, pinned $pin")
+        q(qb).collect().toSeq
+      }
+      assert(pinned(Resident.BudgetBytes, "resident", 1) == pinned(0L, "pruned", 3))
+    } finally graft.sources.TempStores.delete(root)
   }
 
   test("filtered exact tier: ≤ 1 job") {

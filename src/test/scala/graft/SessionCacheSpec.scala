@@ -190,6 +190,7 @@ class SessionCacheSpec extends AnyFunSuite {
       assert(code == 0 && out.contains("store-writer: upsert done"), s"probe exit $code:\n$out")
       val top = CodeStore.search(spark, dir, q, k = 1).collect()
       assert(top.map(_.getLong(0)).toSeq == Seq(id), s"the delta's row was not served: ${top.toSeq}")
+      assert(CodeStore.lastShortlistSource == "resident")
     } finally graft.sources.TempStores.delete(dir)
   }
 
@@ -310,6 +311,24 @@ class SessionCacheSpec extends AnyFunSuite {
     } finally graft.sources.TempStores.delete(dir)
   }
 
+  test("another JVM's SigStore upsert is seen by the next warm near-dup from the images") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("sc-sig-upsert").toString
+    try {
+      SigStore.write(spark, Tables.documents(spark, sf).select(col("doc_id"), col("text")), dir)
+      def echo(): Seq[(Long, Long)] = SigStore.incrementalNearDup(spark, dir,
+        Seq((9000000000L, probeText)).toDF("doc_id", "text")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      echo()
+      assert(echo().isEmpty && SigStore.lastProbeSource == "resident")
+      val id = 900000004L
+      val (code, out) = childJvm("graft.StoreWriterProbe", "sigUpsert", dir, id.toString, probeText)
+      assert(code == 0 && out.contains("store-writer: sigUpsert done"), s"probe exit $code:\n$out")
+      assert(echo() == Seq((id, 9000000000L)), "the child's document was not paired")
+      assert(SigStore.lastProbeSource == "resident" && SigStore.lastTextSource == "resident")
+    } finally graft.sources.TempStores.delete(dir)
+  }
+
   test("Tables.invalidate drops every registered memo under the rewritten store") {
     val root = Files.createTempDirectory("sc-registry").toString
     val (hnsw, code, srp) = (s"$root/hnsw", s"$root/code", s"$root/srp")
@@ -341,7 +360,8 @@ class SessionCacheSpec extends AnyFunSuite {
   * `upsertMeta <srpDir> <id> <text>` upserts one row with values
   * (xx, zz) into the filtered metadata at `srpDir`; `sigWrite <dir>
   * <corpus>` rebuilds the signature store at `dir` from a corpus's
-  * documents. Prints one verdict line. */
+  * documents; `sigUpsert <dir> <id> <text>` appends one document to it.
+  * Prints one verdict line. */
 object StoreWriterProbe {
   def main(args: Array[String]): Unit = {
     val spark = LocalSpark.builder(1).getOrCreate()
@@ -353,6 +373,8 @@ object StoreWriterProbe {
       case Seq("upsertMeta", dir, id, text) =>
         FilteredServe.upsertMeta(spark, dir, Seq((id.toLong, FakeEmbedder.embed(text), "xx", "zz"))
           .toDF("vec_id", "embedding", "lang", "source")): Unit
+      case Seq("sigUpsert", dir, id, text) =>
+        SigStore.upsert(spark, dir, Seq((id.toLong, text)).toDF("doc_id", "text"))
       case Seq("sigWrite", dir, corpus) =>
         SigStore.write(spark, Tables.documents(spark, corpus).select(col("doc_id"), col("text")), dir)
     }

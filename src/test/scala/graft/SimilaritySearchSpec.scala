@@ -1141,6 +1141,11 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val stored = graft.sources.CodeStore.search(spark, dir, q).collect().map(_.toSeq).toSeq
     val inMem = graft.operators.HammingIndex.search(spark, sf, q).collect().map(_.toSeq).toSeq
     assert(stored == inMem, s"stored code scan diverged: $stored vs $inMem")
+    assert(graft.sources.CodeStore.lastShortlistSource == "resident")
+    // the store's distributed reads, which the driver image replaces
+    val pruned = StoreFixtures.atBudget(0L)(graft.sources.CodeStore.search(spark, dir, q)
+      .collect().map(_.toSeq).toSeq)
+    assert(pruned == inMem, s"pruned code scan diverged: $pruned vs $inMem")
     // shortlist stage: columnar projection must exclude the embedding
     // column — the 8-byte-per-row scan is the family's reason to exist
     val scanPlan = graft.sources.CodeStore.lastScanPlan
@@ -1310,7 +1315,9 @@ class SimilaritySearchSpec extends AnyFunSuite {
         .map(r => (r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
       assert(stream == batch, s"query $qid: stream $stream != batch $batch")
     }
-    // the micro-batch shortlist scan stays the 8 B/row projection
+    // the micro-batch shortlist scan, where no image is held, stays
+    // the 8 B/row projection
+    StoreFixtures.atBudget(0L)(graft.streaming.CodeProbeStream.runOnce(spark, tmp, dir, k = 5).collect())
     val scanPlan = graft.sources.CodeStore.lastScanPlan
     assert(scanPlan.contains("ReadSchema") && !scanPlan.contains("embedding"),
       s"streaming code scan reads the embedding column:\n$scanPlan")

@@ -66,7 +66,8 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.listenerManager.unregister(PlanFiles)
   }
 
-  private def check[A](name: String, serve: A => DataFrame, a: A, b: A): Trace.Record = {
+  private def check[A](name: String, serve: A => DataFrame, a: A, b: A,
+                       fromImages: Boolean = false): Trace.Record = {
     serve(a).collect()
     val (rec, jobs, compiles, files) = traced(serve(b))
     info(s"$name: ${rec.json}")
@@ -74,9 +75,11 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rec.codegenCompiles == compiles,
       s"$name: trace counted ${rec.codegenCompiles} compiles, CodegenMetrics $compiles")
     assert(rec.filesRead == files, s"$name: trace counted ${rec.filesRead} files, the plans $files")
-    // a warm HNSW serve reads no file when its layers are cached: the
-    // test below pins it both ways
-    assert(name == "lookup" || name == "hnsw" || files > 0, s"$name: a store serve read no file")
+    // a warm serve from the driver images runs no job and reads no
+    // file; the test below pins each such serve at budget 0 as well
+    if (fromImages) assert(jobs == 0 && files == 0,
+      s"$name: a serve from the driver images ran jobs or read files: ${rec.json}")
+    else assert(name == "lookup" || files > 0, s"$name: a store serve read no file")
     assert(rec.jobMs + rec.driverGapMs == rec.wallMs)
     assert(rec.jobMs >= 0 && rec.jobMs <= rec.wallMs && rec.planMs >= 0)
     assert(jobs == 0 || rec.jobMs > 0 || rec.wallMs < 5, s"$name: $jobs jobs but no job time")
@@ -99,24 +102,23 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val sigDocs = docs.select(col("doc_id"), col("text"))
       SigStore.write(spark, sigDocs, sigDir)
       val texts = sigDocs.orderBy(col("doc_id")).limit(2).collect().map(_.getString(1))
-      check[Int]("near-dup", i => SigStore.incrementalNearDup(spark, sigDir,
-        Seq((1000000L + i, texts(i))).toDF("doc_id", "text")), 0, 1)
+      val nearDup = (i: Int) => SigStore.incrementalNearDup(spark, sigDir,
+        Seq((1000000L + i, texts(i))).toDF("doc_id", "text"))
+      check[Int]("near-dup", nearDup, 0, 1, fromImages = true)
+      StoreFixtures.atBudget(0L)(check[Int]("near-dup at budget 0", nearDup, 0, 1))
       CodeStore.write(spark, sf, codeDir)
-      check[Array[Float]]("code", q => CodeStore.search(spark, codeDir, q), qa, qb)
+      val code = (q: Array[Float]) => CodeStore.search(spark, codeDir, q)
+      check[Array[Float]]("code", code, qa, qb, fromImages = true)
+      StoreFixtures.atBudget(0L)(check[Array[Float]]("code at budget 0", code, qa, qb))
       FilteredServe.writeMeta(spark, sf, metaDir)
       check[Array[Float]]("filtered", q => FilteredServe.searchFiltered(
         spark, sf, metaDir, "/nonexistent/edge-store", q, Seq("lang" -> "en"), k = 5,
         exactScanMax = Long.MaxValue), qa, qb)
       HnswStore.write(spark, sf, hnswDir)
-      val cached = check[Array[Float]]("hnsw", q => HnswStore.search(spark, hnswDir, q), qa, qb)
-      assert(cached.jobs == 0 && cached.filesRead == 0,
-        s"hnsw: a serve from the driver images ran jobs or read files: ${cached.json}")
+      val hnsw = (q: Array[Float]) => HnswStore.search(spark, hnswDir, q)
+      check[Array[Float]]("hnsw", hnsw, qa, qb, fromImages = true)
       // the same serve with no layer admitted reads its layers' files
-      StoreFixtures.atBudget(0L) {
-        val dist = check[Array[Float]]("hnsw at budget 0",
-          q => HnswStore.search(spark, hnswDir, q), qa, qb)
-        assert(dist.filesRead > 0, s"hnsw at budget 0: no file read: ${dist.json}")
-      }
+      StoreFixtures.atBudget(0L)(check[Array[Float]]("hnsw at budget 0", hnsw, qa, qb))
       assert(planMs > 0, "no Catalyst phase reached any span")
     } finally dirs.foreach(TempStores.delete)
   }

@@ -40,10 +40,12 @@ import graft.functions.{bound, vectors}
   *
   * A store whose live versions' footer rows, at [[RowBytes]] each, fit
   * one [[Resident]] share is also held on the driver as an [[Image]] of
-  * its resolved rows, built with one collect per live version stamp.
-  * Both stages then run there — the shortlist by the Hamming kernel's
-  * twin, the rerank by `cosine_sim_local` — and a warm single-query
-  * serve runs no Spark job. A store over its share, or any store at
+  * its resolved rows, built with one collect on a live version stamp's
+  * second serve (the first takes the two reads above, so a write
+  * before each single read builds nothing). Both stages then run
+  * there — the shortlist by the Hamming kernel's twin, the rerank by
+  * `cosine_sim_local` — and a warm single-query serve runs no Spark
+  * job. A store over its share, or any store at
   * `Resident.BudgetBytes = 0`, keeps the two reads above; the rows are
   * the same either way.
   */
@@ -204,7 +206,7 @@ object CodeStore {
     * count superseded rows and tombstones too) at [[RowBytes]] each fit
     * one [[Resident]] share */
   private[graft] def image(spark: SparkSession, dir: String): Option[Image] =
-    Resident.image(spark, "codes", chain(dir)) { (vers, share) =>
+    Resident.image(spark, "codes", chain(dir), onRepeat = true) { (vers, share) =>
       val data = s"$dir/codes/data"
       Option.when(StoreLayout.footerRows(spark, vers.map(v => s"$data/__ver=$v")) * RowBytes <= share)(
         imageOf(spark.read.parquet(data).filter(col("__ver").isin(vers: _*))))

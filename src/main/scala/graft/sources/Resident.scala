@@ -14,7 +14,9 @@ import graft.operators.SrpBanded
   * the safe direction), times a per-row estimate fit one [[share]];
   * otherwise its serve keeps the pruned reads, with the same rows. An
   * image is built once per (kind, store, budget) and live version stamp
-  * of its chain, so a commit by any process is seen by the next serve.
+  * of its chain, so a commit by any process is seen by the next serve;
+  * the code and signature images are built on a stamp's second serve,
+  * since those stores take small upserts between single reads.
   */
 object Resident {
 
@@ -41,18 +43,36 @@ object Resident {
   /** a graph image: src → (dst, dst_emb) */
   type Adjacency = Map[Long, Array[(Long, Array[Float])]]
 
-  private val images = new graft.SessionCache[(String, String, Long), Option[Any]](Slots, _._2)
+  /** One (kind, store, budget) at one live stamp: the serves that asked
+    * for it, and its image once built (None inside: refused). */
+  private final class Slot(build: () => Option[Any]) {
+    private val asks = new java.util.concurrent.atomic.AtomicInteger
+    @volatile private var built: Option[Option[Any]] = None
+    def ask(from: Int): Option[Any] =
+      if (asks.incrementAndGet() < from) None
+      else synchronized { if (built.isEmpty) built = Some(build()); built.get }
+    def held: Boolean = built.exists(_.isDefined)
+  }
+
+  private val images = new graft.SessionCache[(String, String, Long), Slot](Slots, _._2)
 
   /** The `kind` image of chain `c`'s store: `build(live versions,
-    * share)`, None when it refuses — both memoized — or at budget 0. */
-  private[graft] def image[V](spark: SparkSession, kind: String, c: Versioned.Chain)(
-      build: (Seq[Int], Long) => Option[V]): Option[V] =
+    * share)`, None when it refuses — both memoized — or at budget 0.
+    * With `onRepeat` the first serve at a stamp gets None too (its
+    * pruned reads serve it) and the second builds: a store written
+    * between single reads, as in an ingest loop, pays no image build
+    * that no later serve uses. */
+  private[graft] def image[V](spark: SparkSession, kind: String, c: Versioned.Chain,
+      onRepeat: Boolean = false)(build: (Seq[Int], Long) => Option[V]): Option[V] =
     if (share <= 0) None
-    else Versioned.memo(images, spark, (kind, c.dir, BudgetBytes), c)(build(_, share))
-      .asInstanceOf[Option[V]]
+    else {
+      val budget = share
+      Versioned.memo(images, spark, (kind, c.dir, BudgetBytes), c)(vers => new Slot(() => build(vers, budget)))
+        .ask(if (onRepeat) 2 else 1).asInstanceOf[Option[V]]
+    }
 
   /** the images held now — spec hook */
-  private[graft] def held: Int = images.values.count(_.isDefined)
+  private[graft] def held: Int = images.values.count(_.held)
 
   /** a graph image from (src, dst, dst_emb) rows, one array per dst */
   private[graft] def adjacency(rows: Array[Row]): Adjacency = {

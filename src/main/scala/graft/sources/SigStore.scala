@@ -40,12 +40,14 @@ import graft.functions.{TextHash, bound, text}
   * chain folds only on an explicit [[compact]].
   *
   * Two [[Resident]] images serve the one-document check on the driver,
-  * each admitted from footers on its own and built once per live
-  * version stamp: `"sigs"`, the (band, band_key) → doc ids probe map
-  * ([[SigImage]]), and `"texts"`, doc_id → verify text ([[TextImage]]).
-  * With both, a warm check runs no Spark job; an image over its share,
-  * or both at `Resident.BudgetBytes = 0`, leaves its step on the pruned
-  * point read, with the same rows.
+  * each admitted from footers on its own: `"sigs"`, the (band,
+  * band_key) → doc ids probe map ([[SigImage]]), and `"texts"`, doc_id
+  * → verify text ([[TextImage]]). Both are built on a live version
+  * stamp's second check: the first takes the pruned point reads, so a
+  * store upserted before each single check (an ingest loop) builds
+  * nothing. With both, a warm check runs no Spark job; an image over
+  * its share, or both at `Resident.BudgetBytes = 0`, leaves its step on
+  * the pruned point read, with the same rows.
   */
 object SigStore {
 
@@ -205,6 +207,17 @@ object SigStore {
     pruned
   }
 
+  /** the positions `[from, to)` of sorted `keys` that hold `key` */
+  private def equalRange(keys: Array[Long], from: Int, to: Int, key: Long): Iterator[Int] = {
+    var lo = from
+    var hi = to
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (keys(m) < key) lo = m + 1 else hi = m
+    }
+    Iterator.from(lo).takeWhile(i => i < to && keys(i) == key)
+  }
+
   /** The live `sigs/` rows held on the driver as a [[Resident]] image:
     * the (band, band_key) → doc ids probe map, one run per band of
     * sorted keys with their doc ids beside them in flat arrays
@@ -213,32 +226,23 @@ object SigStore {
   private[graft] final class SigImage(starts: Array[Int], keys: Array[Long],
       ids: Array[Long], nullIds: java.util.BitSet) {
     /** the doc ids held in bucket (band, key), None for a null id */
-    def bucket(band: Int, key: Long): Iterator[Option[Long]] = {
-      val end = starts(band + 1)
-      var lo = starts(band)
-      var hi = end
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (keys(m) < key) lo = m + 1 else hi = m
-      }
-      Iterator.from(lo).takeWhile(i => i < end && keys(i) == key)
-        .map(i => Option.when(!nullIds.get(i))(ids(i)))
-    }
+    def bucket(band: Int, key: Long): Iterator[Option[Long]] =
+      equalRange(keys, starts(band), starts(band + 1), key).map(i => Option.when(!nullIds.get(i))(ids(i)))
   }
 
   /** the [[SigImage]], when the live `sigs/` footer rows fit one share */
   private[graft] def sigImage(spark: SparkSession, dir: String): Option[SigImage] =
-    Resident.image(spark, "sigs", chain(dir)) { (vers, share) =>
+    Resident.image(spark, "sigs", chain(dir), onRepeat = true) { (vers, share) =>
       Option.when(StoreLayout.footerRows(spark, vers.map(v => s"$dir/sigs/__ver=$v")) *
           Resident.SigBytes <= share) {
         val rows = sigFrame(spark, dir).select(col("band"), col("band_key"), col("doc_id")).collect()
           .map(r => (r.getInt(0), r.getLong(1), Option.when(!r.isNullAt(2))(r.getLong(2))))
-        val byBand = (0 until Bands).map(b => rows.filter(_._1 == b).sortBy(_._2))
-        val flat = byBand.flatten
-        val nulls = new java.util.BitSet(flat.length)
-        flat.indices.foreach(i => if (flat(i)._3.isEmpty) nulls.set(i))
-        new SigImage(byBand.scanLeft(0)(_ + _.length).toArray, flat.map(_._2).toArray,
-          flat.map(_._3.getOrElse(0L)).toArray, nulls)
+          .sortBy(r => (r._1, r._2))
+        val nulls = new java.util.BitSet(rows.length)
+        rows.indices.foreach(i => if (rows(i)._3.isEmpty) nulls.set(i))
+        // run b starts at the first row of a band ≥ b
+        val starts = (0 to Bands).map(b => rows.indexWhere(_._1 >= b) match { case -1 => rows.length; case i => i })
+        new SigImage(starts.toArray, rows.map(_._2), rows.map(_._3.getOrElse(0L)), nulls)
       }
     }
 
@@ -246,15 +250,7 @@ object SigStore {
     * sorted by doc_id; a doc_id more than one live version holds keeps
     * every text, as the point read does. */
   private[graft] final class TextImage(ids: Array[Long], texts: Array[String]) {
-    def textsOf(id: Long): Iterator[String] = {
-      var lo = 0
-      var hi = ids.length
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (ids(m) < id) lo = m + 1 else hi = m
-      }
-      Iterator.from(lo).takeWhile(i => i < ids.length && ids(i) == id).map(texts(_))
-    }
+    def textsOf(id: Long): Iterator[String] = equalRange(ids, 0, ids.length, id).map(texts(_))
   }
 
   /** The [[TextImage]], when the live `docs/` footers fit one share: the
@@ -265,7 +261,7 @@ object SigStore {
     * one String in the image. Texts or ids that are null never pair and
     * are not held. */
   private[graft] def textImage(spark: SparkSession, dir: String): Option[TextImage] =
-    Resident.image(spark, "texts", chain(dir)) { (vers, share) =>
+    Resident.image(spark, "texts", chain(dir), onRepeat = true) { (vers, share) =>
       val (rows, bytes) = StoreLayout.footerRowsAndBytes(spark, vers.map(v => s"$dir/docs/__ver=$v"), "text")
       Option.when(rows * Resident.TextBytes + 2 * bytes <= share) {
         val held = docsFrame(spark, dir).filter(col("doc_id").isNotNull && col("text").isNotNull)
@@ -421,6 +417,10 @@ object SigStore {
     val keysByBand = batchRows.map(_._1).distinct.groupMap(_._1)(_._2)
     val probeMax = math.min(
       keysByBand.valuesIterator.map(_.size.toLong).sum * (MaxBucket + 1), cap.toLong).toInt
+    // both images are asked for on every serve, so they are built
+    // together on the stamp's second serve, whether or not that serve
+    // needs a stored text
+    val textImg = textImage(spark, storeDir)
     val (probeSource, probePlan, stored) = sigImage(spark, storeDir) match {
       case Some(img) =>
         ("resident", () => "", keysByBand.iterator.flatMap { case (b, ks) =>
@@ -455,7 +455,7 @@ object SigStore {
     lastDocsPlanThunk = () => ""
     val storedTexts: Seq[(Long, String)] =
       if (storedIds.isEmpty) { lastTextSource = "empty"; Nil }
-      else textImage(spark, storeDir) match {
+      else textImg match {
         case Some(img) =>
           lastTextSource = "resident"
           storedIds.toSeq.flatMap(id => img.textsOf(id).map(id -> _))

@@ -64,7 +64,11 @@ class NearDupLocalSpec extends AnyFunSuite {
     * (budget 0) and the forced joined plan: rows (as multisets against
     * the joined plan) and schema */
   private def assertSame(dir: String, batch: DataFrame, empty: Boolean = false): Seq[Row] = {
+    // a stamp's first serve may take the pruned reads; the second is
+    // served from the images
+    val first = serve(dir, batch, SigStore.ProbeCollectMax)._1
     val (local, src, localDf) = serve(dir, batch, SigStore.ProbeCollectMax)
+    assert(first == local, "the first serve returned other rows than the images")
     assert(src == (if (empty) "empty" else "resident"), s"local serve took $src")
     val (pruned, psrc, _) = StoreFixtures.atBudget(0L)(serve(dir, batch, SigStore.ProbeCollectMax))
     assert(psrc == (if (empty) "empty" else "pruned"), s"local serve at budget 0 took $psrc")

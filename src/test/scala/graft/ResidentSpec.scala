@@ -138,6 +138,8 @@ class ResidentSpec extends AnyFunSuite {
         .write.partitionBy("pb").parquet(s"$code/codes/data/__ver=1")
       // a share that fits exactly the live version's rows
       StoreFixtures.atBudget(Resident.Slots * CodeStore.RowBytes * n) {
+        // the image is built on the stamp's second ask
+        assert(CodeStore.image(fresh, code).isEmpty)
         assert(CodeStore.image(fresh, code).exists(_.rows == n), "the unmarked delta's rows were counted or held")
         assert(CodeStore.search(fresh, code, q).collect().toSeq == codeRows,
           "the resident serve read the unmarked delta")
@@ -163,11 +165,13 @@ class ResidentSpec extends AnyFunSuite {
       spark.read.parquet(s"$sig/docs").drop("__ver").withColumn("doc_id", col("doc_id") + bogus)
         .write.partitionBy("db").parquet(s"$sig/docs/__ver=1")
       StoreFixtures.atBudget(Resident.Slots * sigRows * Resident.SigBytes) {
+        assert(SigStore.sigImage(fresh, sig).isEmpty)
         assert(SigStore.sigImage(fresh, sig).isDefined, "the unmarked delta's signature rows were counted")
         assert(echo(fresh) == pairs, "the resident probe read the unmarked delta")
         assert(SigStore.lastProbeSource == "resident")
       }
       StoreFixtures.atBudget(Resident.Slots * textBytes) {
+        assert(SigStore.textImage(fresh, sig).isEmpty)
         val texts = SigStore.textImage(fresh, sig)
         assert(texts.isDefined, "the unmarked delta's texts were counted")
         assert(texts.get.textsOf(stored + bogus).isEmpty, "the texts image holds a text of the unmarked delta")
@@ -177,7 +181,7 @@ class ResidentSpec extends AnyFunSuite {
     } finally TempStores.delete(root)
   }
 
-  test("an upsert is served by the next warm code and near-dup serve from the rebuilt images") {
+  test("an upsert is served by the next code and near-dup serve, pruned, then from the rebuilt images") {
     import spark.implicits._
     val root = Files.createTempDirectory("resident-upsert").toString
     try {
@@ -188,10 +192,15 @@ class ResidentSpec extends AnyFunSuite {
       def top(): Seq[Long] = CodeStore.search(spark, code, v, k = 1).collect().map(_.getLong(0)).toSeq
       assert(top() != Seq(id))
       CodeStore.upsert(spark, code, Seq((id, v)).toDF("vec_id", "embedding"))
-      assert(top() == Seq(id) && CodeStore.lastShortlistSource == "resident", "the upserted row was not served")
+      // a stamp's first serve takes the pruned reads, its second builds the image
+      Seq("pruned", "resident").foreach { source =>
+        assert(top() == Seq(id) && CodeStore.lastShortlistSource == source, s"the upserted row was not served ($source)")
+      }
       // a tombstone masks it again
       CodeStore.upsert(spark, code, Seq((id, Option.empty[Array[Float]])).toDF("vec_id", "embedding"))
-      assert(top() != Seq(id) && CodeStore.lastShortlistSource == "resident", "a tombstoned row was served")
+      Seq("pruned", "resident").foreach { source =>
+        assert(top() != Seq(id) && CodeStore.lastShortlistSource == source, s"a tombstoned row was served ($source)")
+      }
 
       val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       SigStore.write(spark, docs, sig)
@@ -200,8 +209,10 @@ class ResidentSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(echo().isEmpty)
       SigStore.upsert(spark, sig, Seq((id, text)).toDF("doc_id", "text"))
-      assert(echo() == Seq((id, 9000000000L)), "the upserted doc was not paired")
-      assert(SigStore.lastProbeSource == "resident" && SigStore.lastTextSource == "resident")
+      Seq("pruned", "resident").foreach { source =>
+        assert(echo() == Seq((id, 9000000000L)), s"the upserted doc was not paired ($source)")
+        assert(SigStore.lastProbeSource == source && SigStore.lastTextSource == source)
+      }
     } finally TempStores.delete(root)
   }
 }

@@ -13,8 +13,9 @@ import graft.sources.{CodeStore, EdgeStore, FilteredServe, HnswStore, Resident, 
 /** How many Spark jobs one warm single-request serve runs — the job
   * count is the serve's scheduling cost, so a plan change that adds a
   * job shows here before it shows in a benchmark. Jobs are counted per
-  * request through its job group (the status tracker), after a warm-up
-  * request of the same shape with other values. */
+  * request through its job group (the status tracker), after two warm-up
+  * requests of the same shape with other values (a code or signature
+  * image is built on its stamp's second serve). */
 class ServeJobsSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val sf = SparkTestSession.Sf
@@ -32,8 +33,9 @@ class ServeJobsSpec extends AnyFunSuite {
     sc.statusTracker.getJobIdsForGroup(group).length
   }
 
-  /** warm `serve(a)`, then the job count of `serve(b)`, checked */
+  /** warm `serve(a)` twice, then the job count of `serve(b)`, checked */
   private def warmJobs[A](name: String, serve: A => DataFrame, a: A, b: A, max: Int): Unit = {
+    serve(a).collect()
     serve(a).collect()
     val n = jobs(serve(b))
     info(s"$name: $n jobs")
@@ -58,6 +60,11 @@ class ServeJobsSpec extends AnyFunSuite {
       /** warm echo and fresh job counts at `budget`, pinned, and their rows */
       def pinned(budget: Long, probe: String, text: String, echoPin: Int,
                  freshPin: Int): (Seq[Row], Seq[Row]) = StoreFixtures.atBudget(budget) {
+        // a stamp's first serve takes the pruned reads; the second builds
+        // the images that fit
+        echo(0).collect()
+        assert(SigStore.lastProbeSource == "pruned" && SigStore.lastTextSource == "pruned",
+          s"first echo at budget $budget: ${SigStore.lastProbeSource}/${SigStore.lastTextSource}")
         echo(0).collect()
         val n = jobs(echo(1))
         assert(SigStore.lastProbeSource == probe && SigStore.lastTextSource == text,
@@ -123,6 +130,7 @@ class ServeJobsSpec extends AnyFunSuite {
       val q = (x: Array[Float]) => CodeStore.searchFiltered(spark, dir, metaDir, x,
         Seq("lang" -> "en"), k = 5, exactScanMax = 0L, codeScanMax = 0L)
       def pinned(budget: Long, source: String, pin: Int): Seq[Row] = StoreFixtures.atBudget(budget) {
+        q(qa).collect()
         q(qa).collect()
         val n = jobs(q(qb))
         info(s"code broad tier at budget $budget: $n jobs (${FilteredServe.lastFilteredPath})")

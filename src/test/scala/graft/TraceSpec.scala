@@ -68,6 +68,8 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def check[A](name: String, serve: A => DataFrame, a: A, b: A,
                        fromImages: Boolean = false): Trace.Record = {
+    // twice: a code or signature image is built on its stamp's second serve
+    serve(a).collect()
     serve(a).collect()
     val (rec, jobs, compiles, files) = traced(serve(b))
     info(s"$name: ${rec.json}")

@@ -37,6 +37,7 @@ import bisect
 import collections
 import datetime
 import json
+import re
 import subprocess
 import sys
 
@@ -77,12 +78,32 @@ def layer_of(frames):
     return "other"
 
 
+ISO_TS = re.compile(r"(\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d)(?:\.(\d+))?(Z|[+-]\d\d:?\d\d)?")
+
+
 def epoch_ms(ts):
-    """JFR's ISO-8601 startTime (nanosecond digits allowed) in epoch ms"""
+    """JFR's ISO-8601 startTime (nanosecond digits and a zone offset
+    allowed; no zone reads as UTC) in epoch ms
+
+    >>> epoch_ms("2026-10-21T15:40:23.123456789Z")
+    1792597223123.4568
+    >>> epoch_ms("2026-10-21T17:40:23.123456789+02:00")
+    1792597223123.4568
+    >>> epoch_ms("2026-10-21T10:10:23.5-05:30")
+    1792597223500.0
+    """
     if isinstance(ts, (int, float)):
         return float(ts)
-    head, _, frac = ts.rstrip("Z").partition(".")
-    t = datetime.datetime.fromisoformat(head).replace(tzinfo=datetime.timezone.utc)
+    m = ISO_TS.fullmatch(ts)
+    if not m:
+        raise ValueError(f"not an ISO-8601 timestamp: {ts!r}")
+    head, frac, zone = m.groups()
+    tz = datetime.timezone.utc
+    if zone and zone != "Z":
+        digits = zone[1:].replace(":", "")
+        off = datetime.timedelta(hours=int(digits[:2]), minutes=int(digits[2:]))
+        tz = datetime.timezone(off if zone[0] == "+" else -off)
+    t = datetime.datetime.fromisoformat(head).replace(tzinfo=tz)
     return t.timestamp() * 1000 + (float("0." + frac) * 1000 if frac else 0.0)
 
 

@@ -217,6 +217,10 @@ object ScaleBench {
       n -> (secs, rec)
     }
     pass() // warmup
+    // a code image is built on its stamp's second serve: serve v37 once
+    // more so the timed pass serves it warm, as every other entry
+    if (names.contains("v37_hamming_stored"))
+      scala.util.Try(SparkEntry.queries("v37_hamming_stored")(spark, dir).count()): Unit
     val warmTraced = pass()
     val warm = warmTraced.map { case (n, (t, _)) => n -> t }
 
